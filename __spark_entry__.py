@@ -511,8 +511,9 @@ def _q_cube_revenue(spark, sf):
 
 def _q_ann_bruteforce(spark, sf):
     # dim=64 is the checked contract (the DuckDB twin folds exactly 64
-    # components); passing it unrolls the cosine into codegen-able
-    # arithmetic with identical left-to-right association
+    # components); the expression helpers take it as documentation only
+    # and build the same zip_with/aggregate fold either way (an unrolled
+    # form fell out of codegen and measured slower, see ann.dot_expr)
     return brute_force_topk(_t(spark, sf, "embeddings"), ANN_QUERY_IDS, k=10, dim=64)
 
 

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from web_archive_downloader_spark.session import get_spark
@@ -5,11 +7,13 @@ from web_archive_downloader_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # 8 cores / 8 shuffle partitions: at test data sizes the suite is
-    # bound by per-task scheduling + python-worker overhead, not
-    # compute — 16/16 measured ~35% slower on the same crawl tests.
+    # cores = SPARK_GRAFT_CPUS (the Tier-1 command exports the host's
+    # nproc), shuffle partitions = cores: at test data sizes the suite
+    # is bound by per-task scheduling + python-worker overhead, not
+    # compute, so more partitions than cores only adds overhead.
     # Tests that need a specific parallelism (skew, AQE, cogroup
     # pid-pruning) set their own confs/partitioning explicitly.
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
+    s = get_spark("tests", cores=cores, shuffle_partitions=cores)
     yield s
     s.stop()

@@ -327,3 +327,25 @@ def test_ngram_decontaminate_flags_planted_overlap(spark):
     )
     got = {r.doc_id: r.n_hits for r in ngram_decontaminate(tr, ev, n=5).collect()}
     assert got == {1: 2}
+
+
+def test_embedding_neardup_lsh_scopes_its_buckets(emb, monkeypatch):
+    """The bucket table is a scoped materialization: a second call
+    evicts the first call's persisted buckets instead of leaving them
+    cached (Spark's CacheManager matches plans structurally, so a kept
+    table would be reused by the repeat and never freed)."""
+    import web_archive_downloader_spark.operators.dedup as dedup
+
+    made = []
+    real = dedup.materialize_with_stats
+
+    def spy(*args, **kw):
+        made.append(real(*args, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(dedup, "materialize_with_stats", spy)
+    dedup.embedding_neardup_lsh(emb, threshold=0.999)
+    dedup.embedding_neardup_lsh(emb, threshold=0.999)
+    assert len(made) == 2
+    assert not made[0].is_cached
+    assert made[1].is_cached

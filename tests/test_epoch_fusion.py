@@ -1,0 +1,332 @@
+"""The fused epoch: one page pass per scheduled url and one packed
+write per epoch.
+
+- the fused per-page function returns exactly the rows of the
+  standalone stages it replaces, and parses each ok page once;
+- an epoch runs at most 12 Spark jobs, and the crawl (robots, memento,
+  original-HTML sink, img assets, a checkpoint) still equals the
+  sequential oracle, including after a kill/resume at every epoch;
+- the robots gate runs after the seen-set probe, so a checkpointed url
+  under a disallowed prefix is skipped, not re-recorded;
+- payload tables written by the packed write and per-table dirs of an
+  older store are read as one table.
+"""
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+import web_archive_downloader_spark.content.extract as extract_mod
+import web_archive_downloader_spark.sources.fetch_shim as shim
+from web_archive_downloader_spark.datagen import (
+    default_config,
+    gen_cdx_multihost,
+    gen_cdx_records,
+    page_html,
+    page_html_rich,
+)
+from web_archive_downloader_spark.oracle.simulator import run_oracle
+from web_archive_downloader_spark.plans.crawl import (
+    DOCS_RAW_SCHEMA,
+    HTML_RAW_SCHEMA,
+    PROCESSED_SCHEMA,
+    URL_SEEN_SCHEMA,
+    CrawlPlan,
+)
+from web_archive_downloader_spark.sources.cdx import cdx_dataframe
+from web_archive_downloader_spark.sources.state import StateStore
+
+
+# ---- fused page function vs the standalone stages ----------------------
+
+def _make_server():
+    """Content server keyed on the first path segment (a closure, so
+    Spark's Python workers receive it by value)."""
+
+    def server(url: str, attempt: int):
+        kind = url.split("/")[3]
+        if kind == "rich":
+            return "ok", page_html_rich(url, n_paras=6)
+        if kind == "plain":
+            return "ok", page_html(url)
+        if kind == "empty":
+            return "ok", ""
+        if kind == "absent":
+            return "ok", None
+        if kind == "retry":
+            return "http_500", None
+        return "http_404", None  # wayback-dead: memento fallback
+
+    return server
+
+
+_server = _make_server()
+
+
+DEAD = [f"https://m{i % 3}.example.org/dead/{i}" for i in range(24)]
+PAGES = (
+    [f"https://r{i % 2}.example.org/rich/{i}" for i in range(4)]
+    + [f"https://ex.com/plain/{w}" for w in ("a", "b", "c", "d", "e", "f")]
+    + ["https://e.example.org/empty/1", "https://e.example.org/absent/1"]
+    + ["https://t.example.org/retry/1"]
+    + DEAD
+)
+CFG = default_config(target_domain="", max_retries=2)
+
+_SCHED = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("depth", T.IntegerType()),
+        T.StructField("priority", T.DoubleType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("attempt", T.IntegerType()),
+    ]
+)
+
+
+def _sched(spark):
+    rows = [
+        (u, "20230101000000", u.split("/")[2], 0, 0.0, i, 1)
+        for i, u in enumerate(PAGES)
+    ]
+    return spark.createDataFrame(rows, _SCHED).repartition(3)
+
+
+def test_page_pass_matches_standalone_stages(spark, monkeypatch):
+    from web_archive_downloader_spark.functions.scalar import route_col
+    from web_archive_downloader_spark.operators.images import (
+        extract_captions_stage,
+        images_from_assets,
+    )
+    from web_archive_downloader_spark.sources.fetch_shim import (
+        asset_fetch_stage,
+        extract_stage,
+        fetch_stage,
+        find_assets_stage,
+        memento_stage,
+        page_pass_stage,
+    )
+
+    monkeypatch.setattr(shim, "wayback_fetch_sim", _server)
+    sched = _sched(spark)
+
+    # standalone chain, as the per-stage epoch ran it
+    routed = fetch_stage(sched).withColumn(
+        "route", route_col(F.col("outcome"), F.col("attempt"), CFG.max_retries)
+    ).cache()
+    ok = routed.filter(F.col("route") == "ok")
+    extracted = extract_stage(ok.select("url", "ts", "seq", "attempt", "html"), CFG)
+    want_extract = {r.url: (r.title, r.content_html, r.md_ok) for r in extracted.collect()}
+    want_html = {
+        r.url for r in extracted.filter(
+            F.col("title").isNotNull() & (F.col("title") != "")
+            & F.col("html").isNotNull() & (F.col("html") != "")
+        ).collect()
+    }
+    assets = asset_fetch_stage(find_assets_stage(ok.select("url", "ts", "seq", "html"), CFG))
+    want_assets = sorted(
+        (r.page_url, r.kind, r.asset_url, r.asset_pos, r.nbytes, r.bytes is not None)
+        for r in assets.collect()
+    )
+    images = images_from_assets(
+        assets.filter(F.col("bytes").isNotNull() & (F.col("kind") == "img")),
+        extract_captions_stage(ok.select("url", "html"), CFG.target_domain),
+    )
+    want_images = sorted(tuple(r) for r in images.collect())
+    mem = memento_stage(
+        routed.filter(F.col("route") == "dead_wayback").select("url", "ts", "seq", "attempt"), CFG
+    ).cache()
+    want_memento = {r.url: r.memento_result for r in mem.collect()}
+    mem_extracted = extract_stage(
+        mem.filter(F.col("memento_result") == "ok").select(
+            "url", "ts", "seq", "attempt", F.col("memento_html").alias("html")
+        ),
+        CFG,
+    )
+    want_mem_extract = {r.url: (r.title, r.content_html, r.md_ok) for r in mem_extracted.collect()}
+    want_route = {r.url: r.route for r in routed.collect()}
+
+    got = page_pass_stage(sched, CFG).collect()
+    assert len(got) == len(PAGES)
+    assert {r.url: r.route for r in got} == want_route
+    assert {
+        r.url: (r.title, r.content_html, r.md_ok) for r in got if r.route == "ok"
+    } == want_extract
+    assert {r.url for r in got if r.html is not None} == want_html
+    assert sorted(
+        (r.url, a.kind, a.asset_url, a.asset_pos, a.nbytes, a.fetched)
+        for r in got for a in r.assets
+    ) == want_assets
+    assert sorted(tuple(i) for r in got for i in r.images) == want_images
+    assert {r.url: r.memento_result for r in got if r.route == "dead_wayback"} == want_memento
+    assert {
+        r.url: (r.title, r.content_html, r.md_ok) for r in got if r.memento_result == "ok"
+    } == want_mem_extract
+
+    # the fixture reaches every branch the comparison is meant to cover
+    assert set(want_route.values()) == {"ok", "retry", "dead_wayback"}
+    assert {"ok", "loop", "non_html", "none"} <= set(want_memento.values())
+    assert any(md_ok for _, _, md_ok in want_extract.values())
+    assert any(title is None for title, _, _ in want_extract.values())  # empty / absent html
+    assert any(not fetched for *_, fetched in want_assets) and want_images
+    assert want_mem_extract
+    routed.unpersist()
+    mem.unpersist()
+
+
+def test_page_pass_parses_each_ok_page_once(monkeypatch):
+    """Driver-side: extract, asset discovery, captions and links all
+    read one parse of the page."""
+    from web_archive_downloader_spark.sources.fetch_shim import process_page
+
+    calls = []
+    real = extract_mod._parse
+
+    def counting(html):
+        calls.append(html)
+        return real(html)
+
+    monkeypatch.setattr(extract_mod, "_parse", counting)
+    monkeypatch.setattr(shim, "_parse", counting)
+    cfg = CFG.with_(expand_links=True, max_depth=1)
+    ok_pages = [u for u in PAGES if u.split("/")[3] in ("rich", "plain")]
+    rows = [process_page(u, 1, cfg, fetch=_server) for u in ok_pages]
+    assert len(calls) == len(ok_pages)
+    assert all(r["route"] == "ok" for r in rows)
+    # every scan ran on that parse
+    assert any(r["images"] for r in rows) and any(r["links"] for r in rows)
+    assert all(r["title"] for r in rows)
+
+
+# ---- the epoch: jobs, oracle equality, robots + checkpoint, resume -----
+
+RULES = {"ex.com": ["/docs"], "host000.example.org": ["/p/alpha", "/p/eta"]}
+
+
+def _inputs():
+    raw = gen_cdx_records(n_urls=24, seed=5) + gen_cdx_multihost(16, n_hosts=4, seed=5)
+    cfg = default_config(
+        target_domain="", epoch_seconds=12.0, respect_robots=True, max_retries=2
+    )
+    oracle_all = run_oracle(raw, cfg, robots=RULES)
+    # a previous crawl's checkpoint: every url under a disallowed prefix
+    # plus every fifth allowed one
+    blocked = [u for u, why in oracle_all.failed if why == "robots_blocked"]
+    allowed = [u for u in oracle_all.crawl_order if u not in set(blocked)]
+    checkpoint = sorted(set(blocked[::2] + allowed[::5]))
+    return raw, cfg, checkpoint
+
+
+def _store(spark, root, cfg, checkpoint):
+    robots = spark.createDataFrame(
+        [(h, d, 1.5, 0) for h, d in RULES.items()] + [("host001.example.org", [], 3.0, 0)],
+        "host string, disallow array<string>, crawl_delay double, fetched_epoch int",
+    )
+    store = StateStore(root, spark)
+    m = store.read_manifest()
+    m["tables"]["robots"] = [store.stage("robots", -1, robots)]
+    store._write_manifest(m)
+    plan = CrawlPlan(spark, store, cfg)
+    plan.seed_checkpoint(spark.createDataFrame(pd.DataFrame({"url": checkpoint})))
+    return store, plan
+
+
+def _order_and_seen(store):
+    order = [r.url for r in store.read("processed", PROCESSED_SCHEMA).orderBy("seq").collect()]
+    seen = [
+        r.url
+        for r in store.read("url_seen", URL_SEEN_SCHEMA)
+        .filter(F.col("epoch") >= 0).orderBy("seq").collect()
+    ]
+    return order, seen
+
+
+def _count_jobs(spark, plan, out: list):
+    """Spark jobs per epoch, counted from the status tracker the way
+    the benchmark's epoch clock counts them."""
+    tracker = spark.sparkContext.statusTracker()
+    orig = plan.run_epoch
+
+    def run_epoch(epoch):
+        before = set(tracker.getJobIdsForGroup())
+        n, pending = orig(epoch)
+        out.append((epoch, n, len(set(tracker.getJobIdsForGroup()) - before)))
+        return n, pending
+
+    plan.run_epoch = run_epoch
+
+
+@pytest.fixture(scope="module")
+def fused_crawl(spark, tmp_path_factory):
+    raw, cfg, checkpoint = _inputs()
+    store, plan = _store(spark, str(tmp_path_factory.mktemp("fused")), cfg, checkpoint)
+    jobs: list = []
+    _count_jobs(spark, plan, jobs)
+    plan.run(cdx_dataframe(spark, raw))
+    oracle = run_oracle(raw, cfg, checkpoint=set(checkpoint), robots=RULES)
+    return raw, cfg, store, jobs, oracle
+
+
+def test_robots_checkpoint_matches_oracle(fused_crawl):
+    """A checkpointed url under a disallowed prefix is skipped like the
+    oracle skips it — J1 drops it before the robots gate could record
+    it as robots_blocked."""
+    _, _, store, _, oracle = fused_crawl
+    order, seen = _order_and_seen(store)
+    assert order == oracle.crawl_order
+    assert seen == oracle.seen
+    blocked = {
+        r.url
+        for r in store.read("processed", PROCESSED_SCHEMA)
+        .filter(F.col("disposition") == "robots_blocked").collect()
+    }
+    assert blocked == {u for u, why in oracle.failed if why == "robots_blocked"}
+    assert blocked  # the gate still blocks unseen urls
+
+
+def test_epoch_runs_at_most_12_spark_jobs(fused_crawl, spark):
+    _, _, store, jobs, oracle = fused_crawl
+    busy = [(e, j) for e, n, j in jobs if n > 0]
+    assert len(busy) >= 3
+    assert max(j for _, j in busy) <= 12, jobs
+    # the paths the bound must cover were all on
+    assert store.read("html_raw", HTML_RAW_SCHEMA).count() > 0
+    assert store.read("images").count() > 0
+    assert store.read("docs_raw", DOCS_RAW_SCHEMA).filter(F.col("via") == "memento").count() > 0
+
+
+def test_kill_and_resume_at_every_epoch_matches_oracle(fused_crawl, spark):
+    raw, cfg, store, _, oracle = fused_crawl
+    last = store.last_epoch
+    for kill in range(last - 1, -2, -1):
+        store.truncate_to_epoch(kill)
+        CrawlPlan(spark, store, cfg).run(cdx_dataframe(spark, raw), resume=True)
+        assert store.last_epoch == last
+        assert _order_and_seen(store) == (oracle.crawl_order, oracle.seen), kill
+    docs, _ = CrawlPlan(spark, store, cfg).finalize_outputs()
+    assert {r.url: r.markdown for r in docs.collect()} == {
+        d["url"]: d["markdown"] for d in oracle.docs
+    }
+
+
+def test_payload_reads_union_legacy_table_dirs(spark, tmp_path):
+    """A store written before the payload joined the packed write keeps
+    docs_raw in its own epoch dirs; read() unions those with the packed
+    rows of later epochs."""
+    store = StateStore(str(tmp_path / "legacy"), spark)
+    doc = ("https://ex.com/a", "20230101000000", 1, "wayback", "A", "<p>a</p>", 0)
+    legacy = spark.createDataFrame([doc], DOCS_RAW_SCHEMA)
+    store.commit(0, {"docs_raw": store.stage("docs_raw", 0, legacy)})
+    packed = spark.createDataFrame(
+        [("https://ex.com/b",) + doc[1:2] + (2,) + doc[3:6] + (1,)], DOCS_RAW_SCHEMA
+    )
+    store.commit(1, {"__state__": store.stage_packed(1, {"docs_raw": packed})})
+    got = sorted((r.url, r.seq, r.epoch) for r in store.read("docs_raw", DOCS_RAW_SCHEMA).collect())
+    assert got == [("https://ex.com/a", 1, 0), ("https://ex.com/b", 2, 1)]
+    store.compact("__state__")
+    assert sorted(r.url for r in store.read("docs_raw", DOCS_RAW_SCHEMA).collect()) == [
+        "https://ex.com/a", "https://ex.com/b"
+    ]

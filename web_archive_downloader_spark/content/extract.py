@@ -53,12 +53,21 @@ def find_assets(html_content: str | None, original_page_url: str, config: Engine
     html_processor.py:70); the spec canonicalizes to sorted order
     (SURVEY.md §2.3 A2) and the oracle does the same.
     """
-    found: dict[str, set[str]] = {"js": set(), "css": set(), "img": set()}
-    target_domain = config.target_domain or urlparse(original_page_url).netloc
     if not html_content:
-        return {k: sorted(v) for k, v in found.items()}
+        return {"js": [], "css": [], "img": []}
     try:
         soup = _parse(html_content)
+    except Exception:
+        return {"js": [], "css": [], "img": []}
+    return find_assets_in_soup(soup, original_page_url, config)
+
+
+def find_assets_in_soup(soup, original_page_url: str, config: EngineConfig) -> dict[str, list[str]]:
+    """find_assets over an already-parsed page (the fused page pass
+    parses each page once and hands the same soup to every scan)."""
+    found: dict[str, set[str]] = {"js": set(), "css": set(), "img": set()}
+    target_domain = config.target_domain or urlparse(original_page_url).netloc
+    try:
         for tag in soup.find_all("script", src=True):
             src = tag["src"]
             if src:
@@ -93,7 +102,40 @@ def find_assets(html_content: str | None, original_page_url: str, config: Engine
     return {k: sorted(v) for k, v in found.items()}
 
 
+def links_from_soup(soup, page_url: str, max_links: int) -> list[str]:
+    """Frontier-expansion links of a parsed page: absolute http(s)
+    <a href> targets without fragment, deduped, the first
+    ``max_links`` in sorted order. A malformed tree yields no links."""
+    seen: set[str] = set()
+    try:
+        for a in soup.find_all("a", href=True):
+            href = a["href"]
+            if not href or href.startswith(("#", "mailto:", "javascript:")):
+                continue
+            absu = urljoin(page_url, href).split("#", 1)[0]
+            if urlparse(absu).scheme in ("http", "https"):
+                seen.add(absu)
+    except Exception:
+        return []
+    return sorted(seen)[:max_links]
+
+
 # --- Title extraction (html_processor.py:74-100) ---
+
+def extract_fields_from_soup(soup, original_url: str, selectors) -> tuple[str, str | None, bool]:
+    """Epoch-time extract over a parsed page: (title, selected content
+    area HTML, markdown-success probe). Neither lookup mutates the
+    soup, so asset/caption/link scans may read it afterwards. Raises
+    on a malformed tree; callers map that to (None, None, False)."""
+    title = extract_title_from_soup(soup, original_url)
+    content = find_main_content(soup, selectors)
+    content_str = str(content) if content is not None else None
+    # provisional success probe (main.py:155): the later link-rewrite
+    # only alters attribute values, which cannot change markdown
+    # emptiness, so this equals the reference's post-rewrite check
+    md_ok = bool(html_to_markdown(content_str)) if content_str else False
+    return title, content_str, md_ok
+
 
 def extract_title_from_soup(soup, original_url: str) -> str:
     title_tag = soup.find("title")

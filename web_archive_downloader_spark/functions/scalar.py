@@ -146,6 +146,18 @@ def route_col(outcome: Column, attempt: Column, max_retries: int) -> Column:
     )
 
 
+def route_of(outcome: str, attempt: int, max_retries: int) -> str:
+    """route_col for one row, in Python (the fused page pass routes
+    inside its task so the memento fallback can run in the same pass)."""
+    if outcome == "ok":
+        return "ok"
+    if outcome in ("http_404", "non_html", "empty"):
+        return "dead_wayback"
+    if outcome in ("http_429", "http_500", "timeout") and attempt <= max_retries:
+        return "retry"
+    return "dead_wayback"
+
+
 def asset_base_ext_cols(asset_url: Column) -> tuple[Column, Column]:
     """X6 — asset filename derivation (file_handler.py:238-248) as
     pure expressions: basename of the unquoted path; empty ->

@@ -703,7 +703,8 @@ def embedding_neardup_lsh(
         for t, planes in enumerate(tables)
     ]
     eb = materialize_with_stats(
-        e.select("vec_id", *bcols)
+        scope="neardup_eb",
+        df=e.select("vec_id", *bcols)
         .select(
             "vec_id",
             F.explode(

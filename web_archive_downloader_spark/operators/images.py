@@ -167,16 +167,24 @@ def extract_captions_kernel(html: str, page_url: str, target_domain: str) -> lis
     (falsy target_domain -> the page's own netloc, mirroring the
     reference's fallback html_processor.py:24). Shared by the UDF and
     the oracle so caption equality tests bind the orchestration."""
-    from urllib.parse import urljoin, urlparse
-
     from ..content.extract import _parse
 
-    out: list[tuple[str, str]] = []
     if not html:
-        return out
+        return []
+    try:
+        soup = _parse(html)
+    except Exception:
+        return []
+    return captions_from_soup(soup, page_url, target_domain)
+
+
+def captions_from_soup(soup, page_url: str, target_domain: str) -> list[tuple[str, str]]:
+    """extract_captions_kernel over an already-parsed page."""
+    from urllib.parse import urljoin, urlparse
+
+    out: list[tuple[str, str]] = []
     try:
         domain = target_domain or urlparse(page_url).netloc
-        soup = _parse(html)
         for img in soup.find_all("img", src=True):
             src = img["src"]
             if not src or src.startswith("data:"):
@@ -224,14 +232,36 @@ def first_caption_per_asset(captions: DataFrame) -> DataFrame:
     )
 
 
+def image_row(page_url: str, asset_url: str, data, caption: str | None) -> tuple | None:
+    """One ``images`` row (IMAGES_SCHEMA order) for a fetched img
+    asset, or None when the url has no image format, the fetch failed
+    or the payload does not decode."""
+    from ..content.paths import xxhash64_str
+    from ..datagen import asset_image_format
+
+    fmt = asset_image_format(asset_url)
+    if fmt is None or data is None:
+        return None
+    try:
+        px = decode_image(bytes(data), fmt)
+    except Exception:
+        return None
+    return (
+        str(xxhash64_str(f"{page_url}|{asset_url}")),
+        bytes(data),
+        px.shape[1],
+        px.shape[0],
+        fmt,
+        caption if caption is not None else "",
+        phash64(px),
+    )
+
+
 def images_from_assets(img_assets: DataFrame, captions: DataFrame) -> DataFrame:
     """The graft's payload corpus (BASELINE.json:15 input_hint):
     fetched img-asset bytes -> decoded metadata + caption ->
     (image_id, bytes, w, h, fmt, caption, phash). image_id =
     xxhash64(page_url|asset_url) — stable across runs/partitionings."""
-    from ..content.paths import xxhash64_str
-    from ..datagen import asset_image_format
-
     joined = img_assets.join(
         first_caption_per_asset(captions), ["page_url", "asset_url"], "left"
     )
@@ -242,24 +272,9 @@ def images_from_assets(img_assets: DataFrame, captions: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                fmt = asset_image_format(r.asset_url)
-                if fmt is None or r.bytes is None:
-                    continue
-                try:
-                    px = decode_image(bytes(r.bytes), fmt)
-                except Exception:
-                    continue
-                rows.append(
-                    (
-                        str(xxhash64_str(f"{r.page_url}|{r.asset_url}")),
-                        bytes(r.bytes),
-                        px.shape[1],
-                        px.shape[0],
-                        fmt,
-                        r.caption if r.caption is not None else "",
-                        phash64(px),
-                    )
-                )
+                row = image_row(r.page_url, r.asset_url, r.bytes, r.caption)
+                if row is not None:
+                    rows.append(row)
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
     return joined.mapInPandas(run, out_schema)

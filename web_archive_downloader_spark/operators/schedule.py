@@ -30,6 +30,7 @@ def per_host_topk(
     host_col: str = "host",
     order_cols: tuple[str, ...] = ("priority", "depth", "seq"),
     budgets: DataFrame | None = None,
+    budget_col: str | None = None,
 ) -> DataFrame:
     """Select <= k rows per host, ordered by order_cols (ascending).
     Returns the selected rows with their within-host rank as
@@ -39,7 +40,9 @@ def per_host_topk(
     ``budgets`` (host, host_budget) — e.g. robots crawl_delay-derived
     token counts — overrides k per host (broadcast join; missing
     hosts fall back to k). The salted pre-pass still caps at k, so
-    budgets above k are clamped to k by construction."""
+    budgets above k are clamped to k by construction. ``budget_col``
+    names a per-row budget column the rows already carry (null = k),
+    the join-free form of ``budgets``; it is dropped from the output."""
     order = [F.asc(c) for c in order_cols]
     if salt_buckets > 1:
         salt = F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
@@ -55,8 +58,10 @@ def per_host_topk(
     ranked = pre.withColumn("host_rank", F.row_number().over(w2))
     if budgets is not None:
         ranked = ranked.join(F.broadcast(budgets), host_col, "left")
-        cap = F.least(F.coalesce(F.col("host_budget"), F.lit(k)), F.lit(k))
-        return ranked.filter(F.col("host_rank") <= cap).drop("host_budget")
+        budget_col = "host_budget"
+    if budget_col is not None:
+        cap = F.least(F.coalesce(F.col(budget_col), F.lit(k)), F.lit(k))
+        return ranked.filter(F.col("host_rank") <= cap).drop(budget_col)
     return ranked.filter(F.col("host_rank") <= k)
 
 

@@ -3,15 +3,27 @@
 Per epoch (all DataFrame ops; one driver loop builds the DAGs):
 
     frontier --eligible(E)--> anti-join(url_seen: Bloom prefilter +
-    exact left-anti) --> per-host token-bucket top-k (salted) -->
-    fetch (mapInPandas, 1 attempt/row) --> route (F12) -->
-      ok   --> extract (title + content area) ... docs_raw
-           --> find_assets -> asset fetch ........ assets_raw
-      retry--> attempt+1, eligible_epoch=E+2^(k-1) back to frontier
-      dead --> memento fallback (SRC4/5) -> ok -> docs_raw (no assets)
-                                         -> fail -> dead letter
-    commits: docs_raw/assets_raw/url_seen/processed/lineage appends +
-    frontier replacement, one atomic manifest commit per epoch.
+    exact left-anti) --> robots gate --> per-host token-bucket top-k
+    (salted) --> ONE page pass (mapInPandas, 1 attempt/row):
+      fetch -> route (F12) ->
+        ok    -> parse once: extract (title + content area), find
+                 assets -> asset fetch, captions -> image decode,
+                 links (expansion)
+        retry -> attempt+1, eligible_epoch=E+2^(k-1) back to frontier
+        dead  -> memento fallback (SRC4/5) -> ok -> extract
+                                           -> fail -> dead letter
+    --> persisted page frame, one row per scheduled url (assets /
+        images / links as array<struct> columns, counters observed)
+    --> ONE packed write of projections and explodes of that frame:
+        docs_raw / html_raw / assets_raw / images / url_seen /
+        processed / bloom / lineage / metrics + the frontier
+        replacement, committed by one atomic manifest swap.
+
+The seen-set probe runs before the robots gate, so a url already seen
+(a checkpointed one included) leaves the frontier without a record,
+exactly as the sequential oracle skips it. The page pass reuses the
+standalone stages' kernels (sources/fetch_shim.py:process_page), so
+its rows equal theirs; the standalone stages stay for batch extract.
 
 Crawl ORDER determinism under parallelism: nothing order-sensitive is
 derived from task/epoch completion order — every output keys off the
@@ -38,34 +50,35 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import EngineConfig
-from ..content.extract import html_to_markdown
 from ..datagen import MEMENTO_NOW_TS
 from ..functions.scalar import (
     markdown_base_filename_col,
     markdown_header_col,
     page_dir_col,
-    route_col,
     url_host_col,
 )
 from ..operators.collisions import assign_collision_names
 from ..operators.latest import latest_snapshot_per_url, valid_cdx
 from ..operators.schedule import pace_slot_col, per_host_topk
 from ..operators.seen import build_bloom_sketches, unseen_with_bloom_state
-from ..sources.fetch_shim import (
+from ..sources.fetch_shim import finalize_markdown_stage, page_pass_stage
+
+# The standalone stages the page pass fuses stay importable from this
+# module (they are the per-stage form of the same kernels, and
+# layer-timing harnesses address them here); run_epoch calls none.
+from ..sources.fetch_shim import (  # noqa: F401
     asset_fetch_stage,
     extract_stage,
     fetch_stage,
     find_assets_stage,
-    finalize_markdown_stage,
     memento_stage,
 )
-from ..sources.state import StateStore
+from ..sources.state import PACKED, StateStore
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -212,20 +225,40 @@ class CrawlPlan:
 
     # ---- one epoch ----
     def run_epoch(self, epoch: int) -> tuple[int, int]:
-        """Returns (rows scheduled this epoch, frontier rows remaining)."""
+        """Returns (rows scheduled this epoch, frontier rows remaining).
+
+        Two Spark actions (see the module docstring): the page pass
+        persists one row per scheduled url, then one packed write
+        stages every output of the epoch from that frame. Both are
+        planned statically: adaptive execution submits every shuffle
+        and broadcast stage as a Spark job of its own and re-plans
+        between them, which buys nothing here — the epoch's exchanges
+        have explicit widths and its small sides broadcast by size —
+        and cost ~15 jobs of fixed overhead per epoch instead of ~6."""
+        conf = self.spark.conf
+        adaptive = conf.get("spark.sql.adaptive.enabled")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return self._run_epoch(epoch)
+        finally:
+            conf.set("spark.sql.adaptive.enabled", adaptive)
+
+    def _run_epoch(self, epoch: int) -> tuple[int, int]:
         import os
         import time
 
+        from pyspark.sql import Observation
+
         trace = os.environ.get("SPARK_GRAFT_EPOCH_TRACE") == "1"
-        _t = time.perf_counter
-        _marks: list[tuple[str, float]] = []
+        marks: list[tuple[str, float]] = []
+        t0 = time.perf_counter()
 
-        def mark(label: str, t0: float) -> float:
-            if trace:
-                _marks.append((label, _t() - t0))
-            return _t()
+        def mark(label: str) -> None:
+            nonlocal t0
+            now = time.perf_counter()
+            marks.append((label, now - t0))
+            t0 = now
 
-        t0 = _t()
         cfg = self.config
         store = self.store
         frontier = store.read_latest_only("frontier", FRONTIER_SCHEMA)
@@ -237,113 +270,59 @@ class CrawlPlan:
         # subsequent generations reuse its clustering); the deltas are
         # the few recent epochs' rows and broadcast/shuffle cheaply.
         seen_bases, seen_delta = store.read_parts("url_seen", URL_SEEN_SCHEMA)
-        seen_parts = seen_bases + [seen_delta]
-
         eligible = frontier.filter(F.col("eligible_epoch") <= epoch)
         held = frontier.filter(F.col("eligible_epoch") > epoch)
 
-        # --- robots gate (engine-only; off for reference-equality) ---
-        robots_blocked_rows = None
-        budgets = None
-        if cfg.respect_robots:
-            from ..operators.robots import (
-                ROBOTS_SCHEMA,
-                apply_robots_gate,
-                per_host_budgets,
-            )
-
-            robots = store.read("robots", ROBOTS_SCHEMA)
-            gated = apply_robots_gate(eligible, robots)
-            robots_blocked_rows = gated.filter(F.col("robots_blocked")).select(
-                "url", "seq", F.lit("robots_blocked").alias("disposition")
-            )
-            eligible = gated.filter(~F.col("robots_blocked")).drop(
-                "robots_blocked", "crawl_delay"
-            )
-            budgets = per_host_budgets(
-                robots, cfg.epoch_seconds, cfg.request_delay_seconds
-            )
-
-        t0 = mark("read_state", t0)
-        # cached: the unseen chain (bloom probe + exact anti-join) feeds
-        # BOTH the schedule and the leftover/frontier write — without
-        # the cache it runs twice per epoch. The probe mode (broadcast /
-        # pid-pruned cogroup / exact-only) is chosen from the persisted
-        # sketch state's size + version, so Bloom memory never scales
-        # with the seen set (operators/seen.py:unseen_with_bloom_state).
+        # J1 before the robots gate: a url already seen (a checkpointed
+        # one included) leaves the frontier silently, as the oracle
+        # skips it; only unseen urls can be recorded robots_blocked.
+        # The probe mode (broadcast / pid-pruned cogroup / exact-only)
+        # is chosen from the persisted sketch state's size + version
+        # (operators/seen.py:unseen_with_bloom_state).
         sketch_df = store.read("bloom", self._bloom_schema())
-        unseen, bloom_mode = unseen_with_bloom_state(
-            eligible, seen_parts, sketch_df, cfg.seen_partitions, self.spark,
+        unseen, self.last_bloom_mode = unseen_with_bloom_state(
+            eligible, seen_bases + [seen_delta], sketch_df, cfg.seen_partitions, self.spark,
             broadcast_max_bytes=cfg.bloom_broadcast_max_bytes,
             stats=self._cached_bloom_stats(sketch_df),
         )
+        budget_col = None
+        if cfg.respect_robots:
+            from ..operators.robots import ROBOTS_SCHEMA, apply_robots_gate
+
+            # the gate's crawl_delay is then null exactly for hosts
+            # without a robots row, which keep the global budget (the
+            # per_host_budgets rule, without a second robots join)
+            robots = store.read("robots", ROBOTS_SCHEMA).withColumn(
+                "crawl_delay",
+                F.coalesce(F.col("crawl_delay"), F.lit(cfg.request_delay_seconds)),
+            )
+            unseen = apply_robots_gate(unseen, robots).withColumn(
+                "host_budget",
+                F.greatest(
+                    F.floor(F.lit(cfg.epoch_seconds) / F.col("crawl_delay")), F.lit(1)
+                ).cast("int"),
+            )
+            budget_col = "host_budget"
+        # cached: the schedule, the leftover anti-join and the
+        # robots-blocked rows all read the probed frame
         unseen = unseen.cache()
-        # observable for tests/ops: which J1 probe mode this epoch ran
-        self.last_bloom_mode = bloom_mode
-        t0 = mark(f"bloom_{bloom_mode}", t0)
+        allowed = unseen.filter(~F.col("robots_blocked")) if budget_col else unseen
 
         sched = per_host_topk(
-            unseen, cfg.per_host_epoch_budget, cfg.host_salt_buckets, budgets=budgets
+            allowed, cfg.per_host_epoch_budget, cfg.host_salt_buckets, budget_col=budget_col
         )
         # politeness calendar: the within-host rank becomes an absolute
         # firing slot — same-host spacing >= delay in any partition
         # layout (see module docstring)
-        sched = sched.withColumn(
-            "pace_slot", pace_slot_col(cfg.request_delay_seconds)
-        ).drop("host_rank")
-        n_sched = sched.count()
-        t0 = mark("schedule_count", t0)
-        if n_sched == 0:
-            # nothing runnable now; still drain robots-blocked rows
-            # and de-dup seen rows, then advance the epoch
-            from pyspark.sql import Observation
-
-            obs_f = Observation(f"frontier0_{epoch}")
-            fpath = store.stage(
-                "frontier", epoch,
-                held.unionByName(unseen).observe(obs_f, F.count(F.lit(1)).alias("n")),
-            )
-            members = {"lineage": self._lineage(epoch, sched)}
-            if robots_blocked_rows is not None:
-                members["processed"] = robots_blocked_rows.withColumn(
-                    "epoch", F.lit(epoch)
-                )
-            staged = {
-                "frontier": fpath,
-                "__state__": store.stage_packed(epoch, members, coalesce_to=1),
-            }
-            store.commit(epoch, staged)
-            unseen.unpersist()
-            return 0, int(obs_f.get["n"])
-
-        sched = sched.cache()
-        leftover = unseen.join(sched.select("url"), "url", "left_anti")
-
-        # --- SNK5/A3: named epoch metrics via df.observe() — the
-        # engine analog of the reference's run counters
-        # (main.py:50-54,111-139,169-175). Collected as a side effect
-        # of the FIRST action over the observed frames (the docs_raw
-        # stage write), so they cost no extra job; landed in the
-        # per-epoch `metrics` table at commit time.
-        from pyspark.sql import Observation
-
-        obs_route = Observation(f"route_{epoch}")
-        obs_extract = Observation(f"extract_{epoch}")
-
-        # --- fetch + route ---
-        # The schedule is tiny by BYTES (urls) but heavy by WORK
-        # (fetch + DOM parse per row), so AQE's size-based coalescing
-        # would serialize it onto 1-2 tasks. Spread explicitly across
-        # the cluster by url hash — politeness does NOT need same-host
-        # co-location because the pace calendar assigns absolute slots
-        # (a host-keyed repartition would serialize the reference's
-        # single-domain workload onto one task).
-        par = min(
-            self.spark.sparkContext.defaultParallelism, max(1, n_sched // 8)
+        sched = sched.select(
+            *[f.name for f in FRONTIER_SCHEMA.fields if f.name != "eligible_epoch"],
+            pace_slot_col(cfg.request_delay_seconds).alias("pace_slot"),
         )
-        # strict-politeness deployments co-locate hosts (the pacer's
-        # per-host floor then bounds spacing globally); default scatter
-        # keeps single-domain crawls parallel — see config.py
+        # The schedule is tiny by BYTES (urls) but heavy by WORK
+        # (fetch + DOM parse per row), so it is spread explicitly over
+        # the cores by url hash. Politeness needs no same-host
+        # co-location because the pace calendar assigns absolute slots;
+        # strict-politeness deployments co-locate hosts (config.py).
         fetch_key = F.col("host") if cfg.fetch_colocate_hosts else F.col("url")
         pacer = None
         if cfg.live_pacing:
@@ -355,298 +334,173 @@ class CrawlPlan:
             pacer = politeness_pacer(
                 time.time(), cfg.request_delay_seconds, now=time.time
             )
-        fetched = fetch_stage(sched.repartition(par, fetch_key), pacer=pacer).cache()
-        routed = (
-            fetched.withColumn(
-                "route", route_col(F.col("outcome"), F.col("attempt"), cfg.max_retries)
+        page = (
+            page_pass_stage(
+                sched.repartition(self.spark.sparkContext.defaultParallelism, fetch_key),
+                cfg, pacer=pacer,
             )
-            .observe(
-                obs_route,
-                F.count(F.lit(1)).alias("fetched_total"),
-                F.count_if(F.col("route") == "ok").alias("fetched_ok"),
-                F.count_if(F.col("route") == "retry").alias("retry"),
-                F.count_if(F.col("route") == "dead_wayback").alias("dead_wayback"),
-            )
-            .cache()
+            .withColumn("partition_id", F.spark_partition_id())
+            .persist()
         )
-        ok = routed.filter(F.col("route") == "ok")
-        retry = (
-            routed.filter(F.col("route") == "retry")
-            .select(
+        # SNK5/A3: the epoch counters (the reference's run counters,
+        # main.py:50-54,111-139,169-175) ride the action that fills the
+        # page cache as observed metrics — no extra job
+        obs = Observation(f"page_{epoch}")
+        page.observe(obs, *self._page_counters()).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        counts = obs.get
+        n_sched = int(counts["scheduled"])
+        mark("page_pass")
+
+        members = {"lineage": self._lineage(epoch, page)}
+        if n_sched:
+            members.update(self._page_members(epoch, page))
+            members["metrics"] = self.spark.createDataFrame(
+                self._metric_rows(epoch, counts), METRICS_SCHEMA
+            )
+        if budget_col:
+            blocked = unseen.filter(F.col("robots_blocked")).select(
+                "url", "seq", F.lit("robots_blocked").alias("disposition"),
+                F.lit(epoch).alias("epoch"),
+            )
+            members["processed"] = (
+                members["processed"].unionByName(blocked) if n_sched else blocked
+            )
+
+        fields = [f.name for f in FRONTIER_SCHEMA.fields]
+        new_frontier = held.unionByName(
+            allowed.join(page.select("url"), "url", "left_anti").select(*fields)
+        )
+        if n_sched:
+            retry = page.filter(F.col("route") == "retry").select(
                 "url", "ts", "host", "depth", "priority", "seq",
                 (F.col("attempt") + 1).alias("attempt"),
                 (F.lit(epoch + 1) + F.pow(F.lit(2.0), F.col("attempt").cast("double") - 1).cast("int") - 1)
                 .cast("int").alias("eligible_epoch"),
             )
-        )
-        dead_wayback = routed.filter(F.col("route") == "dead_wayback")
-
-        # --- wayback-ok: extract (title + content + success probe) ---
-        extracted = (
-            extract_stage(ok.select("url", "ts", "seq", "attempt", "html"), cfg)
-            .observe(
-                obs_extract,
-                F.count_if(F.col("title").isNotNull() & F.col("md_ok")).alias("extract_ok"),
-                F.count_if(F.col("title").isNull() | ~F.col("md_ok")).alias("extract_fail"),
-            )
-            .cache()
-        )
-        ok_pages = extracted.filter(F.col("title").isNotNull() & F.col("md_ok"))
-        extract_fail = extracted.filter(F.col("title").isNull() | ~F.col("md_ok"))
-
-        # --- SNK2: original-HTML sink rows (file_handler.py:156-201,
-        # gate main.py:148-152): saved whenever a title exists — even
-        # when markdown conversion fails — on the wayback path only
-        # (the memento path never calls save_html). Names are assigned
-        # at finalize time (finalize_html); the .html namespace never
-        # collides with .md/asset names (exists-probe is on the full
-        # path including extension).
-        html_new = None
-        if cfg.save_original_html:
-            # truthiness gates per the reference: empty-string title or
-            # html skips the save, same as None (save_html's
-            # `if not title or not html_content`)
-            html_new = extracted.filter(
-                F.col("title").isNotNull() & (F.col("title") != "")
-                & F.col("html").isNotNull() & (F.col("html") != "")
-            ).select("url", "ts", "seq", "title", "html", F.lit(epoch).alias("epoch"))
-
-        # --- asset counters (A3 tail, reference main.py:111-139:
-        # found/attempted/saved/failed per kind) ride the assets_raw
-        # write as observe() metrics — every found asset is attempted
-        # (disabled kinds prune at find time), failures are null-byte
-        # fetches the sink filter drops
-        obs_assets = Observation(f"assets_{epoch}")
-        asset_kind_aggs = []
-        for kind in cfg.enabled_asset_kinds:
-            asset_kind_aggs += [
-                F.count_if(F.col("kind") == kind).alias(f"assets_found_{kind}"),
-                F.count_if(
-                    (F.col("kind") == kind) & F.col("bytes").isNotNull()
-                ).alias(f"assets_saved_{kind}"),
-                F.count_if(
-                    (F.col("kind") == kind) & F.col("bytes").isNull()
-                ).alias(f"assets_failed_{kind}"),
-            ]
-        assets = (
-            asset_fetch_stage(
-                find_assets_stage(ok.select("url", "ts", "seq", "html"), cfg)
-            )
-            .observe(
-                obs_assets,
-                F.count(F.lit(1)).alias("assets_found"),
-                F.count_if(F.col("bytes").isNotNull()).alias("assets_saved"),
-                F.count_if(F.col("bytes").isNull()).alias("assets_failed"),
-                *asset_kind_aggs,
-            )
-            .filter(F.col("bytes").isNotNull())
-            .cache()
-        )
-
-        # --- the graft's payload corpus: fetched image bytes + alt-text
-        # captions -> images table (BASELINE.json:15 input_hint) ---
-        images_new = None
-        if "img" in cfg.enabled_asset_kinds:
-            from ..operators.images import extract_captions_stage, images_from_assets
-
-            captions = extract_captions_stage(
-                ok.select("url", "html"), cfg.target_domain
-            )
-            images_new = images_from_assets(
-                assets.filter(F.col("kind") == "img"), captions
-            )
-
-        # --- memento fallback ---
-        # cached: mem feeds BOTH mem_extracted (cached separately) and
-        # mem_dead — without the cache the memento fetch stage re-runs
-        # inside the packed state write, on the narrowest partitions of
-        # the epoch (measured as the dominant slice of the per-epoch
-        # __state__ write cost)
-        mem = memento_stage(
-            dead_wayback.select("url", "ts", "seq", "attempt"), cfg
-        ).cache()
-        mem_ok_raw = mem.filter(F.col("memento_result") == "ok")
-        mem_extracted = extract_stage(
-            mem_ok_raw.select(
-                "url", F.lit(MEMENTO_NOW_TS).alias("ts"), "seq", "attempt",
-                F.col("memento_html").alias("html"),
-            ),
-            cfg,
-        ).cache()
-        mem_success = mem_extracted.filter(F.col("title").isNotNull() & F.col("md_ok"))
-        mem_fail = mem_extracted.filter(F.col("title").isNull() | ~F.col("md_ok")).select(
-            "url", "seq", F.lit("memento_extract_or_save_fail").alias("disposition")
-        )
-        mem_dead = mem.filter(F.col("memento_result") != "ok").select(
-            "url", "seq", F.concat(F.lit("dead_"), F.col("memento_result")).alias("disposition")
-        )
-
-        # --- epoch outputs ---
-        docs_raw = (
-            ok_pages.select(
-                "url", "ts", "seq", F.lit("wayback").alias("via"), "title",
-                "content_html", F.lit(epoch).alias("epoch"),
-            )
-            .unionByName(
-                mem_success.select(
-                    "url", "ts", "seq", F.lit("memento").alias("via"), "title",
-                    "content_html", F.lit(epoch).alias("epoch"),
+            new_frontier = new_frontier.unionByName(retry)
+            if cfg.expand_links:
+                new_frontier = new_frontier.unionByName(
+                    self._expand_links(page, frontier, epoch)
                 )
-            )
-        )
-        assets_raw = assets.select(
-            "page_url", "ts", "seq", "kind", "asset_url", "asset_pos",
-            "nbytes", F.lit(epoch).alias("epoch"),
-        )
-
-        # Stage the expensive output FIRST (materializes the cached
-        # fetch/extract chain exactly once), then derive the small
-        # tables (seen/bloom/processed) from the already-written
-        # parquet and stage everything else CONCURRENTLY — local mode
-        # pays ~1s fixed cost per action, so sibling writes overlap.
-        t0 = mark("build_plans", t0)
-        staged = {"docs_raw": store.stage("docs_raw", epoch, docs_raw)}
-        t0 = mark("docs_raw_write", t0)
-        docs_committed = self.spark.read.parquet(staged["docs_raw"])
-        # assets_raw is staged eagerly too (it materializes the cached
-        # asset subtree and fires obs_assets) so the metrics table can
-        # carry the asset counters in the same epoch commit
-        staged["assets_raw"] = store.stage("assets_raw", epoch, assets_raw)
-        t0 = mark("assets_raw_write", t0)
-
-        # the writes above were the first actions through the observed
-        # frames — the named metrics are now available at no extra job
-        # cost
-        route_m = obs_route.get
-        extract_m = obs_extract.get
-        asset_m = obs_assets.get
-        metric_rows = [
-            (epoch, "scheduled", n_sched),
-            (epoch, "fetched_total", route_m["fetched_total"]),
-            (epoch, "fetched_ok", route_m["fetched_ok"]),
-            (epoch, "retry", route_m["retry"]),
-            (epoch, "dead_wayback", route_m["dead_wayback"]),
-            (epoch, "extract_ok", extract_m["extract_ok"]),
-            (epoch, "extract_fail", extract_m["extract_fail"]),
-            # A3 asset counters (reference main.py:111-139); attempted
-            # == found: every found asset of an enabled kind is fetched
-            (epoch, "assets_found", asset_m["assets_found"]),
-            (epoch, "assets_attempted", asset_m["assets_found"]),
-            (epoch, "assets_saved", asset_m["assets_saved"]),
-            (epoch, "assets_failed", asset_m["assets_failed"]),
-        ]
-        for kind in cfg.enabled_asset_kinds:
-            for facet in ("found", "saved", "failed"):
-                metric_rows.append(
-                    (epoch, f"assets_{facet}_{kind}", asset_m[f"assets_{facet}_{kind}"])
-                )
-        metrics = self.spark.createDataFrame(metric_rows, METRICS_SCHEMA)
-
-        seen_new = docs_committed.select("url", "seq", F.lit(epoch).alias("epoch"))
-        processed = (
-            docs_committed.select(
-                "url", "seq", F.concat(F.lit("success_"), F.col("via")).alias("disposition")
-            )
-            .unionByName(extract_fail.select("url", "seq", F.lit("extract_fail").alias("disposition")))
-            .unionByName(mem_fail)
-            .unionByName(mem_dead)
-        )
-        if robots_blocked_rows is not None:
-            processed = processed.unionByName(robots_blocked_rows)
-        processed = processed.withColumn("epoch", F.lit(epoch))
-        new_frontier = held.unionByName(leftover).unionByName(retry)
-
-        # --- frontier expansion (engine-only, depth-bounded): links
-        # discovered in fetched pages enter the frontier at depth+1,
-        # priority = depth (host fairness comes from the per-host
-        # budget, depth ordering from the top-k sort keys) ---
-        if cfg.expand_links:
-            new_frontier = new_frontier.unionByName(
-                self._expand_links(ok, frontier, epoch)
-            )
-        bloom_new = build_bloom_sketches(
-            seen_new, cfg.seen_partitions,
-            expected_per_partition=4096, fpp=cfg.bloom_fpp,
-        )
-
-        from concurrent.futures import ThreadPoolExecutor
-
         # the frontier row count rides the staged write itself (no
         # post-commit re-read job)
         obs_frontier = Observation(f"frontier_{epoch}")
-        new_frontier = new_frontier.observe(
+        members["frontier"] = new_frontier.observe(
             obs_frontier, F.count(F.lit(1)).alias("n")
         )
-
-        # Pure-STATE tables (url_seen/processed/lineage/metrics/bloom)
-        # carry O(n_sched) tiny rows but inherit 32+ write partitions
-        # from upstream shuffles — at tail-epoch widths that was ~5
-        # write jobs x 32 near-empty tasks of pure scheduler overhead
-        # per epoch. They are staged as ONE packed write (sparse union
-        # schema + `_table` discriminator, StateStore.stage_packed),
-        # coalesced to ~4k rows/task. Compute-carrying outputs
-        # (docs_raw/assets_raw/html_raw/images/frontier) are NOT
-        # coalesced: narrowing them would serialize the fetch/extract
-        # work itself.
-        state_par = max(1, min(
-            self.spark.sparkContext.defaultParallelism, n_sched // 4096 + 1
-        ))
-        state_members = {
-            "url_seen": seen_new,
-            "processed": processed,
-            "bloom": bloom_new,
-            "lineage": self._lineage(epoch, sched),
-            "metrics": metrics,
-        }
-        # The frontier/images/html outputs carry O(n_sched) rows but
-        # inherit 32+ near-empty write partitions from their upstream
-        # unions/joins — repartition them to the same scale-adaptive
-        # width as the packed state write (an exchange of tiny rows)
-        # so the write tasks stop being pure scheduler overhead. A
-        # repartition (not coalesce) keeps the upstream link-extract /
-        # caption mapInPandas stages at full parallelism. Row content
-        # is unchanged; all downstream readers key on (url/seq), never
-        # on file layout.
-        jobs = {"frontier": new_frontier.repartition(state_par)}
-        if images_new is not None:
-            jobs["images"] = images_new.repartition(state_par)
-        if html_new is not None:
-            jobs["html_raw"] = html_new.repartition(state_par)
-        def _timed_stage(fn, *args):
-            s = _t()
-            out = fn(*args)
-            return out, _t() - s
-
-        _job_times: dict[str, float] = {}
-        with ThreadPoolExecutor(max_workers=len(jobs) + 1) as pool:
-            futures = {
-                t: pool.submit(_timed_stage, store.stage, t, epoch, df)
-                for t, df in jobs.items()
-            }
-            futures["__state__"] = pool.submit(
-                _timed_stage, store.stage_packed, epoch, state_members, state_par
-            )
-            for t, fut in futures.items():
-                staged[t], _job_times[t] = fut.result()
-        if trace:
-            _marks.append(
-                ("sibling[" + " ".join(f"{k}={v:.2f}" for k, v in _job_times.items()) + "]", 0.0)
-            )
-        t0 = mark("sibling_writes", t0)
-        store.commit(epoch, staged)
+        # ONE write for the whole epoch, narrowed by an exchange of its
+        # small rows to a width scaled to the epoch (~4k pages a task)
+        # so the write tasks are not pure scheduler overhead
+        width = max(1, min(self.spark.sparkContext.defaultParallelism, n_sched // 4096 + 1))
+        path = store.stage_packed(epoch, members, coalesce_to=width)
+        mark("packed_write")
+        store.commit(epoch, {PACKED: path, "frontier": path})
         # seen_new rows <= n_sched; the analytic bound only needs an
         # upper bound on this epoch's new-seen row count
         self._advance_bloom_stats(n_sched)
         n_pending = int(obs_frontier.get["n"])
-        for df in (sched, unseen, fetched, routed, extracted, mem, mem_extracted, assets):
-            df.unpersist()
-        mark("commit", t0)
+        page.unpersist()
+        unseen.unpersist()
+        mark("commit")
         if trace:
             print(
                 f"EPOCH_TRACE epoch={epoch} n_sched={n_sched} "
-                + " ".join(f"{k}={v:.2f}s" for k, v in _marks)
+                + " ".join(f"{k}={v:.2f}s" for k, v in marks)
             )
         return n_sched, n_pending
+
+    def _page_counters(self) -> list:
+        """Observed aggregates over the page frame: the route/extract
+        counters and the asset counters (every found asset of an
+        enabled kind is attempted; failures are unfetched payloads)."""
+        extracted = "title IS NOT NULL AND md_ok"
+        exprs = {
+            "scheduled": "count(1)",
+            "fetched_ok": "count_if(route = 'ok')",
+            "retry": "count_if(route = 'retry')",
+            "dead_wayback": "count_if(route = 'dead_wayback')",
+            "extract_ok": f"count_if(route = 'ok' AND {extracted})",
+            "extract_fail": f"count_if(route = 'ok' AND NOT ({extracted}))",
+        }
+
+        def n_assets(pred: str) -> str:
+            return f"coalesce(sum(size(filter(assets, a -> {pred}))), 0)"
+
+        facets = {"found": "true", "saved": "a.fetched", "failed": "NOT a.fetched"}
+        for facet, pred in facets.items():
+            exprs[f"assets_{facet}"] = n_assets(pred)
+            for kind in self.config.enabled_asset_kinds:
+                exprs[f"assets_{facet}_{kind}"] = n_assets(f"a.kind = '{kind}' AND {pred}")
+        return [F.expr(e).alias(name) for name, e in exprs.items()]
+
+    def _metric_rows(self, epoch: int, c) -> list[tuple]:
+        names = [
+            "scheduled", "fetched_total", "fetched_ok", "retry", "dead_wayback",
+            "extract_ok", "extract_fail", "assets_found", "assets_attempted",
+            "assets_saved", "assets_failed",
+        ] + [
+            f"assets_{facet}_{kind}"
+            for kind in self.config.enabled_asset_kinds
+            for facet in ("found", "saved", "failed")
+        ]
+        # every scheduled fetch is routed exactly once; attempted ==
+        # found: every found asset of an enabled kind is fetched
+        alias = {"fetched_total": "scheduled", "assets_attempted": "assets_found"}
+        return [(epoch, n, int(c[alias.get(n, n)])) for n in names]
+
+    def _page_members(self, epoch: int, page: DataFrame) -> dict[str, DataFrame]:
+        """The epoch's packed members that project or explode the page
+        frame: docs_raw / html_raw / assets_raw / images / url_seen /
+        processed / bloom."""
+        cfg = self.config
+        ep = F.lit(epoch).alias("epoch")
+        extracted = F.col("title").isNotNull() & F.col("md_ok")
+        docs = page.filter(F.col("via").isNotNull() & extracted).select(
+            "url",
+            F.when(F.col("via") == "memento", F.lit(MEMENTO_NOW_TS))
+            .otherwise(F.col("ts")).alias("ts"),
+            "seq", "via", "title", "content_html", ep,
+        )
+        seen_new = docs.select("url", "seq", ep)
+        disposition = (
+            F.when(F.col("route") == "ok", F.when(extracted, "success_wayback").otherwise("extract_fail"))
+            .when(
+                F.col("memento_result") == "ok",
+                F.when(extracted, "success_memento").otherwise("memento_extract_or_save_fail"),
+            )
+            .otherwise(F.concat(F.lit("dead_"), F.col("memento_result")))
+        )
+        assets = page.select(
+            F.col("url").alias("page_url"), "ts", "seq", F.explode("assets").alias("a")
+        ).filter(F.col("a.fetched"))
+        out = {
+            "docs_raw": docs,
+            "url_seen": seen_new,
+            "processed": page.filter(F.col("route") != "retry").select(
+                "url", "seq", disposition.alias("disposition"), ep
+            ),
+            "assets_raw": assets.select(
+                "page_url", "ts", "seq", "a.kind", "a.asset_url", "a.asset_pos",
+                "a.nbytes", ep,
+            ),
+            "bloom": build_bloom_sketches(
+                seen_new, cfg.seen_partitions,
+                expected_per_partition=4096, fpp=cfg.bloom_fpp,
+            ),
+        }
+        if cfg.save_original_html:
+            # SNK2: original-HTML sink rows (file_handler.py:156-201,
+            # gate main.py:148-152) — the pass keeps html only where a
+            # wayback page has a non-empty title and html
+            out["html_raw"] = page.filter(F.col("html").isNotNull()).select(
+                "url", "ts", "seq", "title", "html", ep
+            )
+        if "img" in cfg.enabled_asset_kinds:
+            # the graft's payload corpus (BASELINE.json:15 input_hint)
+            out["images"] = page.select(F.explode("images").alias("i")).select("i.*")
+        return out
 
     def _cached_bloom_stats(self, sketch_df: DataFrame) -> dict:
         if self._bloom_stats is None:
@@ -699,59 +553,23 @@ class CrawlPlan:
             ]
         )
 
-    def _expand_links(self, ok_pages: DataFrame, frontier: DataFrame, epoch: int) -> DataFrame:
-        """U1-adjacent frontier expansion: <a href> links from fetched
-        pages -> new frontier rows at depth+1 (bounded by max_depth),
-        deduped within the batch and against the current frontier
-        (the exact seen-set anti-join happens at scheduling time).
+    def _expand_links(self, page: DataFrame, frontier: DataFrame, epoch: int) -> DataFrame:
+        """U1-adjacent frontier expansion: the <a href> links the page
+        pass found in fetched pages -> new frontier rows at depth+1
+        (bounded by max_depth), deduped within the batch and against
+        the current frontier (the exact seen-set anti-join happens at
+        scheduling time).
 
         New seqs are a pure function of (depth, parent seq, link
         position) so expansion stays deterministic under any task
         ordering: seq = depth<<50 | parent_seq<<12 | pos."""
-        from collections.abc import Iterator
-        from urllib.parse import urljoin, urlparse
-
         cfg = self.config
-        max_links = cfg.max_links_per_page
-        link_schema = T.StructType(
-            [
-                T.StructField("parent_seq", T.LongType()),
-                T.StructField("parent_depth", T.IntegerType()),
-                T.StructField("parent_ts", T.StringType()),
-                T.StructField("url", T.StringType()),
-                T.StructField("pos", T.IntegerType()),
-            ]
-        )
-
-        def extract_links(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..content.extract import _parse
-
-            for pdf in batches:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    if not r.html:
-                        continue
-                    try:
-                        soup = _parse(r.html)
-                        seen_here = set()
-                        for a in soup.find_all("a", href=True):
-                            href = a["href"]
-                            if not href or href.startswith(("#", "mailto:", "javascript:")):
-                                continue
-                            absu = urljoin(r.url, href).split("#", 1)[0]
-                            if urlparse(absu).scheme not in ("http", "https"):
-                                continue
-                            if absu not in seen_here:
-                                seen_here.add(absu)
-                        for pos, link in enumerate(sorted(seen_here)[:max_links]):
-                            rows.append((r.seq, int(r.depth), r.ts, link, pos))
-                    except Exception:
-                        pass
-                yield pd.DataFrame(rows, columns=[f.name for f in link_schema.fields])
-
-        links = ok_pages.select("url", "ts", "seq", "depth", "html").mapInPandas(
-            extract_links, link_schema
-        )
+        links = page.filter(F.col("route") == "ok").select(
+            F.col("seq").alias("parent_seq"),
+            F.col("depth").alias("parent_depth"),
+            F.col("ts").alias("parent_ts"),
+            F.explode("links").alias("l"),
+        ).select("parent_seq", "parent_depth", "parent_ts", "l.url", "l.pos")
         if cfg.canonicalize_urls:
             # discovered links collapse to canonical form BEFORE the
             # per-url dedup below, matching the seed path — the whole
@@ -788,12 +606,11 @@ class CrawlPlan:
         )
         return expanded.select(*[f.name for f in FRONTIER_SCHEMA.fields])
 
-    def _lineage(self, epoch: int, sched: DataFrame) -> DataFrame:
+    def _lineage(self, epoch: int, page: DataFrame) -> DataFrame:
         """Per-epoch per-host grant counts (politeness audit) +
-        per-partition row counts (lineage, BASELINE.json:6)."""
+        per-fetch-partition row counts (lineage, BASELINE.json:6)."""
         return (
-            sched.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("host", "partition_id")
+            page.groupBy("host", "partition_id")
             .agg(F.count("*").alias("granted"))
             .withColumn("epoch", F.lit(epoch))
         )

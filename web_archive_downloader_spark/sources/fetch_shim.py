@@ -32,15 +32,23 @@ from pyspark.sql import types as T
 
 from ..config import EngineConfig
 from ..content.extract import (
-    extract_title_from_soup,
+    extract_fields_from_soup,
     find_assets,
-    find_main_content,
+    find_assets_in_soup,
     html_to_markdown,
+    links_from_soup,
     rewrite_asset_links,
     _parse,
 )
 from ..content.paths import page_dir
-from ..datagen import asset_bytes, wayback_fetch_sim
+from ..datagen import (
+    asset_bytes,
+    memento_api_json,
+    memento_content_fetch,
+    wayback_fetch_sim,
+)
+from ..functions.scalar import route_of
+from ..operators.images import IMAGES_SCHEMA, captions_from_soup, image_row
 
 
 def politeness_pacer(epoch_start: float, delay_seconds: float = 0.0, now=None, sleep=None):
@@ -97,17 +105,10 @@ def fetch_stage(scheduled: DataFrame, pacer=None) -> DataFrame:
         + [T.StructField("outcome", T.StringType()), T.StructField("html", T.StringType())]
     )
     paced = "pace_slot" in scheduled.columns
-    _OUT_CHUNK = 4096
 
     def run_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         outcomes, htmls = [], []
-        hosts = pdf["host"] if "host" in pdf.columns else None
-        for i, (url, attempt) in enumerate(zip(pdf["url"], pdf["attempt"])):
-            if paced and pacer is not None:
-                pacer(
-                    float(pdf["pace_slot"].iloc[i]),
-                    hosts.iloc[i] if hosts is not None else None,
-                )
+        for url, attempt in _paced_rows(pdf, pacer):
             o, h = wayback_fetch_sim(url, int(attempt))
             outcomes.append(o)
             htmls.append(h)
@@ -117,22 +118,44 @@ def fetch_stage(scheduled: DataFrame, pacer=None) -> DataFrame:
         return pdf
 
     def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not paced:
-            for pdf in batches:
-                yield run_chunk(pdf)
-            return
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        sort_cols = ["pace_slot"] + (["seq"] if "seq" in whole.columns else [])
-        whole = whole.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-        for start in range(0, len(whole), _OUT_CHUNK):
-            yield run_chunk(
-                whole.iloc[start : start + _OUT_CHUNK].reset_index(drop=True)
-            )
+        for pdf in _calendar_chunks(batches, paced):
+            yield run_chunk(pdf)
 
     return scheduled.mapInPandas(fetch_batches, out_schema)
+
+
+_OUT_CHUNK = 4096
+
+
+def _calendar_chunks(batches: Iterator[pd.DataFrame], paced: bool) -> Iterator[pd.DataFrame]:
+    """A fetch task's input in firing order: unpaced batches pass
+    through; paced partitions are drained whole, sorted by
+    (pace_slot, seq) and re-chunked (see fetch_stage)."""
+    if not paced:
+        yield from batches
+        return
+    pdfs = [p for p in batches if len(p)]
+    if not pdfs:
+        return
+    whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    sort_cols = ["pace_slot"] + (["seq"] if "seq" in whole.columns else [])
+    whole = whole.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
+    for start in range(0, len(whole), _OUT_CHUNK):
+        yield whole.iloc[start : start + _OUT_CHUNK].reset_index(drop=True)
+
+
+def _paced_rows(pdf: pd.DataFrame, pacer):
+    """(url, attempt) per row, each released by ``pacer`` at its
+    calendar slot when the chunk is paced."""
+    paced = pacer is not None and "pace_slot" in pdf.columns
+    hosts = pdf["host"] if "host" in pdf.columns else None
+    for i, (url, attempt) in enumerate(zip(pdf["url"], pdf["attempt"])):
+        if paced:
+            pacer(
+                float(pdf["pace_slot"].iloc[i]),
+                hosts.iloc[i] if hosts is not None else None,
+            )
+        yield url, attempt
 
 
 # SRC4/X9: the Memento API's nested response shape
@@ -172,8 +195,6 @@ def memento_lookup_stage(dead: DataFrame) -> DataFrame:
 
     Output adds (memento_uri nullable, lookup_result in
     'found'|'loop'|'none')."""
-    from ..datagen import memento_api_json
-
     raw_schema = T.StructType(
         dead.schema.fields + [T.StructField("memento_api_raw", T.StringType())]
     )
@@ -209,8 +230,6 @@ def memento_stage(dead: DataFrame, config: EngineConfig) -> DataFrame:
     fallback inside one loop iteration (main.py:71-93); here it is
     two vectorized stages in one plan. Output adds
     (memento_result, memento_html)."""
-    from ..datagen import memento_content_fetch
-
     looked_up = memento_lookup_stage(dead)
     fetch_schema = T.StructType(
         looked_up.schema.fields + [T.StructField("_content", T.StringType())]
@@ -322,36 +341,172 @@ def extract_stage(pages: DataFrame, config: EngineConfig) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            titles, contents, md_oks = [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if not html:
-                    titles.append(None)
-                    contents.append(None)
-                    md_oks.append(False)
-                    continue
-                try:
-                    soup = _parse(html)
-                    title = extract_title_from_soup(soup, url)
-                    content = find_main_content(soup, selectors)
-                    content_str = str(content) if content is not None else None
-                    titles.append(title)
-                    contents.append(content_str)
-                    # provisional success probe (main.py:155): the
-                    # later link-rewrite only alters attribute values,
-                    # which cannot change markdown emptiness, so this
-                    # equals the reference's post-rewrite check
-                    md_oks.append(bool(html_to_markdown(content_str)) if content_str else False)
-                except Exception:
-                    titles.append(None)
-                    contents.append(None)
-                    md_oks.append(False)
+            fields = [_extract(html, url, selectors)[1:] for url, html in zip(pdf["url"], pdf["html"])]
             pdf = pdf.copy()
-            pdf["title"] = titles
-            pdf["content_html"] = contents
-            pdf["md_ok"] = md_oks
+            pdf["title"] = [f[0] for f in fields]
+            pdf["content_html"] = [f[1] for f in fields]
+            pdf["md_ok"] = [f[2] for f in fields]
             yield pdf
 
     return pages.mapInPandas(run, out_schema)
+
+
+def _extract(html: str | None, url: str, selectors) -> tuple:
+    """(soup, title, content_html, md_ok) with extract_stage's failure
+    semantics: no html or a parse error -> no soup and no fields; an
+    error inside the extract -> the soup but no fields."""
+    if not html:
+        return None, None, None, False
+    try:
+        soup = _parse(html)
+    except Exception:
+        return None, None, None, False
+    try:
+        return (soup, *extract_fields_from_soup(soup, url, selectors))
+    except Exception:
+        return soup, None, None, False
+
+
+def memento_navigate(raw: str | None) -> tuple[str | None, str]:
+    """memento_lookup_stage's navigation for one response body, in
+    Python: (memento_uri, lookup_result). A missing or malformed body,
+    or one without ``mementos.closest.uri[0]``, is 'none'; a
+    web.archive.org closest uri is 'loop' (memento_client.py:45-61)."""
+    from urllib.parse import urlsplit
+
+    try:
+        doc = json.loads(raw) if raw else None
+    except ValueError:
+        doc = None
+    mementos = doc.get("mementos") if isinstance(doc, dict) else None
+    closest = mementos.get("closest") if isinstance(mementos, dict) else None
+    uris = closest.get("uri") if isinstance(closest, dict) else None
+    uri0 = uris[0] if isinstance(uris, list) and uris else None
+    if not isinstance(uri0, str):
+        return None, "none"
+    if "web.archive.org" in urlsplit(uri0).netloc:
+        return None, "loop"
+    return uri0, "found"
+
+
+_PAGE_ASSET = T.StructType(
+    [
+        T.StructField("kind", T.StringType()),
+        T.StructField("asset_url", T.StringType()),
+        T.StructField("asset_pos", T.IntegerType()),
+        T.StructField("nbytes", T.IntegerType()),
+        # asset_fetch_stage's sink filter (bytes not null); nbytes is
+        # null for an empty payload too
+        T.StructField("fetched", T.BooleanType()),
+    ]
+)
+_PAGE_LINK = T.StructType(
+    [T.StructField("url", T.StringType()), T.StructField("pos", T.IntegerType())]
+)
+
+
+_PAGE_FIELDS = [
+    T.StructField("route", T.StringType()),
+    T.StructField("via", T.StringType()),
+    T.StructField("title", T.StringType()),
+    T.StructField("content_html", T.StringType()),
+    T.StructField("md_ok", T.BooleanType()),
+    T.StructField("html", T.StringType()),
+    T.StructField("memento_result", T.StringType()),
+    T.StructField("assets", T.ArrayType(_PAGE_ASSET)),
+    T.StructField("images", T.ArrayType(IMAGES_SCHEMA)),
+    T.StructField("links", T.ArrayType(_PAGE_LINK)),
+]
+
+
+def process_page(url: str, attempt: int, config: EngineConfig, fetch=None) -> dict:
+    """Everything an epoch does to one scheduled URL, with ONE parse of
+    the fetched page: wayback fetch -> route -> (ok) extract + asset
+    discovery + asset fetch + captions + image decode + links, or
+    (dead) memento lookup + fetch + extract. Each step reuses the
+    kernel of the standalone stage it replaces (fetch_stage, route_col,
+    extract_stage, find_assets_stage, asset_fetch_stage,
+    extract_captions_stage, images_from_assets, memento_stage), so the
+    values are the ones those stages produce.
+
+    Returns the page-pass columns (see page_pass_stage). ``assets``
+    lists every found asset of an enabled kind (``fetched`` False =
+    failed fetch); ``html`` is kept only where the original-HTML sink
+    saves it; ``links`` only when the config expands links. ``fetch``
+    replaces the wayback fetch (default wayback_fetch_sim)."""
+    selectors = tuple(config.content_selectors)
+    row = dict(
+        route=None, via=None, title=None, content_html=None, md_ok=False,
+        html=None, memento_result=None, assets=[], images=[], links=[],
+    )
+    outcome, html = (fetch or wayback_fetch_sim)(url, int(attempt))
+    row["route"] = route = route_of(outcome, int(attempt), config.max_retries)
+    if route == "ok":
+        soup, title, content, md_ok = _extract(html, url, selectors)
+        row.update(via="wayback", title=title, content_html=content, md_ok=md_ok)
+        if config.save_original_html and title and html:
+            row["html"] = html
+        if soup is None:
+            return row
+        found = find_assets_in_soup(soup, url, config)
+        captions = None
+        for kind in config.enabled_asset_kinds:  # js, css, img (main.py:104-107)
+            for a in found.get(kind, []):
+                data = asset_bytes(a)
+                row["assets"].append({
+                    "kind": kind, "asset_url": a, "asset_pos": len(row["assets"]),
+                    "nbytes": len(data) if data else None, "fetched": data is not None,
+                })
+                if kind != "img" or data is None:
+                    continue
+                if captions is None:  # first document-order caption per asset
+                    captions = {}
+                    for au, cap in captions_from_soup(soup, url, config.target_domain):
+                        captions.setdefault(au, cap)
+                img = image_row(url, a, data, captions.get(a))
+                if img is not None:
+                    row["images"].append(img)
+        if config.expand_links:
+            row["links"] = [
+                {"url": link, "pos": pos}
+                for pos, link in enumerate(links_from_soup(soup, url, config.max_links_per_page))
+            ]
+    elif route == "dead_wayback":
+        uri, lookup = memento_navigate(memento_api_json(url))
+        content = memento_content_fetch(uri) if isinstance(uri, str) else None
+        html_ok = content is not None and "<html" in content.lower()
+        result = lookup if lookup != "found" else ("ok" if html_ok else "non_html")
+        row["memento_result"] = result
+        if result == "ok":
+            _, title, content_html, md_ok = _extract(content, url, selectors)
+            row.update(via="memento", title=title, content_html=content_html, md_ok=md_ok)
+    return row
+
+
+def page_pass_stage(scheduled: DataFrame, config: EngineConfig, pacer=None) -> DataFrame:
+    """The fused epoch pass: one ``mapInPandas`` over the schedule
+    that runs process_page per row, so each page crosses the
+    Arrow/Python boundary once and is parsed once. Output: the input
+    columns plus route, via, title, content_html, md_ok, html,
+    memento_result and the array columns assets / images / links —
+    one row per scheduled URL. Rows fire in pace-calendar order with
+    the optional ``pacer`` exactly as in fetch_stage."""
+    out_schema = T.StructType(scheduled.schema.fields + _PAGE_FIELDS)
+    names = [f.name for f in _PAGE_FIELDS]
+    paced = "pace_slot" in scheduled.columns
+    # bound here so the task closure ships the driver's fetch function
+    # (a patched content server in tests) rather than re-importing it
+    fetch = wayback_fetch_sim
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in _calendar_chunks(batches, paced):
+            rows = [process_page(url, attempt, config, fetch) for url, attempt in _paced_rows(pdf, pacer)]
+            pdf = pdf.copy()
+            for name in names:
+                pdf[name] = [r[name] for r in rows]
+            yield pdf
+
+    return scheduled.mapInPandas(run, out_schema)
 
 
 def finalize_markdown_stage(docs_with_assets: DataFrame, config: EngineConfig) -> DataFrame:

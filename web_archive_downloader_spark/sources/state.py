@@ -7,6 +7,8 @@ This container has no Iceberg runtime jars, so the same contract is
 implemented as a parquet + manifest layout:
 
     root/<table>/epoch=<k>/part-*.parquet     (data, written first)
+    root/__state__/epoch=<k>/part-*.parquet   (a crawl epoch's tables,
+                                               packed into one write)
     root/_manifest.json                       (single commit pointer)
 
 A commit writes all tables' new epoch directories, then atomically
@@ -29,13 +31,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---- packed state ----------------------------------------------------
-# The five tiny per-epoch state tables (url_seen / processed / lineage /
-# metrics / bloom) are staged as ONE parquet write with a `_table`
-# discriminator over a sparse union schema: tail epochs previously paid
-# five near-empty write jobs of pure scheduler overhead per epoch; now
-# one. Readers unpack transparently (read/read_parts), so consumers are
-# layout-agnostic. This mirrors a multi-table Iceberg transaction: one
-# commit, several logical tables.
+# Every per-epoch output is staged as ONE parquet write with a `_table`
+# discriminator over a sparse union schema: the small state tables
+# (url_seen / processed / lineage / metrics / bloom), the payload
+# tables (docs_raw / html_raw / assets_raw / images) and the epoch's
+# frontier replacement. One write job per epoch instead of one per
+# table; readers unpack transparently (read/read_parts/
+# read_latest_only), so consumers are layout-agnostic and still union
+# the per-table dirs of stores written before the payload joined the
+# pack. This mirrors a multi-table Iceberg transaction: one commit,
+# several logical tables.
 PACKED = "__state__"
 
 _PACKED_SCHEMA = T.StructType(
@@ -53,6 +58,27 @@ _PACKED_SCHEMA = T.StructType(
         T.StructField("version", T.IntegerType()),
         T.StructField("n_partitions", T.IntegerType()),
         T.StructField("epoch", T.IntegerType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("via", T.StringType()),
+        T.StructField("title", T.StringType()),
+        T.StructField("content_html", T.StringType()),
+        T.StructField("html", T.StringType()),
+        T.StructField("page_url", T.StringType()),
+        T.StructField("kind", T.StringType()),
+        T.StructField("asset_url", T.StringType()),
+        T.StructField("asset_pos", T.IntegerType()),
+        T.StructField("nbytes", T.IntegerType()),
+        T.StructField("image_id", T.StringType()),
+        T.StructField("bytes", T.BinaryType()),
+        T.StructField("w", T.IntegerType()),
+        T.StructField("h", T.IntegerType()),
+        T.StructField("fmt", T.StringType()),
+        T.StructField("caption", T.StringType()),
+        T.StructField("phash", T.LongType()),
+        T.StructField("depth", T.IntegerType()),
+        T.StructField("priority", T.DoubleType()),
+        T.StructField("attempt", T.IntegerType()),
+        T.StructField("eligible_epoch", T.IntegerType()),
     ]
 )
 
@@ -62,7 +88,21 @@ _PACKED_FIELDS: dict[str, list[str]] = {
     "lineage": ["host", "partition_id", "granted", "epoch"],
     "metrics": ["epoch", "metric", "value"],
     "bloom": ["partition_id", "sketch", "version", "n_partitions"],
+    "docs_raw": ["url", "ts", "seq", "via", "title", "content_html", "epoch"],
+    "html_raw": ["url", "ts", "seq", "title", "html", "epoch"],
+    "assets_raw": ["page_url", "ts", "seq", "kind", "asset_url", "asset_pos", "nbytes", "epoch"],
+    "images": ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
+    "frontier": ["url", "ts", "host", "depth", "priority", "seq", "attempt", "eligible_epoch"],
 }
+
+# Members that compaction does NOT carry into the merged dir: payload
+# rows stay where their epoch wrote them (rewriting crawled bytes every
+# K epochs would dwarf the listing cost compaction saves), and a
+# frontier is replaced every epoch, so only the manifest's latest
+# pointer is ever read. Compaction retires the merged epoch dirs to
+# the manifest's ``packed_payload`` list, which payload reads union.
+_UNCOMPACTED = ("docs_raw", "html_raw", "assets_raw", "images", "frontier")
+_PAYLOAD_DIRS = "packed_payload"
 
 _TYPES = {f.name: f.dataType for f in _PACKED_SCHEMA.fields}
 
@@ -84,6 +124,9 @@ class StateStore:
         import hashlib
 
         self._ident = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:10]
+        # one packed scan per dir list, shared by every member read of
+        # it (see _packed_scan); dropped whenever the store writes
+        self._packed_scans: dict[tuple[str, ...], DataFrame] = {}
 
     # --- manifest ---
     @property
@@ -97,6 +140,7 @@ class StateStore:
             return json.load(f)
 
     def _write_manifest(self, manifest: dict) -> None:
+        self._packed_scans.clear()
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f, indent=1)
@@ -110,6 +154,7 @@ class StateStore:
     def stage(self, table: str, epoch: int, df: DataFrame, partition_by: list[str] | None = None) -> str:
         """Write one table's epoch directory (not yet visible)."""
         path = os.path.join(self.root, table, f"epoch={epoch}")
+        self._packed_scans.clear()
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -140,14 +185,15 @@ class StateStore:
                     "(missing: %s, unexpected: %s)"
                     % (sorted(want - have), sorted(have - want))
                 )
-            cols = [F.lit(name).alias("_table")] + [
-                (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
+            # SQL strings: one py4j call per member, not one per column
+            cols = [f"'{name}' AS _table"] + [
+                f"CAST({f.name if f.name in have else 'NULL'} AS {f.dataType.simpleString()}) AS {f.name}"
                 for f in _PACKED_SCHEMA.fields[1:]
             ]
-            parts.append(df.select(*cols))
+            parts.append(df.selectExpr(*cols))
         packed = parts[0]
         for p in parts[1:]:
-            packed = packed.unionByName(p)
+            packed = packed.union(p)  # same projection order, so positional
         if coalesce_to:
             # repartition, NOT coalesce: coalesce propagates its
             # narrowness up every shuffle-free member plan, so the
@@ -163,15 +209,28 @@ class StateStore:
         superseded (merged into the bucketed base by bucketize) and
         filtered out — a pushed-down predicate, no rewrite needed."""
         paths = manifest["tables"].get(PACKED, [])
+        if table in _UNCOMPACTED:
+            paths = manifest.get(_PAYLOAD_DIRS, []) + paths
         if not paths:
             return None
-        df = self.spark.read.schema(_PACKED_SCHEMA).parquet(*paths).filter(
-            F.col("_table") == table
-        )
+        df = self._packed_scan(paths).filter(F.col("_table") == table)
         floor = manifest.get("packed_floor", {}).get(table)
         if floor is not None:
             df = df.filter(F.col("epoch") > floor)
         return df.select(*_PACKED_FIELDS[table])
+
+    def _packed_scan(self, paths: list[str]) -> DataFrame:
+        """The scan of a packed dir list, shared by every member read
+        over it. Sharing matters for cached plans that read two members
+        (finalize_outputs reads docs_raw and assets_raw): when a write
+        rewrites a dir, Spark refreshes the file index of only the
+        FIRST relation over that path in each cached plan
+        (CacheManager.recacheByPath), so a second, separate scan of the
+        same dir would keep listing the replaced files."""
+        key = tuple(paths)
+        if key not in self._packed_scans:
+            self._packed_scans[key] = self.spark.read.schema(_PACKED_SCHEMA).parquet(*paths)
+        return self._packed_scans[key]
 
     def commit(self, epoch: int, staged: dict[str, str]) -> None:
         """Atomically publish all staged epoch dirs as epoch's snapshot."""
@@ -378,7 +437,7 @@ class StateStore:
         if packed_paths:
             rest = self.spark.read.schema(_PACKED_SCHEMA).parquet(
                 *packed_paths
-            ).filter(F.col("_table") != "bloom")
+            ).filter(~F.col("_table").isin("bloom", *_UNCOMPACTED))
             # the rewrite doubles as a compaction pass: drop member
             # rows a bucketized base has superseded (same filter
             # compact() applies) instead of carrying them into the
@@ -391,12 +450,24 @@ class StateStore:
             rest.write.mode("overwrite").parquet(packed_path)
             new_packed = [packed_path]
         manifest["tables"]["bloom"] = [new_path]
+        dropped = []
         if packed_paths:
             manifest["tables"][PACKED] = new_packed
             manifest.setdefault("compaction_floor", {})[PACKED] = epoch
+            dropped = self._retire_packed(manifest, packed_paths)
         self._write_manifest(manifest)  # atomic swap
-        for p in old_bloom + packed_paths:
+        for p in old_bloom + dropped:
             shutil.rmtree(p, ignore_errors=True)
+
+    @staticmethod
+    def _retire_packed(manifest: dict, paths: list[str]) -> list[str]:
+        """After a rewrite merged ``paths``' state rows: keep the epoch
+        dirs, whose payload and frontier rows were not merged, on the
+        manifest's payload list; return the rewrite outputs among
+        ``paths`` (state rows only), which are now safe to delete."""
+        kept = [p for p in paths if os.path.basename(p).startswith("epoch=")]
+        manifest[_PAYLOAD_DIRS] = manifest.get(_PAYLOAD_DIRS, []) + kept
+        return [p for p in paths if p not in kept]
 
     def read_latest_only(self, table: str, schema: T.StructType | None = None) -> DataFrame:
         """For tables where each epoch REPLACES state (e.g. frontier)."""
@@ -405,7 +476,15 @@ class StateStore:
             if schema is None:
                 raise ValueError(f"table {table} empty and no schema given")
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(paths[-1])
+        latest = paths[-1]
+        if os.path.basename(os.path.dirname(latest)) == PACKED:
+            # the epoch's replacement rode the packed write
+            return self._packed_scan([latest]).filter(F.col("_table") == table).select(
+                *_PACKED_FIELDS[table]
+            )
+        # a given schema skips parquet's footer-inference job
+        reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
+        return reader.parquet(latest)
 
     def compact(self, table: str, schema: T.StructType | None = None) -> int:
         """Snapshot compaction (Iceberg's rewrite_data_files): merge a
@@ -422,14 +501,20 @@ class StateStore:
         paths = manifest["tables"].get(table, [])
         if len(paths) <= 1:
             return 0
-        df = self.spark.read.parquet(*paths)
+        dropped = paths
         if table == PACKED:
+            df = self.spark.read.schema(_PACKED_SCHEMA).parquet(*paths).filter(
+                ~F.col("_table").isin(*_UNCOMPACTED)
+            )
+            dropped = self._retire_packed(manifest, paths)
             # physically drop member rows superseded by a bucketized
             # base (reads already filter them; compaction reclaims)
             for member, floor in manifest.get("packed_floor", {}).items():
                 df = df.filter(
                     (F.col("_table") != member) | (F.col("epoch") > floor)
                 )
+        else:
+            df = self.spark.read.parquet(*paths)
         compact_path = os.path.join(
             self.root, table, f"compacted={manifest['epoch']}"
         )
@@ -439,7 +524,7 @@ class StateStore:
         # point is gone — rollback past it must be refused
         manifest.setdefault("compaction_floor", {})[table] = manifest["epoch"]
         self._write_manifest(manifest)  # atomic swap
-        for p in paths:  # old dirs are now unreferenced
+        for p in dropped:  # now unreferenced
             shutil.rmtree(p, ignore_errors=True)
         return len(paths)
 
