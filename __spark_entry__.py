@@ -1,13 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Checked query registry for the crawl engine's operators.
 
-``queries()`` exposes one entry per implemented operator family from
-SURVEY.md §2 plus the training-data operator suite, each mapped onto
-the driver-provided testdata tables; ``oracle_sql()`` gives the
-DuckDB-portable twin (identical hashing: md5-derived 56-bit ints,
-polynomial char folds — verified primitive-by-primitive).
-Non-SQL-expressible ops (the epoch crawl pipeline itself, image
-decode, LSH-ANN recall) are verified in tests/ against the sequential
-oracle instead.
+``entry()`` is the flagship crawl-schedule shape. ``queries()`` exposes
+one entry per engine operator family the crawl and its curation path
+use (dedup, ANN, packing, phash, collision naming, per-host budgets,
+memento navigation, scalar and text-stats functions), each mapped onto
+the testdata tables; ``oracle_sql()`` gives the DuckDB twin of each
+entry (identical hashing: md5-derived 56-bit ints, polynomial char
+folds — verified primitive-by-primitive). Non-SQL-expressible ops (the
+epoch crawl pipeline itself, image decode, LSH-ANN recall) are
+verified in tests/ against the sequential oracle instead.
 """
 
 from __future__ import annotations
@@ -115,38 +116,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ------------------------------------------------------------- queries
-
-def _q_latest_event_per_user(spark, sf):
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.asc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-        )
-    )
-
-
-def _q_customers_no_orders(spark, sf):
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders")
-    return c.join(o.select(F.col("o_custkey")), c.c_custkey == F.col("o_custkey"), "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-def _q_topk_events_per_user(spark, sf):
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        ev.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("user_id", "rank", "event_id", "value")
-    )
-
 
 def _q_budgeted_topk(spark, sf):
     """per_host_topk with a PER-KEY budget table (the robots
@@ -263,38 +232,6 @@ def _q_html_names(spark, sf):
     )
 
 
-def _q_pricing_summary(spark, sf):
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def _q_revenue_by_nation(spark, sf):
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders")
-    li = _t(spark, sf, "lineitem")
-    n = _t(spark, sf, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n_lineitems"),
-        )
-    )
-
-
 def _q_dedup_exact(spark, sf):
     return exact_dedup(_t(spark, sf, "documents"))
 
@@ -394,118 +331,6 @@ def _q_corpus_selection(spark, sf):
             & (F.col("n_tokens") >= 5)
         )
         .select("doc_id", "cluster_size", "quality", "n_tokens", "lang_pred")
-    )
-
-
-def _q_volume_shipping(spark, sf):
-    """Q7-style: revenue flow between supplier-nation and
-    customer-nation pairs per ship year, for two chosen nations. Two
-    broadcast dim joins (nation twice under different roles), big-side
-    joins on the fact keys, partial+final agg. The nation dims are
-    filtered to the two chosen nations BEFORE the joins (each inner
-    broadcast join then drops ~23/25 of its fact rows at the join, a
-    ~25x smaller join output at TPC-H selectivity); the residual pair
-    filter above the joins only removes the two same-nation combos."""
-    li = _t(spark, sf, "lineitem")
-    o = _t(spark, sf, "orders")
-    c = _t(spark, sf, "customer")
-    s = _t(spark, sf, "supplier")
-    n = _t(spark, sf, "nation").filter(F.col("n_name").isin("NATION_3", "NATION_7"))
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
-    pair = ((F.col("supp_nation") == "NATION_3") & (F.col("cust_nation") == "NATION_7")) | (
-        (F.col("supp_nation") == "NATION_7") & (F.col("cust_nation") == "NATION_3")
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), s.s_nationkey == F.col("s_nk"))
-        .join(F.broadcast(n2), c.c_nationkey == F.col("c_nk"))
-        .filter(pair)
-        .groupBy(
-            "supp_nation", "cust_nation",
-            F.year("l_shipdate").cast("long").alias("l_year"),
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-def _q_click_attribution(spark, sf):
-    """RANGE JOIN (interval-bucketed): clicks attributed to each
-    purchase by the same user within the preceding 30 minutes
-    (half-open [p.ts-30min, p.ts)). The operator quantizes time into
-    window-span buckets so the join is a pure equi-join on
-    (user_id, bucket) — never a per-key cross product with a post
-    filter, never a BNLJ (plan-asserted in test_plan_shapes);
-    purchases with no clicks ride back in via a left join."""
-    from web_archive_downloader_spark.operators.rangejoin import (
-        MICROS_PER_MINUTE,
-        range_join,
-    )
-
-    ev = _t(spark, sf, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("v"),
-    )
-    pairs = range_join(
-        purchases, clicks, key="user_id",
-        lower_micros=-30 * MICROS_PER_MINUTE, upper_micros=0,
-        left_ts="p_ts", right_ts="c_ts",
-    )
-    agg = pairs.groupBy("purchase_id").agg(
-        F.count("*").alias("n_clicks"),
-        F.round(F.sum("v"), 4).alias("click_value"),
-    )
-    return (
-        purchases.select("purchase_id")
-        .join(agg, "purchase_id", "left")
-        .select(
-            "purchase_id",
-            F.coalesce("n_clicks", F.lit(0)).alias("n_clicks"),
-            F.coalesce("click_value", F.lit(0.0)).alias("click_value"),
-        )
-    )
-
-
-def _q_moving_avg_events(spark, sf):
-    """Window FRAME analytics: per-user 3-row moving average of event
-    value ordered by (ts, event_id) — one shuffle on the key, frame
-    runs inside the sorted partition."""
-    e = _t(spark, sf, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.asc("ts"), F.asc("event_id"))
-        .rowsBetween(-2, Window.currentRow)
-    )
-    return e.select(
-        "user_id",
-        "event_id",
-        F.round(F.avg("value").over(w), 4).alias("mavg3"),
-    )
-
-
-def _q_cube_revenue(spark, sf):
-    """CUBE over (returnflag, linestatus): all 4 grouping sets in one
-    pass (Spark expands then partial+final aggregates)."""
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n"),
-        )
     )
 
 
@@ -761,69 +586,6 @@ def _q_memento_nav(spark, sf):
     )
 
 
-def _q_asof_last_purchase(spark, sf):
-    """AS-OF join: each click event attaches the user's latest
-    purchase at-or-before the click (union-tag + single window — one
-    shuffle, no range join; see operators/asof.py)."""
-    from web_archive_downloader_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    out = asof_join(
-        clicks, purchases, key="user_id", ts="ts", id_col="event_id",
-        right_values=["event_id", "value"],
-    )
-    return out.select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-        F.col("asof_event_id").alias("purchase_id"),
-        F.round("asof_value", 2).alias("purchase_value"),
-    )
-
-
-def _q_user_sessions(spark, sf):
-    """Gap-based sessionization (classic lag + conditional cumsum
-    window chain): a new session starts when a user's inter-event gap
-    exceeds 30 minutes. Output: per-session row counts + bounds."""
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # fixtures carry TIMESTAMP_NTZ; session tz is UTC, so the
-    # epoch-seconds view matches DuckDB's epoch()
-    epoch_s = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch_s - F.lag(epoch_s).over(w)
-    sess = (
-        ev.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .withColumn("session_id", F.sum("new_sess").over(w))
-    )
-    return sess.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-    )
-
-
-def _q_value_percentiles(spark, sf):
-    """Exact percentiles per group (F.percentile — NOT the sketch-based
-    approx_percentile, so the DuckDB twin matches exactly)."""
-    ev = _t(spark, sf, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.percentile("value", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("value", F.lit(0.9)), 4).alias("p90"),
-        F.round(F.percentile("value", F.lit(0.99)), 4).alias("p99"),
-        F.count("*").alias("n"),
-    )
-
-
-def _q_windowed_rates(spark, sf):
-    from web_archive_downloader_spark.streaming.events import windowed_event_rates
-
-    return windowed_event_rates(_t(spark, sf, "events"))
-
-
 def _q_embedding_neardup_lsh(spark, sf):
     """The CHECKED near-dup path is the sign-LSH-blocked one (no
     cartesian) at CORPUS-SIZED geometry: n_planes=None auto-sizes the
@@ -837,127 +599,20 @@ def _q_embedding_neardup_lsh(spark, sf):
     return embedding_neardup_lsh(_t(spark, sf, "embeddings"), threshold=0.45)
 
 
-def _q_order_priority_counts(spark, sf):
-    """TPC-H Q4 shape: orders with at least one QUALIFYING lineitem
-    (EXISTS -> left semi join), counted by priority. The testdata
-    lineitem table has no commitdate/receiptdate, so the Q4 lateness
-    predicate is stood in by a selective quantity predicate
-    (l_quantity >= 45, ~12% of rows) — the semi-join genuinely
-    filters rather than matching every order."""
-    o = _t(spark, sf, "orders")
-    li = _t(spark, sf, "lineitem")
-    qualifying = li.filter(F.col("l_quantity") >= 45).select("l_orderkey")
-    return (
-        o.join(qualifying, o.o_orderkey == qualifying.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def _q_part_type_stats(spark, sf):
-    p = _t(spark, sf, "part")
-    return (
-        p.groupBy("p_brand")
-        .agg(
-            F.count("*").alias("n_parts"),
-            F.round(F.avg("p_retailprice"), 2).alias("avg_price"),
-            F.max("p_size").alias("max_size"),
-            F.countDistinct("p_type").alias("n_types"),
-        )
-    )
-
-
-def _q_supplier_balance_by_region(spark, sf):
-    s = _t(spark, sf, "supplier")
-    n = _t(spark, sf, "nation")
-    r = _t(spark, sf, "region")
-    return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.round(F.sum("s_acctbal"), 2).alias("total_bal"),
-            F.count("*").alias("n_suppliers"),
-        )
-    )
-
-
-def _q_shipping_priority(spark, sf):
-    """TPC-H Q3 shape: BUILDING-segment orders placed before a cutoff
-    with lineitems shipped after it, top-10 open orders by revenue —
-    the global top-k compiles to TakeOrderedAndProject."""
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders")
-    li = _t(spark, sf, "lineitem")
-    cutoff = "1998-03-15"
-    return (
-        li.filter(F.col("l_shipdate") > cutoff)
-        .join(o.filter(F.col("o_orderdate") < cutoff), F.col("l_orderkey") == o.o_orderkey)
-        .join(c.filter(F.col("c_mktsegment") == "BUILDING"), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-        .select(
-            "l_orderkey", "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-    )
-
-
-def _q_revenue_forecast(spark, sf):
-    """TPC-H Q6 shape: pure scan-filter-aggregate — every predicate
-    pushes into the parquet scan, no join, no shuffle beyond the
-    single global agg."""
-    li = _t(spark, sf, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= "1995-01-01")
-        & (F.col("l_shipdate") < "1996-01-01")
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-        F.count("*").alias("n"),
-    )
-
-
-def _q_rollup_revenue(spark, sf):
-    """Grouping-sets coverage: rollup over (returnflag, linestatus)."""
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("rev"), F.count("*").alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("rf"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("ls"),
-            "rev", "n",
-        )
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # EXACTLY 50 entries — the driver's correctness check records at
-    # most 50 (round-4 finding: entries 51+ are silently dropped).
-    # Ordered newest/least-proven first as insurance: if the registry
-    # ever grows past the window again, the overflow casualties are the
-    # longest-proven scalar shapes at the tail, not new operators.
-    # Round-5 consolidation: jaccard_pairs + ngram_jaccard +
-    # minhash_jaccard_estimate -> similarity_pairs (one candidate join,
-    # all three measures); top_customers dropped (shipping_priority
-    # carries the same TakeOrderedAndProject shape).
+    # One checked entry per engine operator family the crawl and its
+    # curation path use: dedup, ANN, packing, phash, collision naming,
+    # per-host budgets, memento navigation and the scalar functions.
+    # Every key has a DuckDB twin in oracle_sql() (tests/test_entry_parity.py
+    # asserts the two key sets are equal).
     return {
-        # --- new / least-proven this round ---
+        # --- curation: packing, similarity, ANN, image near-dups ---
         "sequence_packing": _q_sequence_packing,
         "similarity_pairs": _q_similarity_pairs,
         "decontamination": _q_decontamination,
-        "shipping_priority": _q_shipping_priority,
-        "revenue_forecast": _q_revenue_forecast,
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
         "phash_pairs": _q_phash_pairs,
-        "click_attribution": _q_click_attribution,
         # --- training-data operator suite ---
         "embedding_neardup_lsh": _q_embedding_neardup_lsh,
         "dedup_components": _q_dedup_components,
@@ -973,27 +628,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_counts": _q_token_counts,
         "stratified_sample": _q_stratified_sample,
         # --- crawl-engine operator shapes (SURVEY §2) ---
-        "latest_event_per_user": _q_latest_event_per_user,
-        "customers_no_orders": _q_customers_no_orders,
-        "topk_events_per_user": _q_topk_events_per_user,
         "budgeted_topk": _q_budgeted_topk,
         "collision_names": _q_collision_names,
         "html_names": _q_html_names,
-        # --- relational-core extras (§2.11) ---
-        "asof_last_purchase": _q_asof_last_purchase,
-        "user_sessions": _q_user_sessions,
-        "value_percentiles": _q_value_percentiles,
-        "windowed_rates": _q_windowed_rates,
-        "moving_avg_events": _q_moving_avg_events,
-        "cube_revenue": _q_cube_revenue,
-        "rollup_revenue": _q_rollup_revenue,
-        "pricing_summary": _q_pricing_summary,
-        "revenue_by_nation": _q_revenue_by_nation,
-        "volume_shipping": _q_volume_shipping,
-        "order_priority_counts": _q_order_priority_counts,
-        "part_type_stats": _q_part_type_stats,
-        "supplier_balance_by_region": _q_supplier_balance_by_region,
-        # --- scalar-function shapes (X*), longest-proven ---
+        # --- scalar-function shapes (X*) ---
         "route_counts": _q_route_counts,
         "backoff": _q_backoff,
         "sanitize_docs": _q_sanitize_docs,
@@ -1002,10 +640,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "page_dir": _q_page_dir,
         "url_parts": _q_url_parts,
         "markdown_header": _q_markdown_header,
-        # X9 JSON decode/nested access stays checked via memento_nav
-        # (the former json_extract entry duplicated that coverage and
-        # was consolidated away to keep the registry at 50 when
-        # decontamination joined)
+        # X9 JSON decode/nested access
         "memento_nav": _q_memento_nav,
     }
 
@@ -1347,21 +982,6 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
     """
     return {
-        "latest_event_per_user": """
-            SELECT user_id, event_id AS last_event_id,
-                   strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_ts
-            FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id) AS rn
-                  FROM events) WHERE rn = 1
-        """,
-        "customers_no_orders": """
-            SELECT c_custkey, c_name FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        """,
-        "topk_events_per_user": """
-            SELECT user_id, rn AS rank, event_id, value
-            FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
-                  FROM events) WHERE rn <= 3
-        """,
         "budgeted_topk": """
             SELECT user_id, event_id, host_rank
             FROM (
@@ -1426,27 +1046,6 @@ def oracle_sql() -> dict[str, str]:
                                lang AS base, '.md' AS ext FROM documents
                         UNION ALL
                         SELECT doc_id * 2 + 1, source, lang, '.html' FROM documents))
-        """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(avg(l_quantity), 4) AS avg_qty,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_nation": """
-            SELECT n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   count(*) AS n_lineitems
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
         """,
         "dedup_exact": """
             SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_dups
@@ -1672,111 +1271,7 @@ def oracle_sql() -> dict[str, str]:
                         ELSE 'found' END AS lookup_result
             FROM nav
         """,
-        "asof_last_purchase": """
-            WITH u AS (
-              SELECT user_id, ts, event_id, 0 AS tag,
-                     CASE WHEN TRUE THEN {'rid': event_id, 'rval': value} END AS r
-              FROM events WHERE event_type = 'purchase'
-              UNION ALL
-              SELECT user_id, ts, event_id, 1, NULL
-              FROM events WHERE event_type = 'click'
-            ),
-            c AS (
-              SELECT user_id, ts, event_id, tag,
-                     last_value(r IGNORE NULLS) OVER (
-                       PARTITION BY user_id ORDER BY ts, tag, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS asof_r
-              FROM u
-            )
-            SELECT user_id, event_id AS click_id,
-                   strftime(ts, '%Y-%m-%d %H:%M:%S') AS click_ts,
-                   asof_r.rid AS purchase_id,
-                   round(asof_r.rval, 2) AS purchase_value
-            FROM c WHERE tag = 1
-        """,
-        "user_sessions": """
-            WITH g AS (
-              SELECT user_id, event_id, ts,
-                     CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                            OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-                          THEN 1 ELSE 0 END AS new_sess
-              FROM events
-            ),
-            s AS (
-              SELECT user_id, ts,
-                     sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id)::BIGINT AS session_id
-              FROM g
-            )
-            SELECT user_id, session_id, count(*) AS n_events,
-                   strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-                   strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end
-            FROM s GROUP BY user_id, session_id
-        """,
-        "value_percentiles": """
-            SELECT event_type,
-                   round(quantile_cont(value, 0.5), 4) AS p50,
-                   round(quantile_cont(value, 0.9), 4) AS p90,
-                   round(quantile_cont(value, 0.99), 4) AS p99,
-                   count(*) AS n
-            FROM events GROUP BY event_type
-        """,
-        "windowed_rates": """
-            SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-                   event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-            FROM events GROUP BY 1, 2
-        """,
         "embedding_neardup_lsh": _neardup_lsh_sql(0.45),
-        "order_priority_counts": """
-            SELECT o_orderpriority, count(*) AS n
-            FROM orders o
-            WHERE EXISTS (SELECT 1 FROM lineitem l
-                          WHERE l.l_orderkey = o.o_orderkey
-                            AND l.l_quantity >= 45)
-            GROUP BY o_orderpriority
-        """,
-        "part_type_stats": """
-            SELECT p_brand, count(*) AS n_parts,
-                   round(avg(p_retailprice), 2) AS avg_price,
-                   max(p_size) AS max_size,
-                   count(DISTINCT p_type) AS n_types
-            FROM part GROUP BY p_brand
-        """,
-        "supplier_balance_by_region": """
-            SELECT r_name, round(sum(s_acctbal), 2) AS total_bal,
-                   count(*) AS n_suppliers
-            FROM supplier
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name
-        """,
-        "shipping_priority": """
-            SELECT l_orderkey, revenue, orderdate, o_orderpriority
-            FROM (
-              SELECT l.l_orderkey,
-                     round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-                     strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
-                     o.o_orderpriority
-              FROM lineitem l
-              JOIN orders o ON l.l_orderkey = o.o_orderkey
-              JOIN customer c ON o.o_custkey = c.c_custkey
-              WHERE c.c_mktsegment = 'BUILDING'
-                AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-                AND l.l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-              GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-            )
-            ORDER BY revenue DESC, l_orderkey
-            LIMIT 10
-        """,
-        "revenue_forecast": """
-            SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-                   count(*) AS n
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-              AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
-              AND l_discount >= 0.05 AND l_discount <= 0.07
-              AND l_quantity < 24
-        """,
         "stratified_sample": f"""
             SELECT doc_id, lang,
                    {_H56.format(x="doc_id::VARCHAR")} % 1000 AS sample_bucket
@@ -1785,59 +1280,12 @@ def oracle_sql() -> dict[str, str]:
                   CASE WHEN lang = 'en' THEN 500
                        WHEN lang = 'fr' THEN 300 ELSE 100 END
         """,
-        "rollup_revenue": """
-            SELECT coalesce(l_returnflag, 'ALL') AS rf,
-                   coalesce(l_linestatus, 'ALL') AS ls,
-                   round(sum(l_extendedprice), 2) AS rev, count(*) AS n
-            FROM lineitem
-            GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        """,
         "text_stats": text_stats_select,
         "token_counts": r"""
             SELECT doc_id,
                    len(list_filter(string_split_regex(trim(text), '\s+'), x -> length(x) > 0)) AS n_tokens_ws,
                    len(regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+')) AS n_tokens_bpe
             FROM documents
-        """,
-        "volume_shipping": """
-            SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                   year(l_shipdate)::BIGINT AS l_year,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   count(*) AS n_items
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN nation n1 ON s_nationkey = n1.n_nationkey
-            JOIN nation n2 ON c_nationkey = n2.n_nationkey
-            WHERE (n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-               OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3')
-            GROUP BY 1, 2, 3
-        """,
-        "click_attribution": """
-            SELECT p.event_id AS purchase_id,
-                   count(c.event_id) AS n_clicks,
-                   round(coalesce(sum(c.value), 0), 4) AS click_value
-            FROM events p
-            LEFT JOIN events c
-              ON c.user_id = p.user_id AND c.event_type = 'click'
-             AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts < p.ts
-            WHERE p.event_type = 'purchase'
-            GROUP BY p.event_id
-        """,
-        "moving_avg_events": """
-            SELECT user_id, event_id,
-                   round(avg(value) OVER (
-                     PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS mavg3
-            FROM events
-        """,
-        "cube_revenue": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   count(*) AS n
-            FROM lineitem
-            GROUP BY CUBE (l_returnflag, l_linestatus)
         """,
         "corpus_selection": f"""
             WITH RECURSIVE {_lsh_cte(16, 4)},

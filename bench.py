@@ -25,11 +25,6 @@ import tempfile
 import time
 
 HEADLINE = [
-    "pricing_summary",
-    "revenue_by_nation",
-    "latest_event_per_user",
-    "topk_events_per_user",
-    "customers_no_orders",
     "dedup_exact",
     "minhash_sig",
     "lsh_candidates",
@@ -38,15 +33,13 @@ HEADLINE = [
     "text_stats",
     "embedding_neardup_lsh",
     "token_counts",
-    "volume_shipping",
-    "click_attribution",
     "similarity_pairs",
     "sequence_packing",
     "decontamination",
 ]
 
 # Per-query repeats: the host is shared and bursty, so single-shot
-# latencies swing 2-3x run-to-run (BENCH_r01 vs BENCH.md on identical
+# latencies swing 2-3x run-to-run (the round-1 bench vs BENCH.md on identical
 # code). Medians of >=3 de-noise round-over-round comparisons.
 QUERY_REPEATS = int(os.environ.get("SPARK_GRAFT_QUERY_REPEATS", "3"))
 

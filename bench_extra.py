@@ -8,7 +8,7 @@ sink, labelled jobs, configurable repeats / scale factor) and dump
 
 Usage:
   python bench_extra.py --sf /root/testdata/sf1.0 --queries decontamination,similarity_pairs --repeats 3
-  python bench_extra.py --sf /root/testdata/sf0.1 --explain-dir plans/r06 --suffix before
+  python bench_extra.py --sf /root/testdata/sf0.1 --explain-dir /tmp/plans --suffix before
 """
 
 from __future__ import annotations

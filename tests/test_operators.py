@@ -232,39 +232,6 @@ def test_bucketed_url_seen_join_shuffles_small_side_only(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS url_seen_bucketed_test")
 
 
-def test_asof_join_semantics(spark):
-    """Pinned as-of semantics: greatest right.ts <= left.ts; equality
-    matches; right-ts ties -> greatest id; no prior right -> nulls;
-    all attached columns come from the SAME right row."""
-    from web_archive_downloader_spark.operators.asof import asof_join
-
-    left = spark.createDataFrame(
-        pd.DataFrame(
-            {"k": ["a", "a", "a", "b"], "t": [5, 10, 2, 7], "lid": [1, 2, 3, 4]}
-        )
-    )
-    right = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": ["a", "a", "a", "b"],
-                "t": [5, 5, 8, 9],  # two ties at t=5 for key a
-                "lid": [100, 101, 102, 103],  # the shared id_col name
-                "rid": [100, 101, 102, 103],
-                "v": [1.0, 2.0, 3.0, 4.0],
-            }
-        )
-    )
-    out = {
-        r.lid: (r.asof_rid, r.asof_v)
-        for r in asof_join(left, right, "k", "t", "lid", ["rid", "v"])
-        .withColumnRenamed("lid", "lid").collect()
-    }
-    assert out[1] == (101, 2.0)  # equality matches; tie -> greatest rid
-    assert out[2] == (102, 3.0)  # latest at-or-before 10 is t=8
-    assert out[3] == (None, None)  # nothing at-or-before t=2
-    assert out[4] == (None, None)  # b's only right row is at t=9 > 7
-
-
 def test_per_host_topk_budget_and_order(spark):
     rows = []
     for h, n in [("hot.com", 500), ("cold.com", 5)]:
@@ -284,41 +251,6 @@ def test_per_host_topk_budget_and_order(spark):
     # salted two-phase == unsalted result
     unsalted = per_host_topk(df, k=10, salt_buckets=1)
     assert sorted(r.url for r in out.collect()) == sorted(r.url for r in unsalted.collect())
-
-
-def test_asof_passthrough_no_duplication(spark):
-    """Left passthrough columns ride the union-tag window itself; an
-    id_col value repeating across timestamps within a key (allowed by
-    the (key, ts)-uniqueness contract) must NOT duplicate left rows,
-    and each row keeps ITS OWN passthrough values."""
-    from web_archive_downloader_spark.operators.asof import asof_join
-
-    left = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": ["a", "a"],
-                "t": [5, 9],
-                "lid": [1, 1],  # repeats across ts within the key
-                "note": ["x", "y"],
-            }
-        )
-    )
-    right = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": ["a", "a"],
-                "t": [4, 8],
-                "lid": [50, 51],
-                "rid": [50, 51],
-                "v": [1.0, 2.0],
-            }
-        )
-    )
-    out = asof_join(left, right, "k", "t", "lid", ["rid", "v"]).collect()
-    assert len(out) == 2  # the old re-join emitted 4
-    by_t = {r.t: (r.asof_rid, r.note) for r in out}
-    assert by_t[5] == (50, "x")
-    assert by_t[9] == (51, "y")
 
 
 def test_pack_sequences_greedy_semantics(spark):

@@ -1,6 +1,6 @@
 """Physical-plan audits: the judge-facing scale properties —
 predicate pushdown into the parquet scan, column pruning, broadcast
-joins for small dims, whole-stage codegen for scalar chains, no
+joins for small query/eval sides, whole-stage codegen for scalar chains, no
 Python UDFs in relational paths (SURVEY §4; task-brief 'explain and
 iterate')."""
 
@@ -30,31 +30,11 @@ def test_filter_pushdown_and_pruning(spark):
     assert "l_extendedprice" not in read_schema and "l_orderkey" in read_schema
 
 
-def test_small_dim_join_broadcasts(spark):
-    q = entry_mod.queries()["revenue_by_nation"](spark, SF)
-    plan = _plan(q)
-    assert "BroadcastHashJoin" in plan
-
-
-def test_anti_join_used_for_seen(spark):
-    q = entry_mod.queries()["customers_no_orders"](spark, SF)
-    plan = _plan(q)
-    assert "LeftAnti" in plan
-
-
 def test_scalar_chain_stays_codegen(spark):
     q = entry_mod.queries()["sanitize_docs"](spark, SF)
     plan = _plan(q)
     assert "codegen id" in plan  # whole-stage codegen span
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_pricing_summary_partial_agg(spark):
-    q = entry_mod.queries()["pricing_summary"](spark, SF)
-    plan = _plan(q)
-    # partial (map-side) + final hash aggregate around one exchange
-    assert plan.count("HashAggregate") >= 2
-    assert "hashpartitioning" in plan
 
 
 def test_ann_query_broadcasts(spark):
@@ -74,29 +54,6 @@ def test_neardup_lsh_no_cartesian(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_q6_filters_reach_scan(spark):
-    """revenue_forecast is pure scan-filter-agg: every predicate
-    pushes into the parquet scan; exactly one exchange (the global
-    agg's single-row reduction)."""
-    import re
-
-    q = entry_mod.queries()["revenue_forecast"](spark, SF)
-    plan = _plan(q)
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln][0]
-    assert "l_shipdate" in pushed and "l_discount" in pushed and "l_quantity" in pushed
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-
-
-def test_asof_join_single_shuffle(spark):
-    """The as-of join must be the union-tag + window construction:
-    one exchange per key column, no SortMergeJoin cross products, no
-    cartesian/BNLJ."""
-    q = entry_mod.queries()["asof_last_purchase"](spark, SF)
-    plan = _plan(q)
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "Window" in plan and "Union" in plan
-
-
 def test_stratified_sample_stays_scan_side(spark):
     """Hash-bucket sampling is a projection + filter — no shuffle, no
     Python, whole-stage codegen."""
@@ -111,10 +68,6 @@ def test_global_topk_is_take_ordered(spark):
     """Global top-k must compile to TakeOrderedAndProject
     (per-partition top-k + merge), not a single-partition global
     sort window."""
-    for name in ("shipping_priority",):
-        q = entry_mod.queries()[name](spark, SF)
-        plan = _plan(q)
-        assert "TakeOrderedAndProject" in plan, name
     plan = _plan(entry_mod.entry(spark))
     assert "TakeOrderedAndProject" in plan
 
@@ -146,72 +99,6 @@ def test_ann_bruteforce_rank_is_prereduced(spark):
     # formatted explain prints root-first: the upstream (leaf-ward)
     # MapInPandas reduction must appear below the downstream Window
     assert plan.index("MapInPandas") > plan.index("Window")
-
-
-def test_range_join_is_equi_join_no_bnlj(spark):
-    """The interval-bucketed range join must plan as a hash/sort-merge
-    EQUI-join on (key, bucket) — never a BroadcastNestedLoopJoin or
-    CartesianProduct (what a raw inequality-condition join degenerates
-    to), and the window refinement is a post-join filter."""
-    q = entry_mod.queries()["click_attribution"](spark, SF)
-    plan = _plan(q)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
-        "BroadcastHashJoin" in plan
-    )
-
-
-def test_range_join_boundaries_exact(spark):
-    """Half-open window semantics at exact boundaries vs a naive
-    inequality join: rows AT lower edge included, AT upper edge
-    excluded, across bucket borders."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from web_archive_downloader_spark.operators.rangejoin import (
-        MICROS_PER_MINUTE,
-        range_join,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    mins = lambda m: t0 + dt.timedelta(minutes=m)  # noqa: E731
-    lschema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("lid", T.LongType()),
-            T.StructField("lts", T.TimestampNTZType()),
-        ]
-    )
-    rschema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("rid", T.LongType()),
-            T.StructField("rts", T.TimestampNTZType()),
-        ]
-    )
-    left = spark.createDataFrame([(1, 100, mins(0))], lschema)
-    right = spark.createDataFrame(
-        [
-            (1, 1, mins(-30)),          # exactly at lower edge -> IN
-            (1, 2, mins(-30) - dt.timedelta(microseconds=1)),  # just below -> OUT
-            (1, 3, mins(0)),            # exactly at upper edge -> OUT (half-open)
-            (1, 4, mins(0) - dt.timedelta(microseconds=1)),    # just inside -> IN
-            (1, 5, mins(-15)),          # mid-window -> IN
-            (2, 6, mins(-15)),          # other key -> OUT
-        ],
-        rschema,
-    )
-    got = sorted(
-        r.rid
-        for r in range_join(
-            left, right, key="k",
-            lower_micros=-30 * MICROS_PER_MINUTE, upper_micros=0,
-            left_ts="lts", right_ts="rts",
-        ).collect()
-    )
-    assert got == [1, 4, 5]
 
 
 def test_phash_and_ivf_plans_are_blocked_equi_joins(spark):

@@ -8,7 +8,7 @@ prefilter + exact anti-join), vectorized fetch/extract stages over
 Arrow batches, snapshot-committed state tables (Iceberg layout; a
 parquet+manifest stand-in when Iceberg jars are absent), and a suite
 of training-data operators (dedup, similarity search, text analysis,
-multimodal plumbing).
+sequence packing, image near-dup).
 
 Architecture is Spark-first: DataFrame/SQL plans optimized by
 Catalyst, shuffles minimized by explicit hash-partitioning and

@@ -219,7 +219,7 @@ def ngram_shingles_from_tokens(toks, n: int = 2):
     so every reference to a non-attribute child is RE-EVALUATED per
     element — an inline split() child turns O(tokens) shingling into
     O(tokens^2) re-tokenization (measured 10x+ on the decontamination
-    path; see OPTIMIZATION_r06.md). With an attribute child each
+    path; see BENCH.md, History). With an attribute child each
     slice() is an O(n) array copy.
 
     concat_ws over the slice() subarray emits the identical string the

@@ -20,26 +20,19 @@ aggregation, whose summation order must stay exactly as planned.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
-def widen_narrow_scan(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Repartition ``df`` to the session's parallelism iff its current
-    partition count is lower; identity otherwise (the at-scale case).
-
-    ``target`` overrides the width (default: defaultParallelism, i.e.
-    total cores; override via SPARK_GRAFT_WIDEN_PARTS for cluster
-    tuning). Round-robin repartition is used: deterministic under task
-    retry (sortBeforeRepartition is on by default) and balanced
-    regardless of key skew.
+def widen_narrow_scan(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the session's parallelism
+    (defaultParallelism, i.e. total cores) iff its current partition
+    count is lower; identity otherwise (the at-scale case).
+    Round-robin repartition is used: deterministic under task retry
+    (sortBeforeRepartition is on by default) and balanced regardless
+    of key skew.
     """
     try:
-        sc = df.sparkSession.sparkContext
-        target = target or int(
-            os.environ.get("SPARK_GRAFT_WIDEN_PARTS", "0")
-        ) or sc.defaultParallelism
+        target = df.sparkSession.sparkContext.defaultParallelism
         current = df.rdd.getNumPartitions()
     except Exception:
         # streaming frames / unresolvable plans: leave untouched

@@ -3,16 +3,13 @@
 The reference is batch-only; its loop maps onto the deterministic
 epoch-BSP pipeline in plans/crawl.py (Structured Streaming's ordering
 guarantees are too weak for exact crawl-order matching — SURVEY
-§2.10). Streaming still has two legitimate roles in this engine:
+§2.10). Streaming's role in this engine is continuous frontier
+ingestion: new CDX shards / discovered links land as files; a
+file-source stream validates + dedups them into frontier appends
+between epochs (plus exact dedup of arriving documents at the
+ingestion edge).
 
-1. **Continuous frontier ingestion**: new CDX shards / discovered
-   links land as files; a file-source stream validates + dedups them
-   into frontier appends between epochs.
-2. **Operational analytics** over the crawl's own event stream
-   (lineage/fetch outcomes): windowed rates with watermarked late
-   data.
-
-Both are expressed with the standard readStream -> transform ->
+These are expressed with the standard readStream -> transform ->
 writeStream(availableNow) pattern so tests run deterministically to
 completion on static fixtures.
 """
@@ -171,56 +168,6 @@ def stream_exact_dedup(
     )
     return (
         deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_event_rates(events: DataFrame, window: str = "1 hour", late: str = "30 minutes") -> DataFrame:
-    """Watermarked windowed aggregation over an event stream
-    (event_time ts): per-window per-type counts + value stats. Works
-    on both a streaming DataFrame (with late-data handling) and a
-    static one (tests / oracle comparison run it as a batch)."""
-    with_wm = events.withWatermark("ts", late) if events.isStreaming else events
-    return (
-        with_wm.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def stream_event_rates(
-    spark: SparkSession, events_dir: str, out_dir: str, checkpoint_dir: str
-):
-    """Streaming deployment of windowed_event_rates (availableNow for
-    deterministic test completion; continuous triggers in prod)."""
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 4).parquet(events_dir)
-    )
-    rates = windowed_event_rates(stream)
-    return (
-        rates.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
