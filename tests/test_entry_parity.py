@@ -10,7 +10,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ["events", "documents", "embeddings"]
+TABLES = ["nation", "customer", "orders", "lineitem", "events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")

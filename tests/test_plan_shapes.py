@@ -1,6 +1,6 @@
 """Physical-plan audits: the judge-facing scale properties —
 predicate pushdown into the parquet scan, column pruning, broadcast
-joins for small query/eval sides, whole-stage codegen for scalar chains, no
+joins for small dims, whole-stage codegen for scalar chains, no
 Python UDFs in relational paths (SURVEY §4; task-brief 'explain and
 iterate')."""
 
@@ -30,11 +30,31 @@ def test_filter_pushdown_and_pruning(spark):
     assert "l_extendedprice" not in read_schema and "l_orderkey" in read_schema
 
 
+def test_small_dim_join_broadcasts(spark):
+    q = entry_mod.queries()["revenue_by_nation"](spark, SF)
+    plan = _plan(q)
+    assert "BroadcastHashJoin" in plan
+
+
+def test_anti_join_used_for_seen(spark):
+    q = entry_mod.queries()["customers_no_orders"](spark, SF)
+    plan = _plan(q)
+    assert "LeftAnti" in plan
+
+
 def test_scalar_chain_stays_codegen(spark):
     q = entry_mod.queries()["sanitize_docs"](spark, SF)
     plan = _plan(q)
     assert "codegen id" in plan  # whole-stage codegen span
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_pricing_summary_partial_agg(spark):
+    q = entry_mod.queries()["pricing_summary"](spark, SF)
+    plan = _plan(q)
+    # partial (map-side) + final hash aggregate around one exchange
+    assert plan.count("HashAggregate") >= 2
+    assert "hashpartitioning" in plan
 
 
 def test_ann_query_broadcasts(spark):
@@ -52,6 +72,19 @@ def test_neardup_lsh_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+
+
+def test_q6_filters_reach_scan(spark):
+    """revenue_forecast is pure scan-filter-agg: every predicate
+    pushes into the parquet scan; exactly one exchange (the global
+    agg's single-row reduction)."""
+    import re
+
+    q = entry_mod.queries()["revenue_forecast"](spark, SF)
+    plan = _plan(q)
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln][0]
+    assert "l_shipdate" in pushed and "l_discount" in pushed and "l_quantity" in pushed
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
 
 
 def test_stratified_sample_stays_scan_side(spark):
