@@ -56,7 +56,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # similarity_pairs, dedup_components — all consume the
 # same (doc_id, sig) relation; a production pipeline materializes it
 # once as a table and every downstream pass reads it. Memoized per
-# (session, sf_dir) as an eagerly localCheckpointed frame. Values are
+# (session, sf_dir) as a persisted frame. Values are
 # a pure deterministic function of the documents table, so the DuckDB
 # twins (which recompute from scratch in SQL) still match bit-for-bit.
 _SIG_CACHE: dict = {}
@@ -68,19 +68,20 @@ def _sig16(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound to a dead SparkContext. Entries from OTHER applications are
     # evicted (one live app per process): dead-session frames must not
     # accumulate for the process lifetime.
+    from web_archive_downloader_spark.partitioning import (
+        is_materialized,
+        materialize_with_stats,
+    )
+
     app = spark.sparkContext.applicationId
     for stale in [k for k in _SIG_CACHE if k[0] != app]:
         del _SIG_CACHE[stale]
     key = (app, sf_dir)
     ent = _SIG_CACHE.get(key)
-    if ent is None:
-        # materialized with REAL stats (persist + count) rather than
-        # localCheckpoint: a LogicalRDD's unknown sizeInBytes poisons
-        # every downstream join-size estimate in the dedup family,
-        # forcing sort-merge joins on relations that broadcast at their
-        # true size (see partitioning.materialize_with_stats)
-        from web_archive_downloader_spark.partitioning import materialize_with_stats
-
+    # persisted, not localCheckpointed, so the cache state is visible:
+    # after spark.catalog.clearCache() the memoized frame no longer
+    # scans the cache and every use would recompute the signatures
+    if ent is None or not is_materialized(ent):
         ent = materialize_with_stats(minhash_signatures(_t(spark, sf_dir, "documents"), k=16))
         _SIG_CACHE[key] = ent
     return ent
@@ -295,10 +296,12 @@ def _q_simhash_pairs(spark, sf):
 
 
 def _q_dedup_components(spark, sf):
-    """Dedup clustering: connected components (iterative min-label
-    propagation, localCheckpoint per round) over exact-hash star +
-    same-signature star + Jaccard-verified LSH edges. The DuckDB twin
-    computes the same components with a recursive CTE."""
+    """Dedup clustering: connected components over exact-hash star +
+    same-signature star + Jaccard-verified LSH edges, by iterative
+    min-label propagation in which each round reads only the previous
+    round's checkpointed labels (operators/dedup.py:connected_components).
+    The DuckDB twin computes the same components with a recursive
+    CTE."""
     from web_archive_downloader_spark.operators.dedup import dedup_components
 
     return dedup_components(
@@ -336,11 +339,7 @@ def _q_corpus_selection(spark, sf):
 
 
 def _q_ann_bruteforce(spark, sf):
-    # dim=64 is the checked contract (the DuckDB twin folds exactly 64
-    # components); the expression helpers take it as documentation only
-    # and build the same zip_with/aggregate fold either way (an unrolled
-    # form fell out of codegen and measured slower, see ann.dot_expr)
-    return brute_force_topk(_t(spark, sf, "embeddings"), ANN_QUERY_IDS, k=10, dim=64)
+    return brute_force_topk(_t(spark, sf, "embeddings"), ANN_QUERY_IDS, k=10)
 
 
 def _q_ann_lsh_topk(spark, sf):

@@ -349,3 +349,145 @@ def test_embedding_neardup_lsh_scopes_its_buckets(emb, monkeypatch):
     assert len(made) == 2
     assert not made[0].is_cached
     assert made[1].is_cached
+
+
+def test_scoped_materialization_keeps_its_predecessor_until_built(spark):
+    """A scoped materialization whose input reads the scope's previous
+    relation must read it from the cache, not recompute it: the
+    predecessor is evicted only once the new relation is cached. A
+    repeat of a cached plan under its scope still recomputes, and what
+    it returns stays cached."""
+    from web_archive_downloader_spark.partitioning import materialize_with_stats
+
+    def is_materialized(df):
+        return df.storageLevel.useMemory
+
+    computed = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        computed.add(1)
+        return x
+
+    base = spark.range(8).select(bump("id").alias("id"))
+    prev = materialize_with_stats(base, scope="test_chain")
+    assert computed.value == 8
+    step = prev.select((F.col("id") + 1).alias("id"))
+    nxt = materialize_with_stats(step, scope="test_chain")
+    assert computed.value == 8  # the predecessor was not recomputed
+    assert is_materialized(nxt) and not is_materialized(prev)
+    again = materialize_with_stats(step, scope="test_chain")
+    assert computed.value == 16  # a repeat computes from its inputs
+    assert is_materialized(again)
+    again.unpersist()
+
+
+def test_connected_components_chain_stays_small(spark):
+    """An 8-node chain needs 8 propagation rounds. Each round reads
+    only the previous round's checkpoint, so the result's logical plan
+    stays a few hundred characters and the job count grows linearly
+    with the rounds (re-reading every earlier round built a ~467k-char
+    plan and ran ~940 jobs)."""
+    import pandas as pd
+
+    from web_archive_downloader_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        pd.DataFrame([(i, i + 1) for i in range(1, 8)], columns=["doc_a", "doc_b"])
+    )
+    nodes = spark.createDataFrame(pd.DataFrame({"node": list(range(1, 9))}))
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_chain", "connected_components on an 8-node chain")
+    try:
+        comp = connected_components(nodes, edges)
+        got = {r.node: r.component for r in comp.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {i: 1 for i in range(1, 9)}
+    assert len(comp._jdf.queryExecution().logical().toString()) < 1024
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_chain")) < 100
+
+
+# adversarial codebook: 17-significant-digit values, subnormals, -0.0,
+# magnitudes whose squares overflow to inf, and exact ties (a repeated
+# centroid, -0.0 vs 0.0, subnormal offsets that square to 0.0)
+_ADV_CENTERS = [
+    [0.1, 0.2, 0.30000000000000004, 1 / 3, 2 / 3, 0.12345678901234568],
+    [5e-324, -5e-324, 2.2250738585072014e-308, 1e-310, -0.0, 0.0],
+    [1e300, -1e300, 1.2345678901234567e300, 0.0, 0.0, 0.0],
+    [0.1, 0.2, 0.30000000000000004, 1 / 3, 2 / 3, 0.12345678901234568],
+    [-0.0] * 6,
+    [0.0] * 6,
+    [-1e300, 1e300, 0.0, 0.0, 0.0, 0.0],
+    [1 / 7, 2 / 7, 3 / 7, 4 / 7, 5 / 7, 6 / 7],
+]
+_ADV_VECS = [
+    [0.0] * 6,
+    [-0.0] * 6,
+    _ADV_CENTERS[0],
+    [1 / 7 + 1e-17, 2 / 7, 3 / 7, 4 / 7, 5 / 7, 6 / 7],
+    [1e150, -1e150, 3.0000000000000004, 1e-160, -2.5e-320, 7.0],
+    [0.14285714285714285, 0.1, -0.3333333333333333, 1e10, 1e-10, 123456.78901234567],
+]
+
+
+def test_ivf_codebook_literal_is_exact(spark):
+    """The one-literal codebook parses back to the identical doubles,
+    sign of zero included."""
+    from web_archive_downloader_spark.operators.ann import _double_matrix
+
+    got = spark.range(1).select(F.expr(_double_matrix(_ADV_CENTERS)).alias("b")).first().b
+    assert [[x.hex() for x in r] for r in got] == [
+        [float(x).hex() for x in r] for r in _ADV_CENTERS
+    ]
+
+
+def test_ivf_assignment_matches_python_fold(spark):
+    """nearest_centroids (the IVF row assignment and query probes)
+    gives, bit for bit, the (d, cluster) list of a pure-Python float64
+    fold ((0.0 + (v0-c0)^2) + (v1-c1)^2)..., sorted by d with ties to
+    the lowest cluster id — the DuckDB twin's order."""
+    from web_archive_downloader_spark.operators.ann import nearest_centroids
+
+    df = spark.createDataFrame(
+        list(enumerate(_ADV_VECS)), "id int, v array<double>"
+    )
+    got = {
+        r.id: [(x.d.hex(), x.cluster) for x in r.nc]
+        for r in df.select("id", nearest_centroids("v", _ADV_CENTERS).alias("nc")).collect()
+    }
+
+    def fold(v, c):
+        acc = 0.0
+        for x, y in zip(v, c):
+            acc = acc + (x - y) * (x - y)
+        return acc
+
+    for i, v in enumerate(_ADV_VECS):
+        want = sorted((fold(v, c), ci) for ci, c in enumerate(_ADV_CENTERS))
+        assert got[i] == [(d.hex(), ci) for d, ci in want], i
+
+
+def test_ivf_topk_builds_in_bounded_py4j_calls(emb, monkeypatch):
+    """Building the IVF query at 16 clusters x 64 dims makes a fixed,
+    small number of py4j round trips: the codebook is one literal, not
+    a lit column per float (which cost ~17k round trips)."""
+    import random
+
+    import py4j.clientserver
+
+    from web_archive_downloader_spark.operators.ann import ivf_topk
+
+    rng = random.Random(7)
+    centers = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(16)]
+    calls = [0]
+    real = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return real(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    ivf_topk(emb, [3, 17, 42], k=10, n_probe=3, centroids=centers)
+    monkeypatch.undo()
+    assert 0 < calls[0] < 1000

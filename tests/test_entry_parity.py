@@ -68,3 +68,14 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
     assert len(rows) >= 0 and df.schema is not None
+
+
+def test_sig16_rematerializes_after_clear_cache(spark):
+    """clearCache() drops the memoized signature relation's data while
+    the frame still reads is_cached == True; the next _sig16 call must
+    hand out a frame that scans the cache again, not one that silently
+    recomputes the signatures on every use."""
+    entry_mod._sig16(spark, SF_DIR)
+    spark.catalog.clearCache()
+    sig = entry_mod._sig16(spark, SF_DIR)
+    assert "InMemoryTableScan" in sig._jdf.queryExecution().executedPlan().toString()

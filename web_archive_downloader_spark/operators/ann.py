@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..partitioning import widen_narrow_scan
 
 
-def dot_expr(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot_expr(a: Column, b: Column) -> Column:
     """Left-to-right dot-product fold ((0.0 + a0*b0) + a1*b1)... as a
     higher-order zip_with/aggregate.
 
@@ -35,23 +35,51 @@ def dot_expr(a: Column, b: Column, dim: int | None = None) -> Column:
     limit, janino compilation fails, and the WHOLE stage silently falls
     back to interpreted execution, which is SLOWER than this fold
     (measured 40s -> 153s on embedding_neardup_lsh at sf1.0). The fold
-    form keeps the rest of the stage compiled. ``dim`` is accepted for
-    call-site documentation but does not change the plan."""
+    form keeps the rest of the stage compiled."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
 
 
-def norm_expr(a: Column, dim: int | None = None) -> Column:
+def norm_expr(a: Column) -> Column:
     """L2 norm sqrt(fold(0.0, acc + v*v)) — the exact fold the former
     inline cosine used, so precomputed norms are bit-identical."""
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine_expr(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine_expr(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<double> columns, JVM-side
     (see dot_expr for why this stays a higher-order fold)."""
-    return dot_expr(a, b, dim) / (norm_expr(a, dim) * norm_expr(b, dim))
+    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+
+
+def _double_matrix(rows: list[list[float]]) -> str:
+    """A list of float vectors as ONE array<array<double>> SQL literal:
+    a single parse on the JVM, where building it from per-float
+    ``F.lit`` columns costs a py4j round trip per value. Each value is
+    written as ``repr(float(x)) + "D"``, the shortest text that parses
+    back to the same double, so the literal is exact."""
+    return (
+        "array("
+        + ", ".join("array(" + ", ".join(repr(float(x)) + "D" for x in row) + ")" for row in rows)
+        + ")"
+    )
+
+
+def nearest_centroids(v: str, centers: list[list[float]]) -> Column:
+    """(d, cluster) for every centroid of the codebook, nearest first,
+    for the array<double> column named ``v``. d is the squared
+    euclidean distance folded strictly left-to-right ((0.0 + (v0-c0)^2)
+    + (v1-c1)^2)..., the order of the DuckDB twin's
+    list_transform/list_reduce, so d agrees bit-for-bit; array_sort on
+    the (d, cluster) structs breaks ties to the lowest cluster id, as
+    the twin's ORDER BY d, cluster does. One SQL expression: building
+    it is one py4j call whatever the codebook's size."""
+    return F.expr(
+        f"array_sort(transform({_double_matrix(centers)}, (c, i) -> named_struct("
+        f"'d', aggregate(zip_with({v}, c, (x, y) -> (x - y) * (x - y)), 0D, (a, b) -> a + b), "
+        "'cluster', i)))"
+    )
 
 
 def local_topk_reduce(scored: DataFrame, k: int) -> DataFrame:
@@ -96,7 +124,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     query_ids: list[str] | list[int],
     k: int = 10,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query id. Output:
     (query_id, rank, neighbor_id, cos). Excludes self-matches.
@@ -117,7 +144,7 @@ def brute_force_topk(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_expr(F.col("qv"), F.col("v"), dim=dim), 4).alias("cos"),
+            F.round(cosine_expr(F.col("qv"), F.col("v")), 4).alias("cos"),
         )
     )
     reduced = local_topk_reduce(scored, k)
@@ -126,19 +153,6 @@ def brute_force_topk(
         reduced.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "cos")
-    )
-
-
-def _sqdist_expr(v: Column, center: list) -> Column:
-    """Squared euclidean distance of an array<double> column to a
-    literal centroid — the zip_with/fold runs strictly left-to-right,
-    matching the DuckDB twin's list_transform/list_reduce order
-    bit-for-bit (unrolling rejected: see dot_expr)."""
-    lit_c = F.array(*[F.lit(float(x)) for x in center])
-    return F.aggregate(
-        F.zip_with(v, lit_c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
     )
 
 
@@ -157,18 +171,21 @@ def ivf_topk(
 
     Quantizer: by default KMeans (pyspark.ml, seeded —
     deterministic). Pass ``centroids`` (list of dim-length float
-    lists) to use a PRECOMPUTED codebook instead — assignment then
-    happens as literal-centroid argmin expressions in the scan
-    projection (no ML stage), which is both the production pattern
-    (codebooks are trained offline and shipped to the job) and what
-    lets the DuckDB oracle twin replay the identical assignment for
-    the checked query (__spark_entry__:ann_ivf_topk).
+    lists) to use a PRECOMPUTED codebook instead: the production
+    pattern (codebooks are trained offline and shipped to the job),
+    and what lets the DuckDB oracle twin replay the identical
+    assignment for the checked query (__spark_entry__:ann_ivf_topk).
+    A row's cluster is then the head of ``nearest_centroids`` in the
+    scan projection (no ML stage).
 
-    Scale shape: the centroid table (n_clusters × dim) is tiny and
-    folded into expressions; corpus rows carry their cluster id from
-    a single projection pass, so the probe is an equi-join on cluster
-    id — the classic IVF list-scan, shuffle-free on the corpus side.
-    Same output schema as brute_force_topk."""
+    The codebook enters the plan ONCE, as one array<array<double>>
+    literal that both the row assignment and the query probes fold
+    over (``nearest_centroids``), so building the query costs a fixed
+    number of py4j calls whatever n_clusters × dim is. Corpus rows
+    carry their cluster id from a single projection pass, so the probe
+    is an equi-join on cluster id — the classic IVF list-scan,
+    shuffle-free on the corpus side. Same output schema as
+    brute_force_topk."""
     e = widen_narrow_scan(embeddings).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -183,34 +200,19 @@ def ivf_topk(
         )
         centers = [c.tolist() for c in model.clusterCenters()]
     else:
-        centers = [list(c) for c in centroids]
-        n_clusters = len(centers)
-        # argmin over literal centroids: array_sort on (d, cluster)
-        # structs — min distance, ties to the lowest cluster id (the
-        # twin's row_number ORDER BY d, cluster matches)
-        ds = [
-            F.struct(_sqdist_expr(F.col("v"), c).alias("d"), F.lit(ci).alias("cluster"))
-            for ci, c in enumerate(centers)
-        ]
+        centers = centroids
         assigned = e.select(
             "vec_id", "v",
-            F.array_sort(F.array(*ds)).getItem(0).getField("cluster").alias("cluster"),
+            nearest_centroids("v", centers)[0]["cluster"].alias("cluster"),
         )
 
     q = assigned.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     # nearest n_probe centroids per query: tiny cross product, JVM-side
-    dists = [
-        F.struct(
-            _sqdist_expr(F.col("qv"), center).alias("d"),
-            F.lit(ci).alias("cluster"),
-        )
-        for ci, center in enumerate(centers)
-    ]
     probes = q.select(
         "query_id", "qv",
-        F.explode(F.slice(F.array_sort(F.array(*dists)), 1, n_probe)).alias("p"),
+        F.explode(F.slice(nearest_centroids("qv", centers), 1, n_probe)).alias("p"),
     ).select("query_id", "qv", F.col("p.cluster").alias("qc"))
 
     cand = assigned.join(
@@ -220,10 +222,7 @@ def ivf_topk(
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            cosine_expr(F.col("qv"), F.col("v"), dim=len(centers[0]) if centers else None),
-            4,
-        ).alias("cos"),
+        F.round(cosine_expr(F.col("qv"), F.col("v")), 4).alias("cos"),
     ).dropDuplicates(["query_id", "neighbor_id"])
     # candidate sets are list-bounded, but still pre-reduce so the
     # final per-query window never funnels a hot probe list through
@@ -242,19 +241,18 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def sign_bucket_col(v: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id: sign bits of dot products with fixed random
-    hyperplanes, packed into an int. Pure expressions — the planes are
-    literal arrays folded by Catalyst (unrolling rejected: see
-    dot_expr)."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(v, lit_plane, lambda x, y: x * y), F.lit(0.0), lambda a, b: a + b
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
+def sign_bucket_col(v: str, planes: list[list[float]]) -> Column:
+    """LSH bucket id of the array<double> column named ``v``: sign bits
+    of dot products with fixed random hyperplanes, packed into an int
+    as the sum of if(dot_i > 0, 1 << i, 0). One SQL expression over ONE
+    literal of the planes (see _double_matrix); each dot is the same
+    left-to-right fold as dot_expr, so a borderline sign agrees with the
+    DuckDB twins bit-for-bit (unrolling rejected: see dot_expr)."""
+    return F.expr(
+        f"aggregate(transform({_double_matrix(planes)}, (p, i) -> "
+        f"if(aggregate(zip_with({v}, p, (x, y) -> x * y), 0D, (a, b) -> a + b) > 0, "
+        "shiftleft(1, i), 0)), 0, (a, b) -> a + b)"
+    )
 
 
 def lsh_bucketed_topk(
@@ -285,7 +283,7 @@ def lsh_bucketed_topk(
     for t in range(n_tables):
         planes = _hyperplanes(dim, n_planes, seed=42 + 1000 * t)
         buckets.append(
-            F.struct(F.lit(t).alias("tbl"), sign_bucket_col(F.col("v"), planes).alias("b"))
+            F.struct(F.lit(t).alias("tbl"), sign_bucket_col("v", planes).alias("b"))
         )
     eb = e.select("vec_id", "v", F.explode(F.array(*buckets)).alias("tb")).select(
         "vec_id", "v", F.col("tb.tbl").alias("tbl"), F.col("tb.b").alias("b")
@@ -306,7 +304,7 @@ def lsh_bucketed_topk(
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_expr(F.col("qv"), F.col("v"), dim=dim), 4).alias("cos"),
+        F.round(cosine_expr(F.col("qv"), F.col("v")), 4).alias("cos"),
     ).dropDuplicates(["query_id", "neighbor_id"])
     # bucket-bounded candidates, but a hot bucket union can still be
     # large — pre-reduce before the per-query window (see

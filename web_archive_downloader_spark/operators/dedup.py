@@ -544,49 +544,52 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 50)
 
     Per round: every node takes the min of its own label and its
     neighbors' labels; converges in O(component diameter) rounds
-    (star-heavy dedup graphs converge in 2-4). Each round's labels are
-    localCheckpoint-ed: without cutting lineage the plan doubles every
-    iteration. Deterministic: min() is order-free.
+    (star-heavy dedup graphs converge in 2-4). Deterministic: min() is
+    order-free. A node that appears only in ``edges`` joins its
+    component once a neighbor's label reaches it, as in the twin.
+
+    Each round is ONE frame: (node, label, changed), computed from the
+    previous round's labels alone, then ``localCheckpoint``-ed and the
+    previous round's blocks freed. Convergence is a count of
+    ``changed`` over that checkpoint, so no round re-reads an earlier
+    one: the plan per round stays a few hundred characters however many
+    rounds run, and each checkpoint keeps its real size statistics, so
+    the message join still broadcasts the small side.
 
     nodes: (node), edges: (doc_a, doc_b). Returns (node, component)
     where component = min node id in the component."""
-    # per-round materialization carries REAL stats (persist + count,
-    # not localCheckpoint): the label relation is (node, label) longs,
-    # so each round's join then broadcasts it instead of sort-merging
-    # against an unknown-size LogicalRDD
-    sym = materialize_with_stats(
-        scope="cc_sym",
-        df=edges.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ).unionByName(
-            edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-    )
-    labels = materialize_with_stats(
-        nodes.select("node", F.col("node").alias("label")), scope="cc_labels"
-    )
+    sym = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
+        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    ).localCheckpoint()
+    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
     for _ in range(max_iter):
         msgs = sym.join(labels, sym["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), "label"
+            F.col("dst").alias("node"), "label", F.lit(None).alias("own")
         )
-        new_labels = materialize_with_stats(
-            msgs.unionByName(labels.select("node", "label"))
+        new_labels = (
+            msgs.unionByName(labels.select("node", "label", F.col("label").alias("own")))
             .groupBy("node")
-            .agg(F.min("label").alias("label")),
-            scope="cc_labels",
+            .agg(F.min("label").alias("label"), F.min("own").alias("own"))
+            .select(
+                "node", "label",
+                # own is null for a node first reached this round
+                F.coalesce(F.col("label") < F.col("own"), F.lit(True)).alias("changed"),
+            )
+            .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels.unpersist()
+        _release_checkpoint(labels)
         labels = new_labels
-        if changed == 0:
+        if labels.filter("changed").count() == 0:
             break
-    sym.unpersist()
+    _release_checkpoint(sym)
     return labels.select("node", F.col("label").alias("component"))
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks behind a ``localCheckpoint``-ed frame.
+    ``unpersist`` cannot: the checkpoint is a LogicalRDD over a
+    checkpointed RDD, not a CacheManager entry."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def dedup_components(
@@ -699,7 +702,7 @@ def embedding_neardup_lsh(
     # (measured ~10x on this stage); per-column expressions split into
     # their own generated methods and stay compiled. Values unchanged.
     bcols = [
-        sign_bucket_col(F.col("v"), planes).alias(f"_b{t}")
+        sign_bucket_col("v", planes).alias(f"_b{t}")
         for t, planes in enumerate(tables)
     ]
     eb = materialize_with_stats(
@@ -743,7 +746,7 @@ def embedding_neardup_lsh(
     # per-component doubles and association as the inline form, so the
     # value is bit-identical while the per-pair arithmetic drops from
     # three unrolled folds to one
-    en = e.select("vec_id", "v", norm_expr(F.col("v"), dim).alias("nrm"))
+    en = e.select("vec_id", "v", norm_expr(F.col("v")).alias("nrm"))
     va = en.select(
         F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
@@ -756,7 +759,7 @@ def embedding_neardup_lsh(
         .select(
             "vec_a", "vec_b",
             F.round(
-                dot_expr(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")), 4
+                dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4
             ).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)

@@ -49,36 +49,51 @@ def widen_narrow_scan(df: DataFrame) -> DataFrame:
 _SCOPED_CACHE: dict[str, DataFrame] = {}
 
 
-def materialize_with_stats(df: DataFrame, scope: str | None = None) -> DataFrame:
-    """Materialize an intermediate relation WITH size statistics.
+def is_materialized(df: DataFrame) -> bool:
+    """Whether Spark's cache holds ``df``'s plan right now.
+    ``storageLevel`` asks the CacheManager; ``is_cached`` only records
+    that ``persist()`` was once called, and stays True after
+    ``spark.catalog.clearCache()`` has dropped the data."""
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
 
-    ``localCheckpoint`` truncates lineage but leaves the resulting
-    LogicalRDD with UNKNOWN stats (defaultSizeInBytes — effectively
-    infinite), which poisons every downstream join-size estimate: the
-    planner then sort-merge-joins relations that would broadcast or
-    hash-join at their true size. Persisting and materializing instead
-    yields an InMemoryRelation whose stats come from the actual cached
-    bytes, so Spark's own size-based join selection stays correct at
-    ANY scale — small intermediates broadcast, large ones shuffle; the
-    choice is the planner's, not a hard-coded hint.
+
+def materialize_with_stats(df: DataFrame, scope: str | None = None) -> DataFrame:
+    """Persist ``df`` and count it, so later plans read the cached
+    relation and size their joins from its real bytes.
+
+    On Spark 4.1 ``localCheckpoint`` also reports finite stats (the
+    LogicalRDD keeps the materialized plan's ``sizeInBytes``, and a
+    join against it broadcasts), but only a persisted relation is
+    released by ``unpersist`` and ``clearCache``. Scope eviction needs
+    that; a loop that must cut its lineage checkpoints instead (see
+    ``operators.dedup.connected_components``).
 
     ``scope`` (pass a stable per-call-site tag): Spark's CacheManager
     matches cached plans STRUCTURALLY, so without eviction a repeated
     invocation of the same operator would silently reuse the previous
     invocation's persisted intermediate — benchmark repeats would then
     time a warm cache rather than the computation (and memory would
-    creep per invocation). Scoped materializations unpersist their
-    predecessor first, so every invocation computes from the inputs.
+    creep per invocation). A scoped materialization unpersists its
+    predecessor only AFTER the new relation is cached, because the new
+    plan may read the predecessor; a repeat of the predecessor's own
+    plan evicts it first, so every invocation computes from its inputs.
     """
-    if scope is not None:
-        prev = _SCOPED_CACHE.pop(scope, None)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+    prev = _SCOPED_CACHE.pop(scope, None) if scope is not None else None
+    if prev is not None and is_materialized(df):
+        _unpersist(prev)
+        prev = None
     out = df.persist()
     out.count()
+    if prev is not None:
+        _unpersist(prev)
     if scope is not None:
         _SCOPED_CACHE[scope] = out
     return out
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass
