@@ -3,9 +3,8 @@
 ``entry()`` is the flagship crawl-schedule shape. ``queries()`` exposes
 one entry per engine operator family the crawl and its curation path
 use (dedup, ANN, packing, phash, collision naming, per-host budgets,
-memento navigation, scalar and text-stats functions) plus four TPC-H
-shapes audited by the plan-shape tests, each mapped onto the testdata
-tables; ``oracle_sql()`` gives the DuckDB twin of each
+memento navigation, scalar and text-stats functions), each mapped onto
+the testdata tables; ``oracle_sql()`` gives the DuckDB twin of each
 entry (identical hashing: md5-derived 56-bit ints, polynomial char
 folds — verified primitive-by-primitive). Non-SQL-expressible ops (the
 epoch crawl pipeline itself, image decode, LSH-ANN recall) are
@@ -599,72 +598,10 @@ def _q_embedding_neardup_lsh(spark, sf):
     return embedding_neardup_lsh(_t(spark, sf, "embeddings"), threshold=0.45)
 
 
-# Plan-shape audits: four relational shapes kept as the subjects of the
-# physical-plan tests in tests/test_plan_shapes.py (small-dimension
-# broadcast, left-anti join, partial aggregation, filter pushdown).
-
-def _q_customers_no_orders(spark, sf):
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders")
-    return c.join(o.select(F.col("o_custkey")), c.c_custkey == F.col("o_custkey"), "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-def _q_pricing_summary(spark, sf):
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def _q_revenue_by_nation(spark, sf):
-    c = _t(spark, sf, "customer")
-    o = _t(spark, sf, "orders")
-    li = _t(spark, sf, "lineitem")
-    n = _t(spark, sf, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n_lineitems"),
-        )
-    )
-
-
-def _q_revenue_forecast(spark, sf):
-    """TPC-H Q6 shape: pure scan-filter-aggregate — every predicate
-    pushes into the parquet scan, no join, no shuffle beyond the
-    single global agg."""
-    li = _t(spark, sf, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= "1995-01-01")
-        & (F.col("l_shipdate") < "1996-01-01")
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-        F.count("*").alias("n"),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # One checked entry per engine operator family the crawl and its
     # curation path use: dedup, ANN, packing, phash, collision naming,
-    # per-host budgets, memento navigation and the scalar functions,
-    # plus the four relational shapes the plan-shape tests audit.
+    # per-host budgets, memento navigation and the scalar functions.
     # Every key has a DuckDB twin in oracle_sql() (tests/test_entry_parity.py
     # asserts the two key sets are equal).
     return {
@@ -704,11 +641,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "markdown_header": _q_markdown_header,
         # X9 JSON decode/nested access
         "memento_nav": _q_memento_nav,
-        # --- plan-shape audits (tests/test_plan_shapes.py) ---
-        "customers_no_orders": _q_customers_no_orders,
-        "pricing_summary": _q_pricing_summary,
-        "revenue_by_nation": _q_revenue_by_nation,
-        "revenue_forecast": _q_revenue_forecast,
     }
 
 
@@ -1403,39 +1335,5 @@ def oracle_sql() -> dict[str, str]:
             JOIN csize cs USING (component)
             JOIN stats s USING (doc_id)
             WHERE c.doc_id = c.component AND s.quality >= 0.5 AND s.n_tokens >= 5
-        """,
-        "customers_no_orders": """
-            SELECT c_custkey, c_name FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(avg(l_quantity), 4) AS avg_qty,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_nation": """
-            SELECT n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   count(*) AS n_lineitems
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "revenue_forecast": """
-            SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-                   count(*) AS n
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-              AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
-              AND l_discount >= 0.05 AND l_discount <= 0.07
-              AND l_quantity < 24
         """,
     }

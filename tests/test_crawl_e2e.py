@@ -142,6 +142,7 @@ def test_observe_metrics_match_processed(crawl_result, spark):
     }
     epochs = sorted({e for (e, _) in metrics})
     assert sum(metrics[(e, "scheduled")] for e in epochs) == stats.scheduled
+    assert stats.epochs == len(epochs)
     for e in epochs:
         # wayback extract successes == success_wayback dispositions
         assert metrics[(e, "extract_ok")] == per_epoch.get((e, "success_wayback"), 0)

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from web_archive_downloader_spark.config import EngineConfig, load_config_json
 from web_archive_downloader_spark.sources.cdx import (
+    CDX_SCHEMA,
     cdx_dataframe,
     cdx_server_filter,
-    read_cdx_parquet,
 )
 
 
@@ -68,7 +68,7 @@ def test_filters_push_into_parquet_scan(spark, tmp_path):
 
     path = str(tmp_path / "cdx")
     cdx_dataframe(spark, _mixed_records()).write.parquet(path)
-    q = cdx_server_filter(read_cdx_parquet(spark, path))
+    q = cdx_server_filter(spark.read.schema(CDX_SCHEMA).parquet(path))
     buf = io.StringIO()
     with redirect_stdout(buf):
         q.explain("formatted")

@@ -1,19 +1,26 @@
 """Unit tests: collision naming replay (W2), Bloom+anti-join seen set
 (J1), salted per-host top-k scheduling (politeness budget)."""
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from web_archive_downloader_spark.operators.collisions import assign_collision_names
 from web_archive_downloader_spark.operators.schedule import per_host_topk
+from web_archive_downloader_spark.content.paths import xxhash64_str
 from web_archive_downloader_spark.operators.seen import (
     BloomSketch,
     anti_join_unseen,
     build_bloom_sketches,
-    hash_urls,
     merge_sketches,
-    unseen_with_bloom,
+    unseen_with_bloom_state,
 )
+
+
+def hash_urls(urls) -> np.ndarray:
+    """xxhash64(url, seed=42) as uint64, bit-for-bit Spark's
+    ``F.xxhash64`` (a per-row Python loop; the engine hashes JVM-side)."""
+    return np.array([xxhash64_str(u, 42) & ((1 << 64) - 1) for u in urls], np.uint64)
 
 
 def _saves_df(spark, rows):
@@ -159,7 +166,6 @@ def test_bloom_mixed_geometry_merge():
     merged = merge_sketches([(3, small.to_bytes()), (3, big.to_bytes())])
     sks = [BloomSketch.from_bytes(b) for b in merged[3]]
     assert len(sks) == 2
-    import numpy as np
 
     for urls in (a_urls, b_urls):
         hit = np.zeros(len(urls), bool)
@@ -180,56 +186,15 @@ def test_unseen_with_bloom_exact(spark):
     url_seen = spark.createDataFrame(
         pd.DataFrame({"url": [f"https://e.com/{i}" for i in range(0, 200, 2)]})
     )
-    sketches = [
-        (r.partition_id, bytes(r.sketch))
-        for r in build_bloom_sketches(url_seen, 8, 64).collect()
-    ]
-    got = sorted(
-        r.url for r in unseen_with_bloom(frontier, url_seen, sketches, 8, spark).collect()
-    )
+    sketch_df = build_bloom_sketches(url_seen, 8, 64)
+    unseen, mode = unseen_with_bloom_state(frontier, url_seen, sketch_df, 8, spark)
+    assert mode == "broadcast"
+    got = sorted(r.url for r in unseen.collect())
     expected = sorted(f"https://e.com/{i}" for i in range(1, 200, 2))
     assert got == expected
     # and plain anti-join agrees
     plain = sorted(r.url for r in anti_join_unseen(frontier, url_seen).collect())
     assert plain == expected
-
-
-def test_bucketed_url_seen_join_shuffles_small_side_only(spark, tmp_path):
-    """J1 at scale: with url_seen persisted bucketed-by-url, the
-    anti-join plan must contain NO Exchange above the url_seen scan —
-    only the frontier side shuffles (storage-partitioned join)."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    from web_archive_downloader_spark.operators.seen import write_url_seen_bucketed
-
-    seen = spark.createDataFrame(
-        pd.DataFrame({"url": [f"https://e.com/{i}" for i in range(5000)]})
-    )
-    write_url_seen_bucketed(seen, "url_seen_bucketed_test", buckets=8)
-    frontier = spark.createDataFrame(
-        pd.DataFrame({"url": [f"https://e.com/{i}" for i in range(4000, 6000)]})
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        seen_t = spark.table("url_seen_bucketed_test")
-        out = anti_join_unseen(frontier, seen_t)
-        got = sorted(r.url for r in out.collect())
-        assert got == sorted(f"https://e.com/{i}" for i in range(5000, 6000))
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            out.explain("formatted")
-        plan = buf.getvalue()
-        # exactly ONE exchange (the frontier side); the bucketed scan
-        # feeds the join directly
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-        assert "SortMergeJoin" in plan and "LeftAnti" in plan
-        assert "Bucketed: true" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS url_seen_bucketed_test")
 
 
 def test_per_host_topk_budget_and_order(spark):
@@ -258,10 +223,7 @@ def test_pack_sequences_greedy_semantics(spark):
     unless a SINGLE oversize doc occupies its own (overflowing) pack;
     visit order within a shard is doc_id order; pack_pos counts from 0
     per pack."""
-    from web_archive_downloader_spark.operators.packing import (
-        pack_sequences,
-        pack_summary,
-    )
+    from web_archive_downloader_spark.operators.packing import pack_sequences
 
     # one shard (n_shards=1): tokens 100,100,100 -> pack0 holds 2
     # (200<=256), third opens pack1; then a 300-token oversize doc goes
@@ -279,13 +241,12 @@ def test_pack_sequences_greedy_semantics(spark):
         3: (2, 0),                # 100+300 > 256 -> oversize alone
         4: (3, 0), 5: (3, 1),     # 300+10 > 256 -> reset; 10+10 fits
     }
-    summ = {r.pack_id: (r.n_docs, r.pack_tokens, r.overflow)
-            for r in pack_summary(
-                pack_sequences(spark.createDataFrame(rows), budget=256, n_shards=1),
-                budget=256,
+    summ = {r.pack_id: (r.n_docs, r.pack_tokens)
+            for r in out.groupBy("pack_id").agg(
+                F.count("*").alias("n_docs"), F.sum("n_tokens").alias("pack_tokens")
             ).collect()}
-    assert summ[2] == (1, 300, True)   # the oversize pack is flagged
-    assert summ[0] == (2, 200, False)
+    assert summ[2] == (1, 300)   # the oversize doc overflows its own pack
+    assert summ[0] == (2, 200)
 
 
 def test_pack_sequences_partitioning_invariant(spark):
@@ -300,55 +261,3 @@ def test_pack_sequences_partitioning_invariant(spark):
     a = pack_sequences(spark.createDataFrame(pdf).repartition(1), 128, n_shards=4)
     b = pack_sequences(spark.createDataFrame(pdf).repartition(13), 128, n_shards=4)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_pack_sequences_contiguous_matches_duckdb_window(spark):
-    """The zero-UDF contiguous-fill packer equals a DuckDB window
-    oracle on the same rows (exclusive running sum -> floor-div pack,
-    spill at boundaries), and its plan is one exchange with no Python
-    nodes."""
-    import io
-    from contextlib import redirect_stdout
-
-    import duckdb
-
-    from web_archive_downloader_spark.operators.packing import (
-        pack_sequences_contiguous,
-    )
-
-    pdf = pd.DataFrame(
-        {"doc_id": list(range(100)), "n_tokens": [(11 * i) % 97 + 1 for i in range(100)]}
-    )
-    got = pack_sequences_contiguous(spark.createDataFrame(pdf), 128, n_shards=4)
-    oracle = duckdb.sql(
-        """
-        WITH s AS (
-          SELECT doc_id % 4 AS shard, doc_id, n_tokens,
-                 coalesce(sum(n_tokens) OVER (
-                   PARTITION BY doc_id % 4 ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS token_offset
-          FROM pdf
-        )
-        SELECT shard, token_offset // 128 AS pack_id, doc_id, n_tokens,
-               token_offset,
-               greatest(0, (token_offset % 128) + n_tokens - 128) AS spill_tokens
-        FROM s
-        """
-    ).fetchall()
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, oracle))
-    # a doc fully inside a pack has spill 0; boundary docs spill
-    rows = got.collect()
-    assert any(r.spill_tokens > 0 for r in rows)
-    assert all(0 <= r.spill_tokens <= r.n_tokens for r in rows)
-    # plan: ONE exchange (the shard window), zero Python nodes
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        got.explain("formatted")
-    plan = buf.getvalue().split("== Initial Plan ==")[0]
-    tree = plan.split("\n\n")[0]
-    import re
-
-    assert len(re.findall(r"- Exchange", tree)) == 1, plan
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "Window" in plan

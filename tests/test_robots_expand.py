@@ -6,9 +6,8 @@ from pyspark.sql import functions as F
 from web_archive_downloader_spark.datagen import default_config, gen_cdx_records
 from web_archive_downloader_spark.operators.robots import (
     apply_robots_gate,
-    gen_robots_rows,
-    per_host_budgets,
-    robots_df,
+    host_budget_col,
+    latest_robots,
 )
 from web_archive_downloader_spark.oracle.simulator import run_oracle
 from web_archive_downloader_spark.plans.crawl import (
@@ -52,7 +51,10 @@ def test_robots_budgets_and_refresh(spark):
         ],
         "host string, disallow array<string>, crawl_delay double, fetched_epoch int",
     )
-    got = {r.host: r.host_budget for r in per_host_budgets(robots, 30.0, 1.5).collect()}
+    budgets = latest_robots(robots).select(
+        "host", host_budget_col(30.0, F.col("crawl_delay")).alias("host_budget")
+    )
+    got = {r.host: r.host_budget for r in budgets.collect()}
     assert got == {"a.com": 3, "b.com": 60}
 
 

@@ -1,40 +1,17 @@
-"""Structured Streaming: file-source CDX ingest (exactly-once) and the
-foreachBatch frontier feed drained into the epoch loop."""
+"""Structured Streaming: the foreachBatch frontier feed (exactly-once)
+drained into the epoch loop."""
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from web_archive_downloader_spark.datagen import gen_cdx_records
-from web_archive_downloader_spark.oracle.simulator import process_cdx_oracle, strip_header
-from web_archive_downloader_spark.streaming.events import (
-    drain_frontier_inbox,
-    stream_cdx_ingest,
-    stream_frontier_feed,
-)
+from web_archive_downloader_spark.oracle.simulator import strip_header
+from web_archive_downloader_spark.streaming.events import stream_frontier_feed
 
 
-def test_stream_cdx_ingest_validates_and_preserves(spark, tmp_path):
-    raw = gen_cdx_records(n_urls=100, seed=5)
-    rows = [
-        (r[0] or None, r[1] if len(r) > 1 else None, r[2] if len(r) > 2 else None, i)
-        for i, r in enumerate(strip_header(raw))
-        if isinstance(r, list)
-    ]
-    in_dir = str(tmp_path / "in")
-    pdf = pd.DataFrame(rows, columns=["url", "ts", "mimetype", "seq"])
-    # two shard files arriving "over time"
-    spark.createDataFrame(pdf.iloc[: len(pdf) // 2]).write.parquet(in_dir + "/shard1")
-    spark.createDataFrame(pdf.iloc[len(pdf) // 2 :]).write.parquet(in_dir + "/shard2")
-
-    q = stream_cdx_ingest(
-        spark, in_dir + "/*", str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "out"))
-    got_urls = {r.url for r in out.select("url").collect()}
-    oracle_urls = set(process_cdx_oracle(strip_header(raw)).keys())
-    assert got_urls == oracle_urls  # validation filters identical to F4/F5
-    assert out.filter(F.col("host").isNull()).count() == 0
+def _inbox(spark, inbox):
+    """Every landed feed batch as frontier-candidate rows."""
+    return spark.read.parquet(inbox).drop("batch")
 
 
 def test_frontier_feed_foreach_batch_exactly_once(spark, tmp_path):
@@ -57,7 +34,7 @@ def test_frontier_feed_foreach_batch_exactly_once(spark, tmp_path):
 
     q = stream_frontier_feed(spark, in_dir + "/*", inbox, ckpt)
     q.awaitTermination(120)
-    got = drain_frontier_inbox(spark, inbox)
+    got = _inbox(spark, inbox)
     valid_urls = {r[0] for r in rows if r[0] and r[1] and len(str(r[1])) == 14 and str(r[1]).isdigit()}
     assert {r.url for r in got.collect()} == valid_urls
     assert set(got.columns) == {
@@ -68,7 +45,7 @@ def test_frontier_feed_foreach_batch_exactly_once(spark, tmp_path):
     # second trigger over the same input: nothing new to process
     q2 = stream_frontier_feed(spark, in_dir + "/*", inbox, ckpt)
     q2.awaitTermination(120)
-    assert drain_frontier_inbox(spark, inbox).count() == n1
+    assert _inbox(spark, inbox).count() == n1
 
     # a NEW shard arrives: only its rows are appended
     extra = pd.DataFrame(
@@ -78,19 +55,9 @@ def test_frontier_feed_foreach_batch_exactly_once(spark, tmp_path):
     spark.createDataFrame(extra).write.parquet(in_dir + "/s3")
     q3 = stream_frontier_feed(spark, in_dir + "/*", inbox, ckpt)
     q3.awaitTermination(120)
-    final = drain_frontier_inbox(spark, inbox)
+    final = _inbox(spark, inbox)
     assert final.count() == n1 + 1
     assert final.filter(F.col("url") == "https://ex.com/new-page").count() == 1
-
-
-def test_drain_empty_inbox_returns_empty_frontier(spark, tmp_path):
-    """An inbox with no landed batch yet is a valid empty frontier,
-    not a path-not-found/schema-inference error."""
-    got = drain_frontier_inbox(spark, str(tmp_path / "never_written"))
-    assert got.count() == 0
-    assert set(got.columns) == {
-        "url", "ts", "host", "depth", "priority", "seq", "attempt", "eligible_epoch"
-    }
 
 
 def test_frontier_feed_applies_server_filter(spark, tmp_path):
@@ -108,7 +75,7 @@ def test_frontier_feed_applies_server_filter(spark, tmp_path):
     spark.createDataFrame(rows, CDX_STREAM_SCHEMA).write.parquet(in_dir + "/s1")
     q = stream_frontier_feed(spark, in_dir + "/*", inbox, ckpt)
     q.awaitTermination(120)
-    got = {r.url for r in drain_frontier_inbox(spark, inbox).collect()}
+    got = {r.url for r in _inbox(spark, inbox).collect()}
     assert got == {"https://ex.com/good", "https://ex.com/prefiltered"}
 
 
@@ -175,50 +142,6 @@ def test_crawl_with_continuous_frontier_ingestion(spark, tmp_path):
     plan3 = CrawlPlan(spark, store, cfg)
     plan3.run(cdx_dataframe(spark, raw1), resume=True, inbox_dir=inbox)
     assert store.read("processed", PROCESSED_SCHEMA).count() == len(order)
-
-
-def test_stream_exact_dedup(spark, tmp_path):
-    """Streaming exact dedup: duplicate texts arriving across shards
-    collapse to one surviving row per content hash; a re-trigger over
-    the same input emits nothing new (source checkpoint + dedup
-    state)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from web_archive_downloader_spark.streaming.events import stream_exact_dedup
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("event_time", T.TimestampType()),
-        ]
-    )
-    t0 = dt.datetime(2023, 1, 1, 12, 0, 0)
-    rows1 = [
-        (1, "alpha beta", t0),
-        (2, "gamma delta", t0),
-        (3, "alpha beta", t0),  # dup of 1, same shard
-    ]
-    rows2 = [
-        (4, "alpha beta", t0 + dt.timedelta(minutes=5)),   # dup across shards
-        (5, "epsilon zeta", t0 + dt.timedelta(minutes=5)),
-    ]
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
-    spark.createDataFrame(rows1, schema).write.parquet(in_dir + "/s1")
-    spark.createDataFrame(rows2, schema).write.parquet(in_dir + "/s2")
-
-    q = stream_exact_dedup(spark, in_dir + "/*", out_dir, ckpt, watermark="1 hour")
-    q.awaitTermination(120)
-    out = spark.read.parquet(out_dir)
-    texts = sorted(r.text for r in out.collect())
-    assert texts == ["alpha beta", "epsilon zeta", "gamma delta"]
-
-    # nothing new on re-trigger
-    q2 = stream_exact_dedup(spark, in_dir + "/*", out_dir, ckpt, watermark="1 hour")
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == 3
 
 
 def test_ingest_rejects_null_or_oversized_feed_seq(spark, tmp_path):

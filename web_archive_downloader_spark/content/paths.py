@@ -86,15 +86,6 @@ def markdown_base_filename(title: str, original_url: str) -> str:
     return sanitize_filename(title)
 
 
-def collided_name(base: str, rank: int, ext: str) -> str:
-    """Collision naming: rank 1 -> base.ext, rank r>1 -> base-(r-1).ext
-    (file_handler.py:129-134). Ranks beyond FILENAME_COLLISION_LIMIT+1
-    abort in the reference (:135-137) — callers filter those out."""
-    if rank <= 1:
-        return f"{base}{ext}"
-    return f"{base}-{rank - 1}{ext}"
-
-
 def format_archived_ts(ts14: str) -> str:
     """file_handler.py:144 — yyyyMMddHHmmss -> 'YYYY-MM-DD HH:MM:SS'."""
     return datetime.strptime(ts14, "%Y%m%d%H%M%S").strftime("%Y-%m-%d %H:%M:%S")
@@ -135,15 +126,6 @@ def asset_base_and_ext(asset_url: str) -> tuple[str, str]:
     if not safe or f"{safe}{ext}" == ext:
         return DEFAULT_ASSET_FILENAME, ""
     return safe, ext
-
-
-def asset_collided_name(base: str, ext: str, rank: int) -> str:
-    """Asset collision naming (file_handler.py:253-259): the counter
-    replaces any previous ``-N`` suffix on the base (regex strip)."""
-    if rank <= 1:
-        return f"{base}{ext}"
-    stripped = re.sub(r"-\d+$", "", base)
-    return f"{stripped}-{rank - 1}{ext}"
 
 
 # --- xxhash64, pure python (public algorithm, xxHash by Yann Collet) ---

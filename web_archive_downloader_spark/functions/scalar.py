@@ -185,11 +185,6 @@ def asset_base_ext_cols(asset_url: Column) -> tuple[Column, Column]:
     return out_base, out_ext
 
 
-def asset_kind_rank_col(kind: Column) -> Column:
-    """Stage order of asset processing (main.py:104-107): js, css, img."""
-    return F.when(kind == "js", 0).when(kind == "css", 1).otherwise(2)
-
-
 # --- opt-in URL canonicalization (Catalyst twin of
 # content/paths.py:canonical_url — keep in LOCKSTEP) ------------------
 

@@ -17,8 +17,8 @@ Scale notes per operator:
   doc_id < doc_id to halve output.
 - simhash: explode + per-bit majority via sum of +/- weights; one
   shuffle keyed by doc.
-- ngram_jaccard_pairs: candidate generation MUST be blocked (here:
-  shared minhash band) — never a full cross join at scale.
+- similarity_pairs: n-gram and token Jaccard over BLOCKED candidate
+  pairs (shared minhash band) — never a full cross join at scale.
 - embedding_neardup: cosine over normalized vectors; blocked by LSH
   sign-bucket (random hyperplanes) at scale; exact variant for tests.
 """
@@ -235,35 +235,6 @@ def ngram_shingles_from_tokens(toks, n: int = 2):
 
     return F.when(F.size(toks) >= n, shingles).otherwise(
         F.lit([]).cast(T.ArrayType(T.StringType()))
-    )
-
-
-def ngram_shingles_col(text, n: int = 2):
-    """Word n-gram shingles direct from a text expression. Prefer the
-    two-step ``select(tokens_col(...))`` + ``ngram_shingles_from_tokens``
-    form on hot paths (see that docstring for why)."""
-    return ngram_shingles_from_tokens(tokens_col(text), n)
-
-
-def ngram_jaccard_pairs(docs: DataFrame, candidates: DataFrame, n: int = 2) -> DataFrame:
-    """n-gram Jaccard over candidate pairs (blocked upstream)."""
-    sh = docs.select("doc_id", tokens_col(F.col("text")).alias("_toks")).select(
-        "doc_id", ngram_shingles_from_tokens(F.col("_toks"), n).alias("sh")
-    )
-    a = sh.alias("a")
-    b = sh.alias("b")
-    return (
-        candidates.join(a, candidates.doc_a == F.col("a.doc_id"))
-        .join(b, candidates.doc_b == F.col("b.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-                / F.size(F.array_union("a.sh", "b.sh")),
-                6,
-            ).alias("jaccard"),
-        )
     )
 
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalar import valid_ts_col
+
 
 def latest_snapshot_per_url(cdx: DataFrame, url="url", ts="ts", seq="seq") -> DataFrame:
     """Input: valid CDX rows (url, ts, ..., seq) where ``seq`` is the
@@ -41,5 +43,5 @@ def valid_cdx(cdx: DataFrame) -> DataFrame:
         F.col("url").isNotNull()
         & (F.length("url") > 0)
         & F.col("ts").isNotNull()
-        & F.col("ts").rlike("^[0-9]{14}$")
+        & valid_ts_col(F.col("ts"))
     )

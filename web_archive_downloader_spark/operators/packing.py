@@ -95,67 +95,3 @@ def pack_sequences(
     return sharded.groupBy("shard").applyInPandas(
         lambda pdf: _pack_one_shard(pdf, budget), PACK_SCHEMA
     )
-
-
-def pack_sequences_contiguous(
-    docs_with_tokens: DataFrame,
-    budget: int,
-    n_shards: int = 8,
-) -> DataFrame:
-    """CONTIGUOUS-FILL packing — the GPT-style trainer variant where
-    documents may SPLIT across pack boundaries: each shard's documents
-    form one concatenated token stream in doc_id order, and a document
-    belongs to the pack its FIRST token lands in
-    (pack_id = floor(exclusive_running_sum / budget)). Unlike
-    pack_sequences (first-fit-with-reset, whole docs only), every pack
-    except a shard's last holds exactly ``budget`` tokens.
-
-    Zero Python: the exclusive running sum is a window over the shard
-    exchange — ONE shuffle, whole-stage codegen around it, no UDF (the
-    conditional reset that forces pack_sequences into applyInPandas
-    disappears because contiguous fill never resets). Returns
-    (shard, pack_id, doc_id, n_tokens, token_offset, spill_tokens)
-    where token_offset is the doc's global offset in its shard's
-    stream and spill_tokens counts the tokens that overflow past the
-    starting pack's boundary (0 = fully inside; the writer uses it to
-    split the doc's token slice across packs).
-    """
-    if budget <= 0:
-        raise ValueError(f"budget must be positive, got {budget}")
-    if n_shards <= 0:
-        raise ValueError(f"n_shards must be positive, got {n_shards}")
-    from pyspark.sql import Window
-
-    sharded = docs_with_tokens.select(
-        F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("long").alias("shard"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.coalesce(F.col("n_tokens").cast("long"), F.lit(0)).alias("n_tokens"),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return sharded.select(
-        "shard",
-        F.floor(off / budget).cast("long").alias("pack_id"),
-        "doc_id",
-        "n_tokens",
-        off.alias("token_offset"),
-        F.greatest(
-            F.lit(0), (off % budget) + F.col("n_tokens") - budget
-        ).alias("spill_tokens"),
-    )
-
-
-def pack_summary(assignments: DataFrame, budget: int) -> DataFrame:
-    """Pack-level audit: (shard, pack_id, n_docs, pack_tokens,
-    fill_ratio, overflow). Rides the SAME shard partitioning the
-    packer just produced, so with AQE this aggregates shuffle-free."""
-    return assignments.groupBy("shard", "pack_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("pack_tokens"),
-        F.round(F.sum("n_tokens") / F.lit(budget), 6).alias("fill_ratio"),
-        (F.sum("n_tokens") > budget).alias("overflow"),
-    )

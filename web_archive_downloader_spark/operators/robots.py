@@ -12,21 +12,16 @@ Design: ``robots(host, disallow: array<string>, crawl_delay: double,
 fetched_epoch: int)`` is a SMALL table (one row per host — even at
 10^10 URLs, hosts number ~10^7) → always broadcast to the scheduling
 join. ``crawl_delay`` overrides the global politeness delay per host
-(min tokens 1). Refresh bookkeeping: rows carry fetched_epoch; stale
-rows (older than ttl_epochs) are re-fetched by a small mapInPandas
-stage in production — here the fixture generator stands in for the
-fetch, and refresh is the same epoch-append + latest-per-host pattern
-as A1.
+(min tokens 1). Refresh bookkeeping: rows carry fetched_epoch; a
+refresh appends newer rows and the gate reads the latest row per host,
+the same epoch-append + latest-per-host pattern as A1.
 """
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..content.paths import xxhash64_str
 
 ROBOTS_SCHEMA = T.StructType(
     [
@@ -36,28 +31,6 @@ ROBOTS_SCHEMA = T.StructType(
         T.StructField("fetched_epoch", T.IntegerType()),
     ]
 )
-
-
-def gen_robots_rows(hosts: list[str], default_delay: float = 1.5, epoch: int = 0) -> list[tuple]:
-    """Deterministic fixture: ~1/3 of hosts disallow some prefixes,
-    ~1/4 set a custom crawl delay."""
-    rows = []
-    for h in hosts:
-        x = xxhash64_str("robots:" + h) & ((1 << 63) - 1)
-        disallow = []
-        if x % 3 == 0:
-            disallow.append("/private")
-        if x % 7 == 0:
-            disallow.append("/docs")
-        delay = default_delay
-        if x % 4 == 0:
-            delay = float(1 + x % 5)
-        rows.append((h, disallow, delay, epoch))
-    return rows
-
-
-def robots_df(spark: SparkSession, hosts: list[str], default_delay: float = 1.5, epoch: int = 0) -> DataFrame:
-    return spark.createDataFrame(gen_robots_rows(hosts, default_delay, epoch), ROBOTS_SCHEMA)
 
 
 def latest_robots(robots: DataFrame) -> DataFrame:
@@ -93,11 +66,7 @@ def apply_robots_gate(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
-def per_host_budgets(robots: DataFrame, epoch_seconds: float, default_delay: float) -> DataFrame:
-    """Token-bucket capacities per host honoring robots crawl_delay:
-    tokens = max(1, floor(epoch_seconds / delay))."""
-    delay = F.coalesce(F.col("crawl_delay"), F.lit(default_delay))
-    return latest_robots(robots).select(
-        "host",
-        F.greatest(F.floor(F.lit(epoch_seconds) / delay), F.lit(1)).cast("int").alias("host_budget"),
-    )
+def host_budget_col(epoch_seconds: float, delay: Column) -> Column:
+    """Token-bucket capacity per host honoring robots crawl_delay:
+    max(1, floor(epoch_seconds / delay))."""
+    return F.greatest(F.floor(F.lit(epoch_seconds) / delay), F.lit(1)).cast("int")

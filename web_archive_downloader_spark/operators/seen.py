@@ -33,8 +33,7 @@ Scale notes (round-2 hardening):
   ``pid = pmod(xxhash64(url), P)`` as Catalyst expressions; the
   pandas UDFs consume int64 columns and derive the second probe hash
   with a vectorized numpy splitmix64 mix of h1. No per-row Python
-  hashing anywhere in the pipeline (the pure-Python ``hash_urls``
-  helper below exists only for tests/oracle).
+  hashing anywhere in the pipeline.
 - **Sketches of different capacities merge safely.** Each epoch
   sizes its per-partition sketch for that epoch's row count, so a
   pid accumulates sketches with different (n_bits, k) over time.
@@ -53,8 +52,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_U64 = (1 << 64) - 1
 
 # Persisted-sketch format versioning: the probe scheme is part of the
 # on-disk contract (round 2 changed h2 from xxhash64(url, seed=77) to
@@ -76,15 +73,6 @@ def splitmix64(h: np.ndarray) -> np.ndarray:
         z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
         z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
         return (z ^ (z >> np.uint64(31))) | np.uint64(1)  # odd → k distinct probes
-
-
-def hash_urls(urls) -> np.ndarray:
-    """xxhash64(url, seed=42) as uint64 — matches Spark's
-    ``F.xxhash64`` bit-for-bit. Pure-Python per-row loop: for tests
-    and the oracle ONLY; the engine projects the hash JVM-side."""
-    from ..content.paths import xxhash64_str
-
-    return np.array([xxhash64_str(u, 42) & _U64 for u in urls], np.uint64)
 
 
 class BloomSketch:
@@ -332,8 +320,8 @@ def anti_join_unseen(
 ) -> DataFrame:
     """Exact J1: frontier rows whose url is NOT in url_seen
     (main.py:62-64). Left-anti equi-join; with the seen side a bucketed
-    table (see write_url_seen_bucketed / StateStore.bucketize) the join
-    is storage-partitioned: no big-side shuffle. A LIST of seen parts
+    table (see StateStore.bucketize) the join is storage-partitioned:
+    no big-side shuffle. A LIST of seen parts
     chains anti-joins — the scale pattern is [bucketed base, recent
     epoch deltas]: the base never shuffles, the deltas are small."""
     if isinstance(url_seen, DataFrame):
@@ -342,50 +330,6 @@ def anti_join_unseen(
     for part in url_seen:
         out = out.join(part.select("url"), on="url", how="left_anti")
     return out
-
-
-def write_url_seen_bucketed(
-    url_seen: DataFrame, table_name: str, buckets: int = 32
-) -> None:
-    """Scale path for the J1 big side: persist url_seen as a BUCKETED
-    table (hash-bucketed + sorted by url). Reading it back for the
-    anti-join gives a storage-partitioned join: the url_seen scan
-    needs NO Exchange and NO Sort — only the (much smaller) frontier
-    side shuffles. On Iceberg this is the same contract via bucket(N,
-    url) partition transforms + storage-partitioned joins. At a
-    10^10-row seen set, not shuffling the big side per epoch is the
-    difference between an O(seen) exchange every epoch and an
-    O(frontier) one. Demonstrated + plan-asserted in
-    tests/test_operators.py::test_bucketed_url_seen_join_shuffles_small_side_only."""
-    (
-        url_seen.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, "url")
-        .sortBy("url")
-        .saveAsTable(table_name)
-    )
-
-
-def unseen_with_bloom(
-    frontier: DataFrame,
-    url_seen: DataFrame | list[DataFrame],
-    sketches: list[tuple[int, bytes]],
-    n_partitions: int,
-    spark: SparkSession,
-) -> DataFrame:
-    """Bloom prefilter + exact anti-join of the residue. Returns the
-    exactly-unseen frontier rows (BASELINE.json:14 exactness).
-
-    A missing/empty sketch set means the Bloom gives NO exclusion
-    guarantee — everything must go through the exact anti-join (the
-    filter is an optimization, never the membership truth)."""
-    if not sketches:
-        return anti_join_unseen(frontier, url_seen)
-    flagged = bloom_prefilter(frontier, sketches, n_partitions, spark)
-    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    candidates = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    survivors = anti_join_unseen(candidates, url_seen)
-    return definitely_new.unionByName(survivors)
 
 
 def sketch_stats(sketch_df: DataFrame, n_partitions: int | None = None) -> dict:

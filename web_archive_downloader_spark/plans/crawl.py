@@ -23,7 +23,9 @@ The seen-set probe runs before the robots gate, so a url already seen
 (a checkpointed one included) leaves the frontier without a record,
 exactly as the sequential oracle skips it. The page pass reuses the
 standalone stages' kernels (sources/fetch_shim.py:process_page), so
-its rows equal theirs; the standalone stages stay for batch extract.
+its rows equal theirs. run_epoch calls none of the standalone stages;
+they stay because perfbench's LayerProbes patch them and corpus_bench's
+extract leg runs them.
 
 Crawl ORDER determinism under parallelism: nothing order-sensitive is
 derived from task/epoch completion order — every output keys off the
@@ -68,9 +70,9 @@ from ..operators.schedule import pace_slot_col, per_host_topk
 from ..operators.seen import build_bloom_sketches, unseen_with_bloom_state
 from ..sources.fetch_shim import finalize_markdown_stage, page_pass_stage
 
-# The standalone stages the page pass fuses stay importable from this
-# module (they are the per-stage form of the same kernels, and
-# layer-timing harnesses address them here); run_epoch calls none.
+# The standalone stages the page pass fuses are re-exported here only
+# because perfbench's LayerProbes patch them on this module; run_epoch
+# calls none of them.
 from ..sources.fetch_shim import (  # noqa: F401
     asset_fetch_stage,
     extract_stage,
@@ -200,12 +202,11 @@ def seed_frontier_from_cdx(
 
 @dataclass
 class CrawlRunStats:
+    """Epochs run and rows scheduled by one ``run`` call; the per-epoch
+    route counters are in the committed ``metrics`` table."""
+
     epochs: int = 0
     scheduled: int = 0
-    fetched_ok: int = 0
-    retries: int = 0
-    memento_ok: int = 0
-    dead: int = 0
 
 
 class CrawlPlan:
@@ -287,20 +288,17 @@ class CrawlPlan:
         )
         budget_col = None
         if cfg.respect_robots:
-            from ..operators.robots import ROBOTS_SCHEMA, apply_robots_gate
+            from ..operators.robots import ROBOTS_SCHEMA, apply_robots_gate, host_budget_col
 
             # the gate's crawl_delay is then null exactly for hosts
-            # without a robots row, which keep the global budget (the
-            # per_host_budgets rule, without a second robots join)
+            # without a robots row, which keep the global budget
+            # (per-host budgets without a second robots join)
             robots = store.read("robots", ROBOTS_SCHEMA).withColumn(
                 "crawl_delay",
                 F.coalesce(F.col("crawl_delay"), F.lit(cfg.request_delay_seconds)),
             )
             unseen = apply_robots_gate(unseen, robots).withColumn(
-                "host_budget",
-                F.greatest(
-                    F.floor(F.lit(cfg.epoch_seconds) / F.col("crawl_delay")), F.lit(1)
-                ).cast("int"),
+                "host_budget", host_budget_col(cfg.epoch_seconds, F.col("crawl_delay"))
             )
             budget_col = "host_budget"
         # cached: the schedule, the leftover anti-join and the
@@ -353,12 +351,15 @@ class CrawlPlan:
         n_sched = int(counts["scheduled"])
         mark("page_pass")
 
-        members = {"lineage": self._lineage(epoch, page)}
+        # every epoch commits its counters, an idle one (all zero) too
+        members = {
+            "lineage": self._lineage(epoch, page),
+            "metrics": self.spark.createDataFrame(
+                self._metric_rows(epoch, counts), METRICS_SCHEMA
+            ),
+        }
         if n_sched:
             members.update(self._page_members(epoch, page))
-            members["metrics"] = self.spark.createDataFrame(
-                self._metric_rows(epoch, counts), METRICS_SCHEMA
-            )
         if budget_col:
             blocked = unseen.filter(F.col("robots_blocked")).select(
                 "url", "seq", F.lit("robots_blocked").alias("disposition"),

@@ -86,8 +86,3 @@ def cdx_server_filter(cdx: DataFrame, prefiltered_feed: bool = True) -> DataFram
         )
     return cdx.filter((F.col("status") == 200) & (F.col("mimetype") == "text/html"))
 
-
-def read_cdx_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Scale path: CDX dump shards as parquet; seq must be present
-    (assigned at dump time) so ordering survives re-partitioning."""
-    return spark.read.schema(CDX_SCHEMA).parquet(path)

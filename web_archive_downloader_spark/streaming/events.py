@@ -1,15 +1,14 @@
-"""Structured Streaming operators.
+"""Structured Streaming: the continuous frontier feed.
 
 The reference is batch-only; its loop maps onto the deterministic
 epoch-BSP pipeline in plans/crawl.py (Structured Streaming's ordering
 guarantees are too weak for exact crawl-order matching — SURVEY
 §2.10). Streaming's role in this engine is continuous frontier
-ingestion: new CDX shards / discovered links land as files; a
-file-source stream validates + dedups them into frontier appends
-between epochs (plus exact dedup of arriving documents at the
-ingestion edge).
+ingestion: new CDX shards land as files; a file-source stream
+validates them into per-batch inbox dirs, which
+``CrawlPlan.ingest_inbox`` drains into the frontier between epochs.
 
-These are expressed with the standard readStream -> transform ->
+The stream uses the standard readStream -> transform ->
 writeStream(availableNow) pattern so tests run deterministically to
 completion on static fixtures.
 """
@@ -31,28 +30,6 @@ CDX_STREAM_SCHEMA = T.StructType(
         T.StructField("seq", T.LongType()),
     ]
 )
-
-
-def stream_cdx_ingest(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
-):
-    """File-source stream of CDX shards -> validated frontier-append
-    rows. Exactly-once via the streaming checkpoint; downstream dedup
-    against url_seen stays in the epoch loop (membership needs the
-    full seen-state, which is batch-side)."""
-    raw = (
-        spark.readStream.schema(CDX_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(in_dir)
-    )
-    validated = valid_cdx(raw).withColumn("host", F.parse_url("url", F.lit("HOST")))
-    return (
-        validated.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_frontier_feed(
@@ -104,73 +81,6 @@ def stream_frontier_feed(
     return (
         feed.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def drain_frontier_inbox(spark: SparkSession, inbox_dir: str) -> DataFrame:
-    """INSPECTION/TEST helper: read all landed feed batches as
-    frontier-candidate rows. NOT the crawl's drain path — rows keep
-    their raw per-shard seqs, which alias the CDX-seed seq space;
-    feeding them into a frontier directly would create
-    nondeterministic ordering collisions with seeds. The epoch loop
-    drains with ``CrawlPlan.ingest_inbox``, which repacks seqs into
-    the 2^45+ ingest namespace and commits batch ids exactly-once.
-    Drops the batch-id partition column — it is commit bookkeeping,
-    not frontier state. An inbox with no landed batch yet (stream
-    started, nothing triggered) is a valid empty frontier, not a
-    read error."""
-    import os
-
-    from ..plans.crawl import FRONTIER_SCHEMA
-
-    if not os.path.isdir(inbox_dir) or not any(
-        e.startswith("batch=") for e in os.listdir(inbox_dir)
-    ):
-        return spark.createDataFrame([], FRONTIER_SCHEMA)
-    return spark.read.parquet(inbox_dir).drop("batch")
-
-
-def stream_exact_dedup(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "1 hour",
-):
-    """Streaming EXACT dedup at the ingestion edge — the streaming
-    member of the dedup family (batch: operators/dedup.exact_dedup).
-    Incoming document rows (doc_id, text, event_time) dedup on
-    md5(text) via ``dropDuplicatesWithinWatermark``: one surviving row
-    per content hash among arrivals within the watermark horizon.
-
-    Scale shape: dedup state is per-key and EXPIRES once the watermark
-    passes a key's horizon — memory is bounded by arrival rate x
-    horizon, never by corpus size (a full-history exact dedup belongs
-    batch-side against a persisted hash table, same split as the
-    frontier's J1 membership). Exactly-once via the source checkpoint
-    + append sink."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("event_time", T.TimestampType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 8).parquet(in_dir)
-    )
-    deduped = (
-        stream.withColumn("content_hash", F.md5("text"))
-        .withWatermark("event_time", watermark)
-        .dropDuplicatesWithinWatermark(["content_hash"])
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
