@@ -9,7 +9,8 @@ write per epoch.
 - the robots gate runs after the seen-set probe, so a checkpointed url
   under a disallowed prefix is skipped, not re-recorded;
 - payload tables written by the packed write and per-table dirs of an
-  older store are read as one table.
+  older store are read as one table;
+- the packed union schema refuses two types for one column.
 """
 
 import pandas as pd
@@ -35,7 +36,7 @@ from web_archive_downloader_spark.plans.crawl import (
     CrawlPlan,
 )
 from web_archive_downloader_spark.sources.cdx import cdx_dataframe
-from web_archive_downloader_spark.sources.state import StateStore
+from web_archive_downloader_spark.sources.state import TABLES, StateStore, union_schema
 
 
 # ---- fused page function vs the standalone stages ----------------------
@@ -315,7 +316,8 @@ def test_kill_and_resume_at_every_epoch_matches_oracle(fused_crawl, spark):
 def test_payload_reads_union_legacy_table_dirs(spark, tmp_path):
     """A store written before the payload joined the packed write keeps
     docs_raw in its own epoch dirs; read() unions those with the packed
-    rows of later epochs."""
+    rows of later epochs. The reads take the registered schema, so
+    building them runs no footer-inference job."""
     store = StateStore(str(tmp_path / "legacy"), spark)
     doc = ("https://ex.com/a", "20230101000000", 1, "wayback", "A", "<p>a</p>", 0)
     legacy = spark.createDataFrame([doc], DOCS_RAW_SCHEMA)
@@ -324,9 +326,37 @@ def test_payload_reads_union_legacy_table_dirs(spark, tmp_path):
         [("https://ex.com/b",) + doc[1:2] + (2,) + doc[3:6] + (1,)], DOCS_RAW_SCHEMA
     )
     store.commit(1, {"__state__": store.stage_packed(1, {"docs_raw": packed})})
-    got = sorted((r.url, r.seq, r.epoch) for r in store.read("docs_raw", DOCS_RAW_SCHEMA).collect())
+    sc = spark.sparkContext
+    sc.setJobGroup("registry_reads", "reads of per-table dirs without a schema")
+    try:
+        docs = store.read("docs_raw")
+        store.read_latest_only("docs_raw")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("registry_reads")
+    got = sorted((r.url, r.seq, r.epoch) for r in docs.collect())
     assert got == [("https://ex.com/a", 1, 0), ("https://ex.com/b", 2, 1)]
     store.compact("__state__")
     assert sorted(r.url for r in store.read("docs_raw", DOCS_RAW_SCHEMA).collect()) == [
         "https://ex.com/a", "https://ex.com/b"
     ]
+
+
+def test_packed_union_refuses_a_column_with_two_types():
+    """The packed write's union schema is derived from the table
+    registry. One packed column cannot hold two types, so two members
+    that disagree on a column's type make the derivation raise."""
+
+    def member(seq_type):
+        return T.StructType(
+            [T.StructField("url", T.StringType()), T.StructField("seq", seq_type)]
+        )
+
+    with pytest.raises(ValueError, match="packed column seq"):
+        union_schema({"a": member(T.LongType()), "b": member(T.IntegerType())})
+    assert union_schema({"a": member(T.LongType()), "b": member(T.LongType())}).names == [
+        "_table", "url", "seq",
+    ]
+    # every registered column appears once in the registry's own union
+    packed = union_schema(TABLES)
+    assert sorted(packed.names[1:]) == sorted({c for s in TABLES.values() for c in s.names})

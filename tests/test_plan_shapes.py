@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry_mod
 from web_archive_downloader_spark.datagen import default_config, gen_cdx_multihost
 from web_archive_downloader_spark.operators import robots as robots_mod
+from web_archive_downloader_spark.operators import seen as seen_mod
 from web_archive_downloader_spark.plans import crawl
 from web_archive_downloader_spark.sources.cdx import cdx_dataframe
 from web_archive_downloader_spark.sources.state import StateStore
@@ -154,8 +155,9 @@ def epoch_plans(spark, tmp_path_factory) -> dict[str, list[dict]]:
     spark.conf.set(meta, "1000")
     try:
         _crawl(spark, str(root / "b"), cfg, out["broadcast"], max_epochs=2)
-        cogroup = dataclasses.replace(cfg, bloom_broadcast_max_bytes=0)
-        _crawl(spark, str(root / "c"), cogroup, out["cogroup"], max_epochs=2)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(seen_mod, "BLOOM_BROADCAST_MAX_BYTES", 0)
+            _crawl(spark, str(root / "c"), cfg, out["cogroup"], max_epochs=2)
         _crawl(spark, str(root / "e"), cfg, max_epochs=1)
         resized = dataclasses.replace(cfg, seen_partitions=16)
         _crawl(spark, str(root / "e"), resized, out["exact"], checkpoint=False,
@@ -212,14 +214,18 @@ def test_epoch_lineage_aggregates_before_exchange(epoch_plans):
 @pytest.mark.parametrize("mode", MODES)
 def test_epoch_j1_is_left_anti(epoch_plans, mode):
     """J1 probes the seen set with a LeftAnti join in every probe mode,
-    and the join's right side reads url_seen from parquet."""
+    and the join's right side reads url_seen from parquet. No Python
+    UDF runs on that side: the Bloom probe's predicate stays on the
+    frontier side rather than being inferred onto the seen rows, which
+    would run the UDF over all of url_seen every epoch."""
     for i, e in enumerate(epoch_plans[mode]):
         tree, text = e["j1"]
         anti = [kids for line, kids in _nodes(tree) if "Join" in line and " LeftAnti" in line]
         assert anti, (mode, i, text)
-        assert all(
-            any("Scan parquet" in line for line, _ in _nodes(kids[1])) for kids in anti
-        ), (mode, i, text)
+        for kids in anti:
+            right = [line for line, _ in _nodes(kids[1])]
+            assert any("Scan parquet" in line for line in right), (mode, i, text)
+            assert not any("ArrowEvalPython" in line for line in right), (mode, i, text)
 
 
 def test_epoch_page_pass_partitioned_by_url(epoch_plans):

@@ -86,22 +86,26 @@ def test_kill_and_resume_identical(spark, tmp_path):
 def test_compaction_preserves_state_and_resume(spark, tmp_path):
     """Compaction, both entry points, in ONE crawl (merged from two
     separate full-crawl tests — same coverage, one multi-epoch run):
-    the first leg runs with compact_every_epochs=2 (the IN-LOOP path
-    fires mid-crawl), is stopped after 3 epochs, manually compacted
-    again (the explicit API path: identical rows before/after,
-    rollback past the floor refused — Iceberg snapshot-expiry), then
-    resumed to completion and compared to the oracle exactly (order,
-    seen, doc bytes)."""
+    the first leg runs its first 2 epochs with AUTO_COMPACT_MAX_DIRS=1
+    (the IN-LOOP path fires mid-crawl), is stopped after 3 epochs,
+    manually compacted again (the explicit API path: identical rows
+    before/after, rollback past the floor refused — Iceberg
+    snapshot-expiry), then resumed to completion and compared to the
+    oracle exactly (order, seen, doc bytes)."""
     import pytest
+    from web_archive_downloader_spark.plans import crawl as crawl_mod
     from web_archive_downloader_spark.plans.crawl import URL_SEEN_SCHEMA
 
     raw = gen_cdx_records(n_urls=30, seed=17)
-    cfg = default_config(epoch_seconds=20.0, compact_every_epochs=2, max_retries=2)
+    cfg = default_config(epoch_seconds=20.0, max_retries=2)
 
-    # run midway (in-loop compaction fires at epoch 1), compact again
-    # explicitly, resume to completion
+    # run midway (in-loop compaction fires at epoch 1, when the packed
+    # table lists 2 dirs), compact again explicitly, resume to completion
     store = StateStore(str(tmp_path / "c"), spark)
     plan = CrawlPlan(spark, store, cfg)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crawl_mod, "AUTO_COMPACT_MAX_DIRS", 1)
+        plan.run(cdx_dataframe(spark, raw), max_epochs=2)
     plan.run(cdx_dataframe(spark, raw), max_epochs=3)
     paths = store.read_manifest()["tables"]["__state__"]
     assert any("compacted=" in p for p in paths)  # in-loop leg ran

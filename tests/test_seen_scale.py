@@ -17,6 +17,7 @@ from web_archive_downloader_spark.operators.seen import (
     unseen_with_bloom_state,
 )
 from web_archive_downloader_spark.oracle.simulator import run_oracle
+from web_archive_downloader_spark.plans import crawl as crawl_mod
 from web_archive_downloader_spark.plans.crawl import (
     PROCESSED_SCHEMA,
     URL_SEEN_SCHEMA,
@@ -222,17 +223,17 @@ def test_bucketized_base_joins_without_big_side_shuffle(spark, tmp_path):
         store.destroy()
 
 
-def test_auto_scale_posture_triggers_and_matches_oracle(spark, tmp_path):
-    """DEFAULT-config scale posture: with bucketize/compact unset
-    (None = auto), a crawl whose seen rows pass auto_bucketize_min_rows
+def test_auto_scale_posture_triggers_and_matches_oracle(spark, tmp_path, monkeypatch):
+    """DEFAULT-config scale posture: with bucketize unset (None = auto),
+    a crawl whose seen rows pass AUTO_BUCKETIZE_MIN_ROWS
     bucketizes ITSELF mid-crawl (threshold shrunk here so a small
     fixture trips it) and still matches the oracle exactly."""
     raw = gen_cdx_records(n_urls=25, seed=19)
     # threshold sized to fire ~twice over the ~30 seen rows (firing
     # every epoch would triple the test's bucketize+compact cost)
-    cfg = default_config(epoch_seconds=20.0, max_retries=2, auto_bucketize_min_rows=12)
+    monkeypatch.setattr(crawl_mod, "AUTO_BUCKETIZE_MIN_ROWS", 12)
+    cfg = default_config(epoch_seconds=20.0, max_retries=2)
     assert cfg.bucketize_seen_every_epochs is None  # auto is the default
-    assert cfg.compact_every_epochs is None
     oracle = run_oracle(raw, cfg)
 
     store = StateStore(str(tmp_path / "ap"), spark)
@@ -340,17 +341,13 @@ def test_legacy_bloom_dirs_read_with_null_version(spark, tmp_path):
     """Dirs written by the pre-versioning layout (no `version` column)
     must read as null-version rows (schema-on-read) and disable Bloom
     routing — NOT crash the union or the stats aggregate."""
-    from web_archive_downloader_spark.plans.crawl import CrawlPlan
-    from web_archive_downloader_spark.config import EngineConfig
-
     store = StateStore(str(tmp_path / "lg"), spark)
     legacy = spark.createDataFrame(
         [(0, bytearray(b"\x00" * 48))], "partition_id int, sketch binary"
     )
     path = store.stage("bloom", 0, legacy)
     store.commit(0, {"bloom": path})
-    plan = CrawlPlan(spark, store, EngineConfig())
-    sketch_df = store.read("bloom", plan._bloom_schema())
+    sketch_df = store.read("bloom")  # no schema given: the registry supplies it
     assert {f.name for f in sketch_df.schema.fields} == {
         "partition_id", "sketch", "version", "n_partitions"
     }
@@ -437,7 +434,7 @@ def test_p_change_resume_rebuilds_bloom_within_one_epoch(spark, tmp_path):
     # the forced bucketize fired and the rebuilt sketch set is clean at
     # the new P
     assert store._bucketed_gens(store.read_manifest(), "url_seen")
-    st = sketch_stats(store.read("bloom", plan2._bloom_schema()), 4)
+    st = sketch_stats(store.read("bloom"), 4)
     assert st["n"] > 0 and st["bad"] == 0
 
     # run out; every following epoch is back on the prefilter (the
@@ -511,7 +508,7 @@ def test_p_change_with_existing_bucketized_base(spark, tmp_path):
     gens = store._bucketed_gens(store.read_manifest(), "url_seen")
     # geometry-mismatch merge: ONE generation at the new bucket count
     assert [g["buckets"] for g in gens] == [4]
-    st = sketch_stats(store.read("bloom", plan2._bloom_schema()), 4)
+    st = sketch_stats(store.read("bloom"), 4)
     assert st["n"] > 0 and st["bad"] == 0
 
     plan2.run(cdx_dataframe(spark, raw), resume=True)

@@ -69,34 +69,20 @@ class EngineConfig:
     host_salt_buckets: int = 8
     # Partition count for the url_seen hash partitioning (xxhash64).
     seen_partitions: int = 32
-    # Bloom prefilter sizing.
-    bloom_fpp: float = 0.01
-    # Bloom probe-mode bound (operators/seen.py): total sketch bytes
-    # above this switch from driver-collect+broadcast to the pid-pruned
-    # cogrouped probe (no broadcast, each task ships only its pids'
-    # sketches). Keeps Bloom memory O(bound) per executor instead of
-    # O(seen-set) at the 10^10-URL target.
-    bloom_broadcast_max_bytes: int = 64 << 20
     # Re-materialize url_seen's deltas as bucketed catalog generations
     # every K epochs: after the first bucketize the J1 anti-join is
     # storage-partitioned — the seen side never shuffles again. This is
     # the production posture at scale (Iceberg bucket(N, url) +
     # incremental rewrite_data_files). Default None = AUTO: bucketize
     # once the rows scheduled since the last bucketize pass
-    # ``auto_bucketize_min_rows`` — so a default-config long crawl
-    # never degrades into an unbucketed O(seen) shuffle per epoch,
-    # while small test crawls (which need rollback past the merge
-    # point, foreclosed by snapshot-expiry semantics) never trigger
-    # it. 0 = never, K>0 = strictly every K epochs.
+    # plans/crawl.py's AUTO_BUCKETIZE_MIN_ROWS — so a default-config
+    # long crawl never degrades into an unbucketed O(seen) shuffle per
+    # epoch, while small test crawls (which need rollback past the
+    # merge point, foreclosed by snapshot-expiry semantics) never
+    # trigger it. 0 = never, K>0 = strictly every K epochs. The state
+    # tables compact by their manifest dir count alone
+    # (AUTO_COMPACT_MAX_DIRS, same module).
     bucketize_seen_every_epochs: int | None = None
-    # AUTO-mode threshold: bucketize after this many newly seen rows
-    # accumulate as unbucketed deltas (see above).
-    auto_bucketize_min_rows: int = 10_000
-    # Generation-chain bound for incremental bucketize: each call
-    # writes O(delta); once the chain would exceed this many
-    # generations they merge into one (the rare amortized O(table)
-    # compaction). See StateStore.bucketize.
-    bucketize_merge_generations: int = 4
     # Robots gate (engine-only; the reference has none — SURVEY §2.10).
     # Off by default so reference-equality runs are unaffected; the
     # oracle applies the same rules when enabled.
@@ -143,17 +129,6 @@ class EngineConfig:
     # True = feed was server-filtered upstream, null status/mimetype
     # rows pass; False = mixed feed, nulls drop (strict 200+text/html).
     prefiltered_feed: bool = True
-    # Compact the small state tables every K epochs. Keeps long
-    # crawls' manifest-dir unions bounded; forecloses rollback past
-    # the compaction point (Iceberg expiry semantics). Default None =
-    # AUTO: compact a state table once its manifest lists more than
-    # ``auto_compact_max_dirs`` epoch dirs — bounded listings by
-    # default, while short test crawls (which roll back) never
-    # trigger it. 0 = never, K>0 = strictly every K epochs.
-    compact_every_epochs: int | None = None
-    # AUTO-mode threshold: compact once a state table's manifest
-    # lists more than this many epoch dirs.
-    auto_compact_max_dirs: int = 16
 
     def __post_init__(self) -> None:
         if self.request_delay_seconds < 0:

@@ -26,18 +26,9 @@ from pyspark.sql import types as T
 
 from ..content.imagecodec import decode_image, phash64, psnr
 from ..datagen import gen_images
+from ..sources.state import TABLES
 
-IMAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("caption", T.StringType()),
-        T.StructField("phash", T.LongType()),
-    ]
-)
+IMAGES_SCHEMA = TABLES["images"]
 
 
 def images_df(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:

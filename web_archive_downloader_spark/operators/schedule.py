@@ -87,9 +87,3 @@ def pace_slot_col(delay_seconds: float, rank_col: str = "host_rank"):
     per-request rate. The per-epoch budget floor(epoch_seconds/delay)
     guarantees every slot fits inside the epoch."""
     return (F.col(rank_col) - 1).cast("double") * F.lit(float(delay_seconds))
-
-
-def eligible(frontier: DataFrame, epoch: int) -> DataFrame:
-    """Backoff gating (X11 analog): rows whose retry backoff has
-    elapsed by this epoch."""
-    return frontier.filter(F.col("eligible_epoch") <= epoch)

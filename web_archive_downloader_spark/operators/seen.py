@@ -20,7 +20,7 @@ epoch. Its memory is BOUNDED two ways (round-3 hardening):
 
 - per-sketch capacity cap: oversized epochs saturate to a sentinel
   (everything routes to the exact join — never a false negative);
-- probe-mode bound: below ``broadcast_max_bytes`` total the sketch
+- probe-mode bound: below ``BLOOM_BROADCAST_MAX_BYTES`` total the sketch
   dict is collected+broadcast (latency); above it the probe COGROUPS
   the pid-keyed frontier with the sketch table so each task ships
   only its pids' sketches — no driver collect, no broadcast, nothing
@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.state import TABLES
+
 # Persisted-sketch format versioning: the probe scheme is part of the
 # on-disk contract (round 2 changed h2 from xxhash64(url, seed=77) to
 # splitmix64(h1) — probing an old sketch with the new scheme yields
@@ -63,6 +65,13 @@ from pyspark.sql import types as T
 # from_bytes refuses foreign blobs outright.
 BLOOM_MAGIC = 0x424C4F4F4D534B31  # "BLOOMSK1"
 BLOOM_VERSION = 2
+
+# Sketch sizing: the false-positive rate each sketch is built for.
+BLOOM_FPP = 0.01
+# Probe-mode bound: total sketch bytes above this switch from
+# driver-collect+broadcast to the pid-pruned cogrouped probe, which
+# keeps Bloom memory O(bound) per executor instead of O(seen set).
+BLOOM_BROADCAST_MAX_BYTES = 64 << 20
 
 
 def splitmix64(h: np.ndarray) -> np.ndarray:
@@ -90,7 +99,7 @@ class BloomSketch:
 
     @classmethod
     def sized_for(
-        cls, expected: int, fpp: float = 0.01, max_bits: int | None = None
+        cls, expected: int, fpp: float = BLOOM_FPP, max_bits: int | None = None
     ) -> "BloomSketch":
         """Size for ``expected`` insertions at ``fpp``. When the
         required bits exceed ``max_bits`` (the per-sketch capacity
@@ -159,21 +168,6 @@ class BloomSketch:
         return BloomSketch(self.n_bits, self.k, self.words | other.words)
 
 
-_SKETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("sketch", T.BinaryType()),
-        T.StructField("version", T.IntegerType()),
-        # the partition count the sketch was BUILT with: pid =
-        # pmod(xxhash64(url), n_partitions) is baked into which rows
-        # each sketch covers, so probing with a different current P
-        # reads the wrong pids' sketches -> false negatives ->
-        # re-crawls. Stamped per row; a mismatch with the probe-time P
-        # routes everything to the exact anti-join (sketch_stats).
-        T.StructField("n_partitions", T.IntegerType()),
-    ]
-)
-
 # Per-sketch capacity bound: 2^23 bits = 1 MiB per sketch. An epoch
 # whose per-pid row count would need more returns a saturated sentinel
 # (exact anti-join handles its rows), so persisted/broadcast Bloom
@@ -186,7 +180,6 @@ def build_bloom_sketches(
     url_seen: DataFrame,
     n_partitions: int,
     expected_per_partition: int,
-    fpp: float = 0.01,
     max_bits_per_sketch: int = DEFAULT_MAX_BITS_PER_SKETCH,
 ) -> DataFrame:
     """Per-partition Bloom sketches over url_seen.url, built with
@@ -198,7 +191,7 @@ def build_bloom_sketches(
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = BloomSketch.sized_for(
-            max(expected_per_partition, len(pdf)), fpp, max_bits=max_bits_per_sketch
+            max(expected_per_partition, len(pdf)), BLOOM_FPP, max_bits=max_bits_per_sketch
         )
         sk.add_many(pdf["h1"].to_numpy(np.int64).view(np.uint64))
         return pd.DataFrame(
@@ -214,7 +207,7 @@ def build_bloom_sketches(
         F.xxhash64("url").alias("h1"),
         F.pmod(F.xxhash64("url"), F.lit(n_partitions)).cast("int").alias("pid"),
     )
-    return with_pid.groupBy("pid").applyInPandas(build, _SKETCH_SCHEMA)
+    return with_pid.groupBy("pid").applyInPandas(build, TABLES["bloom"])
 
 
 def merge_sketches(sketches: list[tuple[int, bytes]]) -> dict[int, list[bytes]]:
@@ -260,6 +253,12 @@ def bloom_prefilter(
                 out[mask] |= sk.might_contain(h1_arr[mask])
         return pd.Series(out)
 
+    # Nondeterministic only to the optimizer: Catalyst infers no
+    # constraints from it, so the filters on maybe_seen stay on the
+    # frontier side instead of being copied, through the url equality,
+    # onto the seen side of J1's anti-join, where the UDF would run
+    # over every url_seen row each epoch.
+    maybe_seen_udf = maybe_seen_udf.asNondeterministic()
     return (
         frontier.withColumn("_h1", F.xxhash64("url"))
         .withColumn("_pid", F.pmod(F.xxhash64("url"), F.lit(n_partitions)).cast("long"))
@@ -363,7 +362,7 @@ def unseen_with_bloom_state(
     sketch_df: DataFrame,
     n_partitions: int,
     spark: SparkSession,
-    broadcast_max_bytes: int = 64 << 20,
+    broadcast_max_bytes: int | None = None,
     stats: dict | None = None,
 ) -> tuple[DataFrame, str]:
     """The J1 front end over PERSISTED sketch state — chooses the probe
@@ -376,7 +375,8 @@ def unseen_with_bloom_state(
       probe the wrong pids' sketches), or no sketches -> pure exact
       anti-join ("exact"): probing foreign sketches could yield false
       negatives = re-crawls;
-    - total sketch bytes <= broadcast_max_bytes -> driver collect +
+    - total sketch bytes <= broadcast_max_bytes (default
+      BLOOM_BROADCAST_MAX_BYTES) -> driver collect +
       broadcast ("broadcast"): lowest latency while the state is small;
     - above the bound -> pid-pruned cogrouped probe ("cogroup"):
       no collect, no broadcast, each task ships only its pids'
@@ -391,6 +391,8 @@ def unseen_with_bloom_state(
         stats = sketch_stats(sketch_df, n_partitions)
     if stats["n"] == 0 or stats["bad"] > 0:
         return anti_join_unseen(frontier, seen_parts), "exact"
+    if broadcast_max_bytes is None:
+        broadcast_max_bytes = BLOOM_BROADCAST_MAX_BYTES
     if stats["nbytes"] <= broadcast_max_bytes:
         sketches = [
             (r["partition_id"], bytes(r["sketch"])) for r in sketch_df.collect()

@@ -54,7 +54,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import EngineConfig
 from ..datagen import MEMENTO_NOW_TS
@@ -80,81 +79,23 @@ from ..sources.fetch_shim import (  # noqa: F401
     find_assets_stage,
     memento_stage,
 )
-from ..sources.state import PACKED, StateStore
+from ..sources.state import PACKED, TABLES, StateStore
 
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("depth", T.IntegerType()),
-        T.StructField("priority", T.DoubleType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("attempt", T.IntegerType()),
-        T.StructField("eligible_epoch", T.IntegerType()),
-    ]
-)
+# Imported by callers that read these tables or build their rows.
+URL_SEEN_SCHEMA = TABLES["url_seen"]
+PROCESSED_SCHEMA = TABLES["processed"]
+METRICS_SCHEMA = TABLES["metrics"]
+DOCS_RAW_SCHEMA = TABLES["docs_raw"]
+HTML_RAW_SCHEMA = TABLES["html_raw"]
+ASSETS_RAW_SCHEMA = TABLES["assets_raw"]
+_FRONTIER_COLS = TABLES["frontier"].names
 
-URL_SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("epoch", T.IntegerType()),
-    ]
-)
-
-DOCS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("via", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("content_html", T.StringType()),
-        T.StructField("epoch", T.IntegerType()),
-    ]
-)
-
-HTML_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("html", T.StringType()),
-        T.StructField("epoch", T.IntegerType()),
-    ]
-)
-
-ASSETS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("page_url", T.StringType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("asset_url", T.StringType()),
-        T.StructField("asset_pos", T.IntegerType()),
-        T.StructField("nbytes", T.IntegerType()),
-        T.StructField("epoch", T.IntegerType()),
-    ]
-)
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("epoch", T.IntegerType()),
-        T.StructField("metric", T.StringType()),
-        T.StructField("value", T.LongType()),
-    ]
-)
-
-PROCESSED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("disposition", T.StringType()),
-        T.StructField("epoch", T.IntegerType()),
-    ]
-)
+# AUTO scale posture for long crawls (see ``CrawlPlan.run``): bucketize
+# url_seen once this many newly seen rows have accumulated unbucketed,
+# and compact the state tables once a manifest lists more than this
+# many of their dirs. Short test crawls, which roll back, trip neither.
+AUTO_BUCKETIZE_MIN_ROWS = 10_000
+AUTO_COMPACT_MAX_DIRS = 16
 
 # Save order is the TWO-column key (save_seq=page seq, save_pos=
 # within-page position): md/html saves sort after the page's assets,
@@ -262,7 +203,7 @@ class CrawlPlan:
 
         cfg = self.config
         store = self.store
-        frontier = store.read_latest_only("frontier", FRONTIER_SCHEMA)
+        frontier = store.read_latest_only("frontier")
         # J1 membership relation, read as (bucketed base generations,
         # epoch deltas): once bucketize_seen_every_epochs has fired,
         # each generation's scan is hash-bucketed by url and the
@@ -270,7 +211,7 @@ class CrawlPlan:
         # side never shuffles, only the frontier probe side does (once:
         # subsequent generations reuse its clustering); the deltas are
         # the few recent epochs' rows and broadcast/shuffle cheaply.
-        seen_bases, seen_delta = store.read_parts("url_seen", URL_SEEN_SCHEMA)
+        seen_bases, seen_delta = store.read_parts("url_seen")
         eligible = frontier.filter(F.col("eligible_epoch") <= epoch)
         held = frontier.filter(F.col("eligible_epoch") > epoch)
 
@@ -280,10 +221,9 @@ class CrawlPlan:
         # The probe mode (broadcast / pid-pruned cogroup / exact-only)
         # is chosen from the persisted sketch state's size + version
         # (operators/seen.py:unseen_with_bloom_state).
-        sketch_df = store.read("bloom", self._bloom_schema())
+        sketch_df = store.read("bloom")
         unseen, self.last_bloom_mode = unseen_with_bloom_state(
             eligible, seen_bases + [seen_delta], sketch_df, cfg.seen_partitions, self.spark,
-            broadcast_max_bytes=cfg.bloom_broadcast_max_bytes,
             stats=self._cached_bloom_stats(sketch_df),
         )
         budget_col = None
@@ -313,7 +253,7 @@ class CrawlPlan:
         # firing slot — same-host spacing >= delay in any partition
         # layout (see module docstring)
         sched = sched.select(
-            *[f.name for f in FRONTIER_SCHEMA.fields if f.name != "eligible_epoch"],
+            *[c for c in _FRONTIER_COLS if c != "eligible_epoch"],
             pace_slot_col(cfg.request_delay_seconds).alias("pace_slot"),
         )
         # The schedule is tiny by BYTES (urls) but heavy by WORK
@@ -369,9 +309,8 @@ class CrawlPlan:
                 members["processed"].unionByName(blocked) if n_sched else blocked
             )
 
-        fields = [f.name for f in FRONTIER_SCHEMA.fields]
         new_frontier = held.unionByName(
-            allowed.join(page.select("url"), "url", "left_anti").select(*fields)
+            allowed.join(page.select("url"), "url", "left_anti").select(*_FRONTIER_COLS)
         )
         if n_sched:
             retry = page.filter(F.col("route") == "retry").select(
@@ -487,8 +426,7 @@ class CrawlPlan:
                 "a.nbytes", ep,
             ),
             "bloom": build_bloom_sketches(
-                seen_new, cfg.seen_partitions,
-                expected_per_partition=4096, fpp=cfg.bloom_fpp,
+                seen_new, cfg.seen_partitions, expected_per_partition=4096
             ),
         }
         if cfg.save_original_html:
@@ -517,7 +455,7 @@ class CrawlPlan:
         upper bound on the blob bytes build_bloom_sketches can have
         written this epoch. (Compressed parquet file sizes UNDER-
         estimate blob bytes — a sparse bitmap compresses to KBs — and
-        would let broadcast mode run far past bloom_broadcast_max_bytes,
+        would let broadcast mode run far past BLOOM_BROADCAST_MAX_BYTES,
         exactly the unbounded-memory mode the bound exists to prevent.)
         Bound: every non-empty pid sized as if it held ALL new rows
         (each pid's actual sketch is <= that), capped at the per-sketch
@@ -527,10 +465,10 @@ class CrawlPlan:
 
         if self._bloom_stats is None or n_new_rows <= 0:
             return
-        from ..operators.seen import DEFAULT_MAX_BITS_PER_SKETCH
+        from ..operators.seen import BLOOM_FPP, DEFAULT_MAX_BITS_PER_SKETCH
 
         expected = max(4096, n_new_rows)
-        n_bits = int(-expected * math.log(self.config.bloom_fpp) / (math.log(2) ** 2))
+        n_bits = int(-expected * math.log(BLOOM_FPP) / (math.log(2) ** 2))
         n_bits = max(128, min((n_bits + 63) // 64 * 64, DEFAULT_MAX_BITS_PER_SKETCH))
         n_sketches = min(self.config.seen_partitions, n_new_rows)
         self._bloom_stats = {
@@ -538,21 +476,6 @@ class CrawlPlan:
             "nbytes": self._bloom_stats["nbytes"] + n_sketches * (32 + n_bits // 8),
             "bad": self._bloom_stats["bad"],
         }
-
-    def _bloom_schema(self) -> T.StructType:
-        return T.StructType(
-            [
-                T.StructField("partition_id", T.IntegerType()),
-                T.StructField("sketch", T.BinaryType()),
-                # probe-scheme version; pre-versioning dirs read as null
-                # and disable Bloom routing (operators/seen.py)
-                T.StructField("version", T.IntegerType()),
-                # build-time partition count; a resume with changed
-                # seen_partitions reads a mismatch and falls back to
-                # the exact anti-join (no wrong-pid probes)
-                T.StructField("n_partitions", T.IntegerType()),
-            ]
-        )
 
     def _expand_links(self, page: DataFrame, frontier: DataFrame, epoch: int) -> DataFrame:
         """U1-adjacent frontier expansion: the <a href> links the page
@@ -605,7 +528,7 @@ class CrawlPlan:
             .drop("__rn")
             .join(frontier.select("url"), "url", "left_anti")
         )
-        return expanded.select(*[f.name for f in FRONTIER_SCHEMA.fields])
+        return expanded.select(*_FRONTIER_COLS)
 
     def _lineage(self, epoch: int, page: DataFrame) -> DataFrame:
         """Per-epoch per-host grant counts (politeness audit) +
@@ -636,9 +559,7 @@ class CrawlPlan:
         ) if "seq" in urls.columns else urls.select(
             "url", F.lit(-1).alias("seq"), F.lit(-1).alias("epoch")
         )
-        sketches = build_bloom_sketches(
-            seen, cfg.seen_partitions, expected_per_partition=4096, fpp=cfg.bloom_fpp
-        )
+        sketches = build_bloom_sketches(seen, cfg.seen_partitions, expected_per_partition=4096)
         m = self.store.read_manifest()
         m["tables"].setdefault("url_seen", []).append(
             self.store.stage("url_seen", -1, seen)
@@ -734,7 +655,7 @@ class CrawlPlan:
             ).alias("seq"),
         )
         latest = latest_snapshot_per_url(pre)
-        frontier = store.read_latest_only("frontier", FRONTIER_SCHEMA)
+        frontier = store.read_latest_only("frontier")
         fresh = latest.join(frontier.select("url"), "url", "left_anti").select(
             "url",
             "ts",
@@ -786,22 +707,21 @@ class CrawlPlan:
             manifest = store.read_manifest()
             manifest["tables"].setdefault("frontier", []).append(path)
             store._write_manifest(manifest)
-        pending = store.read_latest_only("frontier", FRONTIER_SCHEMA).count()
+        pending = store.read_latest_only("frontier").count()
         cfg = self.config
-        compact_every = cfg.compact_every_epochs
         bucketize_every = cfg.bucketize_seen_every_epochs
-        # AUTO scale posture (the at-scale default, config=None): the
-        # thresholds are derived from driver-side state already in
-        # hand — rows scheduled since the last bucketize, and the
-        # manifest's epoch-dir counts — so a default-config long crawl
-        # bucketizes/compacts itself instead of degrading into an
-        # unbucketed O(seen) anti-join + unbounded dir listings, while
-        # short test crawls (which need rollback, foreclosed by the
-        # merge floor) never trigger either.
+        # AUTO scale posture (bucketize: the at-scale default,
+        # config=None; compaction: always): the thresholds are derived
+        # from driver-side state already in hand — rows scheduled since
+        # the last bucketize, and the manifest's epoch-dir counts — so a
+        # default-config long crawl bucketizes/compacts itself instead
+        # of degrading into an unbucketed O(seen) anti-join + unbounded
+        # dir listings, while short test crawls (which need rollback,
+        # foreclosed by the merge floor) never trigger either.
         # Seed the AUTO-bucketize counter from the PERSISTED
         # unbucketized delta, not 0: a crawl resumed after a crash must
         # count the deltas accumulated before the restart, or repeated
-        # restarts could keep the delta above auto_bucketize_min_rows
+        # restarts could keep the delta above AUTO_BUCKETIZE_MIN_ROWS
         # indefinitely without ever bucketizing. One O(delta) count at
         # run() entry, auto mode only (the delta is bounded by the
         # threshold itself plus one epoch, so this stays cheap).
@@ -834,7 +754,7 @@ class CrawlPlan:
                 bucketize_every and (epoch + 1) % bucketize_every == 0
             ) or (
                 bucketize_every is None
-                and rows_since_bucketize >= cfg.auto_bucketize_min_rows
+                and rows_since_bucketize >= AUTO_BUCKETIZE_MIN_ROWS
             )
             if do_bucketize:
                 # fold the recent url_seen deltas into a new bucketed
@@ -845,11 +765,7 @@ class CrawlPlan:
                 rebuild_bloom = bool(
                     self._bloom_stats and self._bloom_stats.get("bad")
                 )
-                store.bucketize(
-                    "url_seen",
-                    buckets=cfg.seen_partitions,
-                    merge_at=cfg.bucketize_merge_generations,
-                )
+                store.bucketize("url_seen", buckets=cfg.seen_partitions)
                 if rebuild_bloom:
                     # the epoch's sketches were unusable (foreign probe
                     # version or a build-time partition count differing
@@ -865,34 +781,27 @@ class CrawlPlan:
                             store.read("url_seen").select("url"),
                             cfg.seen_partitions,
                             expected_per_partition=4096,
-                            fpp=cfg.bloom_fpp,
                         )
                     )
                 store.compact("__state__")
                 self._bloom_stats = None
                 rows_since_bucketize = 0
-            do_compact = (
-                compact_every and (epoch + 1) % compact_every == 0
-            ) or (
-                compact_every is None
-                and max(
-                    (
-                        len(ps)
-                        for t, ps in store.read_manifest()["tables"].items()
-                        if t in ("url_seen", "__state__")
-                    ),
-                    default=0,
-                )
-                > cfg.auto_compact_max_dirs
+            n_dirs = max(
+                (
+                    len(ps)
+                    for t, ps in store.read_manifest()["tables"].items()
+                    if t in ("url_seen", PACKED)
+                ),
+                default=0,
             )
-            if do_compact:
+            if n_dirs > AUTO_COMPACT_MAX_DIRS:
                 # bound the per-epoch manifest-dir unions on long
                 # crawls; data tables (docs/assets/images/html) stay
-                # append-only — rewriting payload bytes every K epochs
-                # would dwarf the listing cost they'd save. url_seen
-                # covers legacy seed dirs; the five state members live
-                # in the packed table.
-                for t in ("url_seen", "__state__"):
+                # append-only — rewriting payload bytes on every
+                # compaction would dwarf the listing cost they'd save.
+                # url_seen covers legacy seed dirs; the five state
+                # members live in the packed table.
+                for t in ("url_seen", PACKED):
                     store.compact(t)
                 self._bloom_stats = None
         return stats
@@ -912,8 +821,8 @@ class CrawlPlan:
         main.py:161-166)."""
         cfg = self.config
         store = self.store
-        docs_raw = store.read("docs_raw", DOCS_RAW_SCHEMA)
-        assets_raw = store.read("assets_raw", ASSETS_RAW_SCHEMA)
+        docs_raw = store.read("docs_raw")
+        assets_raw = store.read("assets_raw")
 
         from ..functions.scalar import asset_base_ext_cols
 
@@ -1006,7 +915,7 @@ class CrawlPlan:
         within a group is page seq order. Idempotent like
         finalize_outputs."""
         cfg = self.config
-        html_raw = self.store.read("html_raw", HTML_RAW_SCHEMA)
+        html_raw = self.store.read("html_raw")
         saves = html_raw.select(
             page_dir_col(F.col("url"), cfg.output_dir).alias("dir"),
             markdown_base_filename_col(F.col("title"), F.col("url")).alias("base"),
@@ -1025,7 +934,7 @@ class CrawlPlan:
         url_seen minus URLs whose finalize dropped the doc (collision-
         limit save_fail — not checkpointed by the reference). Exact
         semi-join against the finalized docs."""
-        url_seen = self.store.read("url_seen", URL_SEEN_SCHEMA)
+        url_seen = self.store.read("url_seen")
         seeded = url_seen.filter(F.col("epoch") < 0)  # pre-seeded checkpoint rows
         crawled = url_seen.filter(F.col("epoch") >= 0).join(
             docs.select("url"), "url", "left_semi"

@@ -74,11 +74,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_AUTOBROADCAST", str(192 * 1024 * 1024)),
         )
         # Let the planner pick shuffled-hash over sort-merge when its
-        # size conditions hold (guide §3.1/§9): the heavy candidate-
-        # pair streams then probe small per-partition hash tables
-        # instead of paying a full sort of the streamed side. AQE can
-        # additionally rewrite SMJ->SHJ at runtime when every post-
-        # shuffle partition is under the local-map threshold.
+        # size conditions hold: the heavy candidate-pair streams then
+        # probe small per-partition hash tables instead of paying a
+        # full sort of the streamed side. Kept because it is measured:
+        # without it, perfbench corpus_build job_s rose 5-7% on a
+        # quiet 4-core host (medians of two 5-pair alternating sets,
+        # 26.0 -> 27.4 s and 27.6 -> 29.5 s), more than the spread
+        # between runs. AQE can additionally rewrite SMJ->SHJ at
+        # runtime when every post-shuffle partition is under the
+        # local-map threshold.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

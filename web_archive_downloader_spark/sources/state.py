@@ -30,44 +30,77 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# ---- packed state ----------------------------------------------------
-# Every per-epoch output is staged as ONE parquet write with a `_table`
-# discriminator over a sparse union schema: the small state tables
-# (url_seen / processed / lineage / metrics / bloom), the payload
-# tables (docs_raw / html_raw / assets_raw / images) and the epoch's
-# frontier replacement. One write job per epoch instead of one per
-# table; readers unpack transparently (read/read_parts/
-# read_latest_only), so consumers are layout-agnostic and still union
-# the per-table dirs of stores written before the payload joined the
-# pack. This mirrors a multi-table Iceberg transaction: one commit,
-# several logical tables.
 PACKED = "__state__"
 
-_PACKED_SCHEMA = T.StructType(
-    [
-        T.StructField("_table", T.StringType()),
+
+# The one declaration of every packed table's schema. Readers of a
+# registered table get its schema from here (schema-on-read: a dir
+# written by an older layout that lacks a column reads it as nulls, and
+# no read infers a schema from parquet footers, which costs a job).
+TABLES: dict[str, T.StructType] = {
+    "url_seen": T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("epoch", T.IntegerType()),
+    ]),
+    "processed": T.StructType([
         T.StructField("url", T.StringType()),
         T.StructField("seq", T.LongType()),
         T.StructField("disposition", T.StringType()),
+        T.StructField("epoch", T.IntegerType()),
+    ]),
+    "lineage": T.StructType([
         T.StructField("host", T.StringType()),
         T.StructField("partition_id", T.IntegerType()),
         T.StructField("granted", T.LongType()),
+        T.StructField("epoch", T.IntegerType()),
+    ]),
+    "metrics": T.StructType([
+        T.StructField("epoch", T.IntegerType()),
         T.StructField("metric", T.StringType()),
         T.StructField("value", T.LongType()),
+    ]),
+    "bloom": T.StructType([
+        T.StructField("partition_id", T.IntegerType()),
         T.StructField("sketch", T.BinaryType()),
+        # probe-scheme version; pre-versioning dirs read it as null,
+        # which disables Bloom routing (operators/seen.py)
         T.StructField("version", T.IntegerType()),
+        # the partition count the sketch was BUILT with: pid =
+        # pmod(xxhash64(url), n_partitions) decides which rows a sketch
+        # covers, so a probe with another P would read the wrong pids'
+        # sketches (false negatives, re-crawls); a mismatch routes the
+        # probe to the exact anti-join (sketch_stats)
         T.StructField("n_partitions", T.IntegerType()),
-        T.StructField("epoch", T.IntegerType()),
+    ]),
+    "docs_raw": T.StructType([
+        T.StructField("url", T.StringType()),
         T.StructField("ts", T.StringType()),
+        T.StructField("seq", T.LongType()),
         T.StructField("via", T.StringType()),
         T.StructField("title", T.StringType()),
         T.StructField("content_html", T.StringType()),
+        T.StructField("epoch", T.IntegerType()),
+    ]),
+    "html_raw": T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("title", T.StringType()),
         T.StructField("html", T.StringType()),
+        T.StructField("epoch", T.IntegerType()),
+    ]),
+    "assets_raw": T.StructType([
         T.StructField("page_url", T.StringType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("seq", T.LongType()),
         T.StructField("kind", T.StringType()),
         T.StructField("asset_url", T.StringType()),
         T.StructField("asset_pos", T.IntegerType()),
         T.StructField("nbytes", T.IntegerType()),
+        T.StructField("epoch", T.IntegerType()),
+    ]),
+    "images": T.StructType([
         T.StructField("image_id", T.StringType()),
         T.StructField("bytes", T.BinaryType()),
         T.StructField("w", T.IntegerType()),
@@ -75,42 +108,56 @@ _PACKED_SCHEMA = T.StructType(
         T.StructField("fmt", T.StringType()),
         T.StructField("caption", T.StringType()),
         T.StructField("phash", T.LongType()),
+    ]),
+    "frontier": T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("host", T.StringType()),
         T.StructField("depth", T.IntegerType()),
         T.StructField("priority", T.DoubleType()),
+        T.StructField("seq", T.LongType()),
         T.StructField("attempt", T.IntegerType()),
         T.StructField("eligible_epoch", T.IntegerType()),
-    ]
-)
-
-_PACKED_FIELDS: dict[str, list[str]] = {
-    "url_seen": ["url", "seq", "epoch"],
-    "processed": ["url", "seq", "disposition", "epoch"],
-    "lineage": ["host", "partition_id", "granted", "epoch"],
-    "metrics": ["epoch", "metric", "value"],
-    "bloom": ["partition_id", "sketch", "version", "n_partitions"],
-    "docs_raw": ["url", "ts", "seq", "via", "title", "content_html", "epoch"],
-    "html_raw": ["url", "ts", "seq", "title", "html", "epoch"],
-    "assets_raw": ["page_url", "ts", "seq", "kind", "asset_url", "asset_pos", "nbytes", "epoch"],
-    "images": ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
-    "frontier": ["url", "ts", "host", "depth", "priority", "seq", "attempt", "eligible_epoch"],
+    ]),
 }
 
+
+def union_schema(members: dict[str, T.StructType]) -> T.StructType:
+    """The packed write's sparse union: a ``_table`` discriminator,
+    then every member column once, in order of first appearance.
+    Raises when two members give one column name two types, since one
+    packed column cannot hold both."""
+    fields = {"_table": (T.StructField("_table", T.StringType()), None)}
+    for table, schema in members.items():
+        for f in schema.fields:
+            seen, owner = fields.setdefault(f.name, (f, table))
+            if seen.dataType != f.dataType:
+                raise ValueError(
+                    f"packed column {f.name}: {owner} declares it "
+                    f"{seen.dataType.simpleString()}, {table} {f.dataType.simpleString()}"
+                )
+    return T.StructType([f for f, _ in fields.values()])
+
+
+# Every per-epoch output is staged as ONE parquet write with a `_table`
+# discriminator over this union: the small state tables (url_seen /
+# processed / lineage / metrics / bloom), the payload tables (docs_raw /
+# html_raw / assets_raw / images) and the epoch's frontier replacement.
+# One write job per epoch instead of one per table; readers unpack
+# transparently (read/read_parts/read_latest_only), so consumers are
+# layout-agnostic and still union the per-table dirs of stores written
+# before the payload joined the pack. This mirrors a multi-table
+# Iceberg transaction: one commit, several logical tables.
+_PACKED_SCHEMA = union_schema(TABLES)
+
 # Members that compaction does NOT carry into the merged dir: payload
-# rows stay where their epoch wrote them (rewriting crawled bytes every
-# K epochs would dwarf the listing cost compaction saves), and a
+# rows stay where their epoch wrote them (rewriting crawled bytes at
+# every compaction would dwarf the listing cost it saves), and a
 # frontier is replaced every epoch, so only the manifest's latest
 # pointer is ever read. Compaction retires the merged epoch dirs to
 # the manifest's ``packed_payload`` list, which payload reads union.
 _UNCOMPACTED = ("docs_raw", "html_raw", "assets_raw", "images", "frontier")
 _PAYLOAD_DIRS = "packed_payload"
-
-_TYPES = {f.name: f.dataType for f in _PACKED_SCHEMA.fields}
-
-
-def _member_schema(table: str) -> T.StructType:
-    return T.StructType(
-        [T.StructField(n, _TYPES[n]) for n in _PACKED_FIELDS[table]]
-    )
 
 
 class StateStore:
@@ -174,10 +221,10 @@ class StateStore:
         as all-null state rows instead of failing the write."""
         parts = []
         for name, df in dfs.items():
-            if name not in _PACKED_FIELDS:
+            if name not in TABLES:
                 raise ValueError(f"{name} is not a packed state table")
             have = set(df.columns)
-            want = set(_PACKED_FIELDS[name])
+            want = set(TABLES[name].names)
             if have != want:
                 raise ValueError(
                     f"packed member {name}: columns {sorted(have)} do not "
@@ -217,7 +264,7 @@ class StateStore:
         floor = manifest.get("packed_floor", {}).get(table)
         if floor is not None:
             df = df.filter(F.col("epoch") > floor)
-        return df.select(*_PACKED_FIELDS[table])
+        return df.select(*TABLES[table].names)
 
     def _packed_scan(self, paths: list[str]) -> DataFrame:
         """The scan of a packed dir list, shared by every member read
@@ -275,35 +322,36 @@ class StateStore:
             self.spark.table(g["name"])
             for g in self._bucketed_gens(manifest, table)
         ]
-        if schema is None and table in _PACKED_FIELDS:
-            schema = _member_schema(table)  # normalize legacy dirs for the union
+        if schema is None:
+            schema = TABLES.get(table)
         parts = []
         paths = manifest["tables"].get(table, [])
         if paths:
-            # apply the caller's schema to the scan (schema-on-read):
-            # dirs written by an OLDER layout may lack newly added
-            # columns (e.g. bloom's `version`) — they must read as
-            # nulls, exactly the documented cross-version fallback,
-            # not crash the union/consumer with UNRESOLVED_COLUMN
-            reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
-            parts.append(reader.parquet(*paths))
-        if table in _PACKED_FIELDS:
+            parts.append(self._scan_dirs(paths, schema))
+        if table in TABLES:
             packed = self._packed_member(table, manifest)
             if packed is not None:
                 parts.append(packed)
         if not parts:
             if schema is None:
-                if table in _PACKED_FIELDS:
-                    schema = _member_schema(table)
-                elif bases:
-                    schema = bases[0].schema
-                else:
+                if not bases:
                     raise ValueError(f"table {table} empty and no schema given")
+                schema = bases[0].schema
             return bases, self.spark.createDataFrame([], schema)
         delta = parts[0]
         for p in parts[1:]:
             delta = delta.unionByName(p)
         return bases, delta
+
+    def _scan_dirs(self, paths: list[str], schema: T.StructType | None) -> DataFrame:
+        """A scan of a table's own (unpacked) dirs with the given
+        schema (schema-on-read): dirs written by an OLDER layout that
+        lack a newly added column (e.g. bloom's `version`) read it as
+        nulls instead of crashing the consumer with UNRESOLVED_COLUMN,
+        and no footer-inference job runs. Only a table outside
+        ``TABLES`` read without a schema falls back to inference."""
+        reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
+        return reader.parquet(*paths)
 
     def bucketize(
         self, table: str, buckets: int = 32, key: str = "url", merge_at: int = 4
@@ -335,12 +383,10 @@ class StateStore:
         manifest = self.read_manifest()
         gens = self._bucketed_gens(manifest, table)
         paths = manifest["tables"].get(table, [])
-        packed = (
-            self._packed_member(table, manifest) if table in _PACKED_FIELDS else None
-        )
+        packed = self._packed_member(table, manifest) if table in TABLES else None
         delta_parts = []
         if paths:
-            delta_parts.append(self.spark.read.parquet(*paths))
+            delta_parts.append(self._scan_dirs(paths, TABLES.get(table)))
         if packed is not None:
             delta_parts.append(packed)
         geometry_mismatch = any(
@@ -388,7 +434,7 @@ class StateStore:
         )
         manifest["tables"][table] = []
         manifest.setdefault("compaction_floor", {})[table] = epoch
-        if table in _PACKED_FIELDS:
+        if table in TABLES:
             # packed rows at or below the floor are now superseded by
             # the base; reads filter them out, compact(PACKED) drops
             # them physically
@@ -471,6 +517,8 @@ class StateStore:
 
     def read_latest_only(self, table: str, schema: T.StructType | None = None) -> DataFrame:
         """For tables where each epoch REPLACES state (e.g. frontier)."""
+        if schema is None:
+            schema = TABLES.get(table)
         paths = self.read_manifest()["tables"].get(table, [])
         if not paths:
             if schema is None:
@@ -480,13 +528,11 @@ class StateStore:
         if os.path.basename(os.path.dirname(latest)) == PACKED:
             # the epoch's replacement rode the packed write
             return self._packed_scan([latest]).filter(F.col("_table") == table).select(
-                *_PACKED_FIELDS[table]
+                *TABLES[table].names
             )
-        # a given schema skips parquet's footer-inference job
-        reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
-        return reader.parquet(latest)
+        return self._scan_dirs([latest], schema)
 
-    def compact(self, table: str, schema: T.StructType | None = None) -> int:
+    def compact(self, table: str) -> int:
         """Snapshot compaction (Iceberg's rewrite_data_files): merge a
         table's accumulated epoch dirs into ONE dir and atomically
         swap the manifest to point at it. Readers before the swap see
@@ -514,7 +560,7 @@ class StateStore:
                     (F.col("_table") != member) | (F.col("epoch") > floor)
                 )
         else:
-            df = self.spark.read.parquet(*paths)
+            df = self._scan_dirs(paths, TABLES.get(table))
         compact_path = os.path.join(
             self.root, table, f"compacted={manifest['epoch']}"
         )
