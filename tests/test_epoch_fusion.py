@@ -8,8 +8,8 @@ write per epoch.
   sequential oracle, including after a kill/resume at every epoch;
 - the robots gate runs after the seen-set probe, so a checkpointed url
   under a disallowed prefix is skipped, not re-recorded;
-- payload tables written by the packed write and per-table dirs of an
-  older store are read as one table;
+- every registered table reaches disk only through packed writes, so
+  every state file carries the packed union's types;
 - the packed union schema refuses two types for one column.
 """
 
@@ -313,33 +313,55 @@ def test_kill_and_resume_at_every_epoch_matches_oracle(fused_crawl, spark):
     }
 
 
-def test_payload_reads_union_legacy_table_dirs(spark, tmp_path):
-    """A store written before the payload joined the packed write keeps
-    docs_raw in its own epoch dirs; read() unions those with the packed
-    rows of later epochs. The reads take the registered schema, so
-    building them runs no footer-inference job."""
-    store = StateStore(str(tmp_path / "legacy"), spark)
-    doc = ("https://ex.com/a", "20230101000000", 1, "wayback", "A", "<p>a</p>", 0)
-    legacy = spark.createDataFrame([doc], DOCS_RAW_SCHEMA)
-    store.commit(0, {"docs_raw": store.stage("docs_raw", 0, legacy)})
-    packed = spark.createDataFrame(
-        [("https://ex.com/b",) + doc[1:2] + (2,) + doc[3:6] + (1,)], DOCS_RAW_SCHEMA
-    )
-    store.commit(1, {"__state__": store.stage_packed(1, {"docs_raw": packed})})
+def test_every_state_file_carries_the_packed_schema(spark, tmp_path, monkeypatch):
+    """Registered tables reach disk only through packed writes, each
+    member cast to TABLES: after a checkpoint seed, a robots crawl, a
+    kill/resume and compaction, every parquet file under the store root
+    but the external robots table's has the footer types of the packed
+    union, the crawl still equals the oracle, and building a read of
+    any registered table runs no schema-inference job."""
+    import pyarrow.parquet as pq
+
+    from web_archive_downloader_spark.plans import crawl as crawl_mod
+
+    raw, cfg, checkpoint = _inputs()
+    root = tmp_path / "layout"
+    store, plan = _store(spark, str(root), cfg, checkpoint)
+    plan.run(cdx_dataframe(spark, raw))
+    store.truncate_to_epoch(1)
+    # compaction fires in the resumed leg, over seed and epoch dirs
+    monkeypatch.setattr(crawl_mod, "AUTO_COMPACT_MAX_DIRS", 2)
+    CrawlPlan(spark, store, cfg).run(cdx_dataframe(spark, raw), resume=True)
+    oracle = run_oracle(raw, cfg, checkpoint=set(checkpoint), robots=RULES)
+    assert _order_and_seen(store) == (oracle.crawl_order, oracle.seen)
+    # reads take the registered schema: building them infers nothing
     sc = spark.sparkContext
-    sc.setJobGroup("registry_reads", "reads of per-table dirs without a schema")
+    sc.setJobGroup("registry_reads", "packed reads")
     try:
-        docs = store.read("docs_raw")
-        store.read_latest_only("docs_raw")
+        for table in TABLES:
+            store.read(table)
+        store.read_latest_only("frontier")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not sc.statusTracker().getJobIdsForGroup("registry_reads")
-    got = sorted((r.url, r.seq, r.epoch) for r in docs.collect())
-    assert got == [("https://ex.com/a", 1, 0), ("https://ex.com/b", 2, 1)]
-    store.compact("__state__")
-    assert sorted(r.url for r in store.read("docs_raw", DOCS_RAW_SCHEMA).collect()) == [
-        "https://ex.com/a", "https://ex.com/b"
-    ]
+
+    arrow = {"string": "string", "int": "int32", "bigint": "int64",
+             "double": "double", "binary": "binary"}
+    want = [(f.name, arrow[f.dataType.simpleString()]) for f in union_schema(TABLES).fields]
+    files = [p for p in root.rglob("*.parquet") if "robots" not in p.parts]
+    assert any("compacted=" in p.parent.name for p in files)
+    drift = {}
+    for p in files:
+        got = [(f.name, str(f.type)) for f in pq.read_schema(p)]
+        if got != want:
+            drift[str(p.relative_to(root))] = sorted(set(got) - set(want))
+    assert not drift, drift
+
+
+def test_stage_refuses_a_registered_table(spark, tmp_path):
+    store = StateStore(str(tmp_path / "st"), spark)
+    with pytest.raises(ValueError, match="stage_packed"):
+        store.stage("url_seen", 0, spark.createDataFrame([], URL_SEEN_SCHEMA))
 
 
 def test_packed_union_refuses_a_column_with_two_types():

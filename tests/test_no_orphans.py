@@ -82,3 +82,18 @@ def test_every_engine_definition_has_a_non_test_reference():
 def test_allowlist_names_live_definitions():
     defined, _ = _scan()
     assert set(ALLOWED) <= set(defined)
+
+
+def test_only_the_store_touches_the_manifest():
+    """The on-disk layout has one owner: no engine module but
+    sources/state.py names the manifest accessors, so every other
+    module reaches crawl state through StateStore's methods."""
+    store = ROOT / "web_archive_downloader_spark" / "sources" / "state.py"
+    touching = sorted(
+        str(path.relative_to(ROOT))
+        for path in ENGINE
+        if path != store
+        and {"read_manifest", "_write_manifest"}
+        & set().union(*_refs(ast.parse(path.read_text(), str(path))))
+    )
+    assert not touching, "manifest read or written outside the store: " + ", ".join(touching)

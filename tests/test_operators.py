@@ -117,13 +117,8 @@ def test_finalize_orders_ingested_saves_after_seeds(spark, tmp_path):
         ],
         DOCS_RAW_SCHEMA,
     )
-    m = store.read_manifest()
-    m["tables"]["docs_raw"] = [store.stage("docs_raw", 0, docs)]
-    m["tables"]["assets_raw"] = [
-        store.stage("assets_raw", 0, spark.createDataFrame([], ASSETS_RAW_SCHEMA))
-    ]
-    m["epoch"] = 1
-    store._write_manifest(m)
+    staged = {"docs_raw": docs, "assets_raw": spark.createDataFrame([], ASSETS_RAW_SCHEMA)}
+    store.commit(1, dict.fromkeys(staged, store.stage_packed(1, staged)))
     plan = CrawlPlan(spark, store, default_config())
     out, _ = plan.finalize_outputs()
     names = {r.url: r.filename for r in out.collect()}

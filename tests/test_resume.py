@@ -112,7 +112,7 @@ def test_compaction_preserves_state_and_resume(spark, tmp_path):
     before = sorted(
         (r.url, r.seq) for r in store.read("url_seen", URL_SEEN_SCHEMA).collect()
     )
-    n_dirs = store.compact("__state__")  # url_seen lives in the packed state table
+    n_dirs = store.compact()  # url_seen lives in the packed state table
     assert n_dirs >= 2
     after = sorted(
         (r.url, r.seq) for r in store.read("url_seen", URL_SEEN_SCHEMA).collect()

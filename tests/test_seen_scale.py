@@ -46,6 +46,10 @@ def _seen_df(spark, lo, hi):
     )
 
 
+def _commit_seen(store, epoch, df):
+    store.commit(epoch, {"url_seen": store.stage_packed(epoch, {"url_seen": df})})
+
+
 def test_cogroup_probe_equals_broadcast(spark):
     """The pid-pruned cogrouped probe must route exactly like the
     broadcast probe — same exactly-unseen output — while never
@@ -87,8 +91,8 @@ def test_unknown_sketch_version_disables_bloom(spark):
     # a round-2-format blob: 16-byte (n_bits, k) header, no magic
     legacy_blob = np.array([1024, 4], np.int64).tobytes() + bytes(128)
     sketch_df = spark.createDataFrame(
-        [(0, bytearray(legacy_blob), None)],
-        "partition_id int, sketch binary, version int",
+        [(0, bytearray(legacy_blob), None, None)],
+        "partition_id int, sketch binary, version int, n_partitions int",
     )
     out, mode = unseen_with_bloom_state(frontier, seen, sketch_df, 8, spark)
     assert mode == "exact"
@@ -121,9 +125,9 @@ def test_changed_seen_partitions_disables_bloom(spark):
         f"https://e.com/p{i}" for i in range(500, 1000)
     )
 
-    # a pre-stamping sketch table (no n_partitions column at all) is
+    # a pre-stamping sketch row (n_partitions reads as null) is
     # equally untrustworthy -> exact
-    legacy = sketch_df.select("partition_id", "sketch", "version")
+    legacy = sketch_df.withColumn("n_partitions", F.lit(None).cast("int"))
     _, mode_legacy = unseen_with_bloom_state(frontier, seen, legacy, 8, spark)
     assert mode_legacy == "exact"
 
@@ -200,8 +204,7 @@ def test_bucketized_base_joins_without_big_side_shuffle(spark, tmp_path):
     from contextlib import redirect_stdout
 
     store = StateStore(str(tmp_path / "bj"), spark)
-    path = store.stage("url_seen", 0, _seen_df(spark, 0, 4000).repartition(4))
-    store.commit(0, {"url_seen": path})
+    _commit_seen(store, 0, _seen_df(spark, 0, 4000).repartition(4))
     store.bucketize("url_seen", buckets=8)
     [base], _ = store.read_parts("url_seen", URL_SEEN_SCHEMA)
     frontier = _urls_df(spark, 3000, 5000)
@@ -262,11 +265,11 @@ def test_incremental_bucketize_writes_only_deltas(spark, tmp_path):
     write-amplification killer at a 10^10-row seen set). The chain
     merges into one table only when it exceeds merge_at."""
     store = StateStore(str(tmp_path / "ib"), spark)
-    store.commit(0, {"url_seen": store.stage("url_seen", 0, _seen_df(spark, 0, 1000))})
+    _commit_seen(store, 0, _seen_df(spark, 0, 1000))
     n1 = store.bucketize("url_seen", buckets=4)
     assert spark.table(n1).count() == 1000
 
-    store.commit(1, {"url_seen": store.stage("url_seen", 1, _seen_df(spark, 1000, 1100))})
+    _commit_seen(store, 1, _seen_df(spark, 1000, 1100))
     n2 = store.bucketize("url_seen", buckets=4)
     # the second generation's table holds ONLY the 100 delta rows
     assert spark.table(n2).count() == 100
@@ -286,7 +289,7 @@ def test_incremental_bucketize_writes_only_deltas(spark, tmp_path):
     assert store.bucketize("url_seen", buckets=4) == n2
 
     # chain bound: merge_at=2 folds everything into ONE table
-    store.commit(2, {"url_seen": store.stage("url_seen", 2, _seen_df(spark, 1100, 1150))})
+    _commit_seen(store, 2, _seen_df(spark, 1100, 1150))
     n3 = store.bucketize("url_seen", buckets=4, merge_at=2)
     gens = store.read_manifest()["bucketed"]["url_seen"]
     assert len(gens) == 1 and gens[0]["name"] == n3
@@ -304,9 +307,9 @@ def test_generation_chain_anti_join_single_exchange(spark, tmp_path):
     from contextlib import redirect_stdout
 
     store = StateStore(str(tmp_path / "gc"), spark)
-    store.commit(0, {"url_seen": store.stage("url_seen", 0, _seen_df(spark, 0, 3000))})
+    _commit_seen(store, 0, _seen_df(spark, 0, 3000))
     store.bucketize("url_seen", buckets=8)
-    store.commit(1, {"url_seen": store.stage("url_seen", 1, _seen_df(spark, 3000, 4000))})
+    _commit_seen(store, 1, _seen_df(spark, 3000, 4000))
     store.bucketize("url_seen", buckets=8)
     bases, delta = store.read_parts("url_seen", URL_SEEN_SCHEMA)
     assert len(bases) == 2
@@ -337,30 +340,6 @@ def test_generation_chain_anti_join_single_exchange(spark, tmp_path):
         store.destroy()
 
 
-def test_legacy_bloom_dirs_read_with_null_version(spark, tmp_path):
-    """Dirs written by the pre-versioning layout (no `version` column)
-    must read as null-version rows (schema-on-read) and disable Bloom
-    routing — NOT crash the union or the stats aggregate."""
-    store = StateStore(str(tmp_path / "lg"), spark)
-    legacy = spark.createDataFrame(
-        [(0, bytearray(b"\x00" * 48))], "partition_id int, sketch binary"
-    )
-    path = store.stage("bloom", 0, legacy)
-    store.commit(0, {"bloom": path})
-    sketch_df = store.read("bloom")  # no schema given: the registry supplies it
-    assert {f.name for f in sketch_df.schema.fields} == {
-        "partition_id", "sketch", "version", "n_partitions"
-    }
-    rows = sketch_df.collect()
-    assert rows and rows[0].version is None and rows[0].n_partitions is None
-    out, mode = unseen_with_bloom_state(
-        _urls_df(spark, 0, 50), _seen_df(spark, 0, 20), sketch_df, 8, spark
-    )
-    assert mode == "exact"
-    assert out.count() == 30
-    store.destroy()
-
-
 def test_full_j1_chain_plan_shape(spark, tmp_path):
     """The whole J1 chain at scale settings — cogrouped Bloom probe
     feeding the bucketed-base anti-join then the delta anti-join —
@@ -372,7 +351,7 @@ def test_full_j1_chain_plan_shape(spark, tmp_path):
 
     store = StateStore(str(tmp_path / "fc"), spark)
     seen = _seen_df(spark, 0, 4000)
-    store.commit(0, {"url_seen": store.stage("url_seen", 0, seen)})
+    _commit_seen(store, 0, seen)
     store.bucketize("url_seen", buckets=8)
     [base], delta = store.read_parts("url_seen", URL_SEEN_SCHEMA)
     frontier = _urls_df(spark, 3000, 6000)
@@ -461,7 +440,7 @@ def test_bucketize_empty_delta_honors_geometry_change(spark, tmp_path):
     existing chain's — a seen_partitions config change takes effect
     immediately, not silently on the next delta-carrying call."""
     store = StateStore(str(tmp_path / "gm"), spark)
-    store.commit(0, {"url_seen": store.stage("url_seen", 0, _seen_df(spark, 0, 500))})
+    _commit_seen(store, 0, _seen_df(spark, 0, 500))
     n1 = store.bucketize("url_seen", buckets=8)
     # no new deltas; same geometry -> no-op returning the newest gen
     assert store.bucketize("url_seen", buckets=8) == n1

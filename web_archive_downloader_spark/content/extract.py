@@ -86,7 +86,7 @@ def find_assets_in_soup(soup, original_page_url: str, config: EngineConfig) -> d
                 abs_url = urljoin(original_page_url, src)
                 if urlparse(abs_url).netloc == target_domain:
                     found["img"].add(abs_url)
-        if getattr(config, "include_srcset", False):
+        if config.include_srcset:
             # responsive-image variants (the reference's TODO,
             # html_processor.py:63): every srcset candidate is an
             # image asset, same F7/F8 gating as img@src
@@ -496,7 +496,7 @@ def extract_and_convert_content(
             if save_dir:
                 content = rewrite_asset_links(
                     content, original_url, save_dir, saved_assets_map,
-                    include_srcset=getattr(config, "include_srcset", False),
+                    include_srcset=config.include_srcset,
                 )
         markdown = html_to_markdown(str(content))
         return title, markdown

@@ -341,13 +341,11 @@ def sketch_stats(sketch_df: DataFrame, n_partitions: int | None = None) -> dict:
     exact anti-join."""
     bad = F.col("version").isNull() | (F.col("version") != BLOOM_VERSION)
     if n_partitions is not None:
-        if "n_partitions" in sketch_df.columns:
-            bad = bad | F.col("n_partitions").isNull() | (
-                F.col("n_partitions") != n_partitions
-            )
-        else:
-            # pre-stamping table: build-time P unknowable -> all bad
-            bad = F.lit(True)
+        # a pre-stamping row reads a null n_partitions: build-time P
+        # unknowable -> bad
+        bad = bad | F.col("n_partitions").isNull() | (
+            F.col("n_partitions") != n_partitions
+        )
     row = sketch_df.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.length("sketch")), F.lit(0)).alias("nbytes"),

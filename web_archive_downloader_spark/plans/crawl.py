@@ -79,7 +79,7 @@ from ..sources.fetch_shim import (  # noqa: F401
     find_assets_stage,
     memento_stage,
 )
-from ..sources.state import PACKED, TABLES, StateStore
+from ..sources.state import TABLES, StateStore
 
 # Imported by callers that read these tables or build their rows.
 URL_SEEN_SCHEMA = TABLES["url_seen"]
@@ -92,8 +92,8 @@ _FRONTIER_COLS = TABLES["frontier"].names
 
 # AUTO scale posture for long crawls (see ``CrawlPlan.run``): bucketize
 # url_seen once this many newly seen rows have accumulated unbucketed,
-# and compact the state tables once a manifest lists more than this
-# many of their dirs. Short test crawls, which roll back, trip neither.
+# and compact the packed state once the store lists more than this
+# many of its dirs. Short test crawls, which roll back, trip neither.
 AUTO_BUCKETIZE_MIN_ROWS = 10_000
 AUTO_COMPACT_MAX_DIRS = 16
 
@@ -336,7 +336,7 @@ class CrawlPlan:
         width = max(1, min(self.spark.sparkContext.defaultParallelism, n_sched // 4096 + 1))
         path = store.stage_packed(epoch, members, coalesce_to=width)
         mark("packed_write")
-        store.commit(epoch, {PACKED: path, "frontier": path})
+        store.commit(epoch, dict.fromkeys(members, path))
         # seen_new rows <= n_sched; the analytic bound only needs an
         # upper bound on this epoch's new-seen row count
         self._advance_bloom_stats(n_sched)
@@ -560,14 +560,7 @@ class CrawlPlan:
             "url", F.lit(-1).alias("seq"), F.lit(-1).alias("epoch")
         )
         sketches = build_bloom_sketches(seen, cfg.seen_partitions, expected_per_partition=4096)
-        m = self.store.read_manifest()
-        m["tables"].setdefault("url_seen", []).append(
-            self.store.stage("url_seen", -1, seen)
-        )
-        m["tables"].setdefault("bloom", []).append(
-            self.store.stage("bloom", -1, sketches)
-        )
-        self.store._write_manifest(m)
+        self.store.commit_seed({"url_seen": seen, "bloom": sketches})
         self._bloom_stats = None
 
     # ---- continuous frontier ingestion (streaming inbox) ----
@@ -575,14 +568,13 @@ class CrawlPlan:
     # expansions: seq = 2^45 + batch_id*2^25 + first-appearance feed
     # seq (seeds < 2^45; expansions carry depth>=1 in bits >= 2^50).
     INGEST_SEQ_BASE = 1 << 45
-    _INGEST_EPOCH_BASE = 1_000_000  # frontier dir namespace for drains
 
     def ingest_inbox(self, inbox_dir: str) -> int:
         """Drain landed ``stream_frontier_feed`` batches into the
         frontier between epochs — the batch half of the continuous-
         ingestion contract (streaming/events.py). Exactly once per
         batch dir: drained ids commit atomically WITH the frontier
-        replacement (StateStore.append_frontier_ingest); a re-run of
+        replacement (StateStore.commit_seed); a re-run of
         the stream or of the drain cannot duplicate rows.
 
         Semantics mirror the CDX seed path: A1 latest-snapshot-per-URL
@@ -671,7 +663,7 @@ class CrawlPlan:
         obs = Observation(f"ingest_{new[-1]}")
         merged = frontier.unionByName(fresh.observe(obs, F.count(F.lit(1)).alias("n")))
         try:
-            path = store.stage("frontier", self._INGEST_EPOCH_BASE + new[-1], merged)
+            store.commit_seed({"frontier": merged}, tuple(new))
         except Exception as e:
             # surface the in-plan seq guard as the documented contract
             # error; the failed job staged at most an orphan dir —
@@ -682,7 +674,6 @@ class CrawlPlan:
                     "(need 0 <= seq < 2^25 for ingest packing)"
                 ) from e
             raise
-        store.append_frontier_ingest(path, new)
         return int(obs.get["n"])
 
     # ---- full run ----
@@ -702,18 +693,14 @@ class CrawlPlan:
                 prefiltered_feed=self.config.prefiltered_feed,
                 canonicalize=self.config.canonicalize_urls,
             )
-            path = store.stage("frontier", -1, frontier0)
-            # seed commit occupies epoch -1 semantics: write manifest at epoch -1
-            manifest = store.read_manifest()
-            manifest["tables"].setdefault("frontier", []).append(path)
-            store._write_manifest(manifest)
+            store.commit_seed({"frontier": frontier0})
         pending = store.read_latest_only("frontier").count()
         cfg = self.config
         bucketize_every = cfg.bucketize_seen_every_epochs
         # AUTO scale posture (bucketize: the at-scale default,
         # config=None; compaction: always): the thresholds are derived
         # from driver-side state already in hand — rows scheduled since
-        # the last bucketize, and the manifest's epoch-dir counts — so a
+        # the last bucketize, and the store's packed-dir count — so a
         # default-config long crawl bucketizes/compacts itself instead
         # of degrading into an unbucketed O(seen) anti-join + unbounded
         # dir listings, while short test crawls (which need rollback,
@@ -762,11 +749,9 @@ class CrawlPlan:
                 # anti-join is storage-partitioned (big side never
                 # shuffles). Bloom keeps covering the merged rows;
                 # compact keeps the packed dir list bounded.
-                rebuild_bloom = bool(
-                    self._bloom_stats and self._bloom_stats.get("bad")
-                )
                 store.bucketize("url_seen", buckets=cfg.seen_partitions)
-                if rebuild_bloom:
+                bloom = None
+                if bad_sketches:
                     # the epoch's sketches were unusable (foreign probe
                     # version or a build-time partition count differing
                     # from cfg.seen_partitions — e.g. a resume with
@@ -774,35 +759,23 @@ class CrawlPlan:
                     # exact-anti-join mode. Rebuild the WHOLE sketch set
                     # at the current P from the just-bucketized seen set
                     # — the one O(seen) pass, ridden on the bucketize
-                    # epoch — so the next epoch's probe returns to
-                    # broadcast/cogroup mode instead of exact forever.
-                    self.store.replace_bloom(
-                        build_bloom_sketches(
-                            store.read("url_seen").select("url"),
-                            cfg.seen_partitions,
-                            expected_per_partition=4096,
-                        )
+                    # epoch's compaction — so the next epoch's probe
+                    # returns to broadcast/cogroup mode instead of exact
+                    # forever.
+                    bloom = build_bloom_sketches(
+                        store.read("url_seen").select("url"),
+                        cfg.seen_partitions,
+                        expected_per_partition=4096,
                     )
-                store.compact("__state__")
+                store.compact(bloom)
                 self._bloom_stats = None
                 rows_since_bucketize = 0
-            n_dirs = max(
-                (
-                    len(ps)
-                    for t, ps in store.read_manifest()["tables"].items()
-                    if t in ("url_seen", PACKED)
-                ),
-                default=0,
-            )
-            if n_dirs > AUTO_COMPACT_MAX_DIRS:
-                # bound the per-epoch manifest-dir unions on long
-                # crawls; data tables (docs/assets/images/html) stay
-                # append-only — rewriting payload bytes on every
-                # compaction would dwarf the listing cost they'd save.
-                # url_seen covers legacy seed dirs; the five state
-                # members live in the packed table.
-                for t in ("url_seen", PACKED):
-                    store.compact(t)
+            if store.packed_dirs > AUTO_COMPACT_MAX_DIRS:
+                # bound the per-epoch packed-dir unions on long crawls;
+                # payload rows stay where their epoch wrote them —
+                # rewriting payload bytes on every compaction would
+                # dwarf the listing cost it saves
+                store.compact()
                 self._bloom_stats = None
         return stats
 

@@ -67,12 +67,8 @@ def get_spark(
         # joins (similarity_pairs 34s -> 20s). Guide §3.1: a few
         # hundred MB of broadcast is fine; the build side is always the
         # planner's size-based choice, so corpus-scale relations never
-        # broadcast regardless of this knob. Parameterised for cluster
-        # tuning (smaller executors -> lower it).
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_AUTOBROADCAST", str(192 * 1024 * 1024)),
-        )
+        # broadcast regardless of this threshold.
+        .config("spark.sql.autoBroadcastJoinThreshold", str(192 * 1024 * 1024))
         # Let the planner pick shuffled-hash over sort-merge when its
         # size conditions hold: the heavy candidate-pair streams then
         # probe small per-partition hash tables instead of paying a
@@ -84,10 +80,7 @@ def get_spark(
         # runtime when every post-shuffle partition is under the
         # local-map threshold.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", str(64 * 1024 * 1024)),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

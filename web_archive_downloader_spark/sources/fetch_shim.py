@@ -518,7 +518,7 @@ def finalize_markdown_stage(docs_with_assets: DataFrame, config: EngineConfig) -
         docs_with_assets.schema.fields + [T.StructField("markdown", T.StringType())]
     )
     rewrite = config.rewrite_asset_links
-    include_srcset = getattr(config, "include_srcset", False)
+    include_srcset = config.include_srcset
     output_dir = config.output_dir
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

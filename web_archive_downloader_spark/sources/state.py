@@ -6,17 +6,26 @@ per epoch, resume = read the last committed snapshot (SURVEY §2.10).
 This container has no Iceberg runtime jars, so the same contract is
 implemented as a parquet + manifest layout:
 
-    root/<table>/epoch=<k>/part-*.parquet     (data, written first)
-    root/__state__/epoch=<k>/part-*.parquet   (a crawl epoch's tables,
-                                               packed into one write)
-    root/_manifest.json                       (single commit pointer)
+    root/__state__/epoch=<k>/part-*.parquet      (a crawl epoch's tables,
+                                                  packed into one write)
+    root/__state__/seed=<k>[.n]/part-*.parquet   (one table's rows committed
+                                                  between epochs: the
+                                                  checkpoint and frontier
+                                                  seeds, an inbox drain)
+    root/__state__/compacted=<k>[.n]/...         (compaction output)
+    root/<table>/epoch=<k>/part-*.parquet        (external tables only,
+                                                  e.g. robots)
+    root/_manifest.json                          (single commit pointer)
 
-A commit writes all tables' new epoch directories, then atomically
-replaces the manifest (os.replace on a temp file) recording, per
-table, the list of committed epoch dirs. Readers union only
-manifest-listed dirs — a job killed mid-epoch leaves orphan data
-dirs that are never read, and resume restarts from the previous
-manifest: exactly Iceberg's snapshot semantics, minus compaction.
+Every table registered in ``TABLES`` lives only in the packed dirs,
+and every packed file carries the full union schema. A commit writes
+its dir first, then atomically replaces the manifest (os.replace on a
+temp file) recording, per table, the list of committed dirs that hold
+its rows; the packed dirs a compaction merges are listed once more
+under ``__state__``. Readers union only manifest-listed dirs — a job
+killed mid-epoch leaves orphan data dirs that are never read, and
+resume restarts from the previous manifest: exactly Iceberg's snapshot
+semantics. No module but this one reads or writes the manifest.
 """
 
 from __future__ import annotations
@@ -33,10 +42,11 @@ from pyspark.sql import types as T
 PACKED = "__state__"
 
 
-# The one declaration of every packed table's schema. Readers of a
-# registered table get its schema from here (schema-on-read: a dir
-# written by an older layout that lacks a column reads it as nulls, and
-# no read infers a schema from parquet footers, which costs a job).
+# The one declaration of every packed table's schema. A registered
+# table is written only into packed dirs (stage_packed, or the store's
+# seed and compaction), each member cast to these types, and every
+# read takes its schema from here, so no read infers a schema from
+# parquet footers (which costs a job).
 TABLES: dict[str, T.StructType] = {
     "url_seen": T.StructType([
         T.StructField("url", T.StringType()),
@@ -63,8 +73,8 @@ TABLES: dict[str, T.StructType] = {
     "bloom": T.StructType([
         T.StructField("partition_id", T.IntegerType()),
         T.StructField("sketch", T.BinaryType()),
-        # probe-scheme version; pre-versioning dirs read it as null,
-        # which disables Bloom routing (operators/seen.py)
+        # probe-scheme version; a foreign or null version disables
+        # Bloom routing (operators/seen.py)
         T.StructField("version", T.IntegerType()),
         # the partition count the sketch was BUILT with: pid =
         # pmod(xxhash64(url), n_partitions) decides which rows a sketch
@@ -139,14 +149,12 @@ def union_schema(members: dict[str, T.StructType]) -> T.StructType:
     return T.StructType([f for f, _ in fields.values()])
 
 
-# Every per-epoch output is staged as ONE parquet write with a `_table`
-# discriminator over this union: the small state tables (url_seen /
-# processed / lineage / metrics / bloom), the payload tables (docs_raw /
-# html_raw / assets_raw / images) and the epoch's frontier replacement.
-# One write job per epoch instead of one per table; readers unpack
-# transparently (read/read_parts/read_latest_only), so consumers are
-# layout-agnostic and still union the per-table dirs of stores written
-# before the payload joined the pack. This mirrors a multi-table
+# Every packed dir is ONE parquet write with a `_table` discriminator
+# over this union: the small state tables (url_seen / processed /
+# lineage / metrics / bloom), the payload tables (docs_raw / html_raw /
+# assets_raw / images) and the frontier replacement. One write job per
+# epoch instead of one per table; readers unpack transparently
+# (read/read_parts/read_latest_only). This mirrors a multi-table
 # Iceberg transaction: one commit, several logical tables.
 _PACKED_SCHEMA = union_schema(TABLES)
 
@@ -154,10 +162,62 @@ _PACKED_SCHEMA = union_schema(TABLES)
 # rows stay where their epoch wrote them (rewriting crawled bytes at
 # every compaction would dwarf the listing cost it saves), and a
 # frontier is replaced every epoch, so only the manifest's latest
-# pointer is ever read. Compaction retires the merged epoch dirs to
-# the manifest's ``packed_payload`` list, which payload reads union.
+# pointer is ever read. Their own dir lists keep naming the merged
+# epoch and seed dirs.
 _UNCOMPACTED = ("docs_raw", "html_raw", "assets_raw", "images", "frontier")
-_PAYLOAD_DIRS = "packed_payload"
+
+
+def _pack(dfs: dict[str, DataFrame]) -> DataFrame:
+    """Project several member tables onto the sparse union schema, each
+    row tagged with its `_table` discriminator and every column cast to
+    its registered type; union columns a member lacks ride as nulls.
+    Each member df must carry exactly its registered columns — silently
+    null-filling a missing member column would mask schema drift (e.g.
+    a renamed lineage field) as all-null state rows instead of failing
+    the write."""
+    parts = []
+    for name, df in dfs.items():
+        if name not in TABLES:
+            raise ValueError(f"{name} is not a packed state table")
+        have = set(df.columns)
+        want = set(TABLES[name].names)
+        if have != want:
+            raise ValueError(
+                f"packed member {name}: columns {sorted(have)} do not "
+                f"match the registered schema {sorted(want)} "
+                "(missing: %s, unexpected: %s)"
+                % (sorted(want - have), sorted(have - want))
+            )
+        # SQL strings: one py4j call per member, not one per column
+        cols = [f"'{name}' AS _table"] + [
+            f"CAST({f.name if f.name in have else 'NULL'} AS {f.dataType.simpleString()}) AS {f.name}"
+            for f in _PACKED_SCHEMA.fields[1:]
+        ]
+        parts.append(df.selectExpr(*cols))
+    packed = parts[0]
+    for p in parts[1:]:
+        packed = packed.union(p)  # same projection order, so positional
+    return packed
+
+
+def _register(manifest: dict, staged: dict[str, str]) -> None:
+    """List each staged dir under its table, so a read lists only the
+    dirs that hold the table's rows (the frontier's last dir is the
+    live frontier, read_latest_only). A registered table's dir is a
+    packed dir, also listed once under ``__state__`` for compaction."""
+    tables = manifest["tables"]
+    for table, path in staged.items():
+        names = [PACKED, table] if table in TABLES else [table]
+        for name in names:
+            listed = tables.setdefault(name, [])
+            if path not in listed:
+                listed.append(path)
+
+
+def _dir_epoch(path: str) -> int:
+    """The epoch a dir was committed at, from its name: epoch=3,
+    seed=-1.2 and compacted=5 give 3, -1 and 5."""
+    return int(os.path.basename(path).split("=", 1)[1].split(".")[0])
 
 
 class StateStore:
@@ -174,6 +234,9 @@ class StateStore:
         # one packed scan per dir list, shared by every member read of
         # it (see _packed_scan); dropped whenever the store writes
         self._packed_scans: dict[tuple[str, ...], DataFrame] = {}
+        # one reader for every packed scan: each table reads its own dir
+        # list, and a fresh reader costs py4j round trips and JVM objects
+        self._packed_reader = spark.read.schema(_PACKED_SCHEMA)
 
     # --- manifest ---
     @property
@@ -197,50 +260,40 @@ class StateStore:
     def last_epoch(self) -> int:
         return self.read_manifest()["epoch"]
 
+    @property
+    def packed_dirs(self) -> int:
+        """How many dirs a packed state read lists (compaction bounds it)."""
+        return len(self.read_manifest()["tables"].get(PACKED, []))
+
+    def _fresh_dir(self, name: str) -> str:
+        """root/__state__/<name>, suffixed .1, .2, ... past any dir on
+        disk: a write never overwrites a dir a reader may still list
+        (a compaction at the epoch of an earlier one reads that dir)."""
+        path = base = os.path.join(self.root, PACKED, name)
+        n = 0
+        while os.path.exists(path):
+            n += 1
+            path = f"{base}.{n}"
+        return path
+
     # --- staged writes + atomic multi-table commit ---
-    def stage(self, table: str, epoch: int, df: DataFrame, partition_by: list[str] | None = None) -> str:
-        """Write one table's epoch directory (not yet visible)."""
+    def stage(self, table: str, epoch: int, df: DataFrame) -> str:
+        """Write an external table's epoch directory, or the packed
+        write of stage_packed (not yet visible). A registered table
+        goes only into packed dirs, where its types are cast to TABLES."""
+        if table in TABLES:
+            raise ValueError(f"{table} is a packed state table: stage it with stage_packed")
         path = os.path.join(self.root, table, f"epoch={epoch}")
         self._packed_scans.clear()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         return path
 
     def stage_packed(
         self, epoch: int, dfs: dict[str, DataFrame], coalesce_to: int | None = None
     ) -> str:
-        """Stage several PACKED member tables as one write (one job,
-        one epoch dir) — see the module-level packed-state note. Each
-        member projects onto the sparse union schema with a `_table`
-        discriminator; union-schema columns a member's REGISTRY entry
-        lacks ride as nulls. Each member df must carry exactly its
-        registered columns — silently null-filling a missing member
-        column would mask schema drift (e.g. a renamed lineage field)
-        as all-null state rows instead of failing the write."""
-        parts = []
-        for name, df in dfs.items():
-            if name not in TABLES:
-                raise ValueError(f"{name} is not a packed state table")
-            have = set(df.columns)
-            want = set(TABLES[name].names)
-            if have != want:
-                raise ValueError(
-                    f"packed member {name}: columns {sorted(have)} do not "
-                    f"match the registered schema {sorted(want)} "
-                    "(missing: %s, unexpected: %s)"
-                    % (sorted(want - have), sorted(have - want))
-                )
-            # SQL strings: one py4j call per member, not one per column
-            cols = [f"'{name}' AS _table"] + [
-                f"CAST({f.name if f.name in have else 'NULL'} AS {f.dataType.simpleString()}) AS {f.name}"
-                for f in _PACKED_SCHEMA.fields[1:]
-            ]
-            parts.append(df.selectExpr(*cols))
-        packed = parts[0]
-        for p in parts[1:]:
-            packed = packed.union(p)  # same projection order, so positional
+        """Stage several member tables as one write (one job, one epoch
+        dir) — see _pack and the module-level packed-state note."""
+        packed = _pack(dfs)
         if coalesce_to:
             # repartition, NOT coalesce: coalesce propagates its
             # narrowness up every shuffle-free member plan, so the
@@ -250,21 +303,58 @@ class StateStore:
             packed = packed.repartition(coalesce_to)
         return self.stage(PACKED, epoch, packed)
 
+    def commit(self, epoch: int, staged: dict[str, str]) -> None:
+        """Atomically publish the staged dirs as epoch's snapshot.
+        ``staged`` maps each table to the dir holding its new rows: an
+        external table's own epoch dir, or the packed dir a registered
+        table rode in."""
+        manifest = self.read_manifest()
+        if epoch <= manifest["epoch"]:
+            raise ValueError(f"epoch {epoch} already committed (at {manifest['epoch']})")
+        _register(manifest, staged)
+        manifest["epoch"] = epoch
+        self._write_manifest(manifest)
+
+    def commit_seed(self, dfs: dict[str, DataFrame], batch_ids: tuple[int, ...] = ()) -> None:
+        """Commit member rows that arrive between epochs — the
+        checkpoint seed, the frontier seed, an inbox drain's frontier
+        replacement — without advancing the epoch: one packed write
+        per member, each to a fresh seed dir (so a read of one member
+        never lists another's files), then one manifest swap that
+        lists them and records the drained inbox ``batch_ids`` with
+        the frontier's dir. A crash before the swap leaves orphan dirs
+        and unrecorded batches, re-ingested idempotently on retry.
+        truncate_to_epoch keeps the dirs while it keeps the epoch the
+        seed was committed at."""
+        manifest = self.read_manifest()
+        epoch = manifest["epoch"]
+        if any(manifest.get("packed_floor", {}).get(t) == epoch for t in dfs):
+            # its dir would sit at the floor, which hides it from reads
+            raise ValueError(f"cannot seed {sorted(dfs)}: bucketized at epoch {epoch}")
+        staged = {}
+        for table, df in dfs.items():
+            staged[table] = self._fresh_dir(f"seed={epoch}")
+            _pack({table: df}).write.parquet(staged[table])
+        _register(manifest, staged)
+        manifest.setdefault("ingested_batches", {}).update(
+            {str(b): staged["frontier"] for b in batch_ids}
+        )
+        self._write_manifest(manifest)
+
     def _packed_member(self, table: str, manifest: dict) -> DataFrame | None:
-        """Unpack one member's rows from the packed dirs (None if no
-        packed dirs exist). Rows at or below the member's floor are
-        superseded (merged into the bucketed base by bucketize) and
-        filtered out — a pushed-down predicate, no rewrite needed."""
-        paths = manifest["tables"].get(PACKED, [])
-        if table in _UNCOMPACTED:
-            paths = manifest.get(_PAYLOAD_DIRS, []) + paths
-        if not paths:
-            return None
-        df = self._packed_scan(paths).filter(F.col("_table") == table)
+        """Unpack one member's rows from the packed dirs that hold them
+        (None if no dir is left to read). A dir committed at or before
+        the member's floor holds only rows that bucketize merged into
+        the bucketed base, so it is not read for that member."""
+        paths = manifest["tables"].get(table, [])
         floor = manifest.get("packed_floor", {}).get(table)
         if floor is not None:
-            df = df.filter(F.col("epoch") > floor)
-        return df.select(*TABLES[table].names)
+            paths = [p for p in paths if _dir_epoch(p) > floor]
+        if not paths:
+            return None
+        return self._packed_scan(paths).filter(F.col("_table") == table).select(
+            *TABLES[table].names
+        )
 
     def _packed_scan(self, paths: list[str]) -> DataFrame:
         """The scan of a packed dir list, shared by every member read
@@ -276,18 +366,8 @@ class StateStore:
         same dir would keep listing the replaced files."""
         key = tuple(paths)
         if key not in self._packed_scans:
-            self._packed_scans[key] = self.spark.read.schema(_PACKED_SCHEMA).parquet(*paths)
+            self._packed_scans[key] = self._packed_reader.parquet(*paths)
         return self._packed_scans[key]
-
-    def commit(self, epoch: int, staged: dict[str, str]) -> None:
-        """Atomically publish all staged epoch dirs as epoch's snapshot."""
-        manifest = self.read_manifest()
-        if epoch <= manifest["epoch"]:
-            raise ValueError(f"epoch {epoch} already committed (at {manifest['epoch']})")
-        for table, path in staged.items():
-            manifest["tables"].setdefault(table, []).append(path)
-        manifest["epoch"] = epoch
-        self._write_manifest(manifest)
 
     # --- reads (committed snapshots only) ---
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
@@ -300,12 +380,8 @@ class StateStore:
     def _bucketed_gens(self, manifest: dict, table: str) -> list[dict]:
         """The table's bucketed GENERATION chain (oldest first). Each
         bucketize call appends one O(delta) generation; a merge
-        collapses the chain to one. Legacy manifests stored a single
-        dict — read it as a one-element chain."""
-        ptr = manifest.get("bucketed", {}).get(table)
-        if ptr is None:
-            return []
-        return [ptr] if isinstance(ptr, dict) else list(ptr)
+        collapses the chain to one."""
+        return list(manifest.get("bucketed", {}).get(table, []))
 
     def read_parts(
         self, table: str, schema: T.StructType | None = None
@@ -314,58 +390,40 @@ class StateStore:
         callers that join against the table keep each generation
         separate so every bucketed scan reaches its join without an
         Exchange (a union would erase the bucket distribution); `read`
-        is the convenience union for full-relation consumers. Delta
-        rows union the table's own epoch dirs with its packed-state
-        rows."""
+        is the convenience union for full-relation consumers. A
+        registered table's delta is its packed rows, read with its
+        TABLES schema; an external table's is its own epoch dirs, read
+        with ``schema``."""
         manifest = self.read_manifest()
         bases = [
             self.spark.table(g["name"])
             for g in self._bucketed_gens(manifest, table)
         ]
-        if schema is None:
-            schema = TABLES.get(table)
-        parts = []
-        paths = manifest["tables"].get(table, [])
-        if paths:
-            parts.append(self._scan_dirs(paths, schema))
         if table in TABLES:
-            packed = self._packed_member(table, manifest)
-            if packed is not None:
-                parts.append(packed)
-        if not parts:
-            if schema is None:
-                if not bases:
-                    raise ValueError(f"table {table} empty and no schema given")
-                schema = bases[0].schema
-            return bases, self.spark.createDataFrame([], schema)
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
+            schema = TABLES[table]
+            delta = self._packed_member(table, manifest)
+        elif schema is None:
+            raise ValueError(f"external table {table} read without a schema")
+        else:
+            paths = manifest["tables"].get(table, [])
+            delta = self.spark.read.schema(schema).parquet(*paths) if paths else None
+        if delta is None:
+            delta = self.spark.createDataFrame([], schema)
         return bases, delta
-
-    def _scan_dirs(self, paths: list[str], schema: T.StructType | None) -> DataFrame:
-        """A scan of a table's own (unpacked) dirs with the given
-        schema (schema-on-read): dirs written by an OLDER layout that
-        lack a newly added column (e.g. bloom's `version`) read it as
-        nulls instead of crashing the consumer with UNRESOLVED_COLUMN,
-        and no footer-inference job runs. Only a table outside
-        ``TABLES`` read without a schema falls back to inference."""
-        reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
-        return reader.parquet(*paths)
 
     def bucketize(
         self, table: str, buckets: int = 32, key: str = "url", merge_at: int = 4
     ) -> str:
         """INCREMENTAL bucketize: fold the table's accumulated DELTA
-        rows (epoch dirs + packed rows above the floor) into a NEW
-        bucketed catalog generation (hash-bucketed + sorted by
-        ``key``) and atomically append it to the manifest's generation
-        chain, clearing the merged epoch dirs. This is Iceberg's
-        incremental rewrite_data_files with a bucket(N, key) partition
-        transform: each call writes O(delta) rows — NEVER a rewrite of
-        the full (10^10-row at target scale) base — and an anti-join
-        against every generation is storage-partitioned (the big side
-        never shuffles; anti_join_unseen chains the generations).
+        rows (packed rows above the floor) into a NEW bucketed catalog
+        generation (hash-bucketed + sorted by ``key``) and atomically
+        append it to the manifest's generation chain. This is
+        Iceberg's incremental rewrite_data_files with a bucket(N, key)
+        partition transform: each call writes O(delta) rows — NEVER a
+        rewrite of the full (10^10-row at target scale) base — and an
+        anti-join against every generation is storage-partitioned (the
+        big side never shuffles; anti_join_unseen chains the
+        generations).
 
         The chain is kept short: once it would exceed ``merge_at``
         generations (or an incompatible buckets/key is requested), ALL
@@ -382,17 +440,12 @@ class StateStore:
         snapshot-expiry semantics. Returns the newest table name."""
         manifest = self.read_manifest()
         gens = self._bucketed_gens(manifest, table)
-        paths = manifest["tables"].get(table, [])
-        packed = self._packed_member(table, manifest) if table in TABLES else None
-        delta_parts = []
-        if paths:
-            delta_parts.append(self._scan_dirs(paths, TABLES.get(table)))
-        if packed is not None:
-            delta_parts.append(packed)
+        df = self._packed_member(table, manifest)
+        has_delta = df is not None
         geometry_mismatch = any(
             g["buckets"] != buckets or g["key"] != key for g in gens
         )
-        if not delta_parts:
+        if not has_delta:
             if not gens:
                 raise ValueError(f"bucketize: table {table} is empty")
             if not geometry_mismatch:
@@ -400,13 +453,8 @@ class StateStore:
             # empty delta but the REQUESTED geometry differs from the
             # chain's: a seen_partitions config change must re-bucketize
             # NOW, not silently wait for the next delta-carrying call
-            df = None
-        else:
-            df = delta_parts[0]
-            for p in delta_parts[1:]:
-                df = df.unionByName(p)
         epoch = manifest["epoch"]
-        merging = len(gens) + len(delta_parts[:1]) > merge_at or geometry_mismatch
+        merging = len(gens) + has_delta > merge_at or geometry_mismatch
         if merging:
             for g in gens:
                 base = self.spark.table(g["name"])
@@ -432,160 +480,77 @@ class StateStore:
         manifest.setdefault("bucketed", {})[table] = (
             [new_gen] if merging else gens + [new_gen]
         )
-        manifest["tables"][table] = []
         manifest.setdefault("compaction_floor", {})[table] = epoch
-        if table in TABLES:
-            # packed rows at or below the floor are now superseded by
-            # the base; reads filter them out, compact(PACKED) drops
-            # them physically
-            manifest.setdefault("packed_floor", {})[table] = epoch
+        # the member's rows in dirs committed up to now are superseded
+        # by the base: reads skip those dirs for it, and compact()
+        # leaves its rows out of the merged dir
+        manifest.setdefault("packed_floor", {})[table] = epoch
         self._write_manifest(manifest)  # atomic swap
         if merging:
             for g in gens:
                 if g["name"] != name:
                     self.spark.sql(f"DROP TABLE IF EXISTS {g['name']}")
-        for p in paths:
-            shutil.rmtree(p, ignore_errors=True)
         return name
 
-    def replace_bloom(self, sketches: DataFrame) -> None:
-        """Replace ALL persisted bloom sketch state with ``sketches``
-        (the partition-count-change rebuild, round-4 verdict item 3):
-        stage the rebuilt sketch rows as a fresh standalone bloom dir,
-        rewrite the packed state dirs WITHOUT their old bloom member
-        rows, and publish both in one atomic manifest swap — readers
-        see either the complete old sketch set or the complete new
-        one, never a mix (a mix could pair new-P and old-P sketches,
-        re-introducing the false-negative risk the rebuild removes).
-        Like compaction, the rewrite forecloses rollback past this
-        point (compaction_floor on the packed table)."""
-        manifest = self.read_manifest()
-        epoch = manifest["epoch"]
-        old_bloom = manifest["tables"].get("bloom", [])
-        packed_paths = manifest["tables"].get(PACKED, [])
-
-        def _fresh(table: str, stem: str) -> str:
-            # never reuse a dir the manifest still references: a
-            # same-epoch re-rebuild overwriting a dir it is lazily
-            # READING from would clobber the data mid-scan
-            taken = set(old_bloom) | set(packed_paths)
-            n = 0
-            while True:
-                suffix = f"{stem}={epoch}" + (f".{n}" if n else "")
-                path = os.path.join(self.root, table, suffix)
-                if path not in taken:
-                    return path
-                n += 1
-
-        new_path = _fresh("bloom", "rebuilt")
-        sketches.write.mode("overwrite").parquet(new_path)
-        new_packed: list[str] = []
-        if packed_paths:
-            rest = self.spark.read.schema(_PACKED_SCHEMA).parquet(
-                *packed_paths
-            ).filter(~F.col("_table").isin("bloom", *_UNCOMPACTED))
-            # the rewrite doubles as a compaction pass: drop member
-            # rows a bucketized base has superseded (same filter
-            # compact() applies) instead of carrying them into the
-            # single new dir, where the next compact would no-op
-            for member, floor in manifest.get("packed_floor", {}).items():
-                rest = rest.filter(
-                    (F.col("_table") != member) | (F.col("epoch") > floor)
-                )
-            packed_path = _fresh(PACKED, "rebloom")
-            rest.write.mode("overwrite").parquet(packed_path)
-            new_packed = [packed_path]
-        manifest["tables"]["bloom"] = [new_path]
-        dropped = []
-        if packed_paths:
-            manifest["tables"][PACKED] = new_packed
-            manifest.setdefault("compaction_floor", {})[PACKED] = epoch
-            dropped = self._retire_packed(manifest, packed_paths)
-        self._write_manifest(manifest)  # atomic swap
-        for p in old_bloom + dropped:
-            shutil.rmtree(p, ignore_errors=True)
-
-    @staticmethod
-    def _retire_packed(manifest: dict, paths: list[str]) -> list[str]:
-        """After a rewrite merged ``paths``' state rows: keep the epoch
-        dirs, whose payload and frontier rows were not merged, on the
-        manifest's payload list; return the rewrite outputs among
-        ``paths`` (state rows only), which are now safe to delete."""
-        kept = [p for p in paths if os.path.basename(p).startswith("epoch=")]
-        manifest[_PAYLOAD_DIRS] = manifest.get(_PAYLOAD_DIRS, []) + kept
-        return [p for p in paths if p not in kept]
-
-    def read_latest_only(self, table: str, schema: T.StructType | None = None) -> DataFrame:
-        """For tables where each epoch REPLACES state (e.g. frontier)."""
-        if schema is None:
-            schema = TABLES.get(table)
+    def read_latest_only(self, table: str) -> DataFrame:
+        """For tables where each epoch REPLACES state (the frontier):
+        the rows of the last dir the table's own list names."""
         paths = self.read_manifest()["tables"].get(table, [])
         if not paths:
-            if schema is None:
-                raise ValueError(f"table {table} empty and no schema given")
-            return self.spark.createDataFrame([], schema)
-        latest = paths[-1]
-        if os.path.basename(os.path.dirname(latest)) == PACKED:
-            # the epoch's replacement rode the packed write
-            return self._packed_scan([latest]).filter(F.col("_table") == table).select(
-                *TABLES[table].names
-            )
-        return self._scan_dirs([latest], schema)
+            return self.spark.createDataFrame([], TABLES[table])
+        return self._packed_scan(paths[-1:]).filter(F.col("_table") == table).select(
+            *TABLES[table].names
+        )
 
-    def compact(self, table: str) -> int:
-        """Snapshot compaction (Iceberg's rewrite_data_files): merge a
-        table's accumulated epoch dirs into ONE dir and atomically
-        swap the manifest to point at it. Readers before the swap see
-        the old dirs; after, the single compacted dir — same rows
-        either way (append-only tables only; not for frontier-style
-        replace tables, which read_latest_only already bounds).
+    def compact(self, bloom: DataFrame | None = None) -> int:
+        """Snapshot compaction (Iceberg's rewrite_data_files): merge
+        the state rows of every listed packed dir into ONE fresh dir
+        and atomically swap the manifest to list only it. Readers
+        before the swap see the old dirs; after, the compacted one —
+        same rows either way. Member rows a bucketized base supersedes
+        are left out; payload and frontier rows stay where they are.
 
         At crawl scale this is what keeps url_seen readable: 10^4
         epochs otherwise mean 10^4 directory listings per epoch read.
-        Returns the number of epoch dirs collapsed."""
+
+        ``bloom`` replaces ALL persisted sketch rows (the rebuild after
+        a partition-count change): the merged dir carries those
+        sketches instead, published in the same swap, so readers see
+        either the complete old sketch set or the complete new one,
+        never a mix (a mix could pair new-P and old-P sketches, the
+        false-negative risk the rebuild removes). Like any compaction,
+        it forecloses rollback past this point (compaction_floor).
+        Returns the number of dirs collapsed."""
         manifest = self.read_manifest()
-        paths = manifest["tables"].get(table, [])
-        if len(paths) <= 1:
+        paths = manifest["tables"].get(PACKED, [])
+        if len(paths) <= 1 and bloom is None:
             return 0
-        dropped = paths
-        if table == PACKED:
-            df = self.spark.read.schema(_PACKED_SCHEMA).parquet(*paths).filter(
-                ~F.col("_table").isin(*_UNCOMPACTED)
-            )
-            dropped = self._retire_packed(manifest, paths)
-            # physically drop member rows superseded by a bucketized
-            # base (reads already filter them; compaction reclaims)
-            for member, floor in manifest.get("packed_floor", {}).items():
-                df = df.filter(
-                    (F.col("_table") != member) | (F.col("epoch") > floor)
-                )
-        else:
-            df = self._scan_dirs(paths, TABLES.get(table))
-        compact_path = os.path.join(
-            self.root, table, f"compacted={manifest['epoch']}"
-        )
-        df.write.mode("overwrite").parquet(compact_path)
-        manifest["tables"][table] = [compact_path]
+        members = {
+            t: self._packed_member(t, manifest) for t in TABLES if t not in _UNCOMPACTED
+        }
+        if bloom is not None:
+            members["bloom"] = bloom
+        members = {t: df for t, df in members.items() if df is not None}
+        compact_path = self._fresh_dir(f"compacted={manifest['epoch']}")
+        _pack(members).write.parquet(compact_path)
+        tables = manifest["tables"]
+        for t in TABLES:
+            if t in members:
+                tables[t] = [compact_path]
+            elif t not in _UNCOMPACTED:
+                tables.pop(t, None)  # every row is in the bucketed base
+        tables[PACKED] = [compact_path]
         # like Iceberg snapshot expiry: history before the compaction
         # point is gone — rollback past it must be refused
-        manifest.setdefault("compaction_floor", {})[table] = manifest["epoch"]
+        manifest.setdefault("compaction_floor", {})[PACKED] = manifest["epoch"]
         self._write_manifest(manifest)  # atomic swap
-        for p in dropped:  # now unreferenced
-            shutil.rmtree(p, ignore_errors=True)
+        # a dir no list names any more held merged state rows only
+        # (earlier compaction outputs, the checkpoint seed's dirs)
+        listed = {p for ps in tables.values() for p in ps}
+        for p in paths:
+            if p not in listed:
+                shutil.rmtree(p, ignore_errors=True)
         return len(paths)
-
-    def append_frontier_ingest(self, path: str, batch_ids: list[int]) -> None:
-        """Record a frontier replacement produced by draining streaming
-        inbox batches: the new frontier path and the drained batch ids
-        commit in ONE atomic manifest swap — a crash beforehand leaves
-        an orphan dir and unrecorded batches, re-ingested idempotently
-        on retry."""
-        manifest = self.read_manifest()
-        manifest["tables"].setdefault("frontier", []).append(path)
-        ing = manifest.setdefault("ingested_batches", {})
-        for b in batch_ids:
-            ing[str(b)] = path
-        self._write_manifest(manifest)
 
     def ingested_batches(self) -> set[int]:
         return {int(b) for b in self.read_manifest().get("ingested_batches", {})}
@@ -601,10 +566,7 @@ class StateStore:
                     f"cannot truncate {t} to epoch {epoch}: compacted at {floor}"
                 )
         manifest["tables"] = {
-            t: [
-                p for p in ps
-                if "epoch=" not in p or int(p.rsplit("epoch=", 1)[1]) <= epoch
-            ]
+            t: [p for p in ps if _dir_epoch(p) <= epoch]
             for t, ps in manifest["tables"].items()
         }
         manifest["tables"] = {t: ps for t, ps in manifest["tables"].items() if ps}
