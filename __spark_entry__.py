@@ -2,13 +2,16 @@
 
 ``entry()`` is the flagship crawl-schedule shape. ``queries()`` exposes
 one entry per engine operator family the crawl and its curation path
-use (dedup, ANN, packing, phash, collision naming, per-host budgets,
-memento navigation, scalar and text-stats functions), each mapped onto
-the testdata tables; ``oracle_sql()`` gives the DuckDB twin of each
-entry (identical hashing: md5-derived 56-bit ints, polynomial char
-folds — verified primitive-by-primitive). Non-SQL-expressible ops (the
-epoch crawl pipeline itself, image decode, LSH-ANN recall) are
-verified in tests/ against the sequential oracle instead.
+run (dedup, ANN, packing, phash, collision naming, the per-host budget
+top-k, the retry backoff, the filename/path/header expressions of
+finalize and text stats), each mapped onto the testdata tables;
+``oracle_sql()`` gives the DuckDB twin of each entry (identical
+hashing: md5-derived 56-bit ints, polynomial char folds — verified
+primitive-by-primitive). An entry checks code the crawl or a curation
+query runs, never a Column twin of a Python kernel: the kernels the
+page pass runs per row (routing, the URL fallback title, Memento
+navigation) and the epoch pipeline itself are verified in tests/
+against the sequential oracle instead.
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ from web_archive_downloader_spark.functions.scalar import (
     backoff_epochs_col,
     format_archived_ts_col,
     sanitize_filename_col,
-    url_fallback_title_col,
 )
 from web_archive_downloader_spark.functions.textstats import document_stats
 from web_archive_downloader_spark.operators.ann import brute_force_topk
@@ -119,9 +121,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # ------------------------------------------------------------- queries
 
 def _q_budgeted_topk(spark, sf):
-    """per_host_topk with a PER-KEY budget table (the robots
-    crawl_delay-derived token path): each user's cap varies, missing
-    users fall back to k, budgets above k clamp to k."""
+    """per_host_topk with a PER-KEY budget column, as run_epoch calls
+    it after the robots gate joins each host's crawl_delay-derived
+    token count: each user's cap varies, users without a budget fall
+    back to k, budgets above k clamp to k."""
     from web_archive_downloader_spark.operators.schedule import per_host_topk
 
     ev = _t(spark, sf, "events")
@@ -140,25 +143,9 @@ def _q_budgeted_topk(spark, sf):
             (F.col("user_id") % 5 + 1).cast("int").alias("host_budget"),
         )
     )
-    return per_host_topk(frontier, k=3, salt_buckets=4, budgets=budgets).select(
+    budgeted = frontier.join(F.broadcast(budgets), "host", "left")
+    return per_host_topk(budgeted, 3, 4, budget_col="host_budget").select(
         F.col("host").alias("user_id"), F.col("seq").alias("event_id"), "host_rank"
-    )
-
-
-def _q_route_counts(spark, sf):
-    ev = _t(spark, sf, "events")
-    outcome = (
-        F.when(F.col("event_type") == "error", F.lit("http_500"))
-        .when(F.col("event_type") == "purchase", F.lit("http_429"))
-        .otherwise(F.lit("ok"))
-    )
-    attempt = (F.col("event_id") % 5 + 1).cast("int")
-    from web_archive_downloader_spark.functions.scalar import route_col
-
-    return (
-        ev.select(route_col(outcome, attempt, 3).alias("route"))
-        .groupBy("route")
-        .agg(F.count("*").alias("n"))
     )
 
 
@@ -176,15 +163,6 @@ def _q_sanitize_docs(spark, sf):
     d = _t(spark, sf, "documents")
     raw = F.concat(F.lit(" . "), F.substring("text", 1, 30), F.lit("? "))
     return d.select("doc_id", sanitize_filename_col(raw).alias("fname"))
-
-
-def _q_title_fallback(spark, sf):
-    d = _t(spark, sf, "documents")
-    url = F.concat(
-        F.lit("https://ex.com/"), F.col("source"), F.lit("/item-"),
-        F.col("doc_id").cast("string"), F.lit("_"), F.col("lang"),
-    )
-    return d.select("doc_id", url_fallback_title_col(url).alias("title"))
 
 
 def _q_ts_format(spark, sf):
@@ -493,28 +471,15 @@ def _q_stratified_sample(spark, sf):
     return d.filter(bucket < rate).select("doc_id", "lang", bucket.alias("sample_bucket"))
 
 
-def _doc_url():
-    return F.concat(
-        F.lit("https://ex.com/"), F.col("source"), F.lit("/sub%20dir/item-"),
-        F.col("doc_id").cast("string"),
-    )
-
-
 def _q_page_dir(spark, sf):
     from web_archive_downloader_spark.functions.scalar import page_dir_col
 
     d = _t(spark, sf, "documents")
-    return d.select("doc_id", page_dir_col(_doc_url()).alias("dir"))
-
-
-def _q_url_parts(spark, sf):
-    d = _t(spark, sf, "documents")
-    url = _doc_url()
-    return d.select(
-        "doc_id",
-        F.parse_url(url, F.lit("HOST")).alias("host"),
-        F.parse_url(url, F.lit("PATH")).alias("path"),
+    url = F.concat(
+        F.lit("https://ex.com/"), F.col("source"), F.lit("/sub%20dir/item-"),
+        F.col("doc_id").cast("string"),
     )
+    return d.select("doc_id", page_dir_col(url).alias("dir"))
 
 
 def _q_markdown_header(spark, sf):
@@ -542,49 +507,6 @@ def _q_decontamination(spark, sf):
     return ngram_decontaminate(tr, ev, n=5)
 
 
-def _q_memento_nav(spark, sf):
-    """SRC4/X9: nested-JSON navigation of a Memento TimeTravel
-    response — from_json with a nested struct/array schema, select
-    mementos.closest.uri[0], reject web.archive.org hosts (the loop
-    guard, memento_client.py:45-61). Four response shapes per doc_id
-    mod 4: valid mirror URI / archive.org URI (loop) / missing
-    'closest' key / absent body."""
-    from web_archive_downloader_spark.sources.fetch_shim import (
-        MEMENTO_RESPONSE_SCHEMA,
-    )
-
-    d = _t(spark, sf, "documents")
-    orig = F.concat(
-        F.lit("https://ex.com/"), F.col("source"), F.lit("/item-"),
-        F.col("doc_id").cast("string"),
-    )
-    mirror = F.concat(
-        F.lit('{"mementos":{"closest":{"datetime":"20240101000000","uri":["https://memento.mirror.example.net/'),
-        (F.col("doc_id") % 99999).cast("string"), F.lit("/"), orig, F.lit('"]}}}'),
-    )
-    archive = F.concat(
-        F.lit('{"mementos":{"closest":{"datetime":"20240101000000","uri":["https://web.archive.org/web/20240101000000/'),
-        orig, F.lit('"]}}}'),
-    )
-    raw = (
-        F.when(F.col("doc_id") % 4 == 0, mirror)
-        .when(F.col("doc_id") % 4 == 1, archive)
-        .when(F.col("doc_id") % 4 == 2, F.lit('{"mementos":{"first":{"uri":[]}}}'))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    parsed = d.select("doc_id", F.from_json(raw, MEMENTO_RESPONSE_SCHEMA).alias("m"))
-    uri0 = F.col("m").getField("mementos").getField("closest").getField("uri").getItem(0)
-    host = F.coalesce(F.parse_url(uri0, F.lit("HOST")), F.lit(""))
-    return parsed.select(
-        "doc_id",
-        F.when(uri0.isNotNull() & ~host.contains("web.archive.org"), uri0).alias("memento_uri"),
-        F.when(uri0.isNull(), F.lit("none"))
-        .when(host.contains("web.archive.org"), F.lit("loop"))
-        .otherwise(F.lit("found"))
-        .alias("lookup_result"),
-    )
-
-
 def _q_embedding_neardup_lsh(spark, sf):
     """The CHECKED near-dup path is the sign-LSH-blocked one (no
     cartesian) at CORPUS-SIZED geometry: n_planes=None auto-sizes the
@@ -599,11 +521,11 @@ def _q_embedding_neardup_lsh(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # One checked entry per engine operator family the crawl and its
-    # curation path use: dedup, ANN, packing, phash, collision naming,
-    # per-host budgets, memento navigation and the scalar functions.
-    # Every key has a DuckDB twin in oracle_sql() (tests/test_entry_parity.py
-    # asserts the two key sets are equal).
+    # One checked entry per engine operator family the crawl or a
+    # curation query runs (tests/test_no_orphans.py:REGISTRY_ONLY names
+    # the operators only this registry reaches). Every key has a DuckDB
+    # twin in oracle_sql() (tests/test_entry_parity.py asserts the two
+    # key sets are equal).
     return {
         # --- curation: packing, similarity, ANN, image near-dups ---
         "sequence_packing": _q_sequence_packing,
@@ -631,16 +553,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "collision_names": _q_collision_names,
         "html_names": _q_html_names,
         # --- scalar-function shapes (X*) ---
-        "route_counts": _q_route_counts,
         "backoff": _q_backoff,
         "sanitize_docs": _q_sanitize_docs,
-        "title_fallback": _q_title_fallback,
         "ts_format": _q_ts_format,
         "page_dir": _q_page_dir,
-        "url_parts": _q_url_parts,
         "markdown_header": _q_markdown_header,
-        # X9 JSON decode/nested access
-        "memento_nav": _q_memento_nav,
     }
 
 
@@ -991,20 +908,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE host_rank <= least(
               CASE WHEN user_id % 2 = 0 THEN CAST(user_id % 5 + 1 AS INT) ELSE 3 END, 3)
         """,
-        "route_counts": """
-            SELECT CASE
-                     WHEN outcome = 'ok' THEN 'ok'
-                     WHEN outcome IN ('http_404','non_html','empty') THEN 'dead_wayback'
-                     WHEN outcome IN ('http_429','http_500','timeout') AND attempt <= 3 THEN 'retry'
-                     ELSE 'dead_wayback'
-                   END AS route, count(*) AS n
-            FROM (SELECT CASE WHEN event_type='error' THEN 'http_500'
-                              WHEN event_type='purchase' THEN 'http_429'
-                              ELSE 'ok' END AS outcome,
-                         CAST(event_id % 5 + 1 AS INT) AS attempt
-                  FROM events)
-            GROUP BY 1
-        """,
         "backoff": """
             SELECT attempt, CAST(pow(2, attempt - 1) AS INT) AS backoff_epochs, count(*) AS n
             FROM (SELECT CAST(event_id % 4 + 1 AS INT) AS attempt FROM events)
@@ -1013,13 +916,6 @@ def oracle_sql() -> dict[str, str]:
         "sanitize_docs": f"""
             SELECT doc_id, {_sanitize_expr("(' . ' || substr(text, 1, 30) || '? ')")} AS fname
             FROM documents
-        """,
-        "title_fallback": """
-            SELECT doc_id,
-                   upper(substr(seg2, 1, 1)) || substr(seg2, 2) AS title
-            FROM (SELECT doc_id,
-                         replace(replace('item-' || doc_id || '_' || lang, '-', ' '), '_', ' ') AS seg2
-                  FROM documents)
         """,
         "ts_format": """
             SELECT event_id, strftime(strptime(strftime(ts, '%Y%m%d%H%M%S'), '%Y%m%d%H%M%S'),
@@ -1211,11 +1107,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, 'output/' || source || '/sub_dir' AS dir
             FROM documents
         """,
-        "url_parts": """
-            SELECT doc_id, 'ex.com' AS host,
-                   '/' || source || '/sub%20dir/item-' || doc_id AS path
-            FROM documents
-        """,
         "markdown_header": """
             SELECT event_id,
                    '# Event ' || event_id || '\\n\\n_Source URL: https://ex.com/e/'
@@ -1240,35 +1131,6 @@ def oracle_sql() -> dict[str, str]:
             FROM grams g JOIN ev USING (sh)
             WHERE g.doc_id % 50 != 0
             GROUP BY g.doc_id
-        """,
-        "memento_nav": """
-            WITH raw AS (
-              SELECT doc_id,
-                     CASE
-                       WHEN doc_id % 4 = 0 THEN
-                         '{"mementos":{"closest":{"datetime":"20240101000000","uri":["https://memento.mirror.example.net/'
-                         || (doc_id % 99999) || '/https://ex.com/' || source || '/item-' || doc_id || '"]}}}'
-                       WHEN doc_id % 4 = 1 THEN
-                         '{"mementos":{"closest":{"datetime":"20240101000000","uri":["https://web.archive.org/web/20240101000000/https://ex.com/'
-                         || source || '/item-' || doc_id || '"]}}}'
-                       WHEN doc_id % 4 = 2 THEN '{"mementos":{"first":{"uri":[]}}}'
-                       ELSE NULL
-                     END AS body
-              FROM documents
-            ),
-            nav AS (
-              SELECT doc_id,
-                     json_extract_string(body, '$.mementos.closest.uri[0]') AS uri0
-              FROM raw
-            )
-            SELECT doc_id,
-                   CASE WHEN uri0 IS NOT NULL
-                             AND NOT contains(coalesce(regexp_extract(uri0, '^[a-z]+://([^/]+)', 1), ''), 'web.archive.org')
-                        THEN uri0 END AS memento_uri,
-                   CASE WHEN uri0 IS NULL THEN 'none'
-                        WHEN contains(coalesce(regexp_extract(uri0, '^[a-z]+://([^/]+)', 1), ''), 'web.archive.org') THEN 'loop'
-                        ELSE 'found' END AS lookup_result
-            FROM nav
         """,
         "embedding_neardup_lsh": _neardup_lsh_sql(0.45),
         "stratified_sample": f"""

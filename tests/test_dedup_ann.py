@@ -471,10 +471,16 @@ def test_ivf_assignment_matches_python_fold(spark):
 def test_ivf_topk_builds_in_bounded_py4j_calls(emb, monkeypatch):
     """Building the IVF query at 16 clusters x 64 dims makes a fixed,
     small number of py4j round trips: the codebook is one literal, not
-    a lit column per float (which cost ~17k round trips)."""
+    a lit column per float (which cost ~17k round trips). Only the
+    commands the build sends count: handles that earlier tests left in
+    reference cycles are collected first, and the deletes that Python's
+    GC sends for any it frees during the build are skipped, so the
+    count does not depend on which tests ran before."""
+    import gc
     import random
 
     import py4j.clientserver
+    import py4j.protocol
 
     from web_archive_downloader_spark.operators.ann import ivf_topk
 
@@ -482,10 +488,14 @@ def test_ivf_topk_builds_in_bounded_py4j_calls(emb, monkeypatch):
     centers = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(16)]
     calls = [0]
     real = py4j.clientserver.ClientServerConnection.send_command
+    delete = py4j.protocol.MEMORY_COMMAND_NAME + py4j.protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
     def counting(self, command):
-        calls[0] += 1
+        if not command.startswith(delete):
+            calls[0] += 1
         return real(self, command)
+
+    gc.collect()
 
     monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
     ivf_topk(emb, [3, 17, 42], k=10, n_probe=3, centroids=centers)

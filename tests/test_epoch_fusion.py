@@ -97,7 +97,7 @@ def _sched(spark):
 
 
 def test_page_pass_matches_standalone_stages(spark, monkeypatch):
-    from web_archive_downloader_spark.functions.scalar import route_col
+    from web_archive_downloader_spark.functions.scalar import route_of
     from web_archive_downloader_spark.operators.images import (
         extract_captions_stage,
         images_from_assets,
@@ -114,9 +114,13 @@ def test_page_pass_matches_standalone_stages(spark, monkeypatch):
     monkeypatch.setattr(shim, "wayback_fetch_sim", _server)
     sched = _sched(spark)
 
-    # standalone chain, as the per-stage epoch ran it
-    routed = fetch_stage(sched).withColumn(
-        "route", route_col(F.col("outcome"), F.col("attempt"), CFG.max_retries)
+    # standalone chain, as the per-stage epoch ran it, routed by the
+    # kernel the page pass calls (tests/test_scalar.py checks route_of
+    # against the oracle's retry loop)
+    fetched = fetch_stage(sched)
+    routed = spark.createDataFrame(
+        [(*r, route_of(r.outcome, r.attempt, CFG.max_retries)) for r in fetched.collect()],
+        T.StructType(fetched.schema.fields + [T.StructField("route", T.StringType())]),
     ).cache()
     ok = routed.filter(F.col("route") == "ok")
     extracted = extract_stage(ok.select("url", "ts", "seq", "attempt", "html"), CFG)

@@ -2,6 +2,7 @@
 batched through Spark once per property.
 
 - Catalyst chains == pure-Python kernels on arbitrary strings/URLs
+- the URL fallback title's shape on random URLs (no Spark)
 - DOM parse/serialize stability (markdown invariance on reparse —
   the exact property the deferred-finalize design relies on)
 - collision replay == oracle FakeFS replay on random name streams
@@ -10,6 +11,7 @@ batched through Spark once per property.
 
 import random
 import string
+from urllib.parse import urlparse
 
 import pandas as pd
 from hypothesis import given, settings
@@ -19,11 +21,7 @@ from pyspark.sql import functions as F
 from web_archive_downloader_spark.content import htmldom
 from web_archive_downloader_spark.content.extract import html_to_markdown, url_fallback_title
 from web_archive_downloader_spark.content.paths import page_dir, sanitize_filename
-from web_archive_downloader_spark.functions.scalar import (
-    page_dir_col,
-    sanitize_filename_col,
-    url_fallback_title_col,
-)
+from web_archive_downloader_spark.functions.scalar import page_dir_col, sanitize_filename_col
 
 CHARS = string.ascii_letters + string.digits + " .\\/*?:'\"<>|-_~%#" + "éžüñ中"
 
@@ -51,13 +49,19 @@ def test_url_title_and_dir_random_batch(spark):
         ]
         url = "https://ex.com/" + "/".join(segs) + ("/" if rng.random() < 0.3 else "")
         urls.append(url.replace("//", "/").replace("https:/", "https://"))
+    for url in urls:
+        # 'Homepage' exactly for an empty path; otherwise the last
+        # segment with '-'/'_' as spaces and only its first char recased
+        title = url_fallback_title(url)
+        path = urlparse(url).path.strip("/")
+        assert (title == "Homepage") == (not path), url
+        assert "-" not in title and "_" not in title, url
+        if path:
+            last = path.split("/")[-1].replace("-", " ").replace("_", " ")
+            assert title[0] == last[0].upper() and title[1:] == last[1:], url
     df = spark.createDataFrame(pd.DataFrame({"u": urls}))
-    rows = df.select(
-        url_fallback_title_col(F.col("u")).alias("t"), page_dir_col(F.col("u")).alias("d")
-    ).collect()
-    for url, r in zip(urls, rows):
-        assert r.t == url_fallback_title(url), url
-        assert r.d == page_dir(url), url
+    dirs = [r.d for r in df.select(page_dir_col(F.col("u")).alias("d")).collect()]
+    assert dirs == [page_dir(u) for u in urls]
 
 
 @settings(max_examples=150, deadline=None)

@@ -1,11 +1,19 @@
 """X1-X11 Catalyst expression chains vs the pure-Python kernels,
 including the reference's own parametrized cases
-(/root/reference/tests/test_file_handler.py:18-30,
-tests/test_html_processor.py:18-27)."""
+(reference tests/test_file_handler.py:18-30,
+tests/test_html_processor.py:18-27), and the Python kernels the page
+pass runs per row (routing, the URL fallback title, Memento
+navigation) vs the reference semantics: the sequential oracle's retry
+loop, datagen's Memento outcomes and fixed expected strings. The
+kernel tests start no Spark."""
+
+import json
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+import web_archive_downloader_spark.oracle.simulator as simulator
 from web_archive_downloader_spark.content.paths import (
     format_archived_ts,
     markdown_base_filename,
@@ -13,14 +21,21 @@ from web_archive_downloader_spark.content.paths import (
     sanitize_filename,
 )
 from web_archive_downloader_spark.content.extract import url_fallback_title
+from web_archive_downloader_spark.datagen import (
+    gen_urls,
+    memento_api_json,
+    memento_outcome,
+    wayback_fetch_sim,
+)
 from web_archive_downloader_spark.functions.scalar import (
     format_archived_ts_col,
     markdown_base_filename_col,
     page_dir_col,
+    route_of,
     sanitize_filename_col,
-    url_fallback_title_col,
     valid_ts_col,
 )
+from web_archive_downloader_spark.sources.fetch_shim import memento_navigate
 
 # Ported from reference tests/test_file_handler.py:18-30 + extras
 SANITIZE_CASES = [
@@ -39,13 +54,16 @@ SANITIZE_CASES = [
     ("trailing dot.", "trailing_dot"),
 ]
 
+# (url, title) per html_processor.py:84-98: last path segment, '-'/'_'
+# to spaces, first char only uppercased; empty path -> 'Homepage'
 URL_TITLE_CASES = [
-    "https://ex.com/my-cool_page",
-    "https://ex.com/",
-    "https://ex.com",
-    "https://ex.com/a/b/c-d",
-    "https://ex.com/blog/",
-    "https://ex.com/UPPER-case",
+    ("https://ex.com/my-cool_page", "My cool page"),
+    ("https://ex.com/", "Homepage"),
+    ("https://ex.com", "Homepage"),
+    ("https://ex.com/a/b/c-d", "C d"),
+    ("https://ex.com/blog/", "Blog"),
+    ("https://ex.com/UPPER-case", "UPPER case"),  # not initcap (html_processor.py:94)
+    ("https://ex.com/a/b_/?q=x-y", "B "),
 ]
 
 DIR_CASES = [
@@ -65,13 +83,8 @@ def test_sanitize_matches_kernel(spark):
     assert got == [sanitize_filename(c[0]) for c in SANITIZE_CASES]
 
 
-def test_url_fallback_title_matches_kernel(spark):
-    df = spark.createDataFrame(pd.DataFrame({"url": URL_TITLE_CASES}))
-    got = [r.t for r in df.select(url_fallback_title_col(F.col("url")).alias("t")).collect()]
-    assert got == [url_fallback_title(u) for u in URL_TITLE_CASES]
-    assert got[1] == "Homepage"
-    assert got[0] == "My cool page"
-    assert got[5] == "UPPER case"  # first char only (html_processor.py:94)
+def test_url_fallback_title_matches_kernel():
+    assert [url_fallback_title(u) for u, _ in URL_TITLE_CASES] == [t for _, t in URL_TITLE_CASES]
 
 
 def test_page_dir_matches_kernel(spark):
@@ -147,3 +160,104 @@ def test_canonical_url_kernel_lattice_and_catalyst_parity(spark):
         df.select(canonical_url_col(F.col("u"))).explain("formatted")
     assert "BatchEvalPython" not in buf.getvalue()
     assert "ArrowEvalPython" not in buf.getvalue()
+
+
+# ---- the Python kernels of the page pass vs the reference -------------
+
+def _routed_fetch(url, max_retries):
+    """The crawl's retry walk for one url: attempt k is fetched in some
+    epoch and re-queued while route_of says 'retry'. Returns (html or
+    None, attempts)."""
+    for attempt in range(1, max_retries + 3):
+        outcome, html = wayback_fetch_sim(url, attempt)
+        route = route_of(outcome, attempt, max_retries)
+        if route != "retry":
+            return (html if route == "ok" else None), attempt
+    raise AssertionError(f"{url}: still 'retry' after {attempt} attempts")
+
+
+@pytest.mark.parametrize("max_retries", [0, 1, 3])
+def test_route_of_walks_like_the_oracle_retry_loop(monkeypatch, max_retries):
+    calls = []
+
+    def counted(url, attempt):
+        calls.append(attempt)
+        return wayback_fetch_sim(url, attempt)
+
+    monkeypatch.setattr(simulator, "wayback_fetch_sim", counted)
+    attempts_seen = set()
+    for url in gen_urls(300):
+        calls.clear()
+        want = simulator._fetch_with_retries(url, max_retries)
+        got, attempts = _routed_fetch(url, max_retries)
+        assert (got, attempts) == (want, len(calls)), url
+        attempts_seen.add(attempts)
+    # the urls reach every attempt count the retry budget allows
+    assert attempts_seen == set(range(1, max_retries + 2))
+
+
+ROUTE_CASES = [
+    (outcome, attempt, want)
+    for outcome, within, beyond in [
+        ("ok", "ok", "ok"),
+        ("http_404", "dead_wayback", "dead_wayback"),
+        ("non_html", "dead_wayback", "dead_wayback"),
+        ("empty", "dead_wayback", "dead_wayback"),
+        ("http_429", "retry", "dead_wayback"),
+        ("http_500", "retry", "dead_wayback"),
+        ("timeout", "retry", "dead_wayback"),
+    ]
+    for attempt, want in [(1, within), (2, within), (3, beyond)]
+]
+
+
+@pytest.mark.parametrize("outcome,attempt,want", ROUTE_CASES)
+def test_route_of_table(outcome, attempt, want):
+    assert route_of(outcome, attempt, max_retries=2) == want
+
+
+def test_memento_navigate_follows_datagen_outcomes():
+    urls = [f"https://example.com/dead/{i}" for i in range(200)]
+    seen = set()
+    for u in urls:
+        m = memento_outcome(u)
+        uri, res = memento_navigate(memento_api_json(u))
+        seen.add(m)
+        if m in ("ok", "non_html"):
+            assert res == "found" and uri is not None
+            assert "web.archive.org" not in uri
+            assert uri.endswith("/" + u)  # original embedded in the mirror URI
+        elif m == "loop":
+            # the API DID return a closest uri, but the loop guard drops it
+            assert res == "loop" and uri is None
+            assert "web.archive.org" in memento_api_json(u)
+        else:
+            assert res == "none" and uri is None
+    assert seen == {"ok", "non_html", "loop", "none"}
+
+
+def _closest(uri):
+    return json.dumps({"mementos": {"closest": {"datetime": "20240101000000", "uri": uri}}})
+
+
+MIRROR = "https://memento.mirror.example.net/7/https://ex.com/a/item-1"
+MEMENTO_BODIES = [
+    (_closest([MIRROR]), (MIRROR, "found")),
+    (_closest(["https://web.archive.org/web/20240101000000/https://ex.com/a"]), (None, "loop")),
+    (json.dumps({"mementos": {"first": {"uri": []}}}), (None, "none")),  # no 'closest'
+    (None, (None, "none")),  # absent body (a 404)
+    ("", (None, "none")),
+    ('{"mementos": {"closest": ', (None, "none")),  # invalid JSON
+    (_closest(MIRROR), (None, "none")),  # uri is not a list
+    (_closest([]), (None, "none")),
+    (_closest([None]), (None, "none")),
+    (_closest([7]), (None, "none")),
+    (json.dumps(["mementos"]), (None, "none")),
+    (json.dumps({"mementos": ["closest"]}), (None, "none")),
+    (json.dumps({"mementos": {"closest": [MIRROR]}}), (None, "none")),
+]
+
+
+@pytest.mark.parametrize("body,want", MEMENTO_BODIES)
+def test_memento_navigate_body_shapes(body, want):
+    assert memento_navigate(body) == want

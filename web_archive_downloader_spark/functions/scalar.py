@@ -1,9 +1,11 @@
 """Scalar operators as pure Catalyst expression chains (SURVEY §2.8).
 
-Everything here compiles to JVM expressions inside whole-stage
-codegen — no Python UDFs. Each function mirrors a reference scalar
-(citations inline) and is property-tested against the pure-Python
-kernel in content/paths.py / content/extract.py.
+Everything here but ``route_of`` compiles to JVM expressions inside
+whole-stage codegen — no Python UDFs. Each function mirrors a reference
+scalar (citations inline). The path and filename chains are
+property-tested against their pure-Python kernels in content/paths.py;
+``route_of``, which the page pass calls per row, is tested against the
+oracle's retry loop (oracle/simulator.py:_fetch_with_retries).
 """
 
 from __future__ import annotations
@@ -11,11 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config import (
-    FILENAME_MAX_LENGTH,
-    HOMEPAGE_TITLE,
-    UNTITLED_FILENAME,
-)
+from ..config import FILENAME_MAX_LENGTH, UNTITLED_FILENAME
 
 # Java regex for the invalid-filename class (file_handler.py:46).
 _INVALID_CLASS = "[\\\\/*?:'\"<>|]"
@@ -42,22 +40,6 @@ def url_path_col(url: Column) -> Column:
 
 def url_host_col(url: Column) -> Column:
     return F.parse_url(url, F.lit("HOST"))
-
-
-def url_fallback_title_col(url: Column) -> Column:
-    """X2's relational part (html_processor.py:84-98): last path
-    segment, '-'/'_' to spaces, FIRST char only uppercased
-    (html_processor.py:94 — deliberately not initcap); empty path ->
-    'Homepage', segment that cleans to empty -> 'untitled'."""
-    path_part = F.regexp_replace(url_path_col(url), "^/+|/+$", "")
-    last = F.element_at(F.split(path_part, "/"), -1)
-    cleaned = F.translate(last, "-_", "  ")
-    titled = F.concat(F.upper(F.substring(cleaned, 1, 1)), F.substring(cleaned, 2, 1_000_000))
-    return (
-        F.when(F.length(path_part) == 0, F.lit(HOMEPAGE_TITLE))
-        .when(F.length(cleaned) == 0, F.lit(UNTITLED_FILENAME))
-        .otherwise(titled)
-    )
 
 
 def format_archived_ts_col(ts14: Column) -> Column:
@@ -132,27 +114,15 @@ def backoff_epochs_col(attempt: Column) -> Column:
     return F.pow(F.lit(2.0), attempt.cast("double") - 1).cast("int")
 
 
-def route_col(outcome: Column, attempt: Column, max_retries: int) -> Column:
-    """F12 routing (wayback_client.py:82-107; decorators.py:116-158):
-    ok -> 'ok'; 404/empty/non-html -> immediate wayback-dead (memento
-    fallback); 429/5xx/timeout -> 'retry' while attempts remain, else
-    wayback-dead."""
-    retryable = outcome.isin("http_429", "http_500", "timeout")
-    return (
-        F.when(outcome == "ok", F.lit("ok"))
-        .when(outcome.isin("http_404", "non_html", "empty"), F.lit("dead_wayback"))
-        .when(retryable & (attempt <= max_retries), F.lit("retry"))
-        .otherwise(F.lit("dead_wayback"))
-    )
-
-
 def route_of(outcome: str, attempt: int, max_retries: int) -> str:
-    """route_col for one row, in Python (the fused page pass routes
-    inside its task so the memento fallback can run in the same pass)."""
+    """F12 routing of one fetch attempt (wayback_client.py:82-107;
+    decorators.py:116-158): ok -> 'ok'; 404/empty/non-html -> immediate
+    wayback-dead (memento fallback); 429/5xx/timeout -> 'retry' while
+    attempts remain, else wayback-dead. Python, not a Column: the page
+    pass routes inside its task so the memento fallback can run in the
+    same pass."""
     if outcome == "ok":
         return "ok"
-    if outcome in ("http_404", "non_html", "empty"):
-        return "dead_wayback"
     if outcome in ("http_429", "http_500", "timeout") and attempt <= max_retries:
         return "retry"
     return "dead_wayback"

@@ -29,7 +29,6 @@ def per_host_topk(
     salt_buckets: int = 8,
     host_col: str = "host",
     order_cols: tuple[str, ...] = ("priority", "depth", "seq"),
-    budgets: DataFrame | None = None,
     budget_col: str | None = None,
 ) -> DataFrame:
     """Select <= k rows per host, ordered by order_cols (ascending).
@@ -37,12 +36,11 @@ def per_host_topk(
     ``host_rank`` (1-based). Deterministic: order_cols must be a total
     order within a host (seq is unique).
 
-    ``budgets`` (host, host_budget) — e.g. robots crawl_delay-derived
-    token counts — overrides k per host (broadcast join; missing
-    hosts fall back to k). The salted pre-pass still caps at k, so
-    budgets above k are clamped to k by construction. ``budget_col``
-    names a per-row budget column the rows already carry (null = k),
-    the join-free form of ``budgets``; it is dropped from the output."""
+    ``budget_col`` names a per-row budget column the rows already carry
+    — the epoch's robots crawl_delay-derived token count — that
+    overrides k for its host (null = k); it is dropped from the output.
+    The salted pre-pass still caps at k, so budgets above k are clamped
+    to k by construction."""
     order = [F.asc(c) for c in order_cols]
     if salt_buckets > 1:
         salt = F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
@@ -56,9 +54,6 @@ def per_host_topk(
         pre = frontier
     w2 = Window.partitionBy(host_col).orderBy(*order)
     ranked = pre.withColumn("host_rank", F.row_number().over(w2))
-    if budgets is not None:
-        ranked = ranked.join(F.broadcast(budgets), host_col, "left")
-        budget_col = "host_budget"
     if budget_col is not None:
         cap = F.least(F.coalesce(F.col(budget_col), F.lit(k)), F.lit(k))
         return ranked.filter(F.col("host_rank") <= cap).drop(budget_col)

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from ..config import EngineConfig
 from ..datagen import MEMENTO_NOW_TS
 from ..functions.scalar import (
+    backoff_epochs_col,
     markdown_base_filename_col,
     markdown_header_col,
     page_dir_col,
@@ -316,8 +317,7 @@ class CrawlPlan:
             retry = page.filter(F.col("route") == "retry").select(
                 "url", "ts", "host", "depth", "priority", "seq",
                 (F.col("attempt") + 1).alias("attempt"),
-                (F.lit(epoch + 1) + F.pow(F.lit(2.0), F.col("attempt").cast("double") - 1).cast("int") - 1)
-                .cast("int").alias("eligible_epoch"),
+                (F.lit(epoch) + backoff_epochs_col(F.col("attempt"))).alias("eligible_epoch"),
             )
             new_frontier = new_frontier.unionByName(retry)
             if cfg.expand_links:

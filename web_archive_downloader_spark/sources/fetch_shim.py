@@ -368,9 +368,9 @@ def _extract(html: str | None, url: str, selectors) -> tuple:
 
 
 def memento_navigate(raw: str | None) -> tuple[str | None, str]:
-    """memento_lookup_stage's navigation for one response body, in
-    Python: (memento_uri, lookup_result). A missing or malformed body,
-    or one without ``mementos.closest.uri[0]``, is 'none'; a
+    """Memento TimeTravel navigation of one response body, as the page
+    pass runs it: (memento_uri, lookup_result). A missing or malformed
+    body, or one without ``mementos.closest.uri[0]``, is 'none'; a
     web.archive.org closest uri is 'loop' (memento_client.py:45-61)."""
     from urllib.parse import urlsplit
 
@@ -423,11 +423,12 @@ def process_page(url: str, attempt: int, config: EngineConfig, fetch=None) -> di
     """Everything an epoch does to one scheduled URL, with ONE parse of
     the fetched page: wayback fetch -> route -> (ok) extract + asset
     discovery + asset fetch + captions + image decode + links, or
-    (dead) memento lookup + fetch + extract. Each step reuses the
-    kernel of the standalone stage it replaces (fetch_stage, route_col,
-    extract_stage, find_assets_stage, asset_fetch_stage,
-    extract_captions_stage, images_from_assets, memento_stage), so the
-    values are the ones those stages produce.
+    (dead) memento lookup + fetch + extract. Routing is
+    functions/scalar.py:route_of; every other step reuses the kernel of
+    the standalone stage it replaces (fetch_stage, extract_stage,
+    find_assets_stage, asset_fetch_stage, extract_captions_stage,
+    images_from_assets, memento_stage), so the values are the ones
+    those stages produce.
 
     Returns the page-pass columns (see page_pass_stage). ``assets``
     lists every found asset of an enabled kind (``fetched`` False =
