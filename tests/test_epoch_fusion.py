@@ -320,9 +320,10 @@ def test_kill_and_resume_at_every_epoch_matches_oracle(fused_crawl, spark):
 def test_every_state_file_carries_the_packed_schema(spark, tmp_path, monkeypatch):
     """Registered tables reach disk only through packed writes, each
     member cast to TABLES: after a checkpoint seed, a robots crawl, a
-    kill/resume and compaction, every parquet file under the store root
-    but the external robots table's has the footer types of the packed
-    union, the crawl still equals the oracle, and building a read of
+    kill/resume, compaction and a bucketize, every parquet file under
+    the store root but the external robots table's has the footer types
+    of the packed union (a bucketed url_seen generation: url_seen's
+    alone), the crawl still equals the oracle, and building a read of
     any registered table runs no schema-inference job."""
     import pyarrow.parquet as pq
 
@@ -333,8 +334,10 @@ def test_every_state_file_carries_the_packed_schema(spark, tmp_path, monkeypatch
     store, plan = _store(spark, str(root), cfg, checkpoint)
     plan.run(cdx_dataframe(spark, raw))
     store.truncate_to_epoch(1)
-    # compaction fires in the resumed leg, over seed and epoch dirs
+    # compaction and a bucketize fire in the resumed leg, over seed and
+    # epoch dirs
     monkeypatch.setattr(crawl_mod, "AUTO_COMPACT_MAX_DIRS", 2)
+    monkeypatch.setattr(crawl_mod, "AUTO_BUCKETIZE_MIN_ROWS", 24)
     CrawlPlan(spark, store, cfg).run(cdx_dataframe(spark, raw), resume=True)
     oracle = run_oracle(raw, cfg, checkpoint=set(checkpoint), robots=RULES)
     assert _order_and_seen(store) == (oracle.crawl_order, oracle.seen)
@@ -351,14 +354,18 @@ def test_every_state_file_carries_the_packed_schema(spark, tmp_path, monkeypatch
 
     arrow = {"string": "string", "int": "int32", "bigint": "int64",
              "double": "double", "binary": "binary"}
-    want = [(f.name, arrow[f.dataType.simpleString()]) for f in union_schema(TABLES).fields]
+    def footer(schema):
+        return [(f.name, arrow[f.dataType.simpleString()]) for f in schema.fields]
+
     files = [p for p in root.rglob("*.parquet") if "robots" not in p.parts]
     assert any("compacted=" in p.parent.name for p in files)
+    assert any(p.parent.name.startswith("bucketed=") for p in files)
     drift = {}
     for p in files:
         got = [(f.name, str(f.type)) for f in pq.read_schema(p)]
-        if got != want:
-            drift[str(p.relative_to(root))] = sorted(set(got) - set(want))
+        bucketed = p.parent.name.startswith("bucketed=")
+        if got != footer(TABLES["url_seen"] if bucketed else union_schema(TABLES)):
+            drift[str(p.relative_to(root))] = got
     assert not drift, drift
 
 

@@ -10,6 +10,7 @@ REGISTRY_ONLY, so the registry cannot keep alive a function the crawl
 does not run. No Spark."""
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -131,16 +132,29 @@ def test_registry_only_names_live_and_have_a_query_caller():
         assert name in set().union(*_refs(funcs[query_fn[key]])), f"{key} does not call {name}"
 
 
+def _touches_the_layout(tree: ast.AST) -> bool:
+    """Names a manifest accessor, writes a catalog table (saveAsTable,
+    bucketBy) or holds a CREATE ... TABLE statement."""
+    owned = {"read_manifest", "_write_manifest", "saveAsTable", "bucketBy"}
+    return bool(owned & set().union(*_refs(tree))) or any(
+        isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and re.search(r"\bCREATE\b[\w\s]*\bTABLE\b", n.value, re.I)
+        for n in ast.walk(tree)
+    )
+
+
 def test_only_the_store_touches_the_manifest():
     """The on-disk layout has one owner: no engine module but
-    sources/state.py names the manifest accessors, so every other
-    module reaches crawl state through StateStore's methods."""
+    sources/state.py names the manifest accessors or registers a
+    catalog table, so every other module reaches crawl state through
+    StateStore's methods and no state lands in the session's
+    warehouse."""
     store = ROOT / "web_archive_downloader_spark" / "sources" / "state.py"
     touching = sorted(
         str(path.relative_to(ROOT))
         for path in ENGINE
-        if path != store
-        and {"read_manifest", "_write_manifest"}
-        & set().union(*_refs(ast.parse(path.read_text(), str(path))))
+        if path != store and _touches_the_layout(ast.parse(path.read_text(), str(path)))
     )
-    assert not touching, "manifest read or written outside the store: " + ", ".join(touching)
+    assert not touching, "manifest or catalog touched outside the store: " + ", ".join(touching)
+    assert _touches_the_layout(ast.parse(store.read_text(), str(store)))

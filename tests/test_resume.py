@@ -1,7 +1,15 @@
 """Kill-and-resume: truncate state to an earlier epoch snapshot,
 re-run, and require identical downstream outputs + ordering
-(BASELINE.json:6,14). Also checkpoint-skip semantics (main.py:62-64).
+(BASELINE.json:6,14), also from a store another process wrote at
+another parallelism. Also checkpoint-skip semantics (main.py:62-64).
 """
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
 
 from web_archive_downloader_spark.datagen import default_config, gen_cdx_records
 from web_archive_downloader_spark.oracle.simulator import run_oracle
@@ -14,6 +22,25 @@ from web_archive_downloader_spark.sources.cdx import cdx_dataframe
 from web_archive_downloader_spark.sources.state import StateStore
 
 N = 30
+ROOT = Path(__file__).resolve().parent.parent
+
+# A crawl of gen_cdx_records(30, seed=17) at local[1], stopped after 3
+# epochs. argv: store root, bucketize_seen_every_epochs, warehouse dir.
+KILLED_WRITER = """
+import sys
+from web_archive_downloader_spark.datagen import default_config, gen_cdx_records
+from web_archive_downloader_spark.plans.crawl import CrawlPlan
+from web_archive_downloader_spark.session import get_spark
+from web_archive_downloader_spark.sources.cdx import cdx_dataframe
+from web_archive_downloader_spark.sources.state import StateStore
+
+root, every, warehouse = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+spark = get_spark("killed-writer", cores=1, extra_conf={"spark.sql.warehouse.dir": warehouse})
+cfg = default_config(epoch_seconds=20.0, max_retries=2, bucketize_seen_every_epochs=every)
+raw = gen_cdx_records(n_urls=30, seed=17)
+CrawlPlan(spark, StateStore(root, spark), cfg).run(cdx_dataframe(spark, raw), max_epochs=3)
+spark.stop()
+"""
 
 
 def _run_full(spark, store_dir, cfg, raw):
@@ -40,7 +67,6 @@ def test_stage_packed_rejects_schema_drift(spark, tmp_path):
     """stage_packed must refuse a member df whose columns do not
     exactly match the registry — silently null-filling a missing
     member column would mask schema drift as all-null state rows."""
-    import pytest
     from pyspark.sql import functions as F
 
     store = StateStore(str(tmp_path / "st"), spark)
@@ -83,6 +109,62 @@ def test_kill_and_resume_identical(spark, tmp_path):
     assert resumed[3] == full[3]  # asset names
 
 
+@pytest.mark.parametrize("every", [0, 2], ids=["unbucketized", "bucketized"])
+def test_resume_in_a_new_process_at_another_parallelism(spark, tmp_path, every):
+    """A crawl killed after 3 epochs in a local[1] process resumes in
+    this session, at SPARK_GRAFT_CPUS cores, to the oracle's crawl
+    order, url_seen and docs: everything the resume reads lives under
+    the store root, bucketed url_seen generations included (keyed state
+    outlives a change in worker count, as in Megaphone, VLDB 2019)."""
+    root = str(tmp_path / "store")
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")])),
+        SPARK_DRIVER_MEM="1g",
+    )
+    writer = subprocess.run(
+        [sys.executable, "-c", KILLED_WRITER, root, str(every), str(tmp_path / "warehouse")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert writer.returncode == 0, writer.stderr[-4000:]
+
+    raw = gen_cdx_records(n_urls=30, seed=17)
+    cfg = default_config(epoch_seconds=20.0, max_retries=2, bucketize_seen_every_epochs=every)
+    store = StateStore(root, spark)
+    assert store.last_epoch == 2
+    assert bool(store._bucketed_gens(store.read_manifest(), "url_seen")) == bool(every)
+    plan = CrawlPlan(spark, store, cfg)
+    plan.run(cdx_dataframe(spark, raw), resume=True)
+    docs, assets = plan.finalize_outputs()
+    order, seen, _, _ = _snapshot(store, docs, assets)
+    oracle = run_oracle(raw, cfg)
+    assert order == oracle.crawl_order
+    assert seen == oracle.seen
+    got = {r.url: (r.title, r.dir, r.filename, r.markdown) for r in docs.collect()}
+    exp = {d["url"]: (d["title"], d["dir"], d["filename"], d["markdown"]) for d in oracle.docs}
+    assert got == exp
+    store.destroy()
+
+
+def test_compaction_writes_one_file_for_a_small_store(spark, tmp_path):
+    """compact sizes its write from the bytes of the dirs it merges: a
+    few KB of state in three dirs, each of several files, comes out as
+    one file, not one per member and input split."""
+    store = StateStore(str(tmp_path / "cf"), spark)
+    for e in range(3):
+        rows = [(f"https://e.com/{e}/{i}", 10 * e + i, e) for i in range(10)]
+        seen = spark.createDataFrame(rows, URL_SEEN_SCHEMA).repartition(3)
+        processed = seen.selectExpr("url", "seq", "'ok' AS disposition", "epoch")
+        path = store.stage_packed(e, {"url_seen": seen, "processed": processed})
+        store.commit(e, {"url_seen": path, "processed": path})
+    before = sorted(store.read("url_seen").collect()), sorted(store.read("processed").collect())
+    assert store.compact() == 3
+    [merged] = store.read_manifest()["tables"]["__state__"]
+    assert len([f for f in os.listdir(merged) if f.endswith(".parquet")]) == 1
+    after = sorted(store.read("url_seen").collect()), sorted(store.read("processed").collect())
+    assert after == before
+
+
 def test_compaction_preserves_state_and_resume(spark, tmp_path):
     """Compaction, both entry points, in ONE crawl (merged from two
     separate full-crawl tests — same coverage, one multi-epoch run):
@@ -92,7 +174,6 @@ def test_compaction_preserves_state_and_resume(spark, tmp_path):
     before/after, rollback past the floor refused — Iceberg
     snapshot-expiry), then resumed to completion and compared to the
     oracle exactly (order, seen, doc bytes)."""
-    import pytest
     from web_archive_downloader_spark.plans import crawl as crawl_mod
     from web_archive_downloader_spark.plans.crawl import URL_SEEN_SCHEMA
 

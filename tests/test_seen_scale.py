@@ -1,7 +1,12 @@
 """J1 at scale: bounded Bloom state (versioned sketches, saturation
 cap, pid-pruned cogrouped probe — no O(seen) broadcast) and the
 bucketed url_seen base as the default anti-join path (storage-
-partitioned: the big side never shuffles after bucketize)."""
+partitioned: the big side never shuffles after bucketize). The base's
+generations live in ``bucketed=`` dirs under the store root, listed by
+the manifest, and every read reaches them through ``store.read_parts``;
+nothing is written to the session's warehouse."""
+
+import os
 
 import pandas as pd
 import pytest
@@ -156,7 +161,7 @@ def test_saturated_sketch_bounds_bytes_and_stays_exact(spark):
 
 def test_bucketized_crawl_matches_oracle_and_resumes(spark, tmp_path):
     """The default-at-scale J1 path: bucketize_seen_every_epochs folds
-    url_seen into a bucketed catalog table mid-crawl. The crawl must
+    url_seen into bucketed generation dirs mid-crawl. The crawl must
     match the oracle exactly, resume cleanly from the post-bucketize
     manifest, and refuse rollback past the merge point."""
     raw = gen_cdx_records(n_urls=30, seed=17)
@@ -195,6 +200,32 @@ def test_bucketized_crawl_matches_oracle_and_resumes(spark, tmp_path):
     store.destroy()
 
 
+def test_bucketizing_crawl_writes_only_under_its_root(spark, tmp_path):
+    """Bucketed generations are external tables over dirs under the
+    store root: a bucketizing crawl puts nothing in the session's
+    warehouse, and destroy() leaves neither files nor a catalog table."""
+    from urllib.parse import urlparse
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def listing():
+        return set(os.listdir(warehouse)) if os.path.isdir(warehouse) else set()
+
+    files_before = listing()
+    tables_before = {t.name for t in spark.catalog.listTables()}
+    raw = gen_cdx_records(n_urls=12, seed=3)
+    cfg = default_config(epoch_seconds=20.0, max_retries=2, bucketize_seen_every_epochs=1)
+    store = StateStore(str(tmp_path / "wh"), spark)
+    CrawlPlan(spark, store, cfg).run(cdx_dataframe(spark, raw), max_epochs=3)
+    assert store._bucketed_gens(store.read_manifest(), "url_seen")
+    assert store.read("url_seen").count() > 0
+    assert listing() == files_before
+    store.destroy()
+    assert listing() == files_before
+    assert {t.name for t in spark.catalog.listTables()} == tables_before
+    assert not os.path.exists(store.root)
+
+
 def test_bucketized_base_joins_without_big_side_shuffle(spark, tmp_path):
     """After bucketize, the anti-join against the base must be
     storage-partitioned: the bucketed scan feeds the join directly
@@ -205,7 +236,7 @@ def test_bucketized_base_joins_without_big_side_shuffle(spark, tmp_path):
 
     store = StateStore(str(tmp_path / "bj"), spark)
     _commit_seen(store, 0, _seen_df(spark, 0, 4000).repartition(4))
-    store.bucketize("url_seen", buckets=8)
+    store.bucketize(buckets=8)
     [base], _ = store.read_parts("url_seen", URL_SEEN_SCHEMA)
     frontier = _urls_df(spark, 3000, 5000)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -261,20 +292,23 @@ def test_auto_scale_posture_triggers_and_matches_oracle(spark, tmp_path, monkeyp
 
 def test_incremental_bucketize_writes_only_deltas(spark, tmp_path):
     """Each bucketize call after the first writes O(delta) rows into a
-    NEW generation table — never a rewrite of the full base (the
+    NEW generation dir — never a rewrite of the full base (the
     write-amplification killer at a 10^10-row seen set). The chain
-    merges into one table only when it exceeds merge_at."""
+    merges into one generation only when it exceeds merge_at, and the
+    merged generations' dirs are removed."""
     store = StateStore(str(tmp_path / "ib"), spark)
     _commit_seen(store, 0, _seen_df(spark, 0, 1000))
-    n1 = store.bucketize("url_seen", buckets=4)
-    assert spark.table(n1).count() == 1000
+    n1 = store.bucketize(buckets=4)
+    [b1], _ = store.read_parts("url_seen")
+    assert b1.count() == 1000
 
     _commit_seen(store, 1, _seen_df(spark, 1000, 1100))
-    n2 = store.bucketize("url_seen", buckets=4)
-    # the second generation's table holds ONLY the 100 delta rows
-    assert spark.table(n2).count() == 100
+    n2 = store.bucketize(buckets=4)
+    # the second generation holds ONLY the 100 delta rows
+    bases, _ = store.read_parts("url_seen")
+    assert [b.count() for b in bases] == [1000, 100]
     gens = store.read_manifest()["bucketed"]["url_seen"]
-    assert [g["name"] for g in gens] == [n1, n2]
+    assert [g["path"] for g in gens] == [n1, n2]
     # full-relation read still sees every row exactly once
     assert store.read("url_seen", URL_SEEN_SCHEMA).count() == 1100
     # chained anti-join across generations is still exact
@@ -286,14 +320,16 @@ def test_incremental_bucketize_writes_only_deltas(spark, tmp_path):
     )
 
     # nothing new -> no-op, returns newest generation
-    assert store.bucketize("url_seen", buckets=4) == n2
+    assert store.bucketize(buckets=4) == n2
 
-    # chain bound: merge_at=2 folds everything into ONE table
+    # chain bound: merge_at=2 folds everything into ONE generation
     _commit_seen(store, 2, _seen_df(spark, 1100, 1150))
-    n3 = store.bucketize("url_seen", buckets=4, merge_at=2)
+    n3 = store.bucketize(buckets=4, merge_at=2)
     gens = store.read_manifest()["bucketed"]["url_seen"]
-    assert len(gens) == 1 and gens[0]["name"] == n3
-    assert spark.table(n3).count() == 1150
+    assert len(gens) == 1 and gens[0]["path"] == n3
+    [b3], _ = store.read_parts("url_seen")
+    assert b3.count() == 1150
+    assert not os.path.exists(n1) and not os.path.exists(n2)
     assert store.read("url_seen", URL_SEEN_SCHEMA).count() == 1150
     store.destroy()
 
@@ -308,9 +344,9 @@ def test_generation_chain_anti_join_single_exchange(spark, tmp_path):
 
     store = StateStore(str(tmp_path / "gc"), spark)
     _commit_seen(store, 0, _seen_df(spark, 0, 3000))
-    store.bucketize("url_seen", buckets=8)
+    store.bucketize(buckets=8)
     _commit_seen(store, 1, _seen_df(spark, 3000, 4000))
-    store.bucketize("url_seen", buckets=8)
+    store.bucketize(buckets=8)
     bases, delta = store.read_parts("url_seen", URL_SEEN_SCHEMA)
     assert len(bases) == 2
     frontier = _urls_df(spark, 2000, 5000)
@@ -352,7 +388,7 @@ def test_full_j1_chain_plan_shape(spark, tmp_path):
     store = StateStore(str(tmp_path / "fc"), spark)
     seen = _seen_df(spark, 0, 4000)
     _commit_seen(store, 0, seen)
-    store.bucketize("url_seen", buckets=8)
+    store.bucketize(buckets=8)
     [base], delta = store.read_parts("url_seen", URL_SEEN_SCHEMA)
     frontier = _urls_df(spark, 3000, 6000)
     sketches = build_bloom_sketches(seen, 8, 256).localCheckpoint()
@@ -380,7 +416,7 @@ def test_full_j1_chain_plan_shape(spark, tmp_path):
         # line pattern "Exchange" never appears with the bucketed
         # table name below it in the same branch — instead assert the
         # scan node id appears as a DIRECT SortMergeJoin child.
-        m = re.search(r":- +SortMergeJoin LeftAnti.*\n(.*\n)*?.*Scan parquet.*url_seen_b0", plan)
+        m = re.search(r":- +SortMergeJoin LeftAnti.*\n(.*\n)*?.*Scan parquet.*url_seen_", plan)
         assert m is not None
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -436,22 +472,23 @@ def test_p_change_resume_rebuilds_bloom_within_one_epoch(spark, tmp_path):
 
 def test_bucketize_empty_delta_honors_geometry_change(spark, tmp_path):
     """ADVICE r4: bucketize with NO pending deltas must still
-    re-bucketize when the requested buckets/key differ from the
+    re-bucketize when the requested bucket count differs from the
     existing chain's — a seen_partitions config change takes effect
     immediately, not silently on the next delta-carrying call."""
     store = StateStore(str(tmp_path / "gm"), spark)
     _commit_seen(store, 0, _seen_df(spark, 0, 500))
-    n1 = store.bucketize("url_seen", buckets=8)
+    n1 = store.bucketize(buckets=8)
     # no new deltas; same geometry -> no-op returning the newest gen
-    assert store.bucketize("url_seen", buckets=8) == n1
+    assert store.bucketize(buckets=8) == n1
     # no new deltas; CHANGED buckets -> merged re-bucketize now
-    n2 = store.bucketize("url_seen", buckets=4)
+    n2 = store.bucketize(buckets=4)
     assert n2 != n1
     manifest = store.read_manifest()
     gens = store._bucketed_gens(manifest, "url_seen")
-    assert [g["name"] for g in gens] == [n2]
+    assert [g["path"] for g in gens] == [n2]
     assert gens[0]["buckets"] == 4
-    assert spark.table(n2).count() == 500
+    [base], _ = store.read_parts("url_seen")
+    assert base.count() == 500
     store.destroy()
 
 

@@ -69,8 +69,9 @@ class EngineConfig:
     host_salt_buckets: int = 8
     # Partition count for the url_seen hash partitioning (xxhash64).
     seen_partitions: int = 32
-    # Re-materialize url_seen's deltas as bucketed catalog generations
-    # every K epochs: after the first bucketize the J1 anti-join is
+    # Re-materialize url_seen's deltas as bucketed generations (dirs
+    # under the store root, listed by its manifest) every K epochs:
+    # after the first bucketize the J1 anti-join is
     # storage-partitioned — the seen side never shuffles again. This is
     # the production posture at scale (Iceberg bucket(N, url) +
     # incremental rewrite_data_files). Default None = AUTO: bucketize

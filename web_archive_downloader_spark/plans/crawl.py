@@ -749,7 +749,7 @@ class CrawlPlan:
                 # anti-join is storage-partitioned (big side never
                 # shuffles). Bloom keeps covering the merged rows;
                 # compact keeps the packed dir list bounded.
-                store.bucketize("url_seen", buckets=cfg.seen_partitions)
+                store.bucketize(buckets=cfg.seen_partitions)
                 bloom = None
                 if bad_sketches:
                     # the epoch's sketches were unusable (foreign probe

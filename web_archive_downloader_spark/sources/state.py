@@ -13,6 +13,9 @@ implemented as a parquet + manifest layout:
                                                   checkpoint and frontier
                                                   seeds, an inbox drain)
     root/__state__/compacted=<k>[.n]/...         (compaction output)
+    root/__state__/bucketed=<k>[.n]/...          (a url_seen generation:
+                                                  url_seen's columns only,
+                                                  bucketed and sorted by url)
     root/<table>/epoch=<k>/part-*.parquet        (external tables only,
                                                   e.g. robots)
     root/_manifest.json                          (single commit pointer)
@@ -21,15 +24,19 @@ Every table registered in ``TABLES`` lives only in the packed dirs,
 and every packed file carries the full union schema. A commit writes
 its dir first, then atomically replaces the manifest (os.replace on a
 temp file) recording, per table, the list of committed dirs that hold
-its rows; the packed dirs a compaction merges are listed once more
-under ``__state__``. Readers union only manifest-listed dirs — a job
-killed mid-epoch leaves orphan data dirs that are never read, and
-resume restarts from the previous manifest: exactly Iceberg's snapshot
-semantics. No module but this one reads or writes the manifest.
+its rows; packed dirs are listed once more under ``__state__`` (for
+compaction), url_seen's bucketed generations under ``bucketed``.
+Readers union only manifest-listed dirs — a job killed mid-epoch
+leaves orphan data dirs that are never read, and resume restarts from
+the previous manifest: exactly Iceberg's snapshot semantics. No module
+but this one reads or writes the manifest. The session catalog is a
+per-process cache rebuilt from the manifest (see _bucketed_scan), so
+any process, at any parallelism, resumes from the root alone.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -166,6 +173,9 @@ _PACKED_SCHEMA = union_schema(TABLES)
 # epoch and seed dirs.
 _UNCOMPACTED = ("docs_raw", "html_raw", "assets_raw", "images", "frontier")
 
+# Bytes per file of a compaction's merged dir, at most.
+_COMPACT_FILE_BYTES = 128 << 20
+
 
 def _pack(dfs: dict[str, DataFrame]) -> DataFrame:
     """Project several member tables onto the sparse union schema, each
@@ -220,20 +230,22 @@ def _dir_epoch(path: str) -> int:
     return int(os.path.basename(path).split("=", 1)[1].split(".")[0])
 
 
+def _generation_table(path: str) -> str:
+    """The catalog name of the bucketed generation in dir ``path``:
+    derived from the dir alone, so every process names it alike and
+    two stores never share one."""
+    return "url_seen_" + hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:16]
+
+
 class StateStore:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
         os.makedirs(root, exist_ok=True)
-        # catalog-table prefix unique to this store root (the Spark
-        # catalog is session-global; concurrent stores must not share
-        # bucketed-table names)
-        import hashlib
-
-        self._ident = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:10]
-        # one packed scan per dir list, shared by every member read of
-        # it (see _packed_scan); dropped whenever the store writes
-        self._packed_scans: dict[tuple[str, ...], DataFrame] = {}
+        # one scan per packed dir list (see _packed_scan) and per
+        # bucketed generation dir; dropped whenever the store writes
+        self._scans: dict[tuple[str, ...] | str, DataFrame] = {}
+        self._catalog_tables: set[str] = set()  # dropped by destroy
         # one reader for every packed scan: each table reads its own dir
         # list, and a fresh reader costs py4j round trips and JVM objects
         self._packed_reader = spark.read.schema(_PACKED_SCHEMA)
@@ -250,7 +262,7 @@ class StateStore:
             return json.load(f)
 
     def _write_manifest(self, manifest: dict) -> None:
-        self._packed_scans.clear()
+        self._scans.clear()
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f, indent=1)
@@ -284,7 +296,7 @@ class StateStore:
         if table in TABLES:
             raise ValueError(f"{table} is a packed state table: stage it with stage_packed")
         path = os.path.join(self.root, table, f"epoch={epoch}")
-        self._packed_scans.clear()
+        self._scans.clear()
         df.write.mode("overwrite").parquet(path)
         return path
 
@@ -328,7 +340,7 @@ class StateStore:
         seed was committed at."""
         manifest = self.read_manifest()
         epoch = manifest["epoch"]
-        if any(manifest.get("packed_floor", {}).get(t) == epoch for t in dfs):
+        if any(manifest.get("compaction_floor", {}).get(t) == epoch for t in dfs):
             # its dir would sit at the floor, which hides it from reads
             raise ValueError(f"cannot seed {sorted(dfs)}: bucketized at epoch {epoch}")
         staged = {}
@@ -347,7 +359,7 @@ class StateStore:
         the member's floor holds only rows that bucketize merged into
         the bucketed base, so it is not read for that member."""
         paths = manifest["tables"].get(table, [])
-        floor = manifest.get("packed_floor", {}).get(table)
+        floor = manifest.get("compaction_floor", {}).get(table)
         if floor is not None:
             paths = [p for p in paths if _dir_epoch(p) > floor]
         if not paths:
@@ -365,9 +377,9 @@ class StateStore:
         (CacheManager.recacheByPath), so a second, separate scan of the
         same dir would keep listing the replaced files."""
         key = tuple(paths)
-        if key not in self._packed_scans:
-            self._packed_scans[key] = self._packed_reader.parquet(*paths)
-        return self._packed_scans[key]
+        if key not in self._scans:
+            self._scans[key] = self._packed_reader.parquet(*paths)
+        return self._scans[key]
 
     # --- reads (committed snapshots only) ---
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
@@ -378,10 +390,27 @@ class StateStore:
         return delta if out is None else out.unionByName(delta)
 
     def _bucketed_gens(self, manifest: dict, table: str) -> list[dict]:
-        """The table's bucketed GENERATION chain (oldest first). Each
-        bucketize call appends one O(delta) generation; a merge
-        collapses the chain to one."""
+        """The table's bucketed generations, oldest first:
+        ``{"path", "buckets"}`` entries (see bucketize)."""
         return list(manifest.get("bucketed", {}).get(table, []))
+
+    def _bucketed_scan(self, gen: dict) -> DataFrame:
+        """The scan of one bucketed generation. Spark reads a dir as
+        bucketed only through a catalog table, so the first read in a
+        process registers one over the dir: an external table, whose
+        drop leaves the files."""
+        path = gen["path"]
+        if path not in self._scans:
+            name = _generation_table(path)
+            cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in TABLES["url_seen"])
+            location = os.path.abspath(path).replace("\\", "\\\\").replace("'", "\\'")
+            self.spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet CLUSTERED BY "
+                f"(url) SORTED BY (url) INTO {gen['buckets']} BUCKETS LOCATION '{location}'"
+            )
+            self._catalog_tables.add(name)
+            self._scans[path] = self.spark.table(name)
+        return self._scans[path]
 
     def read_parts(
         self, table: str, schema: T.StructType | None = None
@@ -395,10 +424,7 @@ class StateStore:
         TABLES schema; an external table's is its own epoch dirs, read
         with ``schema``."""
         manifest = self.read_manifest()
-        bases = [
-            self.spark.table(g["name"])
-            for g in self._bucketed_gens(manifest, table)
-        ]
+        bases = [self._bucketed_scan(g) for g in self._bucketed_gens(manifest, table)]
         if table in TABLES:
             schema = TABLES[table]
             delta = self._packed_member(table, manifest)
@@ -411,86 +437,55 @@ class StateStore:
             delta = self.spark.createDataFrame([], schema)
         return bases, delta
 
-    def bucketize(
-        self, table: str, buckets: int = 32, key: str = "url", merge_at: int = 4
-    ) -> str:
-        """INCREMENTAL bucketize: fold the table's accumulated DELTA
-        rows (packed rows above the floor) into a NEW bucketed catalog
-        generation (hash-bucketed + sorted by ``key``) and atomically
-        append it to the manifest's generation chain. This is
-        Iceberg's incremental rewrite_data_files with a bucket(N, key)
-        partition transform: each call writes O(delta) rows — NEVER a
-        rewrite of the full (10^10-row at target scale) base — and an
-        anti-join against every generation is storage-partitioned (the
-        big side never shuffles; anti_join_unseen chains the
-        generations).
-
-        The chain is kept short: once it would exceed ``merge_at``
-        generations (or an incompatible buckets/key is requested), ALL
-        generations + delta merge into one table — the rare, amortized
-        O(table) compaction, every-merge_at-th call instead of every
-        call. Write amplification per row is thus 1 + 1/merge_at
-        amortized vs the old rewrite-everything's O(chain length).
-
-        Crash-safe: generation tables are written under fresh names;
-        the manifest swap (os.replace) is the only commit point; a
-        crash before it leaves an orphan catalog table and the old
-        manifest — readers never see a partial state. Rollback past
-        the merge point is refused (compaction_floor), matching
-        snapshot-expiry semantics. Returns the newest table name."""
+    def bucketize(self, buckets: int = 32, merge_at: int = 4) -> str:
+        """INCREMENTAL bucketize (Iceberg's rewrite_data_files with a
+        bucket(N, url) transform): fold url_seen's delta rows (packed
+        rows above its floor) into a NEW generation, bucketed and
+        sorted by url, in a fresh ``bucketed=<epoch>`` dir, appended
+        to the manifest's chain. Each call writes O(delta) rows, never
+        the full base, and an anti-join against each generation is
+        storage-partitioned (the big side never shuffles). Once the
+        chain would exceed ``merge_at`` generations, or another bucket
+        count is asked for, all of it merges into one generation and
+        the merged dirs are swept after the swap. A crash before the
+        manifest swap leaves an orphan dir that no read lists; rollback
+        past the merge point is refused (compaction_floor). Returns
+        the newest generation's dir."""
         manifest = self.read_manifest()
-        gens = self._bucketed_gens(manifest, table)
-        df = self._packed_member(table, manifest)
+        gens = self._bucketed_gens(manifest, "url_seen")
+        df = self._packed_member("url_seen", manifest)
         has_delta = df is not None
-        geometry_mismatch = any(
-            g["buckets"] != buckets or g["key"] != key for g in gens
-        )
+        geometry_mismatch = any(g["buckets"] != buckets for g in gens)
         if not has_delta:
             if not gens:
-                raise ValueError(f"bucketize: table {table} is empty")
+                raise ValueError("bucketize: url_seen is empty")
             if not geometry_mismatch:
-                return gens[-1]["name"]  # nothing new to merge
-            # empty delta but the REQUESTED geometry differs from the
-            # chain's: a seen_partitions config change must re-bucketize
-            # NOW, not silently wait for the next delta-carrying call
+                return gens[-1]["path"]  # nothing new to merge
+            # a seen_partitions change re-bucketizes now, not at the
+            # next call that has a delta
         epoch = manifest["epoch"]
         merging = len(gens) + has_delta > merge_at or geometry_mismatch
         if merging:
             for g in gens:
-                base = self.spark.table(g["name"])
+                base = self._bucketed_scan(g)
                 df = base if df is None else df.unionByName(base)
-        gen_no = 0 if merging else len(gens) + 1
-        existing = {g["name"] for g in gens}
-        while True:
-            name = f"wad_{self._ident}_{table}_b{max(epoch, 0)}g{gen_no}"
-            if name not in existing:
-                break
-            # a geometry-change merge at the same epoch as a prior merge
-            # would reuse the prior generation's name — overwriting a
-            # table the merge is reading FROM; bump until fresh
-            gen_no += 1
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .saveAsTable(name)
+        path = self._fresh_dir(f"bucketed={epoch}")
+        name = _generation_table(path)
+        # overwrite: a dir an earlier merge swept keeps its catalog name
+        df.write.mode("overwrite").bucketBy(buckets, "url").sortBy("url").saveAsTable(
+            name, format="parquet", path=os.path.abspath(path)
         )
-        new_gen = {"name": name, "buckets": buckets, "key": key}
-        manifest.setdefault("bucketed", {})[table] = (
+        self._catalog_tables.add(name)
+        new_gen = {"path": path, "buckets": buckets}
+        manifest.setdefault("bucketed", {})["url_seen"] = (
             [new_gen] if merging else gens + [new_gen]
         )
-        manifest.setdefault("compaction_floor", {})[table] = epoch
-        # the member's rows in dirs committed up to now are superseded
-        # by the base: reads skip those dirs for it, and compact()
-        # leaves its rows out of the merged dir
-        manifest.setdefault("packed_floor", {})[table] = epoch
+        # url_seen's rows in dirs committed up to now are in the
+        # generations: reads and compact() skip them there
+        manifest.setdefault("compaction_floor", {})["url_seen"] = epoch
         self._write_manifest(manifest)  # atomic swap
-        if merging:
-            for g in gens:
-                if g["name"] != name:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {g['name']}")
-        return name
+        self._sweep(manifest, [g["path"] for g in gens])
+        return path
 
     def read_latest_only(self, table: str) -> DataFrame:
         """For tables where each epoch REPLACES state (the frontier):
@@ -509,9 +504,7 @@ class StateStore:
         before the swap see the old dirs; after, the compacted one —
         same rows either way. Member rows a bucketized base supersedes
         are left out; payload and frontier rows stay where they are.
-
-        At crawl scale this is what keeps url_seen readable: 10^4
-        epochs otherwise mean 10^4 directory listings per epoch read.
+        At crawl scale this bounds the dir listings of every read.
 
         ``bloom`` replaces ALL persisted sketch rows (the rebuild after
         a partition-count change): the merged dir carries those
@@ -532,7 +525,11 @@ class StateStore:
             members["bloom"] = bloom
         members = {t: df for t, df in members.items() if df is not None}
         compact_path = self._fresh_dir(f"compacted={manifest['epoch']}")
-        _pack(members).write.parquet(compact_path)
+        # files sized from the merged dirs' bytes on disk (no job), not
+        # one per member and input split
+        nbytes = sum(e.stat().st_size for p in paths for e in os.scandir(p))
+        files = -(-nbytes // _COMPACT_FILE_BYTES) or 1
+        _pack(members).repartition(files).write.parquet(compact_path)
         tables = manifest["tables"]
         for t in TABLES:
             if t in members:
@@ -544,13 +541,17 @@ class StateStore:
         # point is gone — rollback past it must be refused
         manifest.setdefault("compaction_floor", {})[PACKED] = manifest["epoch"]
         self._write_manifest(manifest)  # atomic swap
-        # a dir no list names any more held merged state rows only
-        # (earlier compaction outputs, the checkpoint seed's dirs)
-        listed = {p for ps in tables.values() for p in ps}
+        self._sweep(manifest, paths)
+        return len(paths)
+
+    def _sweep(self, manifest: dict, paths: list[str]) -> None:
+        """Remove each of ``paths`` that the committed manifest no
+        longer lists: its rows were merged into a dir it does list."""
+        listed = {p for ps in manifest["tables"].values() for p in ps}
+        listed |= {g["path"] for gs in manifest.get("bucketed", {}).values() for g in gs}
         for p in paths:
             if p not in listed:
                 shutil.rmtree(p, ignore_errors=True)
-        return len(paths)
 
     def ingested_batches(self) -> set[int]:
         return {int(b) for b in self.read_manifest().get("ingested_batches", {})}
@@ -582,11 +583,8 @@ class StateStore:
         self._write_manifest(manifest)
 
     def destroy(self) -> None:
-        manifest = self.read_manifest()
-        for table in manifest.get("bucketed", {}):
-            for g in self._bucketed_gens(manifest, table):
-                try:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {g['name']}")
-                except Exception:
-                    pass
         shutil.rmtree(self.root, ignore_errors=True)
+        for name in self._catalog_tables:
+            # external tables: a drop removes only the catalog entry
+            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+        self._catalog_tables.clear()
