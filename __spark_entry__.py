@@ -52,42 +52,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Shared MinHash signature materialization (the state-store pattern):
-# the dedup family — minhash_sig, sig_clusters, lsh_candidates,
-# similarity_pairs, dedup_components — all consume the
-# same (doc_id, sig) relation; a production pipeline materializes it
-# once as a table and every downstream pass reads it. Memoized per
-# (session, sf_dir) as a persisted frame. Values are
-# a pure deterministic function of the documents table, so the DuckDB
-# twins (which recompute from scratch in SQL) still match bit-for-bit.
-_SIG_CACHE: dict = {}
-
-
-def _sig16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keyed by applicationId, not id(spark): a stopped session's id can
-    # be reused by CPython, which would serve a checkpointed frame
-    # bound to a dead SparkContext. Entries from OTHER applications are
-    # evicted (one live app per process): dead-session frames must not
-    # accumulate for the process lifetime.
-    from web_archive_downloader_spark.partitioning import (
-        is_materialized,
-        materialize_with_stats,
-    )
-
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _SIG_CACHE if k[0] != app]:
-        del _SIG_CACHE[stale]
-    key = (app, sf_dir)
-    ent = _SIG_CACHE.get(key)
-    # persisted, not localCheckpointed, so the cache state is visible:
-    # after spark.catalog.clearCache() the memoized frame no longer
-    # scans the cache and every use would recompute the signatures
-    if ent is None or not is_materialized(ent):
-        ent = materialize_with_stats(minhash_signatures(_t(spark, sf_dir, "documents"), k=16))
-        _SIG_CACHE[key] = ent
-    return ent
-
-
 # ---------------------------------------------------------------- entry
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -216,17 +180,16 @@ def _q_dedup_exact(spark, sf):
 
 
 def _q_minhash_sig(spark, sf):
-    return _sig16(spark, sf).select("doc_id", F.posexplode("sig").alias("i", "minv"))
+    sig = minhash_signatures(_t(spark, sf, "documents"), k=16)
+    return sig.select("doc_id", F.posexplode("sig").alias("i", "minv"))
 
 
 def _q_sig_clusters(spark, sf):
-    return signature_clusters(_t(spark, sf, "documents"), k=16, sig=_sig16(spark, sf))
+    return signature_clusters(_t(spark, sf, "documents"), k=16)
 
 
 def _q_lsh_candidates(spark, sf):
-    return minhash_lsh_candidates(
-        _t(spark, sf, "documents"), k=16, bands=4, sig=_sig16(spark, sf)
-    )
+    return minhash_lsh_candidates(_t(spark, sf, "documents"), k=16, bands=4)
 
 
 def _q_similarity_pairs(spark, sf):
@@ -235,9 +198,15 @@ def _q_similarity_pairs(spark, sf):
     computed in a SINGLE candidate join (operators/dedup.py
     similarity_pairs — consolidates the former jaccard_pairs /
     ngram_jaccard / minhash_jaccard_estimate entries; at scale the
-    candidate relation joins twice total instead of six times)."""
+    candidate relation joins twice total instead of six times). The
+    candidates and the features read the same signatures, so the query
+    materializes them once and hands them to both; like every
+    materialization, they live until the caller's unpersist or
+    clearCache."""
+    from web_archive_downloader_spark.partitioning import materialize_with_stats
+
     d = _t(spark, sf, "documents")
-    sig = _sig16(spark, sf)
+    sig = materialize_with_stats(minhash_signatures(d, k=16))
     return similarity_pairs(
         d, minhash_lsh_candidates(d, k=16, bands=4, sig=sig), sig=sig, k=16, n=2
     )
@@ -281,9 +250,7 @@ def _q_dedup_components(spark, sf):
     CTE."""
     from web_archive_downloader_spark.operators.dedup import dedup_components
 
-    return dedup_components(
-        _t(spark, sf, "documents"), jaccard_threshold=0.4, sig=_sig16(spark, sf)
-    )
+    return dedup_components(_t(spark, sf, "documents"), jaccard_threshold=0.4)
 
 
 def _q_corpus_selection(spark, sf):
@@ -298,7 +265,7 @@ def _q_corpus_selection(spark, sf):
     from web_archive_downloader_spark.partitioning import widen_narrow_scan
 
     d = _t(spark, sf, "documents")
-    comp = dedup_components(d, jaccard_threshold=0.4, sig=_sig16(spark, sf))
+    comp = dedup_components(d, jaccard_threshold=0.4)
     csize = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     stats = document_stats(widen_narrow_scan(d)).select(
         "doc_id", "quality", "n_tokens", "lang_pred"
@@ -525,7 +492,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # curation query runs (tests/test_no_orphans.py:REGISTRY_ONLY names
     # the operators only this registry reaches). Every key has a DuckDB
     # twin in oracle_sql() (tests/test_entry_parity.py asserts the two
-    # key sets are equal).
+    # key sets are equal). What a query materializes stays cached until
+    # its caller releases it (unpersist, spark.catalog.clearCache());
+    # a harness that repeats a query clears the cache first.
     return {
         # --- curation: packing, similarity, ANN, image near-dups ---
         "sequence_packing": _q_sequence_packing,

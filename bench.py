@@ -118,6 +118,9 @@ def main() -> None:
         for name in HEADLINE:
             runs = []
             for _ in range(QUERY_REPEATS):
+                # release the previous repeat's materializations, or
+                # this one would time the cache
+                spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 _force(qs[name](spark, sf_dir))
                 runs.append(time.perf_counter() - t0)

@@ -59,6 +59,9 @@ def main() -> None:
         runs = []
         for i in range(args.repeats):
             spark.sparkContext.setJobDescription(f"{name} [{i}]")
+            # release what the previous run (or the explain build)
+            # materialized, or this repeat would time the cache
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
             _force(qs[name](spark, args.sf))
             runs.append(round(time.perf_counter() - t0, 3))

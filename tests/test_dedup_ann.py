@@ -329,38 +329,72 @@ def test_ngram_decontaminate_flags_planted_overlap(spark):
     assert got == {1: 2}
 
 
-def test_embedding_neardup_lsh_scopes_its_buckets(emb, monkeypatch):
-    """The bucket table is a scoped materialization: a second call
-    evicts the first call's persisted buckets instead of leaving them
-    cached (Spark's CacheManager matches plans structurally, so a kept
-    table would be reused by the repeat and never freed)."""
+def _cached(df):
+    """Whether Spark's cache holds ``df``'s plan now. ``is_cached`` only
+    records that ``persist()`` was called; it stays True after
+    ``spark.catalog.clearCache()`` has dropped the data."""
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
+def _spy_materializations(monkeypatch):
+    """Every relation ``operators.dedup`` materializes, in call order."""
     import web_archive_downloader_spark.operators.dedup as dedup
 
     made = []
     real = dedup.materialize_with_stats
 
-    def spy(*args, **kw):
-        made.append(real(*args, **kw))
+    def spy(df):
+        made.append(real(df))
         return made[-1]
 
     monkeypatch.setattr(dedup, "materialize_with_stats", spy)
-    dedup.embedding_neardup_lsh(emb, threshold=0.999)
-    dedup.embedding_neardup_lsh(emb, threshold=0.999)
+    return made
+
+
+def test_embedding_neardup_lsh_leaves_its_buckets_to_the_caller(spark, emb, monkeypatch):
+    """The bucket table stays cached after the call returns, for as
+    long as the caller keeps it. After the caller's clearCache() a
+    repeat builds and caches its own, with the same result."""
+    from web_archive_downloader_spark.operators.dedup import embedding_neardup_lsh
+
+    made = _spy_materializations(monkeypatch)
+    first = embedding_neardup_lsh(emb, threshold=0.999).collect()
+    assert len(made) == 1 and _cached(made[0])
+    spark.catalog.clearCache()
+    assert not _cached(made[0])
+    again = embedding_neardup_lsh(emb, threshold=0.999).collect()
+    assert len(made) == 2 and _cached(made[1])
+    assert sorted(first) == sorted(again)
+    spark.catalog.clearCache()
+
+
+def test_two_corpora_keep_their_buckets_until_the_caller_clears(spark, monkeypatch):
+    """Building a second corpus's near-dup buckets leaves the first
+    corpus's cached: the first query still reads its buckets from
+    memory instead of rebuilding them. The caller's clearCache()
+    releases both."""
+    from web_archive_downloader_spark.operators.dedup import embedding_neardup_lsh
+
+    spark.catalog.clearCache()  # so only the buckets below are cached
+    made = _spy_materializations(monkeypatch)
+    x = embedding_neardup_lsh(spark.read.parquet(f"{SF}/embeddings.parquet"), threshold=0.999)
+    embedding_neardup_lsh(
+        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"), threshold=0.999
+    )
     assert len(made) == 2
-    assert not made[0].is_cached
-    assert made[1].is_cached
+    assert _cached(made[0])
+    assert "InMemoryTableScan" in x._jdf.queryExecution().executedPlan().toString()
+    spark.catalog.clearCache()
+    assert not any(_cached(df) for df in made)
 
 
-def test_scoped_materialization_keeps_its_predecessor_until_built(spark):
-    """A scoped materialization whose input reads the scope's previous
-    relation must read it from the cache, not recompute it: the
-    predecessor is evicted only once the new relation is cached. A
-    repeat of a cached plan under its scope still recomputes, and what
-    it returns stays cached."""
+def test_materialization_chain_computes_its_base_once(spark):
+    """A materialization whose input reads an earlier one reads it from
+    the cache, so the base is computed once; both stay cached until the
+    caller clears them, and a rebuild after that computes from the
+    inputs again."""
     from web_archive_downloader_spark.partitioning import materialize_with_stats
-
-    def is_materialized(df):
-        return df.storageLevel.useMemory
 
     computed = spark.sparkContext.accumulator(0)
 
@@ -369,16 +403,16 @@ def test_scoped_materialization_keeps_its_predecessor_until_built(spark):
         computed.add(1)
         return x
 
-    base = spark.range(8).select(bump("id").alias("id"))
-    prev = materialize_with_stats(base, scope="test_chain")
+    base = materialize_with_stats(spark.range(8).select(bump("id").alias("id")))
     assert computed.value == 8
-    step = prev.select((F.col("id") + 1).alias("id"))
-    nxt = materialize_with_stats(step, scope="test_chain")
-    assert computed.value == 8  # the predecessor was not recomputed
-    assert is_materialized(nxt) and not is_materialized(prev)
-    again = materialize_with_stats(step, scope="test_chain")
-    assert computed.value == 16  # a repeat computes from its inputs
-    assert is_materialized(again)
+    step = base.select((F.col("id") + 1).alias("id"))
+    nxt = materialize_with_stats(step)
+    assert computed.value == 8  # the base was read from the cache
+    assert _cached(base) and _cached(nxt)
+    spark.catalog.clearCache()
+    assert not _cached(base) and not _cached(nxt)
+    again = materialize_with_stats(step)
+    assert computed.value == 16  # the rebuild computes from its inputs
     again.unpersist()
 
 

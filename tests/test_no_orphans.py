@@ -158,3 +158,79 @@ def test_only_the_store_touches_the_manifest():
     )
     assert not touching, "manifest or catalog touched outside the store: " + ", ".join(touching)
     assert _touches_the_layout(ast.parse(store.read_text(), str(store)))
+
+
+_MUTABLE_CALLS = {"dict", "list", "set", "defaultdict", "OrderedDict", "Counter", "deque"}
+_MUTATORS = {
+    "add", "append", "clear", "discard", "extend", "insert",
+    "pop", "popitem", "remove", "setdefault", "update",
+}
+
+
+def _module_mutables(tree: ast.Module) -> set[str]:
+    """Module-level names bound to a dict, list or set."""
+    out = set()
+    for stmt in tree.body:
+        if isinstance(stmt, ast.Assign):
+            targets, value = stmt.targets, stmt.value
+        elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+            targets, value = [stmt.target], stmt.value
+        else:
+            continue
+        mutable = isinstance(
+            value, (ast.Dict, ast.List, ast.Set, ast.DictComp, ast.ListComp, ast.SetComp)
+        ) or (
+            isinstance(value, ast.Call)
+            and isinstance(value.func, ast.Name)
+            and value.func.id in _MUTABLE_CALLS
+        )
+        if mutable:
+            out |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return out
+
+
+def _mutated_globals(fn: ast.AST, mutables: set[str]) -> set[str]:
+    """Module-level mutables that ``fn`` changes in place: item
+    assignment, ``del``, or a mutating method call. A name the function
+    binds itself (an argument or local) is its own, unless declared
+    ``global``."""
+    declared = {n for s in ast.walk(fn) if isinstance(s, ast.Global) for n in s.names}
+    local = {
+        n.id for n in ast.walk(fn) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    } | {a.arg for a in ast.walk(fn) if isinstance(a, ast.arg)}
+    shared = mutables - (local - declared)
+    hits = set()
+    for n in ast.walk(fn):
+        if isinstance(n, (ast.Assign, ast.AugAssign, ast.AnnAssign, ast.Delete)):
+            targets = n.targets if isinstance(n, (ast.Assign, ast.Delete)) else [n.target]
+            hits |= {
+                t.value.id
+                for t in targets
+                if isinstance(t, ast.Subscript) and isinstance(t.value, ast.Name)
+            }
+        elif (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name)
+            and n.func.attr in _MUTATORS
+        ):
+            hits.add(n.func.value.id)
+    return hits & shared
+
+
+def test_no_function_mutates_module_state():
+    """No engine function keeps state in a module-level dict, list or
+    set: a process-wide cache is keyed by something other than its
+    input, so one caller's entries outlive or evict another's. State a
+    query needs lives as long as the caller that runs the query."""
+    hits = []
+    for path in ENGINE:
+        tree = ast.parse(path.read_text(), str(path))
+        mutables = _module_mutables(tree)
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                hits += [
+                    f"{path.relative_to(ROOT)}:{fn.name}:{name}"
+                    for name in sorted(_mutated_globals(fn, mutables))
+                ]
+    assert not hits, "module-level state mutated by a function: " + ", ".join(hits)

@@ -103,7 +103,7 @@ def phash_near_dups(
     # materialized (tiny: id + phash + chunk key per row) so the
     # self-join below sees real stats and the upstream phash
     # derivation runs once, not once per join side
-    keyed = materialize_with_stats(scope="phash_keyed", df=images.select(
+    keyed = materialize_with_stats(images.select(
         "image_id",
         "phash",
         F.explode(

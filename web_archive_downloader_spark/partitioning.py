@@ -42,58 +42,23 @@ def widen_narrow_scan(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-# scope -> the most recent materialization for that operator site;
-# unpersisted (and CacheManager-evicted) when the site materializes
-# again, so repeated invocations of the same query RECOMPUTE instead
-# of silently plan-matching the previous invocation's cache
-_SCOPED_CACHE: dict[str, DataFrame] = {}
-
-
-def is_materialized(df: DataFrame) -> bool:
-    """Whether Spark's cache holds ``df``'s plan right now.
-    ``storageLevel`` asks the CacheManager; ``is_cached`` only records
-    that ``persist()`` was once called, and stays True after
-    ``spark.catalog.clearCache()`` has dropped the data."""
-    level = df.storageLevel
-    return level.useMemory or level.useDisk
-
-
-def materialize_with_stats(df: DataFrame, scope: str | None = None) -> DataFrame:
+def materialize_with_stats(df: DataFrame) -> DataFrame:
     """Persist ``df`` and count it, so later plans read the cached
     relation and size their joins from its real bytes.
+
+    The materialization lives as long as the caller's query: whoever
+    runs the query releases it, with ``unpersist`` or
+    ``spark.catalog.clearCache()``. Spark's CacheManager matches cached
+    plans structurally, so a harness that repeats a query clears the
+    cache first, or the repeat reads the previous run's relation.
 
     On Spark 4.1 ``localCheckpoint`` also reports finite stats (the
     LogicalRDD keeps the materialized plan's ``sizeInBytes``, and a
     join against it broadcasts), but only a persisted relation is
-    released by ``unpersist`` and ``clearCache``. Scope eviction needs
-    that; a loop that must cut its lineage checkpoints instead (see
+    released by ``unpersist`` and ``clearCache``; a loop that must cut
+    its lineage checkpoints instead (see
     ``operators.dedup.connected_components``).
-
-    ``scope`` (pass a stable per-call-site tag): Spark's CacheManager
-    matches cached plans STRUCTURALLY, so without eviction a repeated
-    invocation of the same operator would silently reuse the previous
-    invocation's persisted intermediate — benchmark repeats would then
-    time a warm cache rather than the computation (and memory would
-    creep per invocation). A scoped materialization unpersists its
-    predecessor only AFTER the new relation is cached, because the new
-    plan may read the predecessor; a repeat of the predecessor's own
-    plan evicts it first, so every invocation computes from its inputs.
     """
-    prev = _SCOPED_CACHE.pop(scope, None) if scope is not None else None
-    if prev is not None and is_materialized(df):
-        _unpersist(prev)
-        prev = None
     out = df.persist()
     out.count()
-    if prev is not None:
-        _unpersist(prev)
-    if scope is not None:
-        _SCOPED_CACHE[scope] = out
     return out
-
-
-def _unpersist(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        pass
