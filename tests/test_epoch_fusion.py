@@ -13,6 +13,8 @@ write per epoch.
 - the packed union schema refuses two types for one column.
 """
 
+import dataclasses
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -196,7 +198,7 @@ def test_page_pass_parses_each_ok_page_once(monkeypatch):
 
     monkeypatch.setattr(extract_mod, "_parse", counting)
     monkeypatch.setattr(shim, "_parse", counting)
-    cfg = CFG.with_(expand_links=True, max_depth=1)
+    cfg = dataclasses.replace(CFG, expand_links=True, max_depth=1)
     ok_pages = [u for u in PAGES if u.split("/")[3] in ("rich", "plain")]
     rows = [process_page(u, 1, cfg, fetch=_server) for u in ok_pages]
     assert len(calls) == len(ok_pages)

@@ -3,6 +3,8 @@ parametrized suites (/root/reference/tests/test_html_processor.py:
 title lattice :18-27, selector search :45-57, conversion :84-91,
 asset discovery :133-169, rewrite :213-321) against our kernels."""
 
+import dataclasses
+
 import pytest
 
 from web_archive_downloader_spark.config import EngineConfig
@@ -56,7 +58,7 @@ def test_selector_falls_through_to_body():
 
 
 def test_no_match_returns_title_only():
-    cfg = CFG.with_(content_selectors=("#nope",))
+    cfg = dataclasses.replace(CFG, content_selectors=("#nope",))
     title, md = extract_and_convert_content(
         "<html><head><title>T</title></head><body><p>x</p></body></html>", URL, cfg
     )

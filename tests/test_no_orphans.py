@@ -1,13 +1,15 @@
-"""Orphan guard: every top-level function and class of the engine is
-referenced from non-test code, so code that only tests reach does not
-pile up. References are read from the AST, so a docstring or comment
+"""Orphan guard: every top-level function and class of the engine, and
+every public method of its classes, is referenced from non-test code,
+so code that only tests reach does not pile up. References are read from the AST, so a docstring or comment
 mention does not count: a bare name counts only in the file that
 defines it, other files count through an import alias or an attribute
 (a local variable that shares a function's name elsewhere is no
 caller). A reference from the checked query registry
 (__spark_entry__.py) counts only for the curation operators in
 REGISTRY_ONLY, so the registry cannot keep alive a function the crawl
-does not run. No Spark."""
+does not run. A method counts as referenced when some other
+function or statement of non-test code reaches its name as an
+attribute. No Spark."""
 
 import ast
 import re
@@ -31,7 +33,12 @@ ALLOWED = {
     "load_config_json": "parity with the reference's config loader",
     "gen_cdx_records": "the CDX fixture (invalid rows, re-snapshots) the oracle tests crawl",
     "images_from_assets": "perfbench's LayerProbes patch it by name",
-    "stream_frontier_feed": "the streaming half of ingestion; CrawlPlan.ingest_inbox drains it",
+    "CrawlPlan.final_url_seen": "the reconciled checkpoint the collision-limit test compares with the oracle's seen set",
+    "OracleResult.seen_set": "the oracle's seen set that the engine's url_seen is compared with",
+    "_TreeBuilder.handle_starttag": "html.parser calls it",
+    "_TreeBuilder.handle_startendtag": "html.parser calls it",
+    "_TreeBuilder.handle_endtag": "html.parser calls it",
+    "_TreeBuilder.handle_data": "html.parser calls it",
 }
 
 # Curation operators that only the registry runs: name -> the
@@ -110,9 +117,41 @@ def test_every_engine_definition_has_a_non_test_reference():
     assert not orphans, "referenced only by tests, the registry, or nothing: " + ", ".join(orphans)
 
 
+def _scan_methods() -> tuple[dict[str, str], list[tuple[str | None, set[str]]]]:
+    """(``Class.method`` -> defining file, for each public method of an
+    engine class; (``Class.method`` or None, attribute names) for each
+    method body and each other statement of the non-test callers)."""
+    defined: dict[str, str] = {}
+    units: list[tuple[str | None, set[str]]] = []
+    for path in CALLERS:
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            members = stmt.body if isinstance(stmt, ast.ClassDef) else [stmt]
+            for item in members:
+                key = None
+                if isinstance(stmt, ast.ClassDef) and isinstance(
+                    item, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ):
+                    key = f"{stmt.name}.{item.name}"
+                    if path in ENGINE and not item.name.startswith("_"):
+                        defined[key] = str(path.relative_to(ROOT))
+                units.append((key, _refs(item)[1]))
+    return defined, units
+
+
+def test_every_public_method_has_a_non_test_reference():
+    defined, units = _scan_methods()
+    orphans = sorted(
+        f"{where}:{key}"
+        for key, where in defined.items()
+        if key not in ALLOWED
+        and not any(key.split(".")[1] in attrs for unit, attrs in units if unit != key)
+    )
+    assert not orphans, "methods referenced only by tests or nothing: " + ", ".join(orphans)
+
+
 def test_allowlist_names_live_definitions():
     defined, _ = _scan()
-    assert set(ALLOWED) <= set(defined)
+    assert set(ALLOWED) <= set(defined) | set(_scan_methods()[0])
 
 
 def test_registry_only_names_live_and_have_a_query_caller():

@@ -71,14 +71,14 @@ def test_collision_page_literal_suffix_groups_together(spark):
 
 
 def test_collision_two_column_key_survives_high_seq_namespaces(spark):
-    """Seed / ingested (>=2^45) / expansion (>=2^50) seqs share name
-    groups without int64 overflow: the (save_seq, save_pos) sort key
-    is lexicographic, never a packed product (the old seq*2^20
-    packing aliased an ingested seq 2^45+s with seed s exactly:
-    2^45*2^20 === 0 mod 2^64)."""
+    """Seed and expansion (>=2^50) seqs share name groups without
+    int64 overflow: the (save_seq, save_pos) sort key is
+    lexicographic, never a packed product (the old seq*2^20 packing
+    aliased an expansion seq 2^50+s with seed s exactly:
+    2^50*2^20 === 0 mod 2^64)."""
     rows = [
-        ("d", "Post", ".md", "page", (1 << 45) + 3, 1 << 62),  # ingested
-        ("d", "Post", ".md", "page", 3, 1 << 62),              # seed, same feed seq
+        ("d", "Post", ".md", "page", (1 << 50) + 3, 1 << 62),  # depth-1 expansion
+        ("d", "Post", ".md", "page", 3, 1 << 62),              # seed, same low bits
         ("d", "Post", ".md", "page", (1 << 50) + 7, 1 << 62),  # depth-1 expansion
     ]
     df = spark.createDataFrame(
@@ -89,15 +89,15 @@ def test_collision_two_column_key_survives_high_seq_namespaces(spark):
     out = assign_collision_names(df)
     got = {r.save_seq: r.filename for r in out.collect()}
     assert got[3] == "Post.md"                 # seed saves first
-    assert got[(1 << 45) + 3] == "Post-1.md"   # ingested after every seed
-    assert got[(1 << 50) + 7] == "Post-2.md"   # expansion after ingested
+    assert got[(1 << 50) + 3] == "Post-1.md"   # expansion after every seed
+    assert got[(1 << 50) + 7] == "Post-2.md"   # expansions in seq order
 
 
-def test_finalize_orders_ingested_saves_after_seeds(spark, tmp_path):
-    """finalize_outputs end-to-end: a seed page (seq=s) and an
-    ingested page (seq=INGEST_SEQ_BASE+s) colliding on (dir, base)
-    must name deterministically seed-first — the regression where the
-    packed save_seq wrapped int64 and aliased the two."""
+def test_finalize_orders_expansion_saves_after_seeds(spark, tmp_path):
+    """finalize_outputs end-to-end: a seed page (seq=s) and a depth-1
+    expansion page (seq=2^50+s) colliding on (dir, base) must name
+    deterministically seed-first — the regression where the packed
+    save_seq wrapped int64 and aliased the two."""
     from web_archive_downloader_spark.datagen import default_config
     from web_archive_downloader_spark.plans.crawl import (
         ASSETS_RAW_SCHEMA,
@@ -112,8 +112,8 @@ def test_finalize_orders_ingested_saves_after_seeds(spark, tmp_path):
         [
             ("https://ex.com/a/seed-page", "20230101000000", 3, "wayback",
              "Same Title", html, 0),
-            ("https://ex.com/a/ingested-page", "20230101000000",
-             CrawlPlan.INGEST_SEQ_BASE + 3, "wayback", "Same Title", html, 1),
+            ("https://ex.com/a/expanded-page", "20230101000000",
+             (1 << 50) + 3, "wayback", "Same Title", html, 1),
         ],
         DOCS_RAW_SCHEMA,
     )
@@ -123,7 +123,7 @@ def test_finalize_orders_ingested_saves_after_seeds(spark, tmp_path):
     out, _ = plan.finalize_outputs()
     names = {r.url: r.filename for r in out.collect()}
     assert names["https://ex.com/a/seed-page"] == "Same_Title.md"
-    assert names["https://ex.com/a/ingested-page"] == "Same_Title-1.md"
+    assert names["https://ex.com/a/expanded-page"] == "Same_Title-1.md"
 
 
 def test_collision_limit_aborts(spark):

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from web_archive_downloader_spark.datagen import default_config, gen_cdx_records
+from web_archive_downloader_spark.operators import seen as seen_mod
 from web_archive_downloader_spark.operators.seen import (
     BLOOM_VERSION,
     BloomSketch,
@@ -55,7 +56,7 @@ def _commit_seen(store, epoch, df):
     store.commit(epoch, {"url_seen": store.stage_packed(epoch, {"url_seen": df})})
 
 
-def test_cogroup_probe_equals_broadcast(spark):
+def test_cogroup_probe_equals_broadcast(spark, monkeypatch):
     """The pid-pruned cogrouped probe must route exactly like the
     broadcast probe — same exactly-unseen output — while never
     collecting or broadcasting the sketch dict."""
@@ -63,12 +64,9 @@ def test_cogroup_probe_equals_broadcast(spark):
     frontier = _urls_df(spark, 500, 2500)
     sketch_df = build_bloom_sketches(seen, 8, 256).localCheckpoint()
 
-    out_bc, mode_bc = unseen_with_bloom_state(
-        frontier, seen, sketch_df, 8, spark, broadcast_max_bytes=64 << 20
-    )
-    out_cg, mode_cg = unseen_with_bloom_state(
-        frontier, seen, sketch_df, 8, spark, broadcast_max_bytes=0
-    )
+    out_bc, mode_bc = unseen_with_bloom_state(frontier, seen, sketch_df, 8, spark)
+    monkeypatch.setattr(seen_mod, "BLOOM_BROADCAST_MAX_BYTES", 0)
+    out_cg, mode_cg = unseen_with_bloom_state(frontier, seen, sketch_df, 8, spark)
     assert mode_bc == "broadcast" and mode_cg == "cogroup"
     exp = sorted(f"https://e.com/p{i}" for i in range(1000, 2500))
     assert sorted(r.url for r in out_bc.collect()) == exp
@@ -376,7 +374,7 @@ def test_generation_chain_anti_join_single_exchange(spark, tmp_path):
         store.destroy()
 
 
-def test_full_j1_chain_plan_shape(spark, tmp_path):
+def test_full_j1_chain_plan_shape(spark, tmp_path, monkeypatch):
     """The whole J1 chain at scale settings — cogrouped Bloom probe
     feeding the bucketed-base anti-join then the delta anti-join —
     keeps the bucketed scan Exchange-free: only the probe and delta
@@ -395,9 +393,8 @@ def test_full_j1_chain_plan_shape(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out, mode = unseen_with_bloom_state(
-            frontier, [base, delta], sketches, 8, spark, broadcast_max_bytes=0
-        )
+        monkeypatch.setattr(seen_mod, "BLOOM_BROADCAST_MAX_BYTES", 0)
+        out, mode = unseen_with_bloom_state(frontier, [base, delta], sketches, 8, spark)
         assert mode == "cogroup"
         assert sorted(r.url for r in out.collect()) == sorted(
             f"https://e.com/p{i}" for i in range(4000, 6000)

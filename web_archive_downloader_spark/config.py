@@ -10,7 +10,7 @@ literal folding (reference gates them imperatively, main.py:104-107).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 # Defaults from /root/reference/constants.py
 DEFAULT_OUTPUT_DIR = "output"
@@ -163,9 +163,6 @@ class EngineConfig:
         if self.download_images:
             kinds.append("img")
         return tuple(kinds)
-
-    def with_(self, **kw) -> "EngineConfig":
-        return replace(self, **kw)
 
 
 # Keys the reference's loader requires (config_loader.py:17-25); the

@@ -38,11 +38,10 @@ def _assign_group(pdf: pd.DataFrame) -> pd.DataFrame:
 
     The order key is TWO columns, not a packed ``seq*2^k + pos``
     product: frontier seqs use high bits as namespaces (link
-    expansions >= 2^50, ingested feeds >= 2^45), so any packed
-    product overflows int64 and silently aliases save orders across
-    namespaces. A lexicographic two-column sort has no headroom
-    limit. ``save_pos`` is optional (single-key callers like the
-    html pass omit it)."""
+    expansions >= 2^50), so any packed product overflows int64 and
+    silently aliases save orders across namespaces. A lexicographic
+    two-column sort has no headroom limit. ``save_pos`` is optional
+    (single-key callers like the html pass omit it)."""
     keys = ["save_seq"] + (["save_pos"] if "save_pos" in pdf.columns else [])
     pdf = pdf.sort_values(keys).reset_index(drop=True)
     taken: set[str] = set()

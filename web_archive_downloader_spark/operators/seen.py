@@ -360,7 +360,6 @@ def unseen_with_bloom_state(
     sketch_df: DataFrame,
     n_partitions: int,
     spark: SparkSession,
-    broadcast_max_bytes: int | None = None,
     stats: dict | None = None,
 ) -> tuple[DataFrame, str]:
     """The J1 front end over PERSISTED sketch state — chooses the probe
@@ -373,9 +372,9 @@ def unseen_with_bloom_state(
       probe the wrong pids' sketches), or no sketches -> pure exact
       anti-join ("exact"): probing foreign sketches could yield false
       negatives = re-crawls;
-    - total sketch bytes <= broadcast_max_bytes (default
-      BLOOM_BROADCAST_MAX_BYTES) -> driver collect +
-      broadcast ("broadcast"): lowest latency while the state is small;
+    - total sketch bytes <= BLOOM_BROADCAST_MAX_BYTES -> driver
+      collect + broadcast ("broadcast"): lowest latency while the
+      state is small;
     - above the bound -> pid-pruned cogrouped probe ("cogroup"):
       no collect, no broadcast, each task ships only its pids'
       sketches (see bloom_prefilter_cogrouped).
@@ -389,9 +388,7 @@ def unseen_with_bloom_state(
         stats = sketch_stats(sketch_df, n_partitions)
     if stats["n"] == 0 or stats["bad"] > 0:
         return anti_join_unseen(frontier, seen_parts), "exact"
-    if broadcast_max_bytes is None:
-        broadcast_max_bytes = BLOOM_BROADCAST_MAX_BYTES
-    if stats["nbytes"] <= broadcast_max_bytes:
+    if stats["nbytes"] <= BLOOM_BROADCAST_MAX_BYTES:
         sketches = [
             (r["partition_id"], bytes(r["sketch"])) for r in sketch_df.collect()
         ]

@@ -102,8 +102,8 @@ AUTO_COMPACT_MAX_DIRS = 16
 # within-page position): md/html saves sort after the page's assets,
 # mirroring the reference's per-iteration order assets -> html -> md
 # (main.py:109-161). NOT a packed seq*2^k+pos product — expansion
-# seqs (>=2^50) and ingested-feed seqs (>=2^45) would overflow int64
-# in the product and alias save orders across seq namespaces.
+# seqs (>=2^50) would overflow int64 in the product and alias save
+# orders across seq namespaces.
 _MD_POS = (1 << 62)  # sorts after any asset position
 
 
@@ -563,126 +563,12 @@ class CrawlPlan:
         self.store.commit_seed({"url_seen": seen, "bloom": sketches})
         self._bloom_stats = None
 
-    # ---- continuous frontier ingestion (streaming inbox) ----
-    # Ingested candidates order AFTER every CDX seed and BEFORE link
-    # expansions: seq = 2^45 + batch_id*2^25 + first-appearance feed
-    # seq (seeds < 2^45; expansions carry depth>=1 in bits >= 2^50).
-    INGEST_SEQ_BASE = 1 << 45
-
-    def ingest_inbox(self, inbox_dir: str) -> int:
-        """Drain landed ``stream_frontier_feed`` batches into the
-        frontier between epochs — the batch half of the continuous-
-        ingestion contract (streaming/events.py). Exactly once per
-        batch dir: drained ids commit atomically WITH the frontier
-        replacement (StateStore.commit_seed); a re-run of
-        the stream or of the drain cannot duplicate rows.
-
-        Semantics mirror the CDX seed path: A1 latest-snapshot-per-URL
-        with first-appearance order within the drained set, then an
-        anti-join drops urls already in the frontier (url_seen dedup
-        stays in the epoch J1 anti-join). Returns rows ingested."""
-        import os
-
-        store = self.store
-        if not os.path.isdir(inbox_dir):
-            return 0
-        done = store.ingested_batches()
-        # foreachBatch's parquet write is not atomic: the dir exists
-        # (holding _temporary, then a growing subset of part files) for
-        # the whole job. Drain ONLY dirs carrying the _SUCCESS marker —
-        # an in-flight batch is left for the next drain; recording a
-        # partially-read batch as ingested would silently drop rows.
-        batches = sorted(
-            int(e.split("=", 1)[1])
-            for e in os.listdir(inbox_dir)
-            if e.startswith("batch=")
-            and os.path.exists(os.path.join(inbox_dir, e, "_SUCCESS"))
-        )
-        new = [b for b in batches if b not in done]
-        if not new:
-            return 0
-        if new[-1] >= (1 << 19):
-            raise ValueError("inbox batch id exceeds seq-packing headroom (2^19)")
-        # Ingested seqs live at >= 2^45; a depth-1 expansion child of an
-        # ingested parent packs to ~2^57 (fits), but a depth-2 child
-        # would wrap int64 — refuse the combination loudly rather than
-        # corrupt crawl order (same class of guard as config max_depth).
-        if self.config.expand_links and self.config.max_depth > 1:
-            raise ValueError(
-                "continuous ingestion supports expand_links only with "
-                "max_depth <= 1 (seq packing headroom for ingested parents)"
-            )
-        # ONE scan: partition discovery exposes `batch` from the dir
-        # layout; the isin prunes un-drained (incl. in-flight) batch
-        # dirs at planning time, so their partial files are never read
-        cand = self.spark.read.parquet(inbox_dir).filter(F.col("batch").isin(new))
-        # composite pre-seq: drained-set order = (batch, feed seq).
-        # Null seqs would propagate a null frontier seq (order
-        # nondeterminism) — refuse loudly. The null/range guard rides
-        # the seq projection itself (assert_true inside a coalesce:
-        # the assert yields null on pass, so coalesce selects the
-        # packed seq) — ONE scan per drain, not a separate count()
-        # job over the feed batches before the real drain. The raise
-        # fires inside the staged write's job, before any commit.
-        _seq_ok = (
-            F.col("seq").isNotNull()
-            & (F.col("seq") >= 0)
-            & (F.col("seq") < (1 << 25))
-        )
-        _guard = F.assert_true(
-            _seq_ok,
-            F.concat(
-                F.lit(
-                    "feed row has null/out-of-range seq (need 0 <= seq "
-                    "< 2^25 for ingest packing): url="
-                ),
-                F.coalesce(F.col("url"), F.lit("<null>")),
-            ),
-        )
-        pre = cand.select(
-            "url", "ts",
-            F.coalesce(
-                _guard.cast("long"),
-                F.col("batch").cast("long") * F.lit(1 << 25) + F.col("seq"),
-            ).alias("seq"),
-        )
-        latest = latest_snapshot_per_url(pre)
-        frontier = store.read_latest_only("frontier")
-        fresh = latest.join(frontier.select("url"), "url", "left_anti").select(
-            "url",
-            "ts",
-            url_host_col(F.col("url")).alias("host"),
-            F.lit(0).alias("depth"),
-            F.lit(0.0).alias("priority"),
-            (F.lit(self.INGEST_SEQ_BASE) + F.col("seq")).alias("seq"),
-            F.lit(1).alias("attempt"),
-            F.lit(0).alias("eligible_epoch"),
-        )
-        from pyspark.sql import Observation
-
-        obs = Observation(f"ingest_{new[-1]}")
-        merged = frontier.unionByName(fresh.observe(obs, F.count(F.lit(1)).alias("n")))
-        try:
-            store.commit_seed({"frontier": merged}, tuple(new))
-        except Exception as e:
-            # surface the in-plan seq guard as the documented contract
-            # error; the failed job staged at most an orphan dir —
-            # nothing was committed, the drain is re-runnable
-            if "null/out-of-range seq" in str(e):
-                raise ValueError(
-                    "feed rows have null/out-of-range seq "
-                    "(need 0 <= seq < 2^25 for ingest packing)"
-                ) from e
-            raise
-        return int(obs.get["n"])
-
     # ---- full run ----
     def run(
         self,
         cdx: DataFrame,
         max_epochs: int = 200,
         resume: bool = False,
-        inbox_dir: str | None = None,
     ) -> CrawlRunStats:
         stats = CrawlRunStats()
         store = self.store
@@ -717,10 +603,6 @@ class CrawlPlan:
             _, seen_delta = store.read_parts("url_seen")
             rows_since_bucketize = seen_delta.count()
         for epoch in range(start_epoch, max_epochs):
-            if inbox_dir:
-                # continuous ingestion: drain streaming feed batches
-                # landed since the last epoch (exactly once per batch)
-                pending += self.ingest_inbox(inbox_dir)
             if pending == 0:
                 break
             n, pending = self.run_epoch(epoch)

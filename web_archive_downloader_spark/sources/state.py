@@ -11,7 +11,7 @@ implemented as a parquet + manifest layout:
     root/__state__/seed=<k>[.n]/part-*.parquet   (one table's rows committed
                                                   between epochs: the
                                                   checkpoint and frontier
-                                                  seeds, an inbox drain)
+                                                  seeds)
     root/__state__/compacted=<k>[.n]/...         (compaction output)
     root/__state__/bucketed=<k>[.n]/...          (a url_seen generation:
                                                   url_seen's columns only,
@@ -327,17 +327,15 @@ class StateStore:
         manifest["epoch"] = epoch
         self._write_manifest(manifest)
 
-    def commit_seed(self, dfs: dict[str, DataFrame], batch_ids: tuple[int, ...] = ()) -> None:
+    def commit_seed(self, dfs: dict[str, DataFrame]) -> None:
         """Commit member rows that arrive between epochs — the
-        checkpoint seed, the frontier seed, an inbox drain's frontier
-        replacement — without advancing the epoch: one packed write
-        per member, each to a fresh seed dir (so a read of one member
-        never lists another's files), then one manifest swap that
-        lists them and records the drained inbox ``batch_ids`` with
-        the frontier's dir. A crash before the swap leaves orphan dirs
-        and unrecorded batches, re-ingested idempotently on retry.
-        truncate_to_epoch keeps the dirs while it keeps the epoch the
-        seed was committed at."""
+        checkpoint seed and the frontier seed — without advancing the
+        epoch: one packed write per member, each to a fresh seed dir
+        (so a read of one member never lists another's files), then
+        one manifest swap that lists them. A crash before the swap
+        leaves orphan dirs that are never read. truncate_to_epoch
+        keeps the dirs while it keeps the epoch the seed was committed
+        at."""
         manifest = self.read_manifest()
         epoch = manifest["epoch"]
         if any(manifest.get("compaction_floor", {}).get(t) == epoch for t in dfs):
@@ -348,9 +346,6 @@ class StateStore:
             staged[table] = self._fresh_dir(f"seed={epoch}")
             _pack({table: df}).write.parquet(staged[table])
         _register(manifest, staged)
-        manifest.setdefault("ingested_batches", {}).update(
-            {str(b): staged["frontier"] for b in batch_ids}
-        )
         self._write_manifest(manifest)
 
     def _packed_member(self, table: str, manifest: dict) -> DataFrame | None:
@@ -553,9 +548,6 @@ class StateStore:
             if p not in listed:
                 shutil.rmtree(p, ignore_errors=True)
 
-    def ingested_batches(self) -> set[int]:
-        return {int(b) for b in self.read_manifest().get("ingested_batches", {})}
-
     def truncate_to_epoch(self, epoch: int) -> None:
         """Test helper: roll the manifest back (kill-and-resume tests).
         Refuses to roll back past a compaction point — that history
@@ -571,14 +563,6 @@ class StateStore:
             for t, ps in manifest["tables"].items()
         }
         manifest["tables"] = {t: ps for t, ps in manifest["tables"].items() if ps}
-        # inbox batches whose frontier dir was rolled away must be
-        # re-ingestable
-        kept_frontier = set(manifest["tables"].get("frontier", []))
-        manifest["ingested_batches"] = {
-            b: p
-            for b, p in manifest.get("ingested_batches", {}).items()
-            if p in kept_frontier
-        }
         manifest["epoch"] = epoch
         self._write_manifest(manifest)
 
