@@ -15,6 +15,8 @@ import ast
 import re
 from pathlib import Path
 
+import pytest
+
 ROOT = Path(__file__).resolve().parent.parent
 REGISTRY = ROOT / "__spark_entry__.py"
 ENGINE = sorted((ROOT / "web_archive_downloader_spark").rglob("*.py")) + [REGISTRY]
@@ -117,13 +119,15 @@ def test_every_engine_definition_has_a_non_test_reference():
     assert not orphans, "referenced only by tests, the registry, or nothing: " + ", ".join(orphans)
 
 
-def _scan_methods() -> tuple[dict[str, str], list[tuple[str | None, set[str]]]]:
+def _scan_methods(
+    callers: list[Path] = CALLERS, engine: list[Path] = ENGINE, root: Path = ROOT
+) -> tuple[dict[str, str], list[tuple[str | None, set[str]]]]:
     """(``Class.method`` -> defining file, for each public method of an
-    engine class; (``Class.method`` or None, attribute names) for each
-    method body and each other statement of the non-test callers)."""
+    ``engine`` class; (``Class.method`` or None, attribute names) for
+    each method body and each other statement of the ``callers``)."""
     defined: dict[str, str] = {}
     units: list[tuple[str | None, set[str]]] = []
-    for path in CALLERS:
+    for path in callers:
         for stmt in ast.parse(path.read_text(), str(path)).body:
             members = stmt.body if isinstance(stmt, ast.ClassDef) else [stmt]
             for item in members:
@@ -132,21 +136,58 @@ def _scan_methods() -> tuple[dict[str, str], list[tuple[str | None, set[str]]]]:
                     item, (ast.FunctionDef, ast.AsyncFunctionDef)
                 ):
                     key = f"{stmt.name}.{item.name}"
-                    if path in ENGINE and not item.name.startswith("_"):
-                        defined[key] = str(path.relative_to(ROOT))
+                    if path in engine and not item.name.startswith("_"):
+                        defined[key] = str(path.relative_to(root))
                 units.append((key, _refs(item)[1]))
     return defined, units
 
 
-def test_every_public_method_has_a_non_test_reference():
-    defined, units = _scan_methods()
-    orphans = sorted(
+def _method_orphans(
+    callers: list[Path] = CALLERS, engine: list[Path] = ENGINE, root: Path = ROOT
+) -> list[str]:
+    """``file:Class.method`` for each public engine method that no
+    other method or statement of the callers reaches as an attribute."""
+    defined, units = _scan_methods(callers, engine, root)
+    return sorted(
         f"{where}:{key}"
         for key, where in defined.items()
         if key not in ALLOWED
         and not any(key.split(".")[1] in attrs for unit, attrs in units if unit != key)
     )
+
+
+def test_every_public_method_has_a_non_test_reference():
+    orphans = _method_orphans()
     assert not orphans, "methods referenced only by tests or nothing: " + ", ".join(orphans)
+
+
+_PLAN = "class Plan:\n    def step(self, n):\n        return n\n"
+
+
+@pytest.mark.parametrize(
+    "engine_src, caller_src, expected",
+    [
+        (_PLAN, "", ["engine.py:Plan.step"]),
+        (_PLAN, "def main(plan):\n    return plan.step(1)\n", []),
+        (
+            "class Plan:\n    def step(self, n):\n        return self.step(n - 1) if n else 0\n",
+            "",
+            ["engine.py:Plan.step"],
+        ),
+        ("class Plan:\n    def _step(self, n):\n        return n\n", "", []),
+    ],
+    ids=["uncalled", "called-elsewhere", "recursion-only", "private"],
+)
+def test_method_guard_flags_only_unreached_public_methods(
+    tmp_path, engine_src, caller_src, expected
+):
+    """The method guard is able to fail: a public method that nothing
+    else reaches is flagged, also when it calls itself; one reached as
+    an attribute from another function, or a private one, is not."""
+    engine, caller = tmp_path / "engine.py", tmp_path / "main.py"
+    engine.write_text(engine_src)
+    caller.write_text(caller_src)
+    assert _method_orphans([engine, caller], [engine], tmp_path) == expected
 
 
 def test_allowlist_names_live_definitions():

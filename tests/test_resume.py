@@ -243,3 +243,85 @@ def test_checkpoint_skip(spark, tmp_path):
     assert got_order == oracle.crawl_order
     got_seen = {r.url for r in store.read("url_seen", URL_SEEN_SCHEMA).collect()}
     assert got_seen == oracle.seen_set | pre
+
+
+def _seen_rows(spark, urls, first_seq, epoch):
+    rows = [(u, first_seq + i, epoch) for i, u in enumerate(urls)]
+    return spark.createDataFrame(rows, URL_SEEN_SCHEMA)
+
+
+def _seen_urls(store):
+    return sorted(r.url for r in store.read("url_seen", URL_SEEN_SCHEMA).collect())
+
+
+def test_commit_seed_dirs_follow_truncate_to_epoch(spark, tmp_path):
+    """A seed committed between epochs is read with the epoch it was
+    committed at: a rollback to that epoch keeps it, a rollback past
+    it drops it, and an epoch's own rows go with the epoch."""
+    store = StateStore(str(tmp_path / "st"), spark)
+    path = store.stage_packed(0, {"url_seen": _seen_rows(spark, ["https://e.com/e0"], 0, 0)})
+    store.commit(0, {"url_seen": path})
+    store.commit_seed({"url_seen": _seen_rows(spark, ["https://e.com/s0"], -1, -1)})
+    path = store.stage_packed(1, {"url_seen": _seen_rows(spark, ["https://e.com/e1"], 1, 1)})
+    store.commit(1, {"url_seen": path})
+    store.commit_seed({"url_seen": _seen_rows(spark, ["https://e.com/s1"], -2, -1)})
+    assert store.last_epoch == 1
+    assert _seen_urls(store) == [
+        "https://e.com/e0", "https://e.com/e1", "https://e.com/s0", "https://e.com/s1",
+    ]
+
+    store.truncate_to_epoch(0)
+    assert store.last_epoch == 0
+    assert _seen_urls(store) == ["https://e.com/e0", "https://e.com/s0"]
+
+
+def test_commit_seed_crash_before_the_swap_is_never_read(spark, tmp_path, monkeypatch):
+    """A seed whose manifest swap fails leaves its written dir as an
+    orphan that no read lists; the retried seed lands in a fresh dir
+    beside it and is read exactly once."""
+    store = StateStore(str(tmp_path / "st"), spark)
+    path = store.stage_packed(0, {"url_seen": _seen_rows(spark, ["https://e.com/e0"], 0, 0)})
+    store.commit(0, {"url_seen": path})
+    before = store.read_manifest()
+    seed = {"url_seen": _seen_rows(spark, ["https://e.com/seed"], -1, -1)}
+
+    def crash(manifest):
+        raise OSError("killed before the manifest swap")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(store, "_write_manifest", crash)
+        with pytest.raises(OSError, match="manifest swap"):
+            store.commit_seed(seed)
+    orphan = os.path.join(str(tmp_path / "st"), "__state__", "seed=0")
+    assert os.path.isdir(orphan)
+    assert store.read_manifest() == before
+    assert _seen_urls(store) == ["https://e.com/e0"]
+
+    store.commit_seed(seed)
+    assert orphan not in store.read_manifest()["tables"]["url_seen"]
+    assert _seen_urls(store) == ["https://e.com/e0", "https://e.com/seed"]
+
+
+def test_resume_ignores_a_legacy_ingested_batches_ledger(spark, tmp_path):
+    """Stores written while the manifest kept an ``ingested_batches``
+    ledger still carry the key; a rollback and a resume over such a
+    store ignore it and reach the oracle's crawl order and url_seen."""
+    import json
+
+    raw = gen_cdx_records(n_urls=30, seed=17)
+    cfg = default_config(epoch_seconds=20.0, max_retries=2)
+    store = StateStore(str(tmp_path / "legacy"), spark)
+    CrawlPlan(spark, store, cfg).run(cdx_dataframe(spark, raw), max_epochs=3)
+    manifest = store.read_manifest()
+    manifest["ingested_batches"] = {"0": manifest["tables"]["frontier"][-1]}
+    with open(os.path.join(store.root, "_manifest.json"), "w") as f:
+        json.dump(manifest, f)
+
+    store.truncate_to_epoch(1)
+    plan = CrawlPlan(spark, store, cfg)
+    plan.run(cdx_dataframe(spark, raw), resume=True)
+    oracle = run_oracle(raw, cfg)
+    order = [r.url for r in store.read("processed", PROCESSED_SCHEMA).orderBy("seq").collect()]
+    seen = [r.url for r in store.read("url_seen", URL_SEEN_SCHEMA).orderBy("seq").collect()]
+    assert order == oracle.crawl_order
+    assert seen == oracle.seen
